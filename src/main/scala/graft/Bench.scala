@@ -3,25 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Verify/SparkSpec: tz-dependent expressions (date_trunc, hour)
-      // must plan identically under bench and under the correctness gate
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // the default 100-entry codegen class cache thrashes when ~150
-      // queries interleave: every pass recompiles every generated class
-      // (the suite is planning/codegen-bound at sf0.1, so that's a
-      // first-order cost). A long-lived cluster app accumulates exactly
-      // this cache; size it with headroom over one suite's classes — the
-      // registry grows every round. Static conf — must be set before the
-      // session starts.
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // external-interference markers (r10 verdict: per-query spread tracked
     // the DRIVER MACHINE's load, not the scheme — 18 under load vs 4 idle
     // for identical code): (a) the 1-min loadavg BEFORE this JVM adds its
@@ -66,7 +48,7 @@ object Bench {
     // reps of the same query and survives the min (the r4 t5/f6 "10×
     // regressions" were exactly this). With a full suite between a query's
     // reps, transient interference can't hit both, so the per-query min is
-    // the isolated steady-state cost (within ~2× of a solo TimeQ run).
+    // the isolated steady-state cost (within ~2× of a solo ProfileQ pass).
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val queries = SparkEntry.queries.toSeq
     val passes = scala.collection.mutable.LinkedHashMap[String,

@@ -1,23 +1,18 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
-/** Per-job profile of named bench queries (scratch tooling, not part of the
-  * driver contract): runs each query twice (cold, warm) with a listener that
-  * records every Spark job's wall time and call site, so a harness-heavy
-  * query's cost decomposes into its staging / streaming / read-back jobs.
-  * Gaps between jobs = driver-side work (planning, JDBC, tracker walks). */
+/** Per-job profile of named bench queries (not part of the driver
+  * contract): runs each query twice (cold, warm) under Bench's session
+  * settings and prints each pass's total (`===== q passN total`, the figure
+  * a paired timing compares), then, for the warm pass, every Spark job's
+  * wall time and call site from a listener, so a harness-heavy query's cost
+  * decomposes into its staging / streaming / read-back jobs. Gaps between
+  * jobs = driver-side work (planning, JDBC, tracker walks). */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     case class Job(id: Int, t0: Long, var t1: Long, site: String,
       stages: Seq[Int])

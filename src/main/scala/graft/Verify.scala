@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,18 +8,7 @@ object Verify {
     // to matching queries (local iteration); the driver passes only two.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // match Bench: the 100-entry default codegen cache can't hold one
-      // full pass over the suite's generated classes
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     var nFailed = 0
     SparkEntry.queries

@@ -11,14 +11,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * parquet reader regardless of data size.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Driver-written timestamps (`events.ts` is timestamp[us]) carry no UTC
-    // flag; Spark 4 would infer TIMESTAMP_NTZ, a type unix_micros/window
-    // reject. Read them as plain TIMESTAMP — the stored micros pass through
-    // unchanged (no tz conversion happens on read), matching DuckDB's view.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+  /** Reads timestamps as plain TIMESTAMP under [[graft.Session]]'s
+    * `spark.sql.parquet.inferTimestampNTZ.enabled=false`. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** Parallelism floor for CPU-heavy per-row derivations (tokenize / hash /
     * shingle-explode / codec kernels) that run BETWEEN a scan and its first

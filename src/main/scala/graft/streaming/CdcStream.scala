@@ -771,21 +771,23 @@ object CdcStream {
             if (lowerOf(k) >= upper) return
             val wireSchema = if (info.columns.isEmpty) new StructType()
               else StructType.fromDDL(info.columns.mkString(", "))
-            val payload = from_json(col("props"), wireSchema)
-            slicesOf(k) += batch
+            val leg = batch
               .filter(col("op") =!= "DDL" && sOf === lit(k._1) &&
                 tOf === lit(k._2) &&
                 col("commit_ts") > lowerOf(k) && col("commit_ts") <= upper)
-              // the parse is bound to ONE column in its own projection, so
-              // the per-field reads below are GetStructField over an
-              // attribute — inlining `payload.getField(f)` per field left
-              // one JsonToStructs per output column (from_json is
-              // CodegenFallback; measured on the widest t6 wire: the decode
-              // stages' executor time halved, 8.1 s → 3.8 s, when the parse
-              // became single-bind). CollapseProject keeps the split: it
-              // refuses to inline a non-cheap expression into many
-              // references.
-              .withColumn("__payload", payload)
+            // the parse is bound to ONE column in its own projection, so
+            // the per-field reads below are GetStructField over an
+            // attribute — inlining `from_json(…).getField(f)` per field left
+            // one JsonToStructs per output column (from_json is
+            // CodegenFallback; measured on the widest t6 wire: the decode
+            // stages' executor time halved, 8.1 s → 3.8 s, when the parse
+            // became single-bind). CollapseProject keeps the split: it
+            // refuses to inline a non-cheap expression into many
+            // references. A leg with no wire columns (the table's last
+            // column dropped) reads no field, so it binds no parse.
+            val parsed = if (wireSchema.isEmpty) leg
+              else leg.withColumn("__payload", from_json(col("props"), wireSchema))
+            slicesOf(k) += parsed
               // op rides through: a decoded binlog item keeps its mutation
               // type (I/U/D) — any downstream apply needs it
               .select(Seq(col("commit_ts"), col("pk"), col("op")) ++

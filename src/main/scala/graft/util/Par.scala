@@ -45,7 +45,14 @@ object Par {
     * group — and a streaming query's stop() cancels its job group, which
     * could then kill an unrelated query's jobs. Each task instead carries
     * the SUBMITTER's values for the keys that affect cancellation,
-    * scheduling and UI attribution, and clears them afterwards. */
+    * scheduling and UI attribution, and clears them afterwards.
+    *
+    * The ACTIVE SESSION is thread-local the same way, and a `SparkPlan`
+    * captures `SparkSession.getActiveSession` when it is built: a pool
+    * thread whose inherited value was cleared (or belongs to another
+    * session) would plan the task's jobs against the wrong session, or
+    * none. Each task therefore runs under the submitter's session
+    * (`withActive`, which restores the thread's previous value). */
   private val InheritedProps = Seq("spark.jobGroup.id", "spark.job.description",
     "spark.job.interruptOnCancel", "spark.scheduler.pool")
 
@@ -75,7 +82,7 @@ object Par {
             peak.getAndUpdate(p => math.max(p, cur))
             for (s <- session; (k, v) <- props.get)
               s.sparkContext.setLocalProperty(k, v)
-            try f(it) finally {
+            try session.fold(f(it))(_.withActive(f(it))) finally {
               for (s <- session; (k, _) <- props.get)
                 s.sparkContext.setLocalProperty(k, null)
               active.decrementAndGet()

@@ -21,7 +21,7 @@ import java.sql.{DriverManager, SQLException}
   *    invocation N+1 of a query drops invocation N's database (see
   *    [[derbyMemUrl]]), which bounds heap across bench passes but REQUIRES
   *    each invocation's frame to be consumed before the same query
-  *    constructs again — true of every harness path (Verify, Bench, TimeQ,
+  *    constructs again — true of every harness path (Verify, Bench, ProfileQ,
   *    the spec sweeps), which are all sequential per query.
   */
 object Scratch {
@@ -65,7 +65,7 @@ object Scratch {
     // accumulate staging state with the rep count (and nothing pays a
     // per-query materialization to drop eagerly). Contract: a query's
     // returned frame must be consumed before the SAME query constructs
-    // again — true of every harness path (Verify, Bench, TimeQ, the
+    // again — true of every harness path (Verify, Bench, ProfileQ, the
     // specs), which all consume each invocation before the next pass.
     val prev = memLast.put(prefix, url)
     if (prev != null) dropDerbyMem(prev)

@@ -275,4 +275,51 @@ class PlanSpec extends SparkSpec {
     assert(locals.nonEmpty,
       "pq codebook must reach the serving plan as a LocalRelation")
   }
+
+  /** JSON parses bound in a frame's analyzed plan. */
+  private def jsonParses(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    df.queryExecution.analyzed.collect { case p =>
+      p.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+    }.sum
+  }
+
+  test("the streaming decode binds one JSON parse per non-empty leg, none per field") {
+    // from_json is CodegenFallback: a parse per output field re-parses the
+    // payload once per column (the r22 single-bind fix), and a leg whose
+    // table lost its last column reads no field at all. Table t: (a, b)
+    // until 20, (b) until 40, () after — two legs with wire columns, one
+    // without. Table u: (x, y) throughout — one leg with two fields.
+    import org.apache.spark.sql.functions._
+    import graft.sources.PbBinlogFile
+    import graft.streaming.{CdcStream, SchemaTracker}
+    val wireDir = graft.util.Scratch.dir("graft_parse_wire")
+    val outDir = graft.util.Scratch.dir("graft_parse_out")
+    val ckpt = graft.util.Scratch.dir("graft_parse_ckpt")
+    PbBinlogFile.write(Seq(
+      wireDml("t", Seq(10L), lit("""{"a": 1, "b": 2}""")),
+      wireDdl(20L, "ALTER TABLE app.t DROP COLUMN a"),
+      wireDml("t", Seq(30L), lit("""{"b": 3}""")),
+      wireDdl(40L, "ALTER TABLE app.t DROP COLUMN b"),
+      wireDml("t", Seq(50L), lit("{}")),
+      wireDml("u", Seq(12L, 52L), lit("""{"x": 1, "y": 2}"""))
+    ).reduce(_ unionByName _), wireDir, nFiles = 1)
+    val tracker = new SchemaTracker()
+    tracker.createTable("app", "t", Seq("a BIGINT", "b BIGINT"), version = 0)
+    tracker.createTable("app", "u", Seq("x BIGINT", "y BIGINT"), version = 0)
+    var parses = Map.empty[String, Int]
+    val q = CdcStream.ddlDrivenDecodeTables(
+      PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
+      "app", col("event_type"),
+      emit = Some { case (_, frames, _) =>
+        parses ++= frames.map { case (t, (_, df)) => t -> jsonParses(df) }
+      })
+    try q.processAllAvailable() finally q.stop()
+    assert(tracker.current("app", "t").get.columns.isEmpty)
+    assert(parses == Map("t" -> 2, "u" -> 1))
+  }
+
+  test("typedDecode binds its JSON parse once") {
+    assert(jsonParses(graft.ops.Translators.typedDecode(spark, sf)) == 1)
+  }
 }

@@ -1629,22 +1629,9 @@ class StreamingSpec extends SparkSpec {
     val outDir = graft.util.Scratch.dir("graft_t5t6_out")
     val ckpt = graft.util.Scratch.dir("graft_t5t6_ckpt")
 
-    def dml(ids: Seq[Long]) = ids.toDF("commit_ts").select(
-      col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-      lit("row").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      col("commit_ts").cast("double").as("value"),
-      concat(lit("{\"k\": "),
-        (col("commit_ts").cast("double") + 0.25).cast("string"),
-        lit("}")).as("props"),
-      lit(null).cast("string").as("ddl_sql"))
-    def ddl(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit(sql).as("ddl_sql"))
+    def dml(ids: Seq[Long]) = wireDml("row", ids, concat(lit("{\"k\": "),
+      (col("commit_ts").cast("double") + 0.25).cast("string"), lit("}")))
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
     val ddlAt50 = ddl(50L, "ALTER TABLE app.events MODIFY COLUMN k DECIMAL(10,1)")
     // a FOREIGN table's DDL on the shared wire — same column name, different
     // table: it must neither crash the decode nor re-type app.events' view
@@ -1706,20 +1693,8 @@ class StreamingSpec extends SparkSpec {
     val outDir = graft.util.Scratch.dir("graft_shape_out")
     val ckpt = graft.util.Scratch.dir("graft_shape_ckpt")
 
-    def dml(ids: Seq[Long], props: Long => String) = ids.toDF("commit_ts").select(
-      col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-      lit("row").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      col("commit_ts").cast("double").as("value"),
-      udf(props).apply(col("commit_ts")).as("props"),
-      lit(null).cast("string").as("ddl_sql"))
-    def ddl(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit(sql).as("ddl_sql"))
+    def dml(ids: Seq[Long], props: Long => String) = wireDml("row", ids, props)
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
 
     // batch 0: frames 1..40, ADD COLUMN at 20 — frames 21..40 carry `extra`
     PbBinlogFile.write(
@@ -1807,20 +1782,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = graft.util.Scratch.dir("graft_multi_ckpt")
 
     def dml(tbl: String, ids: Seq[Long], props: Long => String) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit(tbl).as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        udf(props).apply(col("commit_ts")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    def ddl(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit(sql).as("ddl_sql"))
+      wireDml(tbl, ids, props)
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
 
     // batch 0: ta on odd ts, tb on even ts, interleaved with ta's ADD at
     // 40 and tb's MODIFY at 50 — each must reshape only its own decode
@@ -2264,21 +2227,8 @@ class StreamingSpec extends SparkSpec {
     val outDir = graft.util.Scratch.dir("graft_gram_out")
     val ckpt = graft.util.Scratch.dir("graft_gram_ckpt")
 
-    def dml(ids: Seq[Long], props: Long => String) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit("t").as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        udf(props).apply(col("commit_ts")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    def ddl(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      (if (sql == null) lit(null).cast("string") else lit(sql)).as("ddl_sql"))
+    def dml(ids: Seq[Long], props: Long => String) = wireDml("t", ids, props)
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
 
     PbBinlogFile.write(
       dml(Seq(1L, 3L, 5L, 7L, 9L), n => s"""{"k": ${n}.25}""")
@@ -2779,23 +2729,11 @@ class StreamingSpec extends SparkSpec {
     val outDir = graft.util.Scratch.dir("graft_tchd_out")
     val ckpt = graft.util.Scratch.dir("graft_tchd_ckpt")
     PbBinlogFile.write(
-      Seq(1L, 3L).toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit("t007").as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        concat(lit("{\"k\": "), col("commit_ts").cast("string"), lit("}"))
-          .as("props"),
-        lit(null).cast("string").as("ddl_sql"))
+      wireDml("t007", Seq(1L, 3L),
+        concat(lit("{\"k\": "), col("commit_ts").cast("string"), lit("}")))
         // one foreign-table DDL rides along: addressed-but-untracked keys
         // stay out of the view; a TRACKED addressed table would add one
-        .unionByName(Seq(4L).toDF("commit_ts").select(
-          col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-          lit("ddl").as("event_type"),
-          timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-          lit(null).cast("double").as("value"),
-          lit(null).cast("string").as("props"),
-          lit("ALTER TABLE other.x ADD COLUMN y INT").as("ddl_sql"))),
+        .unionByName(wireDdl(4L, "ALTER TABLE other.x ADD COLUMN y INT")),
       wireDir, nFiles = 1)
     val tracker = new SchemaTracker()
     (0 until 200).foreach(i =>
@@ -2813,31 +2751,13 @@ class StreamingSpec extends SparkSpec {
     // view (the dispatch needs its shape) and applies
     val wire2 = graft.util.Scratch.dir("graft_tchd_wire2")
     PbBinlogFile.write(
-      Seq(11L).toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit("t007").as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        concat(lit("{\"k\": "), col("commit_ts").cast("string"), lit("}"))
-          .as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-        .unionByName(Seq(12L).toDF("commit_ts").select(
-          col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-          lit("ddl").as("event_type"),
-          timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-          lit(null).cast("double").as("value"),
-          lit(null).cast("string").as("props"),
-          lit("ALTER TABLE app.t123 ADD COLUMN extra BIGINT").as("ddl_sql")))
+      wireDml("t007", Seq(11L),
+        concat(lit("{\"k\": "), col("commit_ts").cast("string"), lit("}")))
+        .unionByName(wireDdl(12L, "ALTER TABLE app.t123 ADD COLUMN extra BIGINT"))
         // a frame whose ROUTING EXPRESSION evaluates to null (a `when`
         // with no otherwise, below) matches no table: it must drop, not
         // poison the touched-set key sort
-        .unionByName(Seq(14L).toDF("commit_ts").select(
-          col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-          lit("unrouted").as("event_type"),
-          timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-          col("commit_ts").cast("double").as("value"),
-          lit("{\"k\": 14}").as("props"),
-          lit(null).cast("string").as("ddl_sql"))),
+        .unionByName(wireDml("unrouted", Seq(14L), lit("{\"k\": 14}"))),
       wire2, nFiles = 1)
     val q2 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wire2), tracker, outDir,
@@ -2863,20 +2783,8 @@ class StreamingSpec extends SparkSpec {
     val outDir = graft.util.Scratch.dir("graft_fold_out")
     val ckpt = graft.util.Scratch.dir("graft_fold_ckpt")
     def dml(ids: Seq[Long], route: String, props: Long => String) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit(route).as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        udf(props).apply(col("commit_ts")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    def ddl(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit(sql).as("ddl_sql"))
+      wireDml(route, ids, props)
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
     PbBinlogFile.write(
       // three spellings of the SAME table on the routing column
       dml(Seq(1L), "App:T", n => s"""{"k": ${n}.25}""")
@@ -2926,21 +2834,9 @@ class StreamingSpec extends SparkSpec {
     val outDir = graft.util.Scratch.dir("graft_met_out")
     val ckpt = graft.util.Scratch.dir("graft_met_ckpt")
     def dml(ids: Seq[Long]) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit("t").as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        concat(lit("{\"k\": "), col("commit_ts").cast("string"), lit("}"))
-          .as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    def ddl(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit(sql).as("ddl_sql"))
+      wireDml("t", ids,
+        concat(lit("{\"k\": "), col("commit_ts").cast("string"), lit("}")))
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
     // TWO wire segments drained one per trigger → a multi-batch stream,
     // so the per-event DELTA fields are exercised across batches (each
     // segment carries one administrative skip)
@@ -3027,22 +2923,8 @@ class StreamingSpec extends SparkSpec {
     val root = graft.util.Scratch.dir("graft_odef_pump")
     val outDir = graft.util.Scratch.dir("graft_odef_out")
     val ckpt = graft.util.Scratch.dir("graft_odef_ckpt")
-    def dml(ids: Seq[Long], props: Long => String) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit("ta").as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        udf(props).apply(col("commit_ts")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    val addDdl = Seq(10L).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit("ALTER TABLE app.ta ADD COLUMN extra BIGINT DEFAULT 5 AFTER k")
-        .as("ddl_sql"))
+    def dml(ids: Seq[Long], props: Long => String) = wireDml("ta", ids, props)
+    val addDdl = wireDdl(10L, "ALTER TABLE app.ta ADD COLUMN extra BIGINT DEFAULT 5 AFTER k")
     PbBinlogFile.write(
       dml(Seq(1L, 3L), n => s"""{"k": ${n}.25}""")
         .unionByName(addDdl)
@@ -3087,21 +2969,8 @@ class StreamingSpec extends SparkSpec {
     val wireDir = graft.util.Scratch.dir("graft_tail_wire")
     val outDir = graft.util.Scratch.dir("graft_tail_out")
     val ckpt = graft.util.Scratch.dir("graft_tail_ckpt")
-    def dml(ids: Seq[Long], props: Long => String) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit("t").as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        udf(props).apply(col("commit_ts")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    def ddl(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit(sql).as("ddl_sql"))
+    def dml(ids: Seq[Long], props: Long => String) = wireDml("t", ids, props)
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
     PbBinlogFile.write(
       dml(Seq(1L, 3L), n => s"""{"k": ${n}.25}""")
         .unionByName(ddl(10L,
@@ -3180,20 +3049,8 @@ class StreamingSpec extends SparkSpec {
     val outDir = graft.util.Scratch.dir("graft_osc_out")
     val ckpt = graft.util.Scratch.dir("graft_osc_ckpt")
     def dml(tbl: String, ids: Seq[Long], props: Long => String) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit(tbl).as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        udf(props).apply(col("commit_ts")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    def ddl(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit(sql).as("ddl_sql"))
+      wireDml(tbl, ids, props)
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
     PbBinlogFile.write(
       dml("t", Seq(2L, 4L), n => s"""{"k": ${n}.25}""")
         .unionByName(ddl(6L, "CREATE TABLE app._t_new LIKE app.t"))
@@ -3251,20 +3108,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = graft.util.Scratch.dir("graft_msch_ckpt")
 
     def dml(route: String, ids: Seq[Long], props: Long => String) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit(route).as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        udf(props).apply(col("commit_ts")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    def ddl(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit(sql).as("ddl_sql"))
+      wireDml(route, ids, props)
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
     // route column carries "schema:table"
     val schemaOf = substring_index(col("event_type"), ":", 1)
     val tableOf = substring_index(col("event_type"), ":", -1)
@@ -3416,20 +3261,8 @@ class StreamingSpec extends SparkSpec {
     val outDir = graft.util.Scratch.dir("graft_fb_out")
     val ckpt = graft.util.Scratch.dir("graft_fb_ckpt")
     def dml(tbl: String, ids: Seq[Long]) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit(tbl).as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        concat(lit("{\"k\": "), col("commit_ts"), lit(".25}")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    def ddl(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit(sql).as("ddl_sql"))
+      wireDml(tbl, ids, concat(lit("{\"k\": "), col("commit_ts"), lit(".25}")))
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
 
     // batch 0: drop + SAME-batch flashback (batch-local graveyard), then
     // CREATE LIKE off the recovered table
@@ -3534,21 +3367,8 @@ class StreamingSpec extends SparkSpec {
     val wireDir = graft.util.Scratch.dir("graft_trdef_wire")
     val outDir = graft.util.Scratch.dir("graft_trdef_out")
     val ckpt = graft.util.Scratch.dir("graft_trdef_ckpt")
-    def dml(ids: Seq[Long], props: Long => String) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit("t").as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        udf(props).apply(col("commit_ts")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    def ddl(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit(sql).as("ddl_sql"))
+    def dml(ids: Seq[Long], props: Long => String) = wireDml("t", ids, props)
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
     PbBinlogFile.write(
       dml(Seq(2L), n => s"""{"k": ${n}.25, "e": $n}""")
         .unionByName(ddl(4L, "ALTER TABLE app.t DROP COLUMN e"))
@@ -3591,13 +3411,7 @@ class StreamingSpec extends SparkSpec {
     val outDir = graft.util.Scratch.dir("graft_par_out")
     val ckpt = graft.util.Scratch.dir("graft_par_ckpt")
     def dml(tbl: String, ids: Seq[Long]) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit(tbl).as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        concat(lit("{\"k\": "), col("commit_ts"), lit(".25}")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
+      wireDml(tbl, ids, concat(lit("{\"k\": "), col("commit_ts"), lit(".25}")))
     val tables = (1 to 6).map(i => s"t$i")
     PbBinlogFile.write(
       tables.zipWithIndex.map { case (t, i) =>
@@ -3635,22 +3449,9 @@ class StreamingSpec extends SparkSpec {
     val root = graft.util.Scratch.dir("graft_t2t5_pumps")
     val outDir = graft.util.Scratch.dir("graft_t2t5_out")
     val ckpt = graft.util.Scratch.dir("graft_t2t5_ckpt")
-    def dml(ids: Seq[Long]) = ids.toDF("commit_ts").select(
-      col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-      lit("row").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      col("commit_ts").cast("double").as("value"),
-      concat(lit("{\"k\": "),
-        (col("commit_ts").cast("double") + 0.25).cast("string"),
-        lit("}")).as("props"),
-      lit(null).cast("string").as("ddl_sql"))
-    val ddl50 = Seq(50L).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit("ALTER TABLE app.events MODIFY COLUMN k DECIMAL(10,1)").as("ddl_sql"))
+    def dml(ids: Seq[Long]) = wireDml("row", ids, concat(lit("{\"k\": "),
+      (col("commit_ts").cast("double") + 0.25).cast("string"), lit("}")))
+    val ddl50 = wireDdl(50L, "ALTER TABLE app.events MODIFY COLUMN k DECIMAL(10,1)")
     val pumps = Seq(s"$root/p0", s"$root/p1")
     // stage 1: both pumps deliver up to ts 60, the DDL rides pump 0
     PbBinlogFile.write(dml((1L to 59L by 2)).unionByName(ddl50), pumps(0), nFiles = 1)
@@ -3695,20 +3496,8 @@ class StreamingSpec extends SparkSpec {
     val outDir = graft.util.Scratch.dir("graft_repl_out")
     val ckpt = graft.util.Scratch.dir("graft_repl_ckpt")
     def dml(tbl: String, ids: Seq[Long], props: Long => String) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit(tbl).as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        udf(props).apply(col("commit_ts")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    val addDdl = Seq(40L).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit("ALTER TABLE app.ta ADD COLUMN extra BIGINT").as("ddl_sql"))
+      wireDml(tbl, ids, props)
+    val addDdl = wireDdl(40L, "ALTER TABLE app.ta ADD COLUMN extra BIGINT")
     // ta rides pump 0 (odd ts, the DDL with it), tb rides pump 1 (even ts)
     PbBinlogFile.write(
       dml("ta", (1L to 39L by 2), n => s"""{"k": ${n}.25}""")
@@ -3758,13 +3547,7 @@ class StreamingSpec extends SparkSpec {
     CdcStream.recoverDecodeTracker(spark, outDir, ckpt, tracker2)
     assert(tracker2.current("app", "ta").get.columns ==
       Vector("k DOUBLE", "extra BIGINT"))
-    def ddlAt(ts: Long, sql: String) = Seq(ts).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit(sql).as("ddl_sql"))
+    def ddlAt(ts: Long, sql: String) = wireDdl(ts, sql)
     // wire types live in SPARK's domain (STRING, not VARCHAR — the
     // decode builds from_json schemas from them); the target dialect
     // mapping is ddlToTarget's job, M8 in miniature
@@ -3835,20 +3618,8 @@ class StreamingSpec extends SparkSpec {
     val outDir = graft.util.Scratch.dir("graft_rsch_out")
     val ckpt = graft.util.Scratch.dir("graft_rsch_ckpt")
     def dml(route: String, ids: Seq[Long], props: Long => String) =
-      ids.toDF("commit_ts").select(
-        col("commit_ts"), col("commit_ts").as("pk"), lit("U").as("op"),
-        lit(route).as("event_type"),
-        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-        col("commit_ts").cast("double").as("value"),
-        udf(props).apply(col("commit_ts")).as("props"),
-        lit(null).cast("string").as("ddl_sql"))
-    val addDdl = Seq(10L).toDF("commit_ts").select(
-      col("commit_ts"), lit(-1L).as("pk"), lit("DDL").as("op"),
-      lit("ddl").as("event_type"),
-      timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
-      lit(null).cast("double").as("value"),
-      lit(null).cast("string").as("props"),
-      lit("ALTER TABLE sa.t ADD COLUMN extra BIGINT").as("ddl_sql"))
+      wireDml(route, ids, props)
+    val addDdl = wireDdl(10L, "ALTER TABLE sa.t ADD COLUMN extra BIGINT")
     PbBinlogFile.write(
       dml("sa:t", (1L to 9L by 2), n => s"""{"k": ${n}.25}""")
         .unionByName(dml("sa:t", (11L to 19L by 2),
