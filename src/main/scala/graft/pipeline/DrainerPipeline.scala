@@ -204,12 +204,10 @@ object DrainerPipeline {
       tableMap: String => String = identity,
       ddlToTarget: (String, String, String, String) => Option[String] =
         (_, _, _, _) => None,
-      delay: String = "0 seconds", merge: Boolean = true,
-      skippedDdl: Option[org.apache.spark.util.LongAccumulator] = None): StreamingQuery =
+      delay: String = "0 seconds", merge: Boolean = true): StreamingQuery =
     CdcStream.ddlDrivenDecodeTables(
       CdcStream.mergedWireStream(spark, pumpDirs, delay),
       tracker, outDir, checkpoint, schemaName, tableOf,
-      skippedDdl = skippedDdl,
       emit = Some { b =>
         replicateEmit(spark, loader, (s, t) => tableMap(t),
           (_, t, action, c, arg) => ddlToTarget(t, action, c, arg), merge)(
@@ -232,12 +230,10 @@ object DrainerPipeline {
       tableOf: Column, tableMap: (String, String) => String,
       ddlToTarget: (String, String, String, String, String) => Option[String] =
         (_, _, _, _, _) => None,
-      delay: String = "0 seconds", merge: Boolean = true,
-      skippedDdl: Option[org.apache.spark.util.LongAccumulator] = None): StreamingQuery =
+      delay: String = "0 seconds", merge: Boolean = true): StreamingQuery =
     CdcStream.ddlDrivenDecodeSchemas(
       CdcStream.mergedWireStream(spark, pumpDirs, delay),
       tracker, outDir, checkpoint, schemas, schemaOf, tableOf,
-      skippedDdl = skippedDdl,
       emit = Some(replicateEmit(spark, loader, tableMap, ddlToTarget, merge)))
 
   /** The shared per-batch apply of both replication loops: cast each

@@ -114,11 +114,11 @@ object CdcStream {
     * min-frontier mechanism as [[mergedPumpStream]]) over
     * [[graft.sources.PbBinlogFile.readStream]] sources, so a lagging pump
     * holds the decode frontier and no frame can arrive below an applied
-    * DDL's commit ts — the delivery contract
-    * [[ddlDrivenDecode]]/[[ddlDrivenDecodeTables]]'s below-frontier
-    * accumulator audits (ref: drainer/merge.go:236-335 feeding
-    * drainer/syncer.go). `maxFilesPerTrigger` is the per-pump P4
-    * admission knob, applied to EACH source. */
+    * DDL's commit ts — the delivery contract the decode's
+    * `below_frontier_frames_total` count audits ([[decodeCounts]]; ref:
+    * drainer/merge.go:236-335 feeding drainer/syncer.go).
+    * `maxFilesPerTrigger` is the per-pump P4 admission knob, applied to
+    * EACH source. */
   def mergedWireStream(spark: SparkSession, pumpDirs: Seq[String],
       delay: String = "0 seconds", maxFilesPerTrigger: Int = 0): DataFrame = {
     require(pumpDirs.nonEmpty, "mergedWireStream needs at least one pump directory")
@@ -267,45 +267,6 @@ object CdcStream {
       case other => throw new IllegalArgumentException(s"unknown logged DDL action: $other")
     }
 
-  /** T5∘T6 composed IN the stream: DDL frames carried on the wire re-type
-    * the decode of every SUBSEQUENT frame — in the same micro-batch or any
-    * later one (ref: drainer/syncer.go:393-397 — each DML decodes at the
-    * schema in force at its commit ts; drainer/schema.go:293-331 replays
-    * DDL jobs up to that version).
-    *
-    * `wire` is a pb-binlog wire stream
-    * ([[graft.sources.PbBinlogFile.readStream]]): DML frames carry a JSON
-    * `props` payload; a DDL frame (`op = "DDL"`,
-    * `ddl_sql = "ALTER TABLE s.t MODIFY COLUMN c TYPE"`) changes how later
-    * frames' `props` decode. Inside `foreachBatch` the batch is split at
-    * its DDL barriers IN COMMIT-TS ORDER (DDL is rare and totally ordered
-    * — driver-side tracker state, metadata-sized collect); each slice
-    * between barriers decodes DISTRIBUTED with the `from_json` schema the
-    * tracker holds at that version, built from the tracked column defs
-    * (`StructType.fromDDL`). A frame AT the DDL's commit ts still decodes
-    * with the old schema — the DDL takes effect after its own commit,
-    * matching the loader's barrier convention.
-    *
-    * Replay safety: the batch decodes against a LOCAL view of the catalog;
-    * the live tracker advances only AFTER the batch's output and its DDL
-    * log have been written, so a batch that fails mid-write replays from
-    * an unchanged tracker and reproduces the same bytes. Output overwrites
-    * `outDir/data/batch=<id>` (idempotent per batch id, the
-    * DrainerPipeline outbinlog pattern), each row stamped with the schema
-    * version that decoded it; the applied DDLs overwrite
-    * `outDir/ddl/batch=<id>` — the durable source of truth a RESTARTED
-    * process replays into a fresh tracker via [[recoverDecodeTracker]]
-    * (the tracker itself is driver memory and dies with the process). */
-  def ddlDrivenDecode(wire: DataFrame, tracker: SchemaTracker, outDir: String,
-      checkpoint: String, schemaName: String = "app",
-      table: String = "events",
-      belowFrontier: Option[org.apache.spark.util.LongAccumulator] = None): StreamingQuery =
-    decodeQuery(wire, tracker, outDir, checkpoint, Seq(schemaName),
-      schemaOf = lit(schemaName), tableOf = lit(table),
-      fixedTables = Some(Seq((schemaName, table))),
-      layout = (id, _, _) => s"$outDir/data/batch=$id", belowFrontier,
-      skippedDdl = None, emit = None, fillOriginDefaults = false)
-
   /** Per-batch decoded output handed to a composing sink (see
     * [[ddlDrivenDecodeTables]]'s `emit`): the batch id, each table's
     * (column defs, string-decoded union frame), and the batch's applied
@@ -324,39 +285,67 @@ object CdcStream {
   type DecodedBatchMulti = (Long, Map[(String, String), (Seq[String], DataFrame)],
     Seq[(Long, String, String, String, String, String)])
 
-  /** Multi-table T5∘T6 — the drainer's real shape: EVERY table on the
-    * shared wire decodes against its own schema history in one stream
-    * (ref: drainer/syncer.go:374-397 routes each mutation's table through
-    * the versioned catalog; drainer/schema.go:293-331 replays DDL jobs per
-    * table). `tableOf` names each DML frame's table (an expression over
-    * the envelope — typically a routing column); the decode set is every
-    * table registered in the tracker under `schemaName`, plus tables a
-    * wire CREATE TABLE registers (or a RENAME TABLE re-homes)
-    * mid-stream. Per batch, each table's
-    * frames are sliced at ITS OWN DDL barriers only — a foreign table's
-    * DDL neither cuts nor reshapes another table's decode — and each
-    * table's decoded union lands under `outDir/data/batch=<id>/table=<t>`
-    * (idempotent per batch id; the per-table slice shape the multi-table
+  /** T5∘T6 composed IN the stream, the drainer's real shape: DDL frames
+    * carried on the wire re-type the decode of every SUBSEQUENT frame of
+    * their table — in the same micro-batch or any later one — and EVERY
+    * table on the shared wire decodes against its own schema history in
+    * one stream (ref: drainer/syncer.go:374-397 routes each mutation's
+    * table through the versioned catalog and decodes it at the schema in
+    * force at its commit ts; drainer/schema.go:293-331 replays DDL jobs per
+    * table up to that version).
+    *
+    * `wire` is a pb-binlog wire stream
+    * ([[graft.sources.PbBinlogFile.readStream]]): DML frames carry a JSON
+    * `props` payload; a DDL frame (`op = "DDL"`,
+    * `ddl_sql = "ALTER TABLE s.t MODIFY COLUMN c TYPE"`) changes how later
+    * frames' `props` decode. `tableOf` names each DML frame's table (an
+    * expression over the envelope — typically a routing column); the
+    * decode set is every table registered in the tracker under
+    * `schemaName`, plus tables a wire CREATE TABLE registers (or a RENAME
+    * TABLE re-homes) mid-stream. Inside `foreachBatch` the batch is split
+    * at its DDL barriers IN COMMIT-TS ORDER (DDL is rare and totally
+    * ordered — driver-side tracker state, metadata-sized collect); each
+    * table's frames are sliced at ITS OWN DDL barriers only — a foreign
+    * table's DDL neither cuts nor reshapes another table's decode — and
+    * each slice between barriers decodes DISTRIBUTED with the `from_json`
+    * schema the tracker holds at that version, built from the tracked
+    * column defs (`StructType.fromDDL`). A frame AT the DDL's commit ts
+    * still decodes with the old schema — the DDL takes effect after its
+    * own commit, matching the loader's barrier convention.
+    *
+    * Each table's decoded union lands under
+    * `outDir/data/batch=<id>/table=<t>`, each row stamped with the schema
+    * version that decoded it (the per-table slice shape the multi-table
     * JDBC loader consumes). Only tables the batch carries DML for write a
     * dir — per-batch work scales with the touched set, so a sparse-traffic
     * table is simply absent from batches that never mention it (consumers
-    * must enumerate existing dirs, not tracker.tablesOf × batch ids). One shared action-tagged DDL log orders all
-    * tables' schema history by commit ts, so a restart replays N
-    * independent table histories from one durable log
-    * ([[recoverDecodeTracker]], unchanged). Frames addressing no tracked
-    * table drop, like the reference's filter-then-load contract — routing
-    * upstream decides what reaches the decode. */
+    * must enumerate existing dirs, not tracker.tablesOf × batch ids).
+    * Frames addressing no tracked table drop, like the reference's
+    * filter-then-load contract — routing upstream decides what reaches the
+    * decode.
+    *
+    * Replay safety: the batch decodes against a LOCAL view of the catalog;
+    * the live tracker advances only AFTER the batch's output and its DDL
+    * log have been written, so a batch that fails mid-write replays from
+    * an unchanged tracker and reproduces the same bytes. Output overwrites
+    * its batch dirs (idempotent per batch id, the DrainerPipeline
+    * outbinlog pattern); the applied DDLs of every table overwrite
+    * `outDir/ddl/batch=<id>` — one shared action-tagged log ordered by
+    * commit ts, the durable source of truth a RESTARTED process replays
+    * into a fresh tracker via [[recoverDecodeTracker]] (the tracker itself
+    * is driver memory and dies with the process).
+    *
+    * Skipped statements and below-frontier frames are counted per query:
+    * read them with [[decodeCounts]] or, per progress event, through
+    * [[DecodeMetricsListener]]. */
   def ddlDrivenDecodeTables(wire: DataFrame, tracker: SchemaTracker,
       outDir: String, checkpoint: String, schemaName: String,
       tableOf: Column,
-      belowFrontier: Option[org.apache.spark.util.LongAccumulator] = None,
       emit: Option[DecodedBatch => Unit] = None,
-      skippedDdl: Option[org.apache.spark.util.LongAccumulator] = None,
       fillOriginDefaults: Boolean = false): StreamingQuery =
     decodeQuery(wire, tracker, outDir, checkpoint, Seq(schemaName),
-      schemaOf = lit(schemaName), tableOf = tableOf, fixedTables = None,
-      layout = (id, _, t) => s"$outDir/data/batch=$id/table=$t", belowFrontier,
-      skippedDdl,
+      schemaOf = lit(schemaName), tableOf = tableOf,
+      layout = (id, _, t) => s"$outDir/data/batch=$id/table=$t",
       emit.map(f => (b: DecodedBatchMulti) =>
         f((b._1, b._2.map { case ((_, t), v) => t -> v }, b._3))),
       fillOriginDefaults)
@@ -377,14 +366,11 @@ object CdcStream {
   def ddlDrivenDecodeSchemas(wire: DataFrame, tracker: SchemaTracker,
       outDir: String, checkpoint: String, schemas: Seq[String],
       schemaOf: Column, tableOf: Column,
-      belowFrontier: Option[org.apache.spark.util.LongAccumulator] = None,
-      skippedDdl: Option[org.apache.spark.util.LongAccumulator] = None,
       emit: Option[DecodedBatchMulti => Unit] = None,
       fillOriginDefaults: Boolean = false): StreamingQuery =
     decodeQuery(wire, tracker, outDir, checkpoint, schemas, schemaOf, tableOf,
-      fixedTables = None,
       layout = (id, s, t) => s"$outDir/data/batch=$id/schema=$s/table=$t",
-      belowFrontier, skippedDdl, emit, fillOriginDefaults)
+      emit, fillOriginDefaults)
 
   /** Test hook: per-output-dir size of the last batch's driver-side
     * catalog view — the O(touched ∪ addressed) discipline is asserted by
@@ -418,18 +404,43 @@ object CdcStream {
     * micro-batch. */
   val DecodeObservationName = "graft_decode"
 
+  /** The decode's two driver-side counts per streaming query id — walk
+    * products no plan expression can compute: administrative or untracked
+    * statements skipped (ref: drainer/schema.go:333-353,
+    * drainer/syncer.go:436-462 log and continue) and frames delivered
+    * below their table's applied DDL frontier. The id is the one the
+    * checkpoint persists, so a restart from the same checkpoint in the
+    * same process continues its totals. One small entry per decode query
+    * the process has run. */
+  private val countsById =
+    new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Map[String, Long]]()
+  private val noCounts =
+    Map("skipped_ddl_total" -> 0L, "below_frontier_frames_total" -> 0L)
+
+  /** The cumulative `skipped_ddl_total` and `below_frontier_frames_total`
+    * of the decode query `queryId` (both 0 before its first count). The
+    * decode counts on the query's own stream thread, so after
+    * `processAllAvailable` returns the totals cover every finished batch. */
+  def decodeCounts(queryId: java.util.UUID): Map[String, Long] =
+    Option(countsById.get(queryId)).getOrElse(noCounts)
+
+  private def addCount(queryId: java.util.UUID, key: String, n: Long): Unit = {
+    countsById.merge(queryId, noCounts + (key -> n),
+      (old, _) => old + (key -> (old(key) + n)))
+    ()
+  }
+
   /** A4 metrics through the STREAMING ENGINE's own progress path: merges
     * each decode query's observed event counts (plan-side aggregates —
-    * ddl_frames, dml_frames, max_commit_ts) with the two driver-side
-    * counters the decode keeps (skipped administrative DDL, below-frontier
-    * frames — walk products no plan expression can compute), keyed by
-    * query id. An operator reads ONE map per query from progress events
-    * instead of digging accumulators out of the Spark UI (ref:
-    * drainer/metrics.go registers event counters and skipped-job counts as
-    * first-class Prometheus metrics). Register with
-    * `spark.streams.addListener`; pass the SAME accumulators given to the
-    * decode. Snapshots persist past query stop (progress events are
-    * asynchronous — poll [[snapshot]] until the expected batch shows).
+    * ddl_frames, dml_frames, max_commit_ts) with its [[decodeCounts]]
+    * (skipped administrative DDL, below-frontier frames), keyed by query
+    * id. An operator reads ONE map per query from progress events instead
+    * of digging counters out of the Spark UI (ref: drainer/metrics.go
+    * registers event counters and skipped-job counts as first-class
+    * Prometheus metrics). Register with `spark.streams.addListener`; one
+    * listener serves every decode query of the session. Snapshots persist
+    * past query stop (progress events are asynchronous — poll [[snapshot]]
+    * until the expected batch shows).
     * Semantics mirror Prometheus: the observed fields are PER-BATCH, the
     * `_total` counter fields are CUMULATIVE reads taken when the progress
     * event is handled — on a live multi-batch stream a single total may
@@ -440,10 +451,7 @@ object CdcStream {
     * of published deltas always equals the latest total exactly — a
     * mid-stream consumer reads exact increments, and the converged
     * post-stream snapshot is exact as before. */
-  final class DecodeMetricsListener(
-      skippedDdl: Option[org.apache.spark.util.LongAccumulator] = None,
-      belowFrontier: Option[org.apache.spark.util.LongAccumulator] = None,
-      maxDeltaDepth: Int = 1024)
+  final class DecodeMetricsListener(maxDeltaDepth: Int = 1024)
       extends org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
     private val byId =
@@ -482,10 +490,7 @@ object CdcStream {
       val row = e.progress.observedMetrics.get(DecodeObservationName)
       if (row != null) {
         // cumulative counter reads (see the class note on semantics)
-        val counters: Map[String, Long] =
-          skippedDdl.map(a => "skipped_ddl_total" -> a.value.longValue).toMap ++
-            belowFrontier.map(a =>
-              "below_frontier_frames_total" -> a.value.longValue).toMap
+        val counters = decodeCounts(e.progress.id)
         val prev = Option(lastSeen.get(e.progress.id)).getOrElse(Map.empty)
         val delta = counters.map { case (k, v) =>
           k.stripSuffix("_total") + "_delta" -> (v - prev.getOrElse(k, 0L))
@@ -534,36 +539,9 @@ object CdcStream {
   private def decodeQuery(wire: DataFrame, tracker: SchemaTracker,
       outDir: String, checkpoint: String, schemas: Seq[String],
       schemaOf: Column, tableOf: Column,
-      fixedTables: Option[Seq[(String, String)]],
       layout: (Long, String, String) => String,
-      belowFrontier: Option[org.apache.spark.util.LongAccumulator],
-      skippedDdl: Option[org.apache.spark.util.LongAccumulator],
       emit: Option[DecodedBatchMulti => Unit],
       fillOriginDefaults: Boolean = false): StreamingQuery = {
-    val tag = schemas.mkString("+")
-    // forward-only-delivery violations surface here instead of silently
-    // mis-typing rows (see the check inside the batch); callers that want
-    // to assert/alert pass their own accumulator, otherwise a named one
-    // still shows in the Spark UI metrics
-    val frontierViolations = belowFrontier.getOrElse {
-      wire.sparkSession.sparkContext.longAccumulator(
-        s"graft.ddl_decode.below_frontier_frames.$tag")
-    }
-    // administrative / unparseable-but-untracked statements SKIP with this
-    // count instead of killing the stream (ref: drainer/schema.go:333-353,
-    // drainer/syncer.go:436-462 log and continue) — a replication query
-    // must ride over a CREATE INDEX; only a statement that addresses a
-    // TRACKED table's shape and cannot apply throws
-    val skipped = skippedDdl.getOrElse {
-      wire.sparkSession.sparkContext.longAccumulator(
-        s"graft.ddl_decode.skipped_ddl.$tag")
-    }
-    // only the multi-table forms grow their decode set from wire CREATEs:
-    // the single-table form writes a flat batch dir, where a second table
-    // would collide — there only a FOREIGN/new-name CREATE skips; a plain
-    // CREATE of the pinned table throws via the already-tracked dispatch
-    // (IF NOT EXISTS remains the counted legal no-op)
-    val dynamicTables = fixedTables.isEmpty
     // identifier policy from the tracker (the lower_case_table_names
     // analog, SchemaTracker.foldCase): schema/table identifiers fold at
     // EVERY boundary — the routing expressions, the registration-derived
@@ -576,13 +554,12 @@ object CdcStream {
     val trackedSchemas = schemas.map(normId).toSet
     val sOf = if (fold) lower(schemaOf) else schemaOf
     val tOf = if (fold) lower(tableOf) else tableOf
-    val fixedKeys = fixedTables.map(_.map { case (s, t) => (normId(s), normId(t)) })
     // A4-parity event counts in the query's own progress stream
     // (`StreamingQueryProgress.observedMetrics`) — [[DecodeMetricsListener]]
-    // merges these with the two driver-side counters above, so an operator
-    // reads skips and frontier violations from progress events instead of
-    // digging accumulators out of the Spark UI (ref: drainer/metrics.go
-    // counts events and skipped jobs as first-class metrics)
+    // merges these with the query's [[decodeCounts]], so an operator reads
+    // skips and frontier violations from progress events instead of the
+    // Spark UI (ref: drainer/metrics.go counts events and skipped jobs as
+    // first-class metrics)
     val observed = wire.observe(DecodeObservationName,
       count(when(col("op") === "DDL", lit(1))).as("ddl_frames"),
       count(when(col("op") =!= "DDL", lit(1))).as("dml_frames"),
@@ -591,6 +568,16 @@ object CdcStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch0: DataFrame, id: Long) =>
         val spark = batch0.sparkSession
+        // foreachBatch runs on the query's stream thread, which carries
+        // the query id as a local property — the key of this query's
+        // driver-side counts
+        val queryId = java.util.UUID.fromString(
+          spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
+        // administrative / unparseable-but-untracked statements SKIP with
+        // a count instead of killing the stream — a replication query must
+        // ride over a CREATE INDEX; only a statement that addresses a
+        // TRACKED table's shape and cannot apply throws
+        def skip(): Unit = addCount(queryId, "skipped_ddl_total", 1L)
         // the gather plus one filter per (table, slice) re-scan this batch;
         // pin it once instead of re-running the source scan each time.
         // NOT spread (r21, measured both ways): widening the narrow-wire
@@ -658,24 +645,16 @@ object CdcStream {
               qualsAddressed(text).map(q => (normId(q._1), normId(q._2)))
             case AdminDdl                      => Seq.empty
           }
-          val subsetKeys: Seq[(String, String)] = fixedKeys.getOrElse(
-            (touched ++ parsedDdls.flatMap(_._3).flatMap(keysOf)).toSeq.sorted)
+          val subsetKeys: Seq[(String, String)] =
+            (touched ++ parsedDdls.flatMap(_._3).flatMap(keysOf)).toSeq.sorted
           // the LOCAL catalog view: the decode transforms this copy, and
           // the live tracker advances only after the batch's output and
           // DDL log are durable — a crash mid-write replays against an
-          // unchanged tracker and reproduces the same bytes. The fixed
-          // (single-table) form still demands registration; on the
-          // dynamic wire an absent key is simply foreign traffic whose
-          // frames drop.
+          // unchanged tracker and reproduces the same bytes. An absent key
+          // is simply foreign traffic whose frames drop.
           var catalog: Map[(String, String), tracker.TableInfo] =
-            if (fixedKeys.isDefined)
-              subsetKeys.map { k =>
-                k -> tracker.current(k._1, k._2).getOrElse(
-                  throw new NoSuchElementException(s"${k._1}.${k._2} not registered"))
-              }.toMap
-            else
-              subsetKeys.flatMap(k =>
-                tracker.current(k._1, k._2).map(k -> _)).toMap
+            subsetKeys.flatMap(k =>
+              tracker.current(k._1, k._2).map(k -> _)).toMap
           lastDriverCatalogSizes.put(outDir, Integer.valueOf(catalog.size))
           // drop-time shapes of tables dropped IN THIS BATCH — a same-batch
           // FLASHBACK reads these (the live tracker's graveyard only fills
@@ -721,7 +700,7 @@ object CdcStream {
               col("commit_ts") <= coalesce(
                 element_at(typedLit(frontiers), keyOf), lit(Long.MinValue)))
               .count()
-            if (below > 0) frontierViolations.add(below)
+            if (below > 0) addCount(queryId, "below_frontier_frames_total", below)
           }
 
           val applied = scala.collection.mutable.ArrayBuffer.empty[AppliedDdl]
@@ -909,7 +888,7 @@ object CdcStream {
                 catalog += (s, t) -> catalog((s, t)).copy(version = ts)
                 applied += ((ts, s, t, "truncate", "", ""))
               case CreateDdl(s, t, cols, _, dflts, dicts)
-                  if trackedSchemas(s) && dynamicTables && !catalog.contains((s, t)) =>
+                  if trackedSchemas(s) && !catalog.contains((s, t)) =>
                 // wire-registered table: decodes from its create ts forward
                 // (a frame of t below the create has no schema to decode
                 // against and drops, like any unrouted frame)
@@ -934,22 +913,12 @@ object CdcStream {
                 // upstream no-op (counted skip); the plain form is illegal
                 // upstream (TiDB rejects it) and unappliable here — the
                 // tracked-shape contract says throw, never silently drop
-                if (ifNotExists) skipped.add(1L)
+                if (ifNotExists) skip()
                 else throw new IllegalArgumentException(
                   s"cannot apply wire CREATE TABLE of already-tracked $s.$t: " +
                     "illegal upstream and unappliable here — drop the " +
                     "statement upstream (F5 ddl-skip filter)")
               case DropTableDdl(s, t) if catalog.contains((s, t)) =>
-                // the single-table form pins its one table for the query's
-                // lifetime — accepting the drop would only defer the crash
-                // to the NEXT batch's catalog build with a misleading
-                // "not registered" error, after durably mutating the log
-                if (!dynamicTables)
-                  throw new IllegalArgumentException(
-                    s"wire DROP TABLE of the pinned decode table $s.$t is " +
-                      "unsupported in single-table decode — drop the " +
-                      "statement upstream (F5 ddl-skip filter) or use " +
-                      "ddlDrivenDecodeTables")
                 // in-flight frames at/below the drop still decode (they
                 // committed against the live table); later frames of the
                 // dropped table are unaddressable and drop
@@ -963,11 +932,6 @@ object CdcStream {
                 fillState.onTableDrop((s, t))
                 applied += ((ts, s, t, "drop_table", "", ""))
               case DropSchemaDdl(s) if catalog.keys.exists(_._1 == s) =>
-                if (!dynamicTables)
-                  throw new IllegalArgumentException(
-                    s"wire DROP DATABASE $s would drop the pinned decode " +
-                      "table — drop the statement upstream (F5 ddl-skip " +
-                      "filter) or use ddlDrivenDecodeTables")
                 // every tracked table of the schema ends its decode at the
                 // drop; the log records one drop_table per table, so a
                 // restart replays the same end state (ref:
@@ -978,13 +942,12 @@ object CdcStream {
                   localGrave += k -> catalog(k).columns
                   catalog -= k
                   // fill state stays — same batch-end fold and boundary
-                  // rationale as the single-table drop above
+                  // rationale as the DROP TABLE above
                   fillState.onTableDrop(k)
                   applied += ((ts, k._1, k._2, "drop_table", "", ""))
                 }
               case FlashbackDdl(s, t, toOpt)
-                  if trackedSchemas(s) && dynamicTables &&
-                    !catalog.contains((s, toOpt.getOrElse(t))) =>
+                  if trackedSchemas(s) && !catalog.contains((s, toOpt.getOrElse(t))) =>
                 // TiDB FLASHBACK TABLE (ref: drainer/schema.go:435,
                 // ActionRecoverTable handled like a create with the
                 // dropped shape): the table re-registers — optionally
@@ -1028,14 +991,13 @@ object CdcStream {
                     "upstream; drop the statement upstream (F5 ddl-skip filter)")
               case CreateLikeDdl(s, t, _, _, ifNotExists) if catalog.contains((s, t)) =>
                 // same explicit dispatch as plain CREATE of a tracked name
-                if (ifNotExists) skipped.add(1L)
+                if (ifNotExists) skip()
                 else throw new IllegalArgumentException(
                   s"cannot apply wire CREATE TABLE $s.$t LIKE …: target is " +
                     "already tracked — illegal upstream and unappliable " +
                     "here; drop the statement upstream (F5 ddl-skip filter)")
               case CreateLikeDdl(s, t, s2, u, _)
-                  if trackedSchemas(s) && dynamicTables &&
-                    !catalog.contains((s, t)) =>
+                  if trackedSchemas(s) && !catalog.contains((s, t)) =>
                 // CREATE TABLE … LIKE: registers with the SOURCE's current
                 // shape; logged as a plain create_table carrying the
                 // resolved defs, so replay needs no LIKE resolution. An
@@ -1064,16 +1026,13 @@ object CdcStream {
                 }
               case RenameDdl(s, t, toSchemaOpt, to) if catalog.contains((s, t)) =>
                 val s2 = toSchemaOpt.getOrElse(s)
-                val canApply = dynamicTables && trackedSchemas(s2) &&
-                  !catalog.contains((s2, to))
-                if (!canApply) {
+                if (!trackedSchemas(s2) || catalog.contains((s2, to))) {
                   // a rename of a TRACKED table the decode cannot take must
                   // fail loudly — silently skipping it would detach the
                   // table's replication (later frames arrive under a name
                   // the decode does not know)
                   val why =
-                    if (!dynamicTables) "single-table decode cannot follow a rename"
-                    else if (!trackedSchemas(s2))
+                    if (!trackedSchemas(s2))
                       s"target schema $s2 is outside the decode's schema set"
                     else s"target $s2.$to is already tracked"
                   throw new IllegalArgumentException(
@@ -1101,8 +1060,7 @@ object CdcStream {
                 applied += ((ts, s, t, "rename_table", "",
                   if (s2 == s) to else s"$s2.$to"))
               case RenameDdl(s, t, toSchemaOpt, to)
-                  if dynamicTables &&
-                    trackedSchemas(toSchemaOpt.getOrElse(s)) =>
+                  if trackedSchemas(toSchemaOpt.getOrElse(s)) =>
                 // RENAME of an UNTRACKED source INTO a tracked schema: the
                 // target belongs to the replication set from this statement
                 // on (the auto-track contract a wire CREATE TABLE gets),
@@ -1162,10 +1120,9 @@ object CdcStream {
                           s"(matched identifier: $id): $text — drop the " +
                           "statement upstream (F5 ddl-skip filter) or extend " +
                           "the decode grammar")
-                      case None => skipped.add(1L)
+                      case None => skip()
                     }
-                  case None if dynamicTables &&
-                      CreateTableVerbRe.pattern.matcher(text).matches &&
+                  case None if CreateTableVerbRe.pattern.matcher(text).matches &&
                       // the FIRST qual is the create TARGET — later quals
                       // are read-side references (a foreign CTAS reading a
                       // tracked schema creates nothing this decode owns)
@@ -1175,18 +1132,18 @@ object CdcStream {
                     // schema (CTAS, an option head the balanced-paren scan
                     // rejects): the new table belongs to the decode's
                     // replication set from this statement on, so its frames
-                    // would silently drop — fatal in dynamic mode, matching
-                    // the CREATE…LIKE unknown-source contract
+                    // would silently drop — fatal, matching the
+                    // CREATE…LIKE unknown-source contract
                     throw new IllegalArgumentException(
                       s"unparseable wire CREATE TABLE in tracked schema: " +
                         s"$text — the new table's frames would silently " +
                         "drop; drop the statement upstream (F5 ddl-skip " +
                         "filter) or extend the decode grammar")
-                  case None => skipped.add(1L)
+                  case None => skip()
                 }
               // administrative statements and parsed DDLs of untracked
               // tables/schemas: count and continue
-              case _ => skipped.add(1L)
+              case _ => skip()
             }
           }
           // tail slice per still-live table, then one write per table
@@ -1251,7 +1208,8 @@ object CdcStream {
       .start()
   }
 
-  /** Restart path for [[ddlDrivenDecode]]: replay the durable DDL log into
+  /** Restart path for the decode family ([[ddlDrivenDecodeTables]],
+    * [[ddlDrivenDecodeSchemas]]): replay the durable DDL log into
     * a fresh tracker (in version order, skipping anything the tracker
     * already has) before starting the query — the streaming checkpoint
     * restores the SOURCE position, this restores the CATALOG position
@@ -1421,16 +1379,14 @@ object CdcStream {
     val tracker = new SchemaTracker()
     tracker.createTable("sa", "t", Seq("k DOUBLE"), version = 0)
     tracker.createTable("sb", "t", Seq("k DOUBLE"), version = 0)
-    val skipped = spark.sparkContext.longAccumulator(
-      "graft.t6_schema_routed.skipped_ddl")
     val q = ddlDrivenDecodeSchemas(PbBinlogFile.readStream(spark, wireDir),
       tracker, outDir, ckpt, Seq("sa", "sb"),
       substring_index(col("event_type"), ":", 1),
-      substring_index(col("event_type"), ":", -1),
-      skippedDdl = Some(skipped))
+      substring_index(col("event_type"), ":", -1))
     drainDecode(q, spark, outDir)
-    require(skipped.value == 2L,
-      s"expected the 2 administrative wire statements skipped, got ${skipped.value}")
+    val skipped = decodeCounts(q.id)("skipped_ddl_total")
+    require(skipped == 2L,
+      s"expected the 2 administrative wire statements skipped, got $skipped")
     spark.read.parquet(s"$outDir/data")
       .select(col("schema").cast("string").as("schema_name"),
         col("table").cast("string").as("table_name"), col("commit_ts"),

@@ -94,7 +94,7 @@ class SchemaTracker(historyDepth: Int = 2, val foldCase: Boolean = false) {
     * tracker's mutators and any local (not-yet-committed) catalog view use,
     * so the in-batch decode schema and the tracker's post-commit state can
     * never match columns differently
-    * ([[graft.streaming.CdcStream.ddlDrivenDecode]] relies on exactly
+    * ([[graft.streaming.CdcStream.ddlDrivenDecodeTables]] relies on exactly
     * that: it transforms its local view with these, writes the batch, and
     * only then commits the same transform to the tracker). */
   def retyped(info: TableInfo, column: String, newDef: String,

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.api.java.Optional
 
@@ -1643,8 +1643,9 @@ class StreamingSpec extends SparkSpec {
       wireDir, nFiles = 1)
     val tracker = new SchemaTracker()
     tracker.createTable("app", "events", Seq("k DOUBLE"), version = 0)
-    val q1 = CdcStream.ddlDrivenDecode(
-      PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt)
+    val q1 = CdcStream.ddlDrivenDecodeTables(
+      PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
+      "app", lit("events"))
     try q1.processAllAvailable() finally q1.stop()
 
     // phase 2 is a REAL restart: a fresh process loses the driver-memory
@@ -1656,8 +1657,9 @@ class StreamingSpec extends SparkSpec {
     CdcStream.recoverDecodeTracker(spark, outDir, ckpt, tracker2)
     assert(tracker2.version == 50L, "the logged DDL must replay into the fresh tracker")
     PbBinlogFile.write(dml(71L to 100L), wireDir, nFiles = 1)
-    val q2 = CdcStream.ddlDrivenDecode(
-      PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt)
+    val q2 = CdcStream.ddlDrivenDecodeTables(
+      PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt,
+      "app", lit("events"))
     try q2.processAllAvailable() finally q2.stop()
 
     val out = spark.read.parquet(s"$outDir/data")
@@ -1704,8 +1706,9 @@ class StreamingSpec extends SparkSpec {
       wireDir, nFiles = 1)
     val tracker = new SchemaTracker()
     tracker.createTable("app", "events", Seq("k DOUBLE"), version = 0)
-    val q1 = CdcStream.ddlDrivenDecode(
-      PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt)
+    val q1 = CdcStream.ddlDrivenDecodeTables(
+      PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
+      "app", lit("events"))
     try q1.processAllAvailable() finally q1.stop()
     assert(tracker.current("app", "events").get.columns ==
       Vector("k DOUBLE", "extra BIGINT"))
@@ -1726,8 +1729,9 @@ class StreamingSpec extends SparkSpec {
         .unionByName(ddl(60L, "ALTER TABLE app.events DROP COLUMN k"))
         .unionByName(ddl(70L, "ALTER TABLE app.events RENAME COLUMN extra TO extra2")),
       wireDir, nFiles = 1)
-    val q2 = CdcStream.ddlDrivenDecode(
-      PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt)
+    val q2 = CdcStream.ddlDrivenDecodeTables(
+      PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt,
+      "app", lit("events"))
     try q2.processAllAvailable() finally q2.stop()
     assert(tracker2.current("app", "events").get.columns == Vector("extra2 BIGINT"))
 
@@ -1758,13 +1762,15 @@ class StreamingSpec extends SparkSpec {
     // forward-only contract: a frame redelivered BELOW the applied DDL
     // frontier (commit_ts 55 < version 70) must be counted as a violation,
     // not silently decoded with the new schema and trusted
-    val acc = spark.sparkContext.longAccumulator("test.below_frontier")
     PbBinlogFile.write(dml(Seq(55L), n => s"""{"extra2": 1}"""), wireDir, nFiles = 1)
-    val q3 = CdcStream.ddlDrivenDecode(
+    val q3 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt,
-      belowFrontier = Some(acc))
+      "app", lit("events"))
     try q3.processAllAvailable() finally q3.stop()
-    assert(acc.value == 1L, s"below-frontier frame must be counted, got ${acc.value}")
+    // q1..q3 share one checkpoint, hence one query id and one running
+    // total: only q3's redelivered frame sits below a frontier
+    val below = CdcStream.decodeCounts(q3.id)("below_frontier_frames_total")
+    assert(below == 1L, s"below-frontier frame must be counted, got $below")
   }
 
   test("streaming multi-table T5∘T6: independent histories per table; TRUNCATE/CREATE/DROP TABLE") {
@@ -2266,13 +2272,13 @@ class StreamingSpec extends SparkSpec {
 
     val tracker = new SchemaTracker()
     tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
-    val skipped = spark.sparkContext.longAccumulator("test.skipped_ddl")
     val q = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"), skippedDdl = Some(skipped))
+      "app", col("event_type"))
     try q.processAllAvailable() finally q.stop()
 
-    assert(skipped.value == 9L, s"expected 9 skipped wire DDLs, got ${skipped.value}")
+    val skipped = CdcStream.decodeCounts(q.id)("skipped_ddl_total")
+    assert(skipped == 9L, s"expected 9 skipped wire DDLs, got $skipped")
     assert(tracker.current("app", "t").get.columns ==
       Vector("k2 DECIMAL(10,1)", "extra BIGINT", "extra2 BIGINT"))
     assert(tracker.current("app", "tnew").get.columns == Vector("v BIGINT"),
@@ -2318,12 +2324,12 @@ class StreamingSpec extends SparkSpec {
       wire2, nFiles = 1)
     val tracker3 = new SchemaTracker()
     tracker3.createTable("app", "t", Seq("k DOUBLE"), version = 0)
-    val skipped2 = spark.sparkContext.longAccumulator("test.skipped_ddl2")
     val q2 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wire2), tracker3, out2, ckpt2,
-      "app", col("event_type"), skippedDdl = Some(skipped2))
+      "app", col("event_type"))
     try q2.processAllAvailable() finally q2.stop()
-    assert(skipped2.value == 1L && tracker3.tablesOf("app") == Seq("t2"),
+    val skipped2 = CdcStream.decodeCounts(q2.id)("skipped_ddl_total")
+    assert(skipped2 == 1L && tracker3.tablesOf("app") == Seq("t2"),
       s"multi-rename list must apply per part: ${tracker3.tablesOf("app")}")
     assert(spark.read.parquet(s"$out2/data/batch=0/table=t2")
       .select("commit_ts").as[Long].collect().toSet == Set(33L))
@@ -2422,13 +2428,12 @@ class StreamingSpec extends SparkSpec {
       wire3, nFiles = 1)
     val tracker5 = new SchemaTracker()
     tracker5.createTable("app", "t", Seq("k DOUBLE"), version = 0)
-    val skipped3 = spark.sparkContext.longAccumulator("test.skipped_ddl3")
     val q3 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wire3), tracker5, out3, ckpt3,
-      "app", col("event_type"), skippedDdl = Some(skipped3))
+      "app", col("event_type"))
     try q3.processAllAvailable() finally q3.stop()
-    assert(skipped3.value == 10L,
-      s"expected 10 counted skips, got ${skipped3.value}")
+    val skipped3 = CdcStream.decodeCounts(q3.id)("skipped_ddl_total")
+    assert(skipped3 == 10L, s"expected 10 counted skips, got $skipped3")
     assert(tracker5.current("app", "t").get.columns == Vector("k DOUBLE") &&
       tracker5.current("app", "t").get.version == 0L,
       "a skipped statement must neither reshape nor bump the version")
@@ -2825,10 +2830,10 @@ class StreamingSpec extends SparkSpec {
   test("decode metrics ride query progress: observed event counts merged with skip/frontier counters") {
     // A4 through the engine's own telemetry: the decode's observe() node
     // puts ddl/dml frame counts and the max commit ts into each progress
-    // event, and DecodeMetricsListener merges the two driver-side
-    // counters (skipped admin DDL, below-frontier frames) into the same
+    // event, and DecodeMetricsListener merges the query's two driver-side
+    // counts (skipped admin DDL, below-frontier frames) into the same
     // per-query map — the operator-facing surface the reference serves
-    // from drainer/metrics.go, without reading Spark UI accumulators
+    // from drainer/metrics.go, without reading the Spark UI
     import graft.sources.PbBinlogFile
     val wireDir = graft.util.Scratch.dir("graft_met_wire")
     val outDir = graft.util.Scratch.dir("graft_met_out")
@@ -2851,22 +2856,18 @@ class StreamingSpec extends SparkSpec {
       wireDir, nFiles = 1)
     val tracker = new SchemaTracker()
     tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
-    val skipped = spark.sparkContext.longAccumulator("test.met.skipped")
-    val below = spark.sparkContext.longAccumulator("test.met.below")
-    val listener = new CdcStream.DecodeMetricsListener(Some(skipped), Some(below))
+    val listener = new CdcStream.DecodeMetricsListener()
     // a second listener with a depth-1 history on the SAME stream: the
     // two-batch run must evict one increment and SAY SO via the
     // snapshot's deltas_dropped_total — truncation is never silent
-    val shallow = new CdcStream.DecodeMetricsListener(Some(skipped),
-      Some(below), maxDeltaDepth = 1)
+    val shallow = new CdcStream.DecodeMetricsListener(maxDeltaDepth = 1)
     spark.streams.addListener(listener)
     spark.streams.addListener(shallow)
     try {
       val q = CdcStream.ddlDrivenDecodeTables(
         PbBinlogFile.readStream(spark, wireDir, maxFilesPerTrigger = 1),
         tracker, outDir, ckpt,
-        "app", col("event_type"),
-        belowFrontier = Some(below), skippedDdl = Some(skipped))
+        "app", col("event_type"))
       try q.processAllAvailable() finally q.stop()
       // progress events are asynchronous — poll until the last batch's
       // metrics land (its observed dml count is 1: the ts-11 frame)
@@ -2908,6 +2909,112 @@ class StreamingSpec extends SparkSpec {
       spark.streams.removeListener(listener)
       spark.streams.removeListener(shallow)
     }
+  }
+
+  test("decode counts are per query: two concurrent decodes each read only their own skips") {
+    // the counts live in one record per streaming query id, so two decode
+    // queries running at once in one session never mix their totals —
+    // neither through decodeCounts nor through one shared listener
+    import graft.sources.PbBinlogFile
+    def wire(tag: String, admin: Seq[String]): String = {
+      val d = graft.util.Scratch.dir(s"graft_cnt_${tag}_wire")
+      PbBinlogFile.write(
+        (wireDml("t", Seq(1L, 3L), lit("""{"k": 1}""")) +:
+          admin.zipWithIndex.map { case (sql, i) => wireDdl(4L + 2 * i, sql) })
+          .reduce(_ unionByName _),
+        d, nFiles = 1)
+      d
+    }
+    val wires = Seq(
+      wire("a", Seq("CREATE INDEX i_k ON app.t (k)")),
+      wire("b", Seq("CREATE INDEX i_k ON app.t (k)", "OPTIMIZE TABLE app.t",
+        "ANALYZE TABLE app.t")))
+    val listener = new CdcStream.DecodeMetricsListener()
+    spark.streams.addListener(listener)
+    try {
+      val qs = wires.map { w =>
+        val tracker = new SchemaTracker()
+        tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
+        CdcStream.ddlDrivenDecodeTables(PbBinlogFile.readStream(spark, w),
+          tracker, graft.util.Scratch.dir("graft_cnt_out"),
+          graft.util.Scratch.dir("graft_cnt_ckpt"), "app", col("event_type"))
+      }
+      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+      val totals = qs.map(q => CdcStream.decodeCounts(q.id)("skipped_ddl_total"))
+      assert(totals == Seq(1L, 3L), s"totals=$totals")
+      val deadline = System.currentTimeMillis + 30000
+      def snaps = qs.map(q => listener.snapshot(q.id).get("skipped_ddl_total"))
+      while (snaps != Seq(Some(1L), Some(3L)) && System.currentTimeMillis < deadline)
+        Thread.sleep(100)
+      assert(snaps == Seq(Some(1L), Some(3L)), s"snapshots=$snaps")
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("decode counts continue across a restart from the same checkpoint; deltas still sum to the totals") {
+    // the checkpoint persists the query id, so the restarted query keys
+    // the same record: its totals continue, and the listener's per-query
+    // last-seen values keep the published deltas telescoping across the
+    // restart
+    import graft.sources.PbBinlogFile
+    val wireDir = graft.util.Scratch.dir("graft_cntr_wire")
+    val outDir = graft.util.Scratch.dir("graft_cntr_out")
+    val ckpt = graft.util.Scratch.dir("graft_cntr_ckpt")
+    def dml(ids: Seq[Long]) = wireDml("t", ids, lit("""{"k": 1}"""))
+    PbBinlogFile.write(
+      dml(Seq(1L, 3L)).unionByName(wireDdl(4L, "CREATE INDEX i_k ON app.t (k)")),
+      wireDir, nFiles = 1)
+    def start(tracker: SchemaTracker) = CdcStream.ddlDrivenDecodeTables(
+      PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
+      "app", col("event_type"))
+    def fresh() = {
+      val t = new SchemaTracker()
+      t.createTable("app", "t", Seq("k DOUBLE"), version = 0)
+      t
+    }
+    val listener = new CdcStream.DecodeMetricsListener()
+    spark.streams.addListener(listener)
+    try {
+      val q1 = start(fresh())
+      try q1.processAllAvailable() finally q1.stop()
+      assert(CdcStream.decodeCounts(q1.id)("skipped_ddl_total") == 1L)
+
+      PbBinlogFile.append(
+        wireDdl(6L, "OPTIMIZE TABLE app.t")
+          .unionByName(wireDdl(8L, "ANALYZE TABLE app.t"))
+          .unionByName(dml(Seq(9L))),
+        wireDir, nFiles = 1)
+      val tracker2 = fresh()
+      CdcStream.recoverDecodeTracker(spark, outDir, ckpt, tracker2)
+      val q2 = start(tracker2)
+      try q2.processAllAvailable() finally q2.stop()
+      assert(q2.id == q1.id, "the restart must resume the checkpoint's query id")
+      val totals = CdcStream.decodeCounts(q2.id)
+      assert(totals("skipped_ddl_total") == 3L &&
+        totals("below_frontier_frames_total") == 0L, s"totals=$totals")
+
+      val deadline = System.currentTimeMillis + 30000
+      var snap = listener.snapshot(q2.id)
+      while (snap.get("skipped_ddl_total") != Some(3L) &&
+          System.currentTimeMillis < deadline) {
+        Thread.sleep(100); snap = listener.snapshot(q2.id)
+      }
+      assert(snap.get("skipped_ddl_total") == Some(3L), s"snapshot=$snap")
+      val ds = listener.deltas(q2.id)
+      assert(ds.map(_("skipped_ddl_delta")).sum == 3L, s"deltas=$ds")
+      assert(ds.map(_("below_frontier_frames_delta")).sum == 0L, s"deltas=$ds")
+      assert(ds.size >= 2, s"one delta per run at least: $ds")
+      assert(snap.get("deltas_dropped_total") == Some(0L), s"snapshot=$snap")
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("no LongAccumulator in the decode or replication pipeline sources") {
+    // the decode keeps its counts in one per-query record (decodeCounts);
+    // a counter parameter on these signatures would split that home again
+    val files = Seq("src/main/scala/graft/streaming/CdcStream.scala",
+      "src/main/scala/graft/pipeline/DrainerPipeline.scala").map(Paths.get(_))
+    files.foreach(f => assert(Files.isRegularFile(f), s"$f: run from the project root"))
+    val hits = files.filter(f => Files.readString(f).contains("LongAccumulator"))
+    assert(hits.isEmpty, s"LongAccumulator found in ${hits.mkString(", ")}")
   }
 
   test("origin default reaches the target: ADD COLUMN … DEFAULT backfills pre-barrier rows") {
@@ -3442,8 +3549,8 @@ class StreamingSpec extends SparkSpec {
     // ties the k-way merge's min-frontier delivery guarantee (the
     // streamingMerged topology's per-pump watermarks) to the versioned
     // decode that depends on it: across the full multi-pump composition,
-    // no frame arrives below the applied DDL frontier — the
-    // below-frontier accumulator must stay ZERO end-to-end, and every
+    // no frame arrives below the applied DDL frontier — the query's
+    // below_frontier_frames_total must stay ZERO end-to-end, and every
     // frame decodes at its correct version
     import graft.sources.PbBinlogFile
     val root = graft.util.Scratch.dir("graft_t2t5_pumps")
@@ -3458,12 +3565,11 @@ class StreamingSpec extends SparkSpec {
     PbBinlogFile.write(dml((2L to 60L by 2)), pumps(1), nFiles = 1)
     val tracker = new SchemaTracker()
     tracker.createTable("app", "events", Seq("k DOUBLE"), version = 0)
-    val acc = spark.sparkContext.longAccumulator("test.t2t5.frontier")
     // the product topology: mergedWireStream (one watermark PER pump
     // before the union, min frontier), then the versioned decode over it
     val merged = CdcStream.mergedWireStream(spark, pumps, delay = "1 hour")
-    val q = CdcStream.ddlDrivenDecode(merged, tracker, outDir, ckpt,
-      belowFrontier = Some(acc))
+    val q = CdcStream.ddlDrivenDecodeTables(merged, tracker, outDir, ckpt,
+      "app", lit("events"))
     try {
       q.processAllAvailable()
       // stage 2: both pumps deliver PAST the applied frontier (ts 50) —
@@ -3472,8 +3578,9 @@ class StreamingSpec extends SparkSpec {
       PbBinlogFile.write(dml((62L to 100L by 2)), pumps(1), nFiles = 1)
       q.processAllAvailable()
     } finally q.stop()
-    assert(acc.value == 0L,
-      s"the merged topology must never deliver below the frontier: ${acc.value}")
+    val below = CdcStream.decodeCounts(q.id)("below_frontier_frames_total")
+    assert(below == 0L,
+      s"the merged topology must never deliver below the frontier: $below")
     val out = spark.read.parquet(s"$outDir/data").collect()
       .map(r => r.getAs[Long]("commit_ts") -> r.getAs[Long]("schema_version")).toMap
     assert(out.size == 100)
