@@ -98,18 +98,18 @@ private[sinks] object JdbcMeta {
     rs.close(); st.close(); out
   }
 
-  /** Read `table` back through Spark's JDBC source; when `partitionOn`
-    * names a numeric column, one two-value metadata query fetches its
-    * bounds and `numPartitions` connections stride the range in parallel —
-    * the default unpartitioned JDBC read drags the whole table through a
-    * single connection, exactly the bottleneck the parallel write side
-    * exists to avoid. Empty table (NULL bounds) → plain load. */
   /** Read-path URL: strip `;create=true` so a read of a dropped or
     * never-booted database fails loudly (XJ004) instead of silently
     * recreating an empty one and hashing to a wrong-but-plausible result —
     * only the write path may boot a database. */
   def readUrl(url: String): String = url.replace(";create=true", "")
 
+  /** Read `table` back through Spark's JDBC source; when `partitionOn`
+    * names a numeric column, one two-value metadata query fetches its
+    * bounds and `numPartitions` connections stride the range in parallel —
+    * the default unpartitioned JDBC read drags the whole table through a
+    * single connection, exactly the bottleneck the parallel write side
+    * exists to avoid. Empty table (NULL bounds) → plain load. */
   def partitionedRead(spark: SparkSession, url: String, table: String,
       partitionOn: Option[String], numPartitions: Int): DataFrame = {
     // driver pinned only for Derby (whose embedded driver Spark cannot
@@ -578,15 +578,17 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
     // global DDL barriers, gathered across every table's slice; a DDL row
     // an ingest router replicated into several tables' frames is ONE
     // barrier, not several (a second execution of the same ALTER would
-    // throw and wedge every replay of the batch)
-    val ddls = slices.values.toSeq.flatMap { df =>
+    // throw and wedge every replay of the batch). One job for every slice:
+    // the per-slice projections union into a single collect
+    val ddls = slices.values.map { df =>
       val hasSql = df.columns.contains("ddl_sql")
       df.filter(col("op") === "DDL")
         .select(col("commit_ts"),
           (if (hasSql) col("ddl_sql") else lit(null).cast("string")).as("ddl_sql"))
-        .collect()
-        .map(r => (r.getAs[Long]("commit_ts"), Option(r.getAs[String]("ddl_sql"))))
-    }.distinct.sortBy(_._1)
+    }.reduceOption(_ union _).toSeq
+      .flatMap(_.collect())
+      .map(r => (r.getAs[Long]("commit_ts"), Option(r.getAs[String]("ddl_sql"))))
+      .distinct.sortBy(_._1)
     val barriers = ddls :+ ((Long.MaxValue, None: Option[String]))
 
     var lower = Long.MinValue
@@ -642,7 +644,9 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
   /** One table's slice through merge → delete pass → REPLACE pass, keyed
     * on the table's own unique key, binding the table's own column list.
     * Returns the slice's max applied commit_ts (Long.MinValue when empty)
-    * so the caller checkpoints without re-scanning the slice's lineage. */
+    * so the caller checkpoints without reading the slice again (a
+    * streaming decode's slice is a scan of its written batch dir, see
+    * [[graft.streaming.CdcStream.DecodedBatch]]). */
   private def applyTable(slice: DataFrame, table: String): Long = {
     // cheap early exit (a limit-1 job): empty slices — e.g. the sub-batch
     // before a leading DDL barrier — skip the catalog read and the window
@@ -722,7 +726,8 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
       .repartition(applyPartitions, keyExprs: _*)
       .localCheckpoint(true) // applied twice (delete pass, upsert pass)
     // one pass over the checkpointed data gives the applied-ts watermark;
-    // the raw lineage (scan + decode + route) is never re-run
+    // the slice's input (for a streaming decode, the parquet scan of the
+    // written batch dir) is not read again
     val sliceMaxTs =
       merged.agg(max("commit_ts")).collect()(0).getLong(0)
 

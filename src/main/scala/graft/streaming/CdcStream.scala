@@ -270,7 +270,10 @@ object CdcStream {
   /** Per-batch decoded output handed to a composing sink (see
     * [[ddlDrivenDecodeTables]]'s `emit`): the batch id, each table's
     * (column defs, string-decoded union frame), and the batch's applied
-    * wire DDLs as (version, schema, table, action, column, arg). The defs
+    * wire DDLs as (version, schema, table, action, column, arg). The
+    * frame is a parquet scan of the table's written
+    * `batch=<id>/table=<t>` dir, read with the union's schema — the sink
+    * consumes the finished decode, never its lineage over the wire. The defs
     * are EVERY def the table's slices decoded with this batch —
     * first-seen order, latest type winning — NOT the end-of-batch shape:
     * a column dropped or renamed away mid-batch stays listed so its
@@ -320,6 +323,9 @@ object CdcStream {
     * dir — per-batch work scales with the touched set, so a sparse-traffic
     * table is simply absent from batches that never mention it (consumers
     * must enumerate existing dirs, not tracker.tablesOf × batch ids).
+    * `emit` receives, per written table, a scan of that dir under the
+    * union's schema (see [[DecodedBatch]]), so a composing sink's jobs
+    * read the decoded rows instead of re-running the decode.
     * Frames addressing no tracked table drop, like the reference's
     * filter-then-load contract — routing upstream decides what reaches the
     * decode.
@@ -1173,9 +1179,13 @@ object CdcStream {
           // per-table writes are independent jobs — fan them out on the
           // bounded pool (ref: pkg/loader/load.go:508-527's 16 workers): a
           // trigger touching hundreds of tables must not serialize
-          // hundreds of small driver-submitted jobs
+          // hundreds of small driver-submitted jobs. Each table writes at
+          // most one file per batch partition: its union of barrier legs
+          // has legs × partitions partitions, and every sink job over the
+          // written dir (the emitted scan below) pays one task per file
+          val batchParts = batch.rdd.getNumPartitions
           graft.util.Par.foreachPar(unions) { case ((s, t), (_, df)) =>
-            df.write.mode("overwrite").parquet(layout(id, s, t))
+            df.coalesce(batchParts).write.mode("overwrite").parquet(layout(id, s, t))
           }
           import spark.implicits._
           // written only when non-empty (an empty parquet dir is
@@ -1192,11 +1202,21 @@ object CdcStream {
               .toDF("version", "schema_name", "table_name", "action",
                 "column_name", "arg", "seq")
               .write.mode("overwrite").parquet(s"$outDir/ddl/batch=$id")
+          // nothing below reads the wire batch: release its cache before
+          // the composing sink runs (the finally still covers the error
+          // path; a second unpersist is a no-op)
+          batch.unpersist()
           // composing sink (e.g. a JDBC loader) consumes the decoded batch
           // AFTER the parquet log is durable and BEFORE the live catalog
           // advances — a crash inside the sink replays the batch
-          // identically, and an idempotent sink (batch-id guard) skips
-          emit.foreach(f => f((id, unions.toMap, applied.toSeq)))
+          // identically, and an idempotent sink (batch-id guard) skips.
+          // Each frame is a scan of the table's WRITTEN dir under the
+          // union's own schema (no inference job): every sink job reads
+          // the decoded rows back instead of re-running the parse over the
+          // wire batch
+          emit.foreach(f => f((id, unions.map { case (k @ (s, t), (defs, df)) =>
+            k -> ((defs, spark.read.schema(df.schema).parquet(layout(id, s, t))))
+          }.toMap, applied.toSeq)))
           // only now does the live catalog advance — a crash anywhere
           // above replays this batch against the unchanged tracker
           applied.foreach { case (v, s, t, action, c, arg) =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LWindow}
 
 /** Plan-shape regression guards: properties the oracle compare cannot see
   * (it only checks values) but that decide whether a query survives a
@@ -276,12 +276,36 @@ class PlanSpec extends SparkSpec {
       "pq codebook must reach the serving plan as a LocalRelation")
   }
 
-  /** JSON parses bound in a frame's analyzed plan. */
-  private def jsonParses(df: org.apache.spark.sql.DataFrame): Int = {
+  /** JSON parses bound in an analyzed plan. */
+  private def jsonParses(plan: LogicalPlan): Int = {
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
-    df.queryExecution.analyzed.collect { case p =>
+    plan.collect { case p =>
       p.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
     }.sum
+  }
+
+  private def jsonParses(df: org.apache.spark.sql.DataFrame): Int =
+    jsonParses(df.queryExecution.analyzed)
+
+  /** Leaves of `plan` that read the pb-binlog source: its streaming scan
+    * relation, or the `LogicalRDD` a `foreachBatch` micro-batch arrives
+    * as, whose RDD lineage reaches pb-binlog input partitions. */
+  private def wireLeaves(plan: LogicalPlan): Int = {
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.datasources.v2.{DataSourceRDDPartition, StreamingDataSourceV2ScanRelation}
+    import graft.sources.{PbBinlogInputPartition, PbBinlogTable}
+    def readsWire(rdd: RDD[_]): Boolean =
+      rdd.partitions.exists {
+        case p: DataSourceRDDPartition =>
+          p.inputPartitions.exists(_.isInstanceOf[PbBinlogInputPartition])
+        case _ => false
+      } || rdd.dependencies.exists(d => readsWire(d.rdd))
+    plan.collectLeaves().count {
+      case r: StreamingDataSourceV2ScanRelation => r.relation.table.isInstanceOf[PbBinlogTable]
+      case r: LogicalRDD => readsWire(r.rdd)
+      case _ => false
+    }
   }
 
   test("the streaming decode binds one JSON parse per non-empty leg, none per field") {
@@ -289,8 +313,14 @@ class PlanSpec extends SparkSpec {
     // payload once per column (the r22 single-bind fix), and a leg whose
     // table lost its last column reads no field at all. Table t: (a, b)
     // until 20, (b) until 40, () after — two legs with wire columns, one
-    // without. Table u: (x, y) throughout — one leg with two fields.
+    // without. Table u: (x, y) throughout — one leg with two fields. The
+    // parses are counted in the decode's own per-table write plans; the
+    // emitted frames are scans of what was written, so they parse nothing
+    // and no longer reach back to the wire source.
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.util.QueryExecutionListener
     import graft.sources.PbBinlogFile
     import graft.streaming.{CdcStream, SchemaTracker}
     val wireDir = graft.util.Scratch.dir("graft_parse_wire")
@@ -307,16 +337,45 @@ class PlanSpec extends SparkSpec {
     val tracker = new SchemaTracker()
     tracker.createTable("app", "t", Seq("a BIGINT", "b BIGINT"), version = 0)
     tracker.createTable("app", "u", Seq("x BIGINT", "y BIGINT"), version = 0)
-    var parses = Map.empty[String, Int]
-    val q = CdcStream.ddlDrivenDecodeTables(
-      PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"),
-      emit = Some { case (_, frames, _) =>
-        parses ++= frames.map { case (t, (_, df)) => t -> jsonParses(df) }
-      })
-    try q.processAllAvailable() finally q.stop()
+    // (parses, wire leaves) per table, from the write of its data dir
+    val TableDir = ".*/data/batch=\\d+/table=(\\w+)".r
+    val writes = new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed match {
+          case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString match {
+            case p @ TableDir(t) if p.contains(outDir) =>
+              writes.put(t, (jsonParses(c), wireLeaves(c))); ()
+            case _ => ()
+          }
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    var emitted = Map.empty[String, (Int, Int)]
+    spark.listenerManager.register(listener)
+    try {
+      val q = CdcStream.ddlDrivenDecodeTables(
+        PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
+        "app", col("event_type"),
+        emit = Some { case (_, frames, _) =>
+          emitted ++= frames.map { case (t, (_, df)) =>
+            t -> ((jsonParses(df), wireLeaves(df.queryExecution.analyzed)))
+          }
+        })
+      try q.processAllAvailable() finally q.stop()
+      // listener callbacks arrive on the listener bus, after the writes
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (writes.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val written = writes.asScala.toMap
     assert(tracker.current("app", "t").get.columns.isEmpty)
-    assert(parses == Map("t" -> 2, "u" -> 1))
+    assert(written.view.mapValues(_._1).toMap == Map("t" -> 2, "u" -> 1))
+    // the detector sees the wire source in the write plans it must not
+    // find in the emitted frames
+    assert(written.values.forall(_._2 > 0), written)
+    assert(emitted == Map("t" -> ((0, 0)), "u" -> ((0, 0))))
   }
 
   test("typedDecode binds its JSON parse once") {

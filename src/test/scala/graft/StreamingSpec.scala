@@ -3712,6 +3712,172 @@ class StreamingSpec extends SparkSpec {
     assert(tb(96L) == ((96.25, None)), s"post-drop row: ${tb(96L)}")
   }
 
+  test("streamingReplicated: a union that decodes to zero rows is still written, emitted and applied") {
+    // t's only DML sits at or below a same-batch TRUNCATE, so its union is
+    // empty; the emitted frame is a scan of the written dir and must still
+    // carry the union's columns, or the typed projection of the composing
+    // sink fails to resolve. The truncate translates to a target DELETE
+    // that rides t's empty frame as the batch's one barrier.
+    import graft.pipeline.DrainerPipeline
+    import graft.sinks.JdbcSchemaLoader
+    import graft.sources.PbBinlogFile
+    val root = graft.util.Scratch.dir("graft_zero_pump")
+    val k = (n: Long) => s"""{"k": ${n}.25}"""
+    PbBinlogFile.write(
+      wireDml("t", Seq(5L, 10L), k)
+        .unionByName(wireDdl(10L, "TRUNCATE TABLE app.t"))
+        .unionByName(wireDml("u", Seq(7L, 30L), k)),
+      s"$root/p0", nFiles = 1)
+    def tracker() = {
+      val tr = new SchemaTracker()
+      tr.createTable("app", "t", Seq("k DOUBLE"), version = 0)
+      tr.createTable("app", "u", Seq("k DOUBLE"), version = 0)
+      tr
+    }
+    // the emitted frames, seen through a plain decode of the same wire
+    var emitted = Map.empty[String, (Seq[String], Long)]
+    val qd = CdcStream.ddlDrivenDecodeTables(
+      PbBinlogFile.readStream(spark, s"$root/p0"), tracker(),
+      graft.util.Scratch.dir("graft_zero_dec"),
+      graft.util.Scratch.dir("graft_zero_dec_ckpt"), "app", col("event_type"),
+      emit = Some { case (_, frames, _) =>
+        emitted ++= frames.map { case (t, (_, df)) =>
+          t -> ((df.columns.toSeq, df.count()))
+        }
+      })
+    try qd.processAllAvailable() finally qd.stop()
+    assert(emitted.keySet == Set("t", "u"), s"emitted: $emitted")
+    assert(emitted("t")._2 == 0L && emitted("u")._2 == 2L, s"emitted: $emitted")
+    assert(emitted("t")._1 == emitted("u")._1 && emitted("t")._1.contains("k_str"),
+      s"the empty union lost its columns: $emitted")
+
+    val url = freshDerbyUrl("zero")
+    val loader = new JdbcSchemaLoader(url, applyPartitions = 4)
+    loader.createTable(
+      "CREATE TABLE T_STATE (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, K DOUBLE)")
+    loader.createTable(
+      "CREATE TABLE U_STATE (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, K DOUBLE)")
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      st.executeUpdate("INSERT INTO T_STATE VALUES (99, 1, 99.5)")
+      st.close()
+    } finally c.close()
+    val q = DrainerPipeline.streamingReplicated(spark, Seq(s"$root/p0"),
+      tracker(), loader, graft.util.Scratch.dir("graft_zero_out"),
+      graft.util.Scratch.dir("graft_zero_ckpt"), "app", col("event_type"),
+      tableMap = t => t.toUpperCase + "_STATE",
+      ddlToTarget = {
+        case (t, "truncate", _, _) => Some(s"DELETE FROM ${t.toUpperCase}_STATE")
+        case _ => None
+      })
+    val dataBatches = try {
+      q.processAllAvailable()
+      q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+    } finally q.stop()
+    assert(dataBatches == Seq(0L), s"batches with input: $dataBatches")
+    assert(loader.lastCheckpoint.batchId == 0L,
+      s"loader checkpoint: ${loader.lastCheckpoint}")
+    assert(loader.readTable(spark, "T_STATE").count() == 0L,
+      "the truncate barrier must run on the target")
+    val u = loader.readTable(spark, "U_STATE").collect()
+      .map(r => r.getAs[Long]("PK") -> r.getAs[Double]("K")).toMap
+    assert(u == Map(7L -> 7.25, 30L -> 30.25), s"U_STATE: $u")
+  }
+
+  test("replicated DDL barriers: a mid-batch ADD COLUMN … DEFAULT and a DDL shared by two slices each execute once") {
+    // the loader gathers every slice's DDL rows in one job; a barrier must
+    // still split the batch exactly where it did, and a DDL row present in
+    // several slices must stay ONE barrier (a second ALTER would throw)
+    import graft.pipeline.DrainerPipeline
+    import graft.sinks.JdbcSchemaLoader
+    import graft.sources.PbBinlogFile
+    def ddlLog(loader: JdbcSchemaLoader): Seq[String] =
+      loader.readTable(spark, "GRAFT_DDL_LOG").collect()
+        .map(_.getAs[String]("STMT")).toSeq
+
+    // form 1: the replicated composition, ta's ADD COLUMN … DEFAULT between
+    // its own rows and tb's, all in one batch
+    val root = graft.util.Scratch.dir("graft_bar_pump")
+    PbBinlogFile.write(
+      wireDml("ta", Seq(1L, 3L), (n: Long) => s"""{"k": ${n}.25}""")
+        .unionByName(wireDdl(10L,
+          "ALTER TABLE app.ta ADD COLUMN extra BIGINT DEFAULT 5 AFTER k"))
+        .unionByName(wireDml("ta", Seq(11L, 13L),
+          (n: Long) => s"""{"k": ${n}.25, "extra": ${n * 10}}"""))
+        .unionByName(wireDml("tb", Seq(2L, 12L), (n: Long) => s"""{"k": ${n}.25}""")),
+      s"$root/p0", nFiles = 1)
+    val tracker = new SchemaTracker()
+    tracker.createTable("app", "ta", Seq("k DOUBLE"), version = 0)
+    tracker.createTable("app", "tb", Seq("k DOUBLE"), version = 0)
+    val loader = new JdbcSchemaLoader(freshDerbyUrl("bar"), applyPartitions = 4)
+    loader.createTable(
+      "CREATE TABLE TA_STATE (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, K DOUBLE)")
+    loader.createTable(
+      "CREATE TABLE TB_STATE (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, K DOUBLE)")
+    val out = graft.util.Scratch.dir("graft_bar_out")
+    val q = DrainerPipeline.streamingReplicated(spark, Seq(s"$root/p0"),
+      tracker, loader, out, graft.util.Scratch.dir("graft_bar_ckpt"), "app",
+      col("event_type"),
+      tableMap = t => t.toUpperCase + "_STATE",
+      ddlToTarget = {
+        case (t, "add", c, ty) =>
+          Some(s"ALTER TABLE ${t.toUpperCase}_STATE ADD COLUMN ${c.toUpperCase} $ty")
+        case _ => None
+      })
+    try q.processAllAvailable() finally q.stop()
+    val ta = loader.readTable(spark, "TA_STATE").collect()
+      .map(r => r.getAs[Long]("PK") ->
+        ((r.getAs[Double]("K"), Option(r.getAs[java.lang.Long]("EXTRA")).map(_.longValue))))
+      .toMap
+    assert(ta == Map(1L -> ((1.25, Some(5L))), 3L -> ((3.25, Some(5L))),
+      11L -> ((11.25, Some(110L))), 13L -> ((13.25, Some(130L)))), s"TA_STATE: $ta")
+    val tb = loader.readTable(spark, "TB_STATE").collect()
+      .map(r => r.getAs[Long]("PK") -> r.getAs[Double]("K")).toMap
+    assert(tb == Map(2L -> 2.25, 12L -> 12.25), s"TB_STATE: $tb")
+    assert(ddlLog(loader) == Seq("ALTER TABLE TA_STATE ADD COLUMN EXTRA BIGINT DEFAULT 5"),
+      s"DDL log: ${ddlLog(loader)}")
+    assert(loader.lastCheckpoint.batchId == 0L)
+    // ta's union has two legs (before and after the barrier) over a
+    // one-partition batch: it is written as one file, not one per leg
+    val taFiles = new java.io.File(s"$out/data/batch=0/table=ta").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(taFiles == 1, s"ta wrote $taFiles files")
+
+    // form 2: a router replicated the SAME DDL row into both slices, each
+    // slice a scan of written parquet like the decode's emitted frames
+    val loader2 = new JdbcSchemaLoader(freshDerbyUrl("bar2"), applyPartitions = 4)
+    loader2.createTable("CREATE TABLE A2 (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, V BIGINT)")
+    loader2.createTable("CREATE TABLE B2 (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, V BIGINT)")
+    val alter = "ALTER TABLE A2 ADD COLUMN TAG BIGINT"
+    def written(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      val d = graft.util.Scratch.dir("graft_bar_slice")
+      df.write.mode("overwrite").parquet(d)
+      spark.read.schema(df.schema).parquet(d)
+    }
+    val a2 = written(Seq(
+      (1L, 5L, "I", Some(10L), null.asInstanceOf[String], None: Option[Long]),
+      (0L, 20L, "DDL", None: Option[Long], alter, None: Option[Long]),
+      (2L, 25L, "I", Some(20L), null.asInstanceOf[String], Some(7L))
+    ).toDF("pk", "commit_ts", "op", "v", "ddl_sql", "tag"))
+    val b2 = written(Seq(
+      (0L, 20L, "DDL", None: Option[Long], alter),
+      (3L, 30L, "I", Some(30L), null.asInstanceOf[String])
+    ).toDF("pk", "commit_ts", "op", "v", "ddl_sql"))
+    assert(loader2.applyBatch(Map("A2" -> a2, "B2" -> b2), 0L))
+    val a2rows = loader2.readTable(spark, "A2").collect()
+      .map(r => r.getAs[Long]("PK") ->
+        ((r.getAs[Long]("V"), Option(r.getAs[java.lang.Long]("TAG")).map(_.longValue))))
+      .toMap
+    assert(a2rows == Map(1L -> ((10L, None)), 2L -> ((20L, Some(7L)))), s"A2: $a2rows")
+    val b2rows = loader2.readTable(spark, "B2").collect()
+      .map(r => r.getAs[Long]("PK") -> r.getAs[Long]("V")).toMap
+    assert(b2rows == Map(3L -> 30L), s"B2: $b2rows")
+    assert(ddlLog(loader2) == Seq(alter), s"DDL log: ${ddlLog(loader2)}")
+    assert(!loader2.applyBatch(Map("A2" -> a2, "B2" -> b2), 0L))
+    assert(ddlLog(loader2) == Seq(alter))
+  }
+
   test("streamingReplicatedSchemas: two databases on one wire replicate into distinct targets") {
     // the reference drainer replicates EVERY database its catalog tracks
     // (drainer/schema.go:43-62 feeding syncer.go:374-397): schemas sa and
