@@ -37,19 +37,26 @@ object Tables {
     * argmin ran single-core). */
   def spread(df: DataFrame, keys: Column*): DataFrame = {
     val sess = df.sparkSession
+    val conf = sess.sessionState.conf
     val n = sess.sparkContext.defaultParallelism
     // Split-count estimate from the LOGICAL stats (file footprint of the
     // scan, pruned-column scaled) instead of `df.rdd.getNumPartitions`:
     // the .rdd probe forced a throwaway non-AQE physical planning + RDD DAG
     // build of the subtree at every call site, a driver cost paid even when
-    // the answer is "no-op" (r21 ADVICE). Callers pass scan+project frames
-    // only, where sizeInBytes IS the (pruned) parquet footprint; a real
-    // table underestimated 32× by pruning still clears n×maxPartitionBytes
-    // (~4 GB) at production scale, so the at-scale no-op contract holds.
+    // the answer is "no-op" (r21 ADVICE). The split size is Spark's own
+    // `FilePartition.maxSplitBytes` rule, so a mid-scale input that the
+    // scan already cuts into ≥ n splits (bytes / n above the open cost)
+    // stays a no-op. The rule counts byte splits, not row groups: a large
+    // file written as one row group still scans on one task. A leaf
+    // without file stats reports `defaultSizeInBytes`: its split count is
+    // unknown, so spread instead of letting the huge estimate turn spread
+    // into a silent no-op.
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val maxSplit = BigInt(sess.sessionState.conf.filesMaxPartitionBytes)
+    val hasFileStats = bytes < BigInt(conf.defaultSizeInBytes)
+    val maxSplit = BigInt(conf.filesMaxPartitionBytes)
+      .min(BigInt(conf.filesOpenCostInBytes).max(bytes / n)).max(1)
     val estSplits = (bytes + maxSplit - 1) / maxSplit
-    if (estSplits >= n) df else df.repartition(n, keys: _*)
+    if (hasFileStats && estSplits >= n) df else df.repartition(n, keys: _*)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.util.MetaFs
 
@@ -71,15 +72,31 @@ private[graft] object MergeOrder {
   * State layout is the production shape, not a flat file: the materialized
   * table is hash-partitioned into `nBuckets` directories by
   * `pmod(hash(pk), nBuckets)` — the parquet analog of the target table's
-  * key-hash distribution. A micro-batch first computes the bucket set it
-  * touches (bounded by nBuckets, a metadata-sized collect), reads ONLY those
-  * buckets back (partition pruning skips the rest at the file listing), and
-  * rewrites ONLY those bucket directories. Per-batch work is therefore
-  * O(batch + touched-state), not O(total-state): with 2^12 buckets at 100 TB
-  * a skewless batch touching 1% of keys reads/writes ~1% of the table. This
-  * is exactly the work profile of `MERGE INTO` on a clustered target or of
-  * dynamic-partition-overwrite on a lakehouse table — swap the directory
-  * move for the engine's commit and nothing else changes.
+  * key-hash distribution — and each bucket directory holds ONE parquet
+  * file. A micro-batch costs one metadata job over the pinned batch (the
+  * DDL barrier set and the max commit ts in one aggregate), then per
+  * barrier slice one bucket-set job (≤ nBuckets values; an empty set ends
+  * an empty slice there) and one shuffle that writes the merge:
+  * it reads back ONLY the touched buckets (partition pruning skips the rest
+  * at the file listing), merges them with the slice's rows after a single
+  * exchange on `bucket` — which, since the bucket is a function of the key,
+  * also serves the per-key window — and writes each touched bucket from one
+  * task as one file, then swaps ONLY those bucket directories. Per-batch
+  * work is therefore O(batch + touched-state), not O(total-state): with
+  * 2^12 buckets at 100 TB a skewless batch touching 1% of keys reads/writes
+  * ~1% of the table. This is exactly the work profile of `MERGE INTO` on a
+  * clustered target or of dynamic-partition-overwrite on a lakehouse table
+  * — swap the directory move for the engine's commit and nothing else
+  * changes.
+  *
+  * Known limitation: a deleted key is dropped from the state without a
+  * tombstone. A later batch that carries an OLDER image of that key (a
+  * late event, or one wave split across two triggers) therefore brings the
+  * key back: the merge window has no stored row newer than the late image
+  * to lose against. The reference's ordered merge delivers each key's
+  * changes in commit-ts order, so it never sees such a batch; the
+  * replication benchmark's lake workload avoids it by publishing whole
+  * waves (`replbench/README.md`). Not fixed here.
   */
 class UpsertSink(root: String, nBuckets: Int = 16) {
   private val statePath = s"$root/state"
@@ -147,12 +164,19 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
           "rebucket (read + rewrite) or recreate the state")
     } else MetaFs.writeString(layoutPath, s"$nBuckets\n")
 
+  // the stored columns plus the partition column: reads pass it instead of
+  // inferring it, which would cost a footer-reading job per read
+  private val stateSchema = StructType(Seq(
+    StructField("pk", LongType), StructField("commit_ts", LongType),
+    StructField("value", DoubleType), StructField("bucket", IntegerType)))
+
+  private def readState(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(stateSchema).option("basePath", statePath)
+      .parquet(paths: _*)
+
   private def emptyState(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("pk", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("commit_ts", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType))))
+      stateSchema)
 
   /** Roll back (or finish) a bucket swap a crash interrupted. The swap
     * sequence is vacate(dst→old) then promote(src→dst) then delete(old); a
@@ -180,28 +204,23 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
   def currentState(spark: SparkSession): DataFrame = {
     healHalfSwaps()
     // bucket-dir presence, not statePath presence: a state whose every
-    // key was deleted keeps the (empty) state dir but no bucket dirs —
-    // a parquet read of that throws schema-inference instead of empty
-    val hasBuckets = MetaFs.exists(statePath) &&
-      MetaFs.listNames(statePath).exists(_.startsWith("bucket="))
-    if (hasBuckets)
-      spark.read.option("basePath", statePath).parquet(statePath)
-        .select("pk", "commit_ts", "value")
-    else emptyState(spark)
+    // key was deleted keeps the (empty) state dir but no bucket dirs
+    val hasBuckets = MetaFs.listNames(statePath).exists(_.startsWith("bucket="))
+    (if (hasBuckets) readState(spark, Seq(statePath)) else emptyState(spark))
+      .select("pk", "commit_ts", "value")
   }
 
-  /** The state rows of a bucket subset — a partition-pruned read: only the
-    * named bucket directories are listed and scanned. */
+  /** The state rows of a bucket subset — a partition-pruned read: one
+    * listing of `state/`, and only the named bucket directories are
+    * scanned. */
   private def stateForBuckets(spark: SparkSession, buckets: Seq[Int]): DataFrame = {
-    val existing = buckets.map(b => s"$statePath/bucket=$b")
-      .filter(MetaFs.exists)
+    val present = MetaFs.listNames(statePath).toSet
+    val existing = buckets.map(b => s"bucket=$b").filter(present)
+      .map(n => s"$statePath/$n")
     // keep the partition column the pruned read provides: re-hashing
     // existing rows per batch is wasted work, and rows staying in the
     // directory they were read from holds by construction
-    if (existing.isEmpty) emptyState(spark).withColumn("bucket", lit(0))
-    else spark.read.option("basePath", statePath).parquet(existing: _*)
-      .select(col("pk"), col("commit_ts"), col("value"),
-        col("bucket").cast("int").as("bucket"))
+    if (existing.isEmpty) emptyState(spark) else readState(spark, existing)
   }
 
   /** Apply one micro-batch of change rows (pk, commit_ts, op, value[, ddl]).
@@ -215,18 +234,19 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
     checkLayout()
     healHalfSwaps() // a crash mid-swap must be rolled back BEFORE state reads
     val spark = batch0.sparkSession
-    // pinned: the barrier collect, one filter-scan per slice, and the max
-    // agg would otherwise re-run the source scan 3+k times (the
-    // applyToJdbcTables rationale)
+    // pinned: the metadata aggregate and every slice's bucket-set and merge
+    // jobs read it, so the source scan runs once
     val batch = batch0.persist()
     try {
-      // DDL barrier: order sub-batches around DDL rows by commit_ts.
-      // DISTINCT: several DDLs sharing one commit ts (one upstream txn's
-      // jobs) are ONE barrier — duplicate ts values would write the same
-      // marker name twice and slice nothing in between
-      val barriers = batch.filter(col("op") === "DDL")
-        .select("commit_ts").distinct()
-        .collect().map(_.getLong(0)).sorted :+ Long.MaxValue
+      // one job for the batch's metadata: the DDL barriers and the max ts.
+      // DDL barrier: order sub-batches around DDL rows by commit_ts. A SET:
+      // several DDLs sharing one commit ts (one upstream txn's jobs) are
+      // ONE barrier — duplicate ts values would write the same marker name
+      // twice and slice nothing in between
+      val meta = batch.agg(
+        collect_set(when(col("op") === "DDL", col("commit_ts"))),
+        max("commit_ts")).head()
+      val barriers = meta.getSeq[Long](0).sorted :+ Long.MaxValue
       var lower = Long.MinValue
       barriers.foreach { upper =>
         val slice = batch.filter(col("op") =!= "DDL" &&
@@ -243,8 +263,7 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
         }
         lower = upper
       }
-      val maxTsRow = batch.agg(max("commit_ts")).collect()(0)
-      val maxTs = if (maxTsRow.isNullAt(0)) prev.commitTs else maxTsRow.getLong(0)
+      val maxTs = if (meta.isNullAt(1)) prev.commitTs else meta.getLong(1)
       val version = if (schemaVersion >= 0) schemaVersion else prev.schemaVersion
       MetaFs.writeString(metaPath,
         s"$batchId ${math.max(maxTs, prev.commitTs)} $version true")
@@ -253,7 +272,6 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
   }
 
   private def mergeSlice(spark: SparkSession, slice: DataFrame): Unit = {
-    if (slice.isEmpty) return
     // a frame carrying the T9 intra-txn sequence resolves same-ts chains
     // by STATEMENT ORDER (ref: drainer/translator/sequence_iterator.go:
     // 32-70 + pkg/loader/merge.go:79-133) — the highest seq at a ts is
@@ -262,12 +280,14 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
     val hasSeq = slice.columns.contains("seq")
     val cols = Seq("pk", "commit_ts", "op", "value") ++
       (if (hasSeq) Seq("seq") else Nil)
+    // read twice (bucket set + merge), both times off the pinned batch
     val incoming = slice.select(cols.map(col): _*)
       .withColumn("bucket", bucketOf(col("pk")))
-      .localCheckpoint(true) // read twice (bucket set + merge); cut the lineage
     // the touched-bucket set: ≤ nBuckets values, a metadata-sized collect
+    // that doubles as the slice's emptiness probe
     val touched = incoming.select("bucket").distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
+    if (touched.isEmpty) return
     val existing0 = stateForBuckets(spark, touched)
       .withColumn("op", lit("I")) // materialized rows behave as inserts
     // materialized rows sit BELOW every sequenced statement at their ts
@@ -275,13 +295,20 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
       existing0.withColumn("seq", lit(MergeOrder.MaterializedSeq)) else existing0
     // same-ts ties broken by the ONE shared order ([[MergeOrder]]): the T9
     // seq when carried (the only resolver of a within-txn
-    // delete-then-reinsert), else D>U>I net effect, then the payload
+    // delete-then-reinsert), else D>U>I net effect, then the payload.
+    // The window groups by (bucket, pk): the bucket is a function of the
+    // key (pinned by `_n_buckets`), so this is the per-key grouping, and
+    // the ONE exchange below on `bucket` satisfies both the window and the
+    // writer's partition-column ordering
     val seqOrder = if (hasSeq) Seq(MergeOrder.seqKey.desc) else Nil
-    val w = Window.partitionBy("pk")
+    val w = Window.partitionBy("bucket", "pk")
       .orderBy(col("commit_ts").desc +: seqOrder :+ MergeOrder.opRank.desc :+
         col("value").desc_nulls_last: _*)
     val next = existing
       .unionByName(incoming)
+      // an explicit count, so AQE cannot coalesce it: every bucket's rows
+      // land in one task, which writes the bucket as one file
+      .repartition(nBuckets, col("bucket"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1 && col("op") =!= "D") // delete suppression
       .select("pk", "commit_ts", "value", "bucket")

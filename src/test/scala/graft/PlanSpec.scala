@@ -381,4 +381,50 @@ class PlanSpec extends SparkSpec {
   test("typedDecode binds its JSON parse once") {
     assert(jsonParses(graft.ops.Translators.typedDecode(spark, sf)) == 1)
   }
+
+  test("spread follows Spark's file split rule: no exchange where the scan already cuts n splits") {
+    import org.apache.spark.sql.functions.col
+    val n = spark.sparkContext.defaultParallelism
+    val dir = graft.util.Scratch.dir("graft_spread_mid")
+    // one ~100 KB file of small row groups, so every split carries rows
+    spark.range(0, 20000, 1, 1).selectExpr("id", "id * 7 as v")
+      .write.option("parquet.block.size", 8192).mode("overwrite").parquet(dir)
+    val maxKey = "spark.sql.files.maxPartitionBytes"
+    val openKey = "spark.sql.files.openCostInBytes"
+    val (max0, open0) = (spark.conf.get(maxKey), spark.conf.get(openKey))
+    try {
+      // the mid-scale window in miniature: the input is below one maximum
+      // split but above n open costs, so the scan splits it by bytes / n
+      spark.conf.set(maxKey, "1048576")
+      spark.conf.set(openKey, "1024")
+      val mid = spark.read.parquet(dir)
+      assert(mid.rdd.getNumPartitions >= n, "the scan itself must cut n splits")
+      assert(graft.model.Tables.spread(mid, col("id")) eq mid,
+        "spread repartitioned an input the scan already splits n ways")
+      // below n open costs the scan packs it into fewer splits: spread
+      spark.conf.set(openKey, "4194304")
+      val small = spark.read.parquet(dir)
+      assert(small.rdd.getNumPartitions < n)
+      assert(graft.model.Tables.spread(small, col("id")).rdd.getNumPartitions == n)
+    } finally {
+      spark.conf.set(maxKey, max0)
+      spark.conf.set(openKey, open0)
+    }
+  }
+
+  test("spread repartitions a frame whose leaf has no file stats") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val n = spark.sparkContext.defaultParallelism
+    // an RDD-backed frame: its stats are `defaultSizeInBytes`, which says
+    // nothing about its split count
+    val rdd = spark.sparkContext.parallelize((1L to 100L).map(
+      org.apache.spark.sql.Row(_)), 1)
+    val df = spark.createDataFrame(rdd, StructType(Seq(StructField("id", LongType))))
+    assert(df.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      BigInt(spark.sessionState.conf.defaultSizeInBytes))
+    val out = graft.model.Tables.spread(df, col("id"))
+    assert(out.rdd.getNumPartitions == n)
+    assert(out.count() == 100)
+  }
 }

@@ -440,6 +440,101 @@ class StreamingSpec extends SparkSpec {
     assert(state(1L) == 42.0 && state.size == 64)
   }
 
+  test("upsert sink: a no-DDL batch costs a bounded job count and writes one file per touched bucket") {
+    // the micro-batch engine runs a foreachBatch sink with adaptive
+    // execution off, so the frame keeps every shuffle's partition count;
+    // the spec applies under both settings and counts jobs under the
+    // streaming one
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val tag = "graft.spec.sink"
+    // the shuffle count of each staging write, in arrival order
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val writeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed match {
+          case c: InsertIntoHadoopFsRelationCommand
+              if c.outputPath.toString.endsWith("state_tmp") =>
+            writes.add(qe.executedPlan.collect { case e: ShuffleExchangeExec => e }.size)
+            ()
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(jobs.add)
+    }
+    // the listener bus delivers in order: once a marker job is seen,
+    // every job submitted before it has been counted
+    def jobsOf(run: => Unit): Int = {
+      jobs.clear()
+      spark.sparkContext.setLocalProperty(tag, "apply")
+      try run finally spark.sparkContext.setLocalProperty(tag, null)
+      spark.sparkContext.setLocalProperty(tag, "marker")
+      try spark.range(1).count() finally spark.sparkContext.setLocalProperty(tag, null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains("marker"), "the listener bus never delivered the marker job")
+      jobs.asScala.count(_ == "apply")
+    }
+    def filesPerBucket(root: String): Map[String, Int] =
+      Files.list(Paths.get(s"$root/state")).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("bucket="))
+        .map(d => d.getFileName.toString -> Files.list(d).iterator().asScala
+          .count(_.getFileName.toString.endsWith(".parquet")))
+        .toMap
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(writeListener)
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqe0 = spark.conf.get(aqeKey)
+    try Seq(false, true).foreach { aqe =>
+      spark.conf.set(aqeKey, aqe.toString)
+      val root = graft.util.Scratch.dir(s"graft_one_file_sink_$aqe")
+      val sink = new UpsertSink(root, nBuckets = 8)
+      // 4 input partitions, keys over every bucket
+      val b0 = (1L to 400L).map(pk => (pk, pk, "I", pk.toDouble))
+        .toDF("commit_ts", "pk", "op", "value").repartition(4)
+      assert(sink.applyBatch(b0, 0L))
+      val first = filesPerBucket(root)
+      assert(first.size == 8 && first.values.forall(_ == 1),
+        s"aqe=$aqe: expected one parquet file in each of 8 buckets, got $first")
+      // batch 1 merges against the stored state: updates, deletes, inserts
+      val b1 = (1L to 600L by 3L).map(pk =>
+          (1000L + pk, pk, if (pk % 2 == 0) "D" else if (pk <= 400) "U" else "I",
+            -pk.toDouble))
+        .toDF("commit_ts", "pk", "op", "value").repartition(4)
+      val n = jobsOf(assert(sink.applyBatch(b1, 1L)))
+      val second = filesPerBucket(root)
+      assert(second.size == 8 && second.values.forall(_ == 1),
+        s"aqe=$aqe: expected one parquet file in each of 8 buckets, got $second")
+      if (!aqe) {
+        assert(n <= 3, s"a no-DDL batch ran $n jobs")
+        // one exchange serves the merge window and the bucket writer
+        val deadline = System.nanoTime() + 30000000000L
+        while (writes.size < 2 && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(writes.asScala.toSeq == Seq(1, 1), s"shuffles per staging write: $writes")
+      }
+      val state = sink.currentState(spark).collect()
+        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      val expect = (1L to 400L).map(pk => pk -> pk.toDouble).toMap ++
+        (1L to 600L by 3L).filter(_ % 2 == 1).map(pk => pk -> -pk.toDouble) --
+        (1L to 600L by 3L).filter(_ % 2 == 0)
+      assert(state == expect)
+      info(s"aqe=$aqe: $n jobs for the merge batch")
+    } finally {
+      spark.conf.set(aqeKey, aqe0)
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(writeListener)
+    }
+  }
+
   test("lake sinks resolve scheme-qualified URIs through the Hadoop FileSystem") {
     // the portability contract behind the MetaFs port: checkpoint marker,
     // DDL log, bucket swap and open-table swap must all work through a
