@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.sql.{Connection, DriverManager, SQLException, Types}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -166,9 +166,10 @@ private[sinks] object JdbcMeta {
   *    pkg/loader/model.go:303-322 whereSlice, 253-257 NULL handling);
   *    tables with no key at all fall back to all-columns matching, as the
   *    reference does;
-  *  - merge-by-unique-key, delete-first ordering, multi-VALUES batches and
-  *    REPLACE semantics are the same algebra as [[JdbcUpsertSink]], but
-  *    keyed on the table's (possibly composite) unique key;
+  *  - merge-by-unique-key and REPLACE semantics (delete the key, insert
+  *    the new image) are the same algebra as [[JdbcUpsertSink]], but keyed
+  *    on the table's (possibly composite) unique key; a table with a
+  *    secondary unique key applies every delete before any insert;
   *  - **type fidelity**: values bind by the column's catalog type —
   *    BIGINT/DOUBLE/VARCHAR/DECIMAL(p,s)/INT land typed, the M9 wide
   *    decimal rides as exact text where the target engine caps DECIMAL
@@ -176,10 +177,16 @@ private[sinks] object JdbcMeta {
   *    DECIMAL(38,19), value-exact, the same dialect mapping the reference
   *    applies per downstream driver).
   *
-  * Scale shape: per table, one shuffle of that table's slice (the key-hash
-  * repartition) + JDBC round-trips proportional to the slice — O(batch),
-  * never O(table). Tables apply independently; on a cluster each table's
-  * 16 writer partitions hold their own connections.
+  * Scale shape: per table and batch, one exchange (the key-hash
+  * repartition) and one checkpoint job fold the rows of every barrier
+  * segment at once; each segment then applies in one JDBC pass (two for a
+  * table with a secondary unique key) of JDBC round-trips proportional to
+  * the slice — O(batch), never O(table). The key-DELETE and the single-row
+  * INSERT are prepared once per writer partition and run as JDBC batches
+  * of `batchSize`; against MySQL, `rewriteBatchedStatements=true` in the
+  * URL makes each such batch one multi-VALUES statement. Tables apply
+  * independently; on a cluster each table's 16 writer partitions hold
+  * their own connections.
   */
 object JdbcSchemaLoader {
 
@@ -416,6 +423,7 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
   def lastCommitted: Long = lastCheckpoint.batchId
 
   private case class ColMeta(name: String, sqlType: Int, nullable: Boolean)
+  private type TableMeta = (Seq[ColMeta], Seq[Seq[String]])
 
   /** (columns in ordinal order with their JDBC types + nullability, EVERY
     * unique key's column list — primary key first, then each unique index
@@ -423,7 +431,14 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
     * with no key at all get one all-columns pseudo-key, as the reference
     * does (ref: util.go:96-104 hoists PRIMARY first; getKeys walks every
     * unique index — model.go:216-251). */
-  private def tableMetaAll(table: String): (Seq[ColMeta], Seq[Seq[String]]) =
+  private def tableMetaAll(table: String): TableMeta = {
+    val tm = tableMetaOpt(table)
+    require(tm.nonEmpty, s"table $table not found in catalog")
+    tm.get
+  }
+
+  /** [[tableMetaAll]], or None when the table is not in the catalog. */
+  private def tableMetaOpt(table: String): Option[TableMeta] =
     withConn { c =>
       val md = c.getMetaData
       val up = table.toUpperCase
@@ -440,7 +455,6 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
           rs.getInt("DATA_TYPE"),
           rs.getInt("NULLABLE") != java.sql.DatabaseMetaData.columnNoNulls)
       rs.close()
-      require(cols.nonEmpty, s"table $table not found in catalog")
       val pk = scala.collection.mutable.ArrayBuffer[(Short, String)]()
       val prs = md.getPrimaryKeys(null, null, up)
       while (prs.next()) pk += ((prs.getShort("KEY_SEQ"), prs.getString("COLUMN_NAME")))
@@ -492,15 +506,10 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
         case _: SQLException => Nil
       }
       val keys = (primary.toSeq ++ uniques ++ constraintKeys).distinct
-      (cols.toSeq, if (keys.nonEmpty) keys else Seq(cols.map(_.name).toSeq))
+      // the key reads above find nothing for a table not in the catalog
+      if (cols.isEmpty) None
+      else Some((cols.toSeq, if (keys.nonEmpty) keys else Seq(cols.map(_.name).toSeq)))
     }
-
-  /** Key preference for the merged path: primary key, else the first
-    * unique index, else every column. */
-  private def tableMeta(table: String): (Seq[ColMeta], Seq[String]) = {
-    val (cols, keys) = tableMetaAll(table)
-    (cols, keys.head)
-  }
 
   /** Unique-key WHERE: NOT NULL key columns get plain `c = ?` — point
     * predicates the engine serves by an index probe, locking one row. Only
@@ -589,27 +598,45 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
       .flatMap(_.collect())
       .map(r => (r.getAs[Long]("commit_ts"), Option(r.getAs[String]("ddl_sql"))))
       .distinct.sortBy(_._1)
-    val barriers = ddls :+ ((Long.MaxValue, None: Option[String]))
+    // (ts, statement, replay-guard key) per barrier; the batch end last
+    val barriers = ddls.map { case (ts, stmt) => (ts, stmt, stmt.getOrElse(s"ddl@$ts")) } :+
+      ((Long.MaxValue, None: Option[String], ""))
+    // a REPLAYED batch skips whole sub-batches below an already-logged
+    // barrier, not just the barrier statement: the first attempt applied
+    // those slices BEFORE executing the DDL (slices apply strictly ahead
+    // of their barrier), and re-applying them now would bind the
+    // old-shape rows against the post-DDL catalog — a default-valued ADD
+    // COLUMN's fill would be overwritten with the frame's stale slots
+    // (the schema-change sweep's finding). This is the batch-granular
+    // form of the reference's save-checkpoint-on-DDL rule
+    // (drainer/syncer.go:253-259: DDL execution pins a checkpoint, so
+    // pre-DDL DML never replays); the residual exec→log window remains,
+    // as it does there — DDL is not transactional on most engines.
+    val done = barriers.map { case (upper, _, key) =>
+      upper != Long.MaxValue && withConn(JdbcMeta.ddlLogged(_, batchId, upper, key))
+    }
+    val live = barriers.indices.filterNot(done)
+
+    // merged path: each DML row carries its segment — the number of
+    // barriers strictly below its commit_ts, so a row AT a barrier's ts
+    // applies before that barrier. Each table merges once per batch (not
+    // once per segment) under the catalog's first key (primary, else the
+    // first unique index, else every column) at the first live segment
+    // where the table exists; a barrier that changes that key re-merges
+    // the segments after it
+    val barrierTs = ddls.map(_._1)
+    val segOf =
+      if (barrierTs.isEmpty) lit(0)
+      else size(filter(typedLit(barrierTs), _ < col("commit_ts")))
+    val orderedSlices = slices.toSeq.sortBy(_._1).map { case (t, df) =>
+      (t, df, df.filter(col("op") =!= "DDL").withColumn("_seg", segOf))
+    }
+    val mergedOf = scala.collection.mutable.Map[String, Merged]()
 
     var lower = Long.MinValue
     var maxTs = prev.commitTs
-    val orderedSlices = slices.toSeq.sortBy(_._1)
-    barriers.foreach { case (upper, stmt) =>
-      // a REPLAYED batch skips whole sub-batches below an already-logged
-      // barrier, not just the barrier statement: the first attempt applied
-      // those slices BEFORE executing the DDL (slices apply strictly ahead
-      // of their barrier), and re-applying them now would bind the
-      // old-shape rows against the post-DDL catalog — a default-valued ADD
-      // COLUMN's fill would be overwritten with the frame's stale slots
-      // (the schema-change sweep's finding). This is the batch-granular
-      // form of the reference's save-checkpoint-on-DDL rule
-      // (drainer/syncer.go:253-259: DDL execution pins a checkpoint, so
-      // pre-DDL DML never replays); the residual exec→log window remains,
-      // as it does there — DDL is not transactional on most engines.
-      val barrierKey = stmt.getOrElse(s"ddl@$upper")
-      val barrierDone = upper != Long.MaxValue &&
-        withConn(JdbcMeta.ddlLogged(_, batchId, upper, barrierKey))
-      if (!barrierDone) {
+    barriers.zipWithIndex.foreach { case ((upper, stmt, key), seg) =>
+      if (!done(seg)) {
         // tables between two barriers are independent — apply them across
         // the bounded worker pool (ref: pkg/loader/load.go:508-527, the
         // reference's 16 parallel table workers); only the barrier itself
@@ -617,19 +644,42 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
         // (driver-side metadata reads and executor-side batches alike), so
         // nothing here shares JDBC state across threads.
         val applied = graft.util.Par.mapPar(orderedSlices) {
-          case (table, df) =>
-            val slice = df.filter(col("op") =!= "DDL" &&
-              col("commit_ts") > lower && col("commit_ts") <= upper)
-            if (merge) applyTable(slice, table)
-            else applyTableSequence(slice, table, safeMode)
+          case (table, df, dml) =>
+            if (merge) mergedOf.get(table) match {
+              // no rows here: no catalog read (a barrier may have dropped
+              // or renamed the table by now)
+              case Some(m) if m.segs(seg).isEmpty => (Long.MinValue, None)
+              case prior => tableMetaOpt(table) match {
+                // not in the catalog yet (a later barrier may create it):
+                // fine while the segment holds none of its rows, which a
+                // limit-1 probe tells before anything is merged
+                case None =>
+                  require(prior.isEmpty && dml.filter(col("_seg") === seg).isEmpty,
+                    s"table $table not found in catalog")
+                  (Long.MinValue, None)
+                case Some(tm) =>
+                  val m = prior.filter(_.keyCols == tm._2.head)
+                    .getOrElse(mergeTable(dml, table, tm._2.head, live.filter(_ >= seg)))
+                  if (m.segs(seg).isEmpty) (Long.MinValue, Some(m))
+                  else (applySegment(m, seg, table, tm), Some(m))
+              }
+            } else {
+              val slice = df.filter(col("op") =!= "DDL" &&
+                col("commit_ts") > lower && col("commit_ts") <= upper)
+              (applyTableSequence(slice, table, safeMode), None)
+            }
         }
-        maxTs = (maxTs +: applied).max
+        orderedSlices.zip(applied).foreach {
+          case ((table, _, _), (_, Some(m))) => mergedOf(table) = m
+          case _ => ()
+        }
+        maxTs = (maxTs +: applied.map(_._1)).max
         if (upper != Long.MaxValue) withConn { c =>
           stmt.foreach { sql =>
             val st = c.createStatement()
             try st.execute(sql) finally st.close()
           }
-          JdbcMeta.logDdl(c, batchId, upper, barrierKey)
+          JdbcMeta.logDdl(c, batchId, upper, key)
         }
       }
       if (upper != Long.MaxValue) maxTs = math.max(maxTs, upper)
@@ -641,23 +691,30 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
     true
   }
 
-  /** One table's slice through merge → delete pass → REPLACE pass, keyed
-    * on the table's own unique key, binding the table's own column list.
-    * Returns the slice's max applied commit_ts (Long.MinValue when empty)
-    * so the caller checkpoints without reading the slice again (a
-    * streaming decode's slice is a scan of its written batch dir, see
-    * [[graft.streaming.CdcStream.DecodedBatch]]). */
-  private def applyTable(slice: DataFrame, table: String): Long = {
-    // cheap early exit (a limit-1 job): empty slices — e.g. the sub-batch
-    // before a leading DDL barrier — skip the catalog read and the window
-    // + repartition + eager checkpoint machinery below
-    if (slice.isEmpty) return Long.MinValue
-    val (cols, keyCols) = tableMeta(table)
-    val meta = cols.map(m => m.name -> m).toMap
+  /** Per-segment figures of a merged table, read from the checkpoint job. */
+  private case class SegStats(deletes: Long, puts: Long, maxTs: Long) {
+    def isEmpty: Boolean = deletes + puts == 0
+  }
+
+  /** One table's merged rows for segments `segs`: ≤ 1 row per (segment,
+    * key), hash-partitioned on the key and checkpointed, with each
+    * segment's counts. */
+  private case class Merged(keyCols: Seq[String], rows: DataFrame,
+      segs: Map[Int, SegStats])
+
+  /** One table's DML rows (tagged `_seg`) folded per (segment, unique key).
+    * One exchange — the key-hash repartition — serves both the merge window
+    * (its partitioning satisfies the window's (`_seg`, key) clustering) and
+    * the JDBC passes; the eager checkpoint is the only job, and it carries
+    * an observation of each segment's delete count, non-delete count and
+    * max commit_ts, so the apply needs no emptiness probe and no watermark
+    * job (a streaming decode's slice is a scan of its written batch dir,
+    * see [[graft.streaming.CdcStream.DecodedBatch]], and is not read
+    * again). */
+  private def mergeTable(dml: DataFrame, table: String, keyCols: Seq[String],
+      segs: Seq[Int]): Merged = {
+    val slice = dml.filter(col("_seg").isin(segs: _*))
     val frameCols = slice.columns.map(n => n.toUpperCase -> n).toMap
-    // writable columns = catalog columns present in the frame (a frame may
-    // omit trailing columns a DDL added later; their defaults apply)
-    val insertCols = cols.map(_.name).filter(n => frameCols.contains(n.toUpperCase))
     require(keyCols.forall(k => frameCols.contains(k.toUpperCase)),
       s"frame for $table lacks key columns ${keyCols.mkString(",")}")
 
@@ -699,7 +756,7 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
     // instead of a shuffle-dependent one
     val hasSeq = preSlice.columns.contains("seq")
     val seqOrder = if (hasSeq) Seq(MergeOrder.seqKey.desc) else Nil
-    val meta_ = Set("commit_ts", "op", "seq", "_synth", "ddl_sql")
+    val meta_ = Set("commit_ts", "op", "seq", "_synth", "_seg", "ddl_sql")
     val keyFrameCols = keyCols.map(k => frameCols(k.toUpperCase)).toSet
     // scalar payload columns only: a complex-typed column riding the frame
     // (a MapType isn't orderable and fails analysis; a wide array/struct
@@ -716,85 +773,103 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
         case _ => true
       })
       .map(f => col(f.name).desc_nulls_last)
-    val w = Window.partitionBy(keyExprs: _*)
+    val w = Window.partitionBy(col("_seg") +: keyExprs: _*)
       .orderBy((col("commit_ts").desc +: seqOrder) ++
         Seq(col("_synth").asc, MergeOrder.opRank.desc) ++ payloadOrder: _*)
-    val merged = preSlice
+    val observed = new Observation()
+    val perSeg = segs.flatMap { s =>
+      val in = col("_seg") === s
+      Seq(count(when(in && col("op") === "D", 1)).as(s"d$s"),
+        count(when(in && col("op") =!= "D", 1)).as(s"p$s"),
+        max(when(in, col("commit_ts"))).as(s"t$s"))
+    }
+    val rows = preSlice
+      .repartition(applyPartitions, keyExprs: _*)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn", "_synth")
-      .repartition(applyPartitions, keyExprs: _*)
-      .localCheckpoint(true) // applied twice (delete pass, upsert pass)
-    // one pass over the checkpointed data gives the applied-ts watermark;
-    // the slice's input (for a streaming decode, the parquet scan of the
-    // written batch dir) is not read again
-    val sliceMaxTs =
-      merged.agg(max("commit_ts")).collect()(0).getLong(0)
+      .observe(observed, perSeg.head, perSeg.tail: _*)
+      .localCheckpoint(true)
+    val stats = observed.get
+    Merged(keyCols, rows, segs.map { s =>
+      s -> SegStats(stats(s"d$s").asInstanceOf[Long], stats(s"p$s").asInstanceOf[Long],
+        Option(stats(s"t$s")).fold(Long.MinValue)(_.asInstanceOf[Long]))
+    }.toMap)
+  }
 
-    val (u, bs, tbl) = (url, batchSize, table)
-    val pred = keyPredicate(keyCols, meta)
-    val frameIdxByUpper = merged.columns.zipWithIndex
+  /** One segment of a merged table through the JDBC passes, binding the
+    * column list the catalog shows now. With one unique key every key
+    * lives in one partition, so one pass — each chunk deletes its keys and
+    * inserts its non-deletes — ends where delete-all-then-replace would. A
+    * secondary unique key can tie rows in different partitions (a deleted
+    * row's secondary key reused by an insert elsewhere), so such a table
+    * keeps the delete pass ahead of the replace pass. Returns the
+    * segment's max applied commit_ts. */
+  private def applySegment(m: Merged, seg: Int, table: String,
+      tm: TableMeta): Long = {
+    val st = m.segs(seg)
+    val (cols, keys) = tm
+    val rows = m.rows.filter(col("_seg") === seg)
+    val frameCols = rows.columns.map(_.toUpperCase).toSet
+    // writable columns = catalog columns present in the frame (a frame may
+    // omit trailing columns a DDL added later; their defaults apply)
+    val insertCols = cols.map(_.name).filter(n => frameCols.contains(n.toUpperCase))
+    val write = writePass(table, m.keyCols, insertCols,
+      cols.map(c => c.name -> c).toMap) _
+    if (keys.size == 1) write(rows)
+    else {
+      if (st.deletes > 0) write(rows.filter(col("op") === "D"))
+      if (st.puts > 0) write(rows.filter(col("op") =!= "D"))
+    }
+    st.maxTs
+  }
+
+  /** One JDBC pass over `rows`: each partition prepares the key-DELETE and
+    * a single-row INSERT with the explicit catalog column list once, then
+    * per chunk of `batchSize` rows deletes every row's key, inserts the
+    * non-deletes (each as one JDBC batch) and commits. The statement text
+    * is fixed, so the engine compiles it once, not once per chunk size. */
+  private def writePass(table: String, keyCols: Seq[String],
+      insertCols: Seq[String], meta: Map[String, ColMeta])(rows: DataFrame): Unit = {
+    val (u, bs) = (url, batchSize)
+    val delSql = s"DELETE FROM $table WHERE ${keyPredicate(keyCols, meta)}"
+    val insSql = s"INSERT INTO $table (${insertCols.mkString(", ")}) VALUES " +
+      insertCols.map(_ => "?").mkString("(", ", ", ")")
+    val frameIdxByUpper = rows.columns.zipWithIndex
       .map { case (n, i) => n.toUpperCase -> i }.toMap
-
-    // pass 1: ALL deletes, whole slice, before any insert/update
-    merged.filter(col("op") === "D").foreachPartition {
-      rows: Iterator[org.apache.spark.sql.Row] =>
-        val c = DriverManager.getConnection(u)
-        try {
-          c.setAutoCommit(false)
-          val del = c.prepareStatement(s"DELETE FROM $tbl WHERE $pred")
-          rows.grouped(bs).foreach { chunk =>
-            chunk.foreach { r =>
-              bindKey(del, 1, r, keyCols, meta, frameIdxByUpper); del.addBatch()
-            }
-            del.executeBatch()
-            c.commit()
+    val opIdx = frameIdxByUpper("OP")
+    val slots = insertCols.map(cn => (frameIdxByUpper(cn.toUpperCase), meta(cn).sqlType))
+    rows.foreachPartition { part: Iterator[org.apache.spark.sql.Row] =>
+      val c = DriverManager.getConnection(u)
+      try {
+        c.setAutoCommit(false)
+        val del = c.prepareStatement(delSql)
+        lazy val ins = c.prepareStatement(insSql)
+        part.grouped(bs).foreach { chunk =>
+          chunk.foreach { r =>
+            bindKey(del, 1, r, keyCols, meta, frameIdxByUpper); del.addBatch()
           }
-          del.close()
-        } finally {
-          // Derby refuses to close with an open (even no-op) transaction
-          try c.rollback() catch { case _: SQLException => () }
-          c.close()
-        }
-    }
-
-    // pass 2: REPLACE for every merged non-delete — batched key-DELETE then
-    // one multi-VALUES INSERT with the explicit catalog column list
-    merged.filter(col("op") =!= "D").foreachPartition {
-      rows: Iterator[org.apache.spark.sql.Row] =>
-        val c = DriverManager.getConnection(u)
-        try {
-          c.setAutoCommit(false)
-          // chunk-invariant statement prepared ONCE per partition (only
-          // the multi-VALUES INSERT text varies with the chunk size)
-          val del = c.prepareStatement(s"DELETE FROM $tbl WHERE $pred")
-          rows.grouped(bs).foreach { chunk =>
-            chunk.foreach { r =>
-              bindKey(del, 1, r, keyCols, meta, frameIdxByUpper); del.addBatch()
-            }
-            del.executeBatch()
-            val holders = Seq.fill(chunk.size)(
-              insertCols.map(_ => "?").mkString("(", ", ", ")")).mkString(", ")
-            val ins = c.prepareStatement(
-              s"INSERT INTO $tbl (${insertCols.mkString(", ")}) VALUES $holders")
-            var i = 1
-            chunk.foreach { r =>
-              insertCols.foreach { cn =>
-                val v = r.get(frameIdxByUpper(cn.toUpperCase))
-                if (v == null) ins.setNull(i, meta(cn).sqlType) else ins.setObject(i, v)
-                i += 1
+          del.executeBatch()
+          val puts = chunk.filter(_.getString(opIdx) != "D")
+          if (puts.nonEmpty) {
+            puts.foreach { r =>
+              slots.zipWithIndex.foreach { case ((at, sqlType), i) =>
+                val v = r.get(at)
+                if (v == null) ins.setNull(i + 1, sqlType) else ins.setObject(i + 1, v)
               }
+              ins.addBatch()
             }
-            ins.executeUpdate(); ins.close()
-            c.commit() // one txn per chunk, like one executed batch
+            ins.executeBatch()
           }
-          del.close()
-        } finally {
-          try c.rollback() catch { case _: SQLException => () }
-          c.close()
+          c.commit() // one txn per chunk, like one executed batch
         }
+      } finally {
+        // Derby refuses to close with an open (even no-op) transaction;
+        // closing the connection closes its statements
+        try c.rollback() catch { case _: SQLException => () }
+        c.close()
+      }
     }
-    sliceMaxTs
   }
 
   /** Causality-grouped dispatch for the sequence-preserving path — P1

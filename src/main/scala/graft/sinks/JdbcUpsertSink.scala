@@ -128,11 +128,10 @@ class JdbcUpsertSink(url: String, stateTable: String = "GRAFT_STATE",
     * pkg/loader/load.go:845-866). */
   def applyBatch(batch0: DataFrame, batchId: Long, schemaVersion: Long = -1L): Boolean = {
     ensureTables()
-    // pinned: the loader's DDL gather, each barrier slice's emptiness
-    // probe, and each slice's merge all read this frame — unpinned, they
-    // would re-run the caller's full lineage 3+2k times per batch (the
-    // applyToJdbcTables rationale). The envelope's `value` binds to the
-    // state table's VAL column by the loader's catalog↔frame name bridge.
+    // pinned: the loader's DDL gather and its merge both read this frame,
+    // and unpinned each would re-run the caller's lineage. The envelope's
+    // `value` binds to the state table's VAL column by the loader's
+    // catalog↔frame name bridge.
     val batch = batch0.withColumnRenamed("value", "val").persist()
     try loader.applyBatch(Map(stateTable -> batch), batchId, schemaVersion,
       merge = !singleExec, safeMode = false)

@@ -1776,7 +1776,7 @@ object CdcStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // every route (and the loader's DDL-barrier gather) filters the
         // same micro-batch: without pinning it, N tables re-run the source
-        // scan up to 2N times
+        // scan N + 1 times (the gather, then one merge per table)
         val b = batch.persist()
         try {
           val slices = routes.map { case (t, pred) => t -> b.filter(pred) }

@@ -76,7 +76,7 @@ class MutationSpec extends SparkSpec {
     // Gate under scrutiny: k1_merge_migrate / k1_seq_migrate. The merged
     // fold ranks per (k1,k2) by (commit_ts DESC, _synth ASC) — at equal
     // commit_ts a REAL row outranks the synthetic old-key delete
-    // (JdbcSchemaLoader.applyTable), so a same-ts re-insert of the key an
+    // (JdbcSchemaLoader.mergeTable), so a same-ts re-insert of the key an
     // update just vacated SURVIVES (ref: pkg/loader/merge.go:48-77 splits
     // then folds; the split delete carries the update's ts, so a later
     // same-ts insert must win the fold). Mutating the tie-break to

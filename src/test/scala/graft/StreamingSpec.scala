@@ -1141,6 +1141,267 @@ class StreamingSpec extends SparkSpec {
     assert(rows("T_KEYLESS").count() == 1)
   }
 
+  test("schema loader: one exchange and one checkpoint per table per batch, one JDBC pass per segment (two with a secondary key), one INSERT text per column list") {
+    // A has one unique key, B a secondary one; the batch carries two DDL
+    // barriers (each widening one table) and deletes mixed into ~1000
+    // rows. The frames are parquet scans, like a streaming decode's
+    // written batch, so adaptive execution applies to the loader's plans
+    // when it is on — there each shuffle map stage is its own job
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.sinks.JdbcSchemaLoader
+    import spark.implicits._
+    object Plans extends AdaptiveSparkPlanHelper {
+      def shuffles(p: SparkPlan): Int = collect(p) { case e: ShuffleExchangeExec => e }.size
+    }
+    val tag = "graft.spec.loader"
+    // (action, table, shuffles) of every loader query, in arrival order
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]()
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        // a JDBC pass's own output is the deserialized row object; its
+        // leaf, the merge checkpoint, names the columns
+        val cols = (qe.analyzed.output ++ qe.analyzed.collectLeaves().flatMap(_.output))
+          .map(_.name.toLowerCase).toSet
+        if (cols.contains("_seg"))
+          actions.add((f, if (cols.contains("uk")) "B" else "A",
+            Plans.shuffles(qe.executedPlan)))
+        ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(tag)).foreach(jobs.add)
+    }
+    // the job group is a local property the loader's worker pool carries;
+    // the listener bus delivers in order, so once the marker job is seen
+    // every job of the apply has been counted
+    def jobsOf(run: => Unit): Int = {
+      jobs.clear()
+      spark.sparkContext.setJobGroup(s"$tag.apply", "loader apply")
+      try run finally spark.sparkContext.clearJobGroup()
+      spark.sparkContext.setJobGroup(s"$tag.marker", "marker")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains(s"$tag.marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains(s"$tag.marker"), "the listener bus never delivered the marker job")
+      jobs.asScala.count(_ == s"$tag.apply")
+    }
+    def scan(df: org.apache.spark.sql.DataFrame, name: String) = {
+      val p = graft.util.Scratch.dir(s"graft_loader_jobs_$name") + "/f"
+      df.repartition(2).write.parquet(p)
+      spark.read.parquet(p)
+    }
+    val addA = "ALTER TABLE A ADD COLUMN EXTRA BIGINT"
+    val addB = "ALTER TABLE B ADD COLUMN NOTE VARCHAR(16)"
+    val (b1, b2) = (1150L, 1350L)
+    // per table: 500 rows at distinct ts over 350 keys; every fifth a
+    // delete; a DML row at each barrier's ts belongs before the barrier
+    def rowsOf(off: Long) = (1001L to 1500L).map { ts =>
+      val pk = (ts * 7 + off) % 350 + 1
+      (ts, pk, if (ts % 5 == 0) "D" else if (pk <= 300) "U" else "I")
+    }
+    // the model: per segment, the last op per key wins; a segment's
+    // upserts bind the columns the table has at that point
+    def model(rows: Seq[(Long, Long, String)], widenAt: Long): Map[Long, (Long, Boolean)] = {
+      val base = (1L to 300L).map(pk => pk -> ((pk, false))).toMap
+      rows.sortBy(_._1).foldLeft(base) { case (st, (ts, pk, op)) =>
+        if (op == "D") st - pk else st + (pk -> ((ts, ts > widenAt)))
+      }
+    }
+    val rowsA = rowsOf(0L); val rowsB = rowsOf(11L)
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(qeListener)
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqe0 = spark.conf.get(aqeKey)
+    try Seq(false, true).foreach { aqe =>
+      spark.conf.set(aqeKey, aqe.toString)
+      val url = freshDerbyUrl(s"loader_jobs_$aqe")
+      val loader = new JdbcSchemaLoader(url, applyPartitions = 4)
+      loader.createTable("CREATE TABLE A (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, VAL DOUBLE)")
+      loader.createTable("""CREATE TABLE B (PK BIGINT PRIMARY KEY, UK BIGINT NOT NULL,
+        | COMMIT_TS BIGINT, VAL DOUBLE, CONSTRAINT B_UK UNIQUE (UK))""".stripMargin)
+      val seed = (1L to 300L).map(pk => (pk, pk, "I", pk.toDouble))
+      assert(loader.applyBatch(Map(
+        "A" -> seed.toDF("pk", "commit_ts", "op", "val"),
+        "B" -> seed.toDF("pk", "commit_ts", "op", "val")
+          .withColumn("uk", col("pk") + 10000L)), 0L))
+      val frameA = scan((rowsA.map { case (ts, pk, op) =>
+          (ts, pk, op, ts.toDouble, ts, null: String) } :+
+          ((b1, 0L, "DDL", 0.0, 0L, addA)))
+        .toDF("commit_ts", "pk", "op", "val", "extra", "ddl_sql"), s"a_$aqe")
+      val frameB = scan((rowsB.map { case (ts, pk, op) =>
+          (ts, pk, pk + 10000L, op, ts.toDouble, s"n$ts", null: String) } :+
+          ((b2, 0L, 0L, "DDL", 0.0, "", addB)))
+        .toDF("commit_ts", "pk", "uk", "op", "val", "note", "ddl_sql"), s"b_$aqe")
+      actions.clear()
+      val n = jobsOf(assert(loader.applyBatch(Map("A" -> frameA, "B" -> frameB), 1L)))
+      val deadline = System.nanoTime() + 30000000000L
+      while (actions.size < 11 && System.nanoTime() < deadline) Thread.sleep(10)
+      val acts = actions.asScala.toSeq
+      val merges = acts.filter(_._1 == "localCheckpoint")
+      val passes = acts.filter(_._1 == "foreachPartition").groupBy(_._2).view
+        .mapValues(_.size).toMap
+      val inserts = {
+        val c = java.sql.DriverManager.getConnection(url)
+        try {
+          val rs = c.createStatement().executeQuery(
+            "SELECT SQL_TEXT FROM SYSCS_DIAG.STATEMENT_CACHE")
+          val out = scala.collection.mutable.ArrayBuffer[String]()
+          while (rs.next()) out += rs.getString(1)
+          out.filter(s => s.startsWith("INSERT INTO A ") || s.startsWith("INSERT INTO B ")).toSeq
+        } finally c.close()
+      }
+      val insertTexts = inserts.groupBy(s => s.substring(0, s.indexOf(") VALUES")))
+        .view.mapValues(_.size).toMap
+      info(s"aqe=$aqe: $n jobs; merge shuffles ${merges.map(m => m._2 -> m._3)}; " +
+        s"JDBC passes $passes; INSERT texts per (table, column list) ${insertTexts.values}")
+      // the end state
+      val a = loader.readTable(spark, "A").collect().map(r =>
+        r.getLong(0) -> ((r.getLong(1), !r.isNullAt(3)))).toMap
+      assert(a == model(rowsA, b1))
+      val bRows = loader.readTable(spark, "B").collect()
+      val b = bRows.map(r => r.getLong(0) -> ((r.getLong(2), !r.isNullAt(4)))).toMap
+      assert(b == model(rowsB, b2))
+      assert(bRows.forall(r => r.getLong(1) == r.getLong(0) + 10000L))
+      // the work
+      assert(n <= (if (aqe) 14 else 12), s"aqe=$aqe: the batch ran $n jobs")
+      assert(merges.map(_._2).sorted == Seq("A", "B") && merges.forall(_._3 == 1),
+        s"aqe=$aqe: merge plans (table, shuffles) ${merges.map(m => m._2 -> m._3)}")
+      assert(passes == Map("A" -> 3, "B" -> 6), s"aqe=$aqe: JDBC passes $passes")
+      assert(insertTexts.size == 4 && insertTexts.values.forall(_ == 1),
+        s"aqe=$aqe: INSERT texts in the statement cache: $inserts")
+    } finally {
+      spark.conf.set(aqeKey, aqe0)
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(qeListener)
+    }
+  }
+
+  test("schema loader: a secondary key a delete frees is reusable in the same segment, whichever partitions hold the two rows") {
+    import graft.sinks.JdbcSchemaLoader
+    import spark.implicits._
+    val parts = 4
+    // the merge hash-partitions on the primary key: pick a pk whose
+    // partition differs from pk 1's
+    def partOf(pk: Long): Int = Seq(pk).toDF("pk")
+      .select(pmod(hash(col("pk")), lit(parts))).head().getInt(0)
+    val p2 = (2L to 64L).find(partOf(_) != partOf(1L)).get
+    val loader = new JdbcSchemaLoader(freshDerbyUrl("uk_reuse"), applyPartitions = parts)
+    loader.createTable("""CREATE TABLE B (PK BIGINT PRIMARY KEY, UK BIGINT NOT NULL,
+      | COMMIT_TS BIGINT, VAL DOUBLE, CONSTRAINT B_UK UNIQUE (UK))""".stripMargin)
+    assert(loader.applyBatch(Map("B" -> Seq((1L, 7L, 1L, "I", 1.0))
+      .toDF("pk", "uk", "commit_ts", "op", "val")), 0L))
+    // pk 1 releases uk 7 and pk p2 takes it, in one segment
+    val b1 = Seq((1L, 7L, 10L, "D", 1.0), (p2, 7L, 11L, "I", 2.0))
+      .toDF("pk", "uk", "commit_ts", "op", "val")
+    assert(loader.applyBatch(Map("B" -> b1), 1L))
+    val state = loader.readTable(spark, "B").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(state.toSeq == Seq((p2, 7L)))
+    assert(!loader.applyBatch(Map("B" -> b1), 1L), "a replayed batch id applies nothing")
+  }
+
+  test("schema loader: a barrier that changes a table's key re-merges its later segments under the new key") {
+    import graft.sinks.JdbcSchemaLoader
+    import spark.implicits._
+    val loader = new JdbcSchemaLoader(freshDerbyUrl("key_change"), applyPartitions = 4)
+    loader.createTable("CREATE TABLE K (A BIGINT NOT NULL, B VARCHAR(8), COMMIT_TS BIGINT)")
+    // before the barrier the table is keyless (all-columns key), after it
+    // keyed on A: two images of A = 1 after the barrier fold into one
+    val b0 = Seq((1L, "x", 1L, "I", null: String),
+        (0L, "", 5L, "DDL", "ALTER TABLE K ADD CONSTRAINT K_PK PRIMARY KEY (A)"),
+        (1L, "y", 6L, "U", null: String), (1L, "z", 7L, "U", null: String),
+        (2L, "w", 8L, "I", null: String))
+      .toDF("a", "b", "commit_ts", "op", "ddl_sql")
+    assert(loader.applyBatch(Map("K" -> b0), 0L))
+    val state = loader.readTable(spark, "K").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sorted
+    assert(state.toSeq == Seq((1L, "z"), (2L, "w")))
+  }
+
+  test("schema loader: a barrier sees every row committed before it, including a key's earlier image") {
+    // the end state alone cannot tell a per-segment merge from one across
+    // segments (the last image replaces the row either way); a barrier
+    // that reads the data can. Before the barrier pk 1 holds VAL 6 and
+    // pk 2 VAL 5, so the unique constraint holds; a merge that let pk 1's
+    // post-barrier image stand in for its pre-barrier one would leave
+    // VAL 5 twice and the ALTER would fail
+    import graft.sinks.JdbcSchemaLoader
+    import spark.implicits._
+    val loader = new JdbcSchemaLoader(freshDerbyUrl("barrier_view"), applyPartitions = 4)
+    loader.createTable("CREATE TABLE V (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, VAL BIGINT)")
+    assert(loader.applyBatch(Map("V" -> Seq((1L, 1L, "I", 5L, null: String))
+      .toDF("pk", "commit_ts", "op", "val", "ddl_sql")), 0L))
+    val b1 = Seq((1L, 10L, "U", 6L, null: String), (2L, 11L, "I", 5L, null: String),
+        (0L, 12L, "DDL", 0L, "ALTER TABLE V ADD CONSTRAINT V_VAL UNIQUE (VAL)"),
+        (1L, 13L, "U", 7L, null: String))
+      .toDF("pk", "commit_ts", "op", "val", "ddl_sql")
+    assert(loader.applyBatch(Map("V" -> b1), 1L))
+    val state = loader.readTable(spark, "V").collect()
+      .map(r => (r.getLong(0), r.getLong(2))).sorted
+    assert(state.toSeq == Seq((1L, 7L), (2L, 5L)))
+  }
+
+  test("schema loader: a CREATE TABLE barrier and that table's rows after it apply in one batch") {
+    import graft.sinks.JdbcSchemaLoader
+    import spark.implicits._
+    val loader = new JdbcSchemaLoader(freshDerbyUrl("create_then_dml"), applyPartitions = 4)
+    // N is not in the catalog before the barrier; its rows all come after it
+    val b0 = Seq(
+        (0L, 5L, "DDL", 0.0, "CREATE TABLE N (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, VAL DOUBLE)"),
+        (1L, 6L, "I", 1.0, null: String), (2L, 7L, "I", 2.0, null: String),
+        (1L, 8L, "U", 3.0, null: String))
+      .toDF("pk", "commit_ts", "op", "val", "ddl_sql")
+    assert(loader.applyBatch(Map("N" -> b0), 0L))
+    val state = loader.readTable(spark, "N").collect()
+      .map(r => (r.getLong(0), r.getDouble(2))).sorted
+    assert(state.toSeq == Seq((1L, 3.0), (2L, 2.0)))
+    assert(!loader.applyBatch(Map("N" -> b0), 0L), "a replayed batch id applies nothing")
+    // rows of a table no barrier creates still fail the batch
+    val orphan = Seq((1L, 9L, "I", 1.0)).toDF("pk", "commit_ts", "op", "val")
+    val e = intercept[IllegalArgumentException](loader.applyBatch(Map("M" -> orphan), 1L))
+    assert(e.getMessage.contains("table M not found in catalog"))
+  }
+
+  test("schema loader: rows ahead of a DROP or RENAME TABLE barrier apply, and the old name is not read after it") {
+    import graft.sinks.JdbcSchemaLoader
+    import spark.implicits._
+    val url = freshDerbyUrl("dml_then_drop")
+    val loader = new JdbcSchemaLoader(url, applyPartitions = 4)
+    loader.createTable("CREATE TABLE D (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, VAL DOUBLE)")
+    loader.createTable("CREATE TABLE R (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, VAL DOUBLE)")
+    // D: a row, then DROP; R: a row, then RENAME to R2, then a row under
+    // the new name (R2 is not in the catalog before the rename)
+    val drop = (0L, 11L, "DDL", 0.0, "DROP TABLE D")
+    val rename = (0L, 12L, "DDL", 0.0, "RENAME TABLE R TO R2")
+    def frame(rows: (Long, Long, String, Double, String)*) =
+      rows.toDF("pk", "commit_ts", "op", "val", "ddl_sql")
+    val b0 = Map(
+      "D" -> frame((1L, 10L, "I", 1.0, null), drop),
+      "R" -> frame((1L, 10L, "I", 1.0, null), (2L, 11L, "I", 2.0, null), rename),
+      "R2" -> frame(rename, (2L, 13L, "U", 5.0, null), (3L, 14L, "I", 3.0, null)))
+    assert(loader.applyBatch(b0, 0L))
+    val c = java.sql.DriverManager.getConnection(url)
+    val tables = try {
+      val rs = c.getMetaData.getTables(null, null, null, Array("TABLE"))
+      val out = scala.collection.mutable.ArrayBuffer[String]()
+      while (rs.next()) out += rs.getString("TABLE_NAME")
+      out.toSet
+    } finally c.close()
+    assert(!tables("D") && !tables("R") && tables("R2"), s"tables: $tables")
+    val state = loader.readTable(spark, "R2").collect()
+      .map(r => (r.getLong(0), r.getDouble(2))).sorted
+    assert(state.toSeq == Seq((1L, 1.0), (2L, 5.0), (3L, 3.0)))
+    assert(!loader.applyBatch(b0, 0L), "a replayed batch id applies nothing")
+  }
+
   test("JDBC sink streaming (K1): restart from checkpoint applies only new files, exactly once") {
     import graft.sinks.JdbcUpsertSink
     import spark.implicits._
