@@ -197,20 +197,21 @@ object DrainerPipeline {
     * pre-barrier rows insert without it — the reference loader's
     * column-refresh-on-DDL behavior (pkg/loader/load.go:845-866). Decoded
     * string values are cast back to the wire column types, so the loader
-    * binds typed objects. */
+    * binds typed objects. The loader applies on its compacting (merge)
+    * path. The per-pump watermarks carry no delay: no stateful operator on
+    * this path reads them, and the merge frontier is their minimum. */
   def streamingReplicated(spark: SparkSession, pumpDirs: Seq[String],
       tracker: SchemaTracker, loader: JdbcSchemaLoader, outDir: String,
       checkpoint: String, schemaName: String, tableOf: Column,
       tableMap: String => String = identity,
       ddlToTarget: (String, String, String, String) => Option[String] =
-        (_, _, _, _) => None,
-      delay: String = "0 seconds", merge: Boolean = true): StreamingQuery =
+        (_, _, _, _) => None): StreamingQuery =
     CdcStream.ddlDrivenDecodeTables(
-      CdcStream.mergedWireStream(spark, pumpDirs, delay),
+      CdcStream.mergedWireStream(spark, pumpDirs),
       tracker, outDir, checkpoint, schemaName, tableOf,
       emit = Some { b =>
         replicateEmit(spark, loader, (s, t) => tableMap(t),
-          (_, t, action, c, arg) => ddlToTarget(t, action, c, arg), merge)(
+          (_, t, action, c, arg) => ddlToTarget(t, action, c, arg))(
           (b._1, b._2.map { case (t, v) => (schemaName, t) -> v }, b._3))
       })
 
@@ -229,12 +230,11 @@ object DrainerPipeline {
       checkpoint: String, schemas: Seq[String], schemaOf: Column,
       tableOf: Column, tableMap: (String, String) => String,
       ddlToTarget: (String, String, String, String, String) => Option[String] =
-        (_, _, _, _, _) => None,
-      delay: String = "0 seconds", merge: Boolean = true): StreamingQuery =
+        (_, _, _, _, _) => None): StreamingQuery =
     CdcStream.ddlDrivenDecodeSchemas(
-      CdcStream.mergedWireStream(spark, pumpDirs, delay),
+      CdcStream.mergedWireStream(spark, pumpDirs),
       tracker, outDir, checkpoint, schemas, schemaOf, tableOf,
-      emit = Some(replicateEmit(spark, loader, tableMap, ddlToTarget, merge)))
+      emit = Some(replicateEmit(spark, loader, tableMap, ddlToTarget)))
 
   /** The shared per-batch apply of both replication loops: cast each
     * decoded (schema, table) frame back to typed columns, route it through
@@ -242,8 +242,8 @@ object DrainerPipeline {
     * loader batch (or the DDL-only direct path) to the JDBC loader. */
   private def replicateEmit(spark: SparkSession, loader: JdbcSchemaLoader,
       tableMap: (String, String) => String,
-      ddlToTarget: (String, String, String, String, String) => Option[String],
-      merge: Boolean): CdcStream.DecodedBatchMulti => Unit = {
+      ddlToTarget: (String, String, String, String, String) => Option[String]
+      ): CdcStream.DecodedBatchMulti => Unit = {
     case (batchId, frames, ddls) =>
       import spark.implicits._
       val slices = frames.toSeq.sortBy(_._1).map { case ((s, t), (defs, df)) =>
@@ -305,7 +305,7 @@ object DrainerPipeline {
             (t0 -> df0.withColumn("ddl_sql", lit(null).cast("string"))
               .unionByName(ddlDf, allowMissingColumns = true)) +: slices.tail
         }
-        loader.applyBatch(withDdl.toMap, batchId, merge = merge): Unit
+        loader.applyBatch(withDdl.toMap, batchId): Unit
       } else
         // a batch carrying only DDL has no DML to order against —
         // execute directly under the same logged replay guard

@@ -183,7 +183,7 @@ private[sinks] object JdbcMeta {
   * table with a secondary unique key) of JDBC round-trips proportional to
   * the slice — O(batch), never O(table). The key-DELETE and the single-row
   * INSERT are prepared once per writer partition and run as JDBC batches
-  * of `batchSize`; against MySQL, `rewriteBatchedStatements=true` in the
+  * of 128 rows; against MySQL, `rewriteBatchedStatements=true` in the
   * URL makes each such batch one multi-VALUES statement. Tables apply
   * independently; on a cluster each table's 16 writer partitions hold
   * their own connections.
@@ -389,10 +389,13 @@ object JdbcSchemaLoader {
        |FROM ty WHERE rn = 1 AND op <> 'D'""".stripMargin
 }
 
-class JdbcSchemaLoader(url: String, clusterId: Long = 1L, batchSize: Int = 128,
+class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
     applyPartitions: Int = 16) extends Serializable {
 
   import JdbcMeta.Checkpoint
+
+  // rows (or statements) per JDBC batch on every write path
+  private val batchSize = 128
 
   private def withConn[A](f: Connection => A): A = {
     val c = DriverManager.getConnection(url)

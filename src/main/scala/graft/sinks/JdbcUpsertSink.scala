@@ -76,15 +76,17 @@ object JdbcUpsertSink {
        |SELECT pk, commit_ts, value FROM r WHERE rn = 1 AND op <> 'D'""".stripMargin
 }
 
-class JdbcUpsertSink(url: String, stateTable: String = "GRAFT_STATE",
-    batchSize: Int = 128, singleExec: Boolean = false, clusterId: Long = 1L,
+class JdbcUpsertSink(url: String, singleExec: Boolean = false,
+    clusterId: Long = 1L,
     // ref: executor.go:39 defaultWorkerCount = 16 parallel connections
     applyPartitions: Int = 16) extends Serializable {
 
   import JdbcMeta.Checkpoint
 
+  private val stateTable = "GRAFT_STATE"
+
   private val loader =
-    new JdbcSchemaLoader(url, clusterId, batchSize, applyPartitions)
+    new JdbcSchemaLoader(url, clusterId, applyPartitions = applyPartitions)
 
   /** Bootstrap state + checkpoint + ddl-log tables (ref: the loader creates
     * nothing, but the checkpoint package creates its own schema/table on

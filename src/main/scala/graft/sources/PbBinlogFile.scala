@@ -355,6 +355,13 @@ object PbBinlogFile {
 
   // ---- the sink (K4 real shape) ----
 
+  /** Optional envelope columns (typed M9 domain + nullable value): absent
+    * columns are added as typed NULLs so a 7-column envelope writes
+    * unchanged while an enriched one carries its extra fields. */
+  private val optionalCols =
+    Seq("dec38" -> "string", "udec" -> "string", "bits" -> "bigint",
+      "enum_ord" -> "int", "ddl_sql" -> "string")
+
   /** Write a change-envelope DataFrame as a directory of pb binlog files:
     * range-partitioned and sorted by commit_ts so each file covers a
     * contiguous ts interval, named by its first AND last commit ts (the
@@ -365,14 +372,14 @@ object PbBinlogFile {
     * side must hold in memory whole. Rotated segments keep the naming
     * invariant: each carries ITS OWN ts interval, so ts-range file pruning
     * sees every segment independently. `dir` must be a shared filesystem
-    * path (local here; HDFS/object-store URI on a cluster). */
-  /** Optional envelope columns (typed M9 domain + nullable value): absent
-    * columns are added as typed NULLs so a 7-column envelope writes
-    * unchanged while an enriched one carries its extra fields. */
-  private val optionalCols =
-    Seq("dec38" -> "string", "udec" -> "string", "bits" -> "bigint",
-      "enum_ord" -> "int", "ddl_sql" -> "string")
-
+    * path (local here; HDFS/object-store URI on a cluster).
+    *
+    * A write into an existing wire directory appends: it only `mkdirs` and
+    * names segments by (pid, seg, tsRange), never clobbering earlier
+    * intervals (ref: pump's binlogger appends to the open dir,
+    * pkg/binlogfile/binlogger.go:241-268). A later batch covering the SAME
+    * interval collides on the name: identical bytes (a retry) are dropped
+    * idempotently, different bytes throw — never silent loss. */
   def write(changes: DataFrame, dir: String, nFiles: Int = 4,
       maxBytesPerFile: Long = 512L * 1024 * 1024): Unit = {
     // ship the DRIVER's Hadoop conf to the writing tasks: executors must
@@ -515,18 +522,6 @@ object PbBinlogFile {
     }
   }
 
-  /** Append a later batch of changes to an existing wire directory.
-    * [[write]] already has append semantics — it only `mkdirs` and names
-    * segments by (pid, seg, tsRange), never clobbering earlier intervals —
-    * this name states the contract at call sites that stage a multi-batch
-    * wire (ref: pump's binlogger appends to the open dir,
-    * pkg/binlogfile/binlogger.go:241-268). A later batch covering the SAME
-    * interval collides on the name: identical bytes (a retry) are dropped
-    * idempotently, different bytes throw — never silent loss. */
-  def append(changes: DataFrame, dir: String, nFiles: Int = 4,
-      maxBytesPerFile: Long = 512L * 1024 * 1024): Unit =
-    write(changes, dir, nFiles, maxBytesPerFile)
-
   /** K4 retention: reclaim every segment whose ENTIRE commit-ts range lies
     * at or below `safeTs` (ref: pkg/binlogfile/binlogger.go:354-380 GCByPos
     * removes all files before the position and ALWAYS keeps the latest;
@@ -611,19 +606,14 @@ object PbBinlogFile {
   /** File selection for a commit-ts range scan — the reference's purpose
     * (reparo/file.go:47-109: select files before decoding a byte), made
     * EXACT: a segment name carries both its first and last commit ts, so a
-    * segment is selected iff its interval overlaps `[startTs, endTs]`
-    * (endTs 0 = open). The reference's keep-the-last-file-before-start
-    * heuristic exists because its names carry only the first ts of a
-    * single sequential writer; under this parallel writer that heuristic
-    * provably DROPS files once a directory holds more than one write
-    * invocation (name order is pid-major, not ts-major) — interval
-    * overlap is layout-independent. Output ordered by (firstTs, name) for
-    * a deterministic scan order. */
-  private[graft] def selectFiles(names: Seq[String], startTs: Long,
-      endTs: Long): Seq[String] =
-    selectFilesBounded(names, startTs, if (endTs == 0L) Long.MaxValue else endTs)
-
-  /** Inclusive-bounds variant with NO sentinel: `Long.MinValue`/`MaxValue`
+    * segment is selected iff its interval overlaps `[lo, hi]`. The
+    * reference's keep-the-last-file-before-start heuristic exists because
+    * its names carry only the first ts of a single sequential writer;
+    * under this parallel writer that heuristic provably DROPS files once a
+    * directory holds more than one write invocation (name order is
+    * pid-major, not ts-major) — interval overlap is layout-independent.
+    * Output ordered by (firstTs, name) for a deterministic scan order.
+    * Both bounds are inclusive with NO sentinel: `Long.MinValue`/`MaxValue`
     * are "unbounded" by arithmetic alone, so degenerate pushed bounds
     * (`commit_ts <= 0`, bounds at the Long extremes) still prune instead of
     * silently falling back to a full-directory scan. */

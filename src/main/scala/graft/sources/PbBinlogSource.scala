@@ -30,7 +30,7 @@ import graft.util.SerializableHadoopConf
   *  - **commit-ts pushdown**: range predicates on `commit_ts` reach
   *    [[PbBinlogScanBuilder.pushFilters]] and become SEGMENT-FILE pruning
   *    via the reference's file-selection rule
-  *    ([[PbBinlogFile.selectFiles]]; ref: reparo/file.go:47-109) — pruning
+  *    ([[PbBinlogFile.selectFilesBounded]]; ref: reparo/file.go:47-109) — pruning
   *    composes with predicates written ANYWHERE above the scan, not only
   *    with `read()`'s own arguments;
   *  - **column pruning**: the reader materializes only the requested

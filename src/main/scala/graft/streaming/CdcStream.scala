@@ -232,9 +232,12 @@ object CdcStream {
     else splitTopLevel(arg, _ == ',', angles = false)
       .map(v => unquoteLiteral(v.trim))
 
-  /** Replay one logged DDL into the tracker — the single dispatch both the
-    * live commit path and [[recoverDecodeTracker]] use, so a restart can
-    * never interpret a log record differently than the run that wrote it. */
+  /** Apply one logged DDL record to a tracker — the ONE interpreter of the
+    * log. The decode walk applies each record to its fork of the tracker
+    * as it logs it, the commit replays the batch's records into the live
+    * tracker, and [[recoverDecodeTracker]] replays the durable log into a
+    * fresh one, so the in-batch view, the live catalog and a restart can
+    * never interpret a record differently. */
   private def applyLogged(tracker: SchemaTracker, schema: String, table: String,
       action: String, column: String, arg: String, version: Long): Unit =
     action match {
@@ -330,10 +333,12 @@ object CdcStream {
     * filter-then-load contract — routing upstream decides what reaches the
     * decode.
     *
-    * Replay safety: the batch decodes against a LOCAL view of the catalog;
-    * the live tracker advances only AFTER the batch's output and its DDL
-    * log have been written, so a batch that fails mid-write replays from
-    * an unchanged tracker and reproduces the same bytes. Output overwrites
+    * Replay safety: the batch decodes against a fork of the tracker
+    * ([[SchemaTracker.fork]]), to which the walk applies each DDL record
+    * through the same interpreter as the commit and the restart. The live
+    * tracker advances only AFTER the batch's output and its DDL log have
+    * been written, so a batch that fails mid-write replays from an
+    * unchanged tracker and reproduces the same bytes. Output overwrites
     * its batch dirs (idempotent per batch id, the DrainerPipeline
     * outbinlog pattern); the applied DDLs of every table overwrite
     * `outDir/ddl/batch=<id>` — one shared action-tagged log ordered by
@@ -378,9 +383,10 @@ object CdcStream {
       layout = (id, s, t) => s"$outDir/data/batch=$id/schema=$s/table=$t",
       emit, fillOriginDefaults)
 
-  /** Test hook: per-output-dir size of the last batch's driver-side
-    * catalog view — the O(touched ∪ addressed) discipline is asserted by
-    * spec against a wide registration (never consulted by product code). */
+  /** Test hook: per-output-dir count of the tables the last batch seeded
+    * its driver-side slice state with — the O(touched ∪ addressed)
+    * discipline is asserted by spec against a wide registration (never
+    * consulted by product code). */
   private[graft] val lastDriverCatalogSizes =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
@@ -600,10 +606,11 @@ object CdcStream {
           // ONE gather job per batch, grouped by (is_ddl, schema, table):
           // result rows = the TOUCHED table set plus the DDL frames'
           // routing groups — metadata-sized. Every piece of per-trigger
-          // driver state below (catalog view, slice seeds, frontier
-          // check) builds from (touched ∪ DDL-addressed), NEVER from the
-          // full registration: at 100k tracked tables and sparse traffic
-          // that is a handful of map entries per trigger, not 100k.
+          // driver state below (slice seeds, frontier check, tail cuts)
+          // builds from (touched ∪ DDL-addressed), NEVER from the full
+          // registration: at 100k tracked tables and sparse traffic that
+          // is a handful of map entries per trigger, not 100k (the catalog
+          // view itself is an O(1) fork).
           val gathered = batch.groupBy(
               (col("op") === "DDL").as("is_ddl"),
               sOf.as("s"), tOf.as("t"))
@@ -636,8 +643,8 @@ object CdcStream {
               (ts, stmt, if (fold) parts.map(foldWireDdl) else parts)
             }
           // every (schema, table) a parsed statement may consult or
-          // mutate — membership in the local catalog view drives the
-          // dispatch, so the view must cover these keys too
+          // mutate — the walk's per-batch state (slices, frontier) covers
+          // exactly these keys, never the whole registration
           def keysOf(d: WireDdl): Seq[(String, String)] = d match {
             case c: ColumnDdl                  => Seq((c.schema, c.table))
             case TruncateDdl(s, t)             => Seq((s, t))
@@ -653,24 +660,18 @@ object CdcStream {
           }
           val subsetKeys: Seq[(String, String)] =
             (touched ++ parsedDdls.flatMap(_._3).flatMap(keysOf)).toSeq.sorted
-          // the LOCAL catalog view: the decode transforms this copy, and
-          // the live tracker advances only after the batch's output and
-          // DDL log are durable — a crash mid-write replays against an
-          // unchanged tracker and reproduces the same bytes. An absent key
-          // is simply foreign traffic whose frames drop.
-          var catalog: Map[(String, String), tracker.TableInfo] =
-            subsetKeys.flatMap(k =>
-              tracker.current(k._1, k._2).map(k -> _)).toMap
-          lastDriverCatalogSizes.put(outDir, Integer.valueOf(catalog.size))
-          // drop-time shapes of tables dropped IN THIS BATCH — a same-batch
-          // FLASHBACK reads these (the live tracker's graveyard only fills
-          // when the batch commits); cross-batch recovery consults
-          // tracker.droppedShape, and consumedGrave remembers which of
-          // THOSE this batch already recovered (the tracker's graveyard
-          // only shrinks at commit, so without it a duplicated FLASHBACK
-          // would pass the guard twice and wedge the commit walk)
-          var localGrave = Map.empty[(String, String), Vector[String]]
-          var consumedGrave = Set.empty[(String, String)]
+          // the batch's catalog view: a fork of the tracker that the walk
+          // advances record by record through applyLogged, the commit's
+          // and the restart's own interpreter. The live tracker advances
+          // only after the batch's output and DDL log are durable — a
+          // crash mid-write replays against an unchanged tracker and
+          // reproduces the same bytes. A key the view does not hold is
+          // foreign traffic whose frames drop.
+          val view = tracker.fork()
+          def live(k: (String, String)) = view.current(k._1, k._2)
+          def isLive(k: (String, String)) = live(k).isDefined
+          val seeded = subsetKeys.filter(isLive)
+          lastDriverCatalogSizes.put(outDir, Integer.valueOf(seeded.size))
           // decode-time T7 fill state (only when opted in): columns ADDED
           // IN THIS BATCH — only those can leave missing-column NULLs in
           // this batch's union (a column added in an earlier batch exists
@@ -692,7 +693,7 @@ object CdcStream {
           // precheck fires (never, under the ordered merge), keeping the
           // normal path at one gather job and O(touched) driver state.
           val suspect = touchedMin.filter { case (k, minTs) =>
-            catalog.get(k).exists(i => i.version > 0 && minTs <= i.version)
+            live(k).exists(i => i.version > 0 && minTs <= i.version)
           }
           if (suspect.nonEmpty) {
             // one map-literal lookup, not an OR-chain over the suspect set
@@ -701,7 +702,7 @@ object CdcStream {
             // [A-Za-z0-9_] identifiers, so the key is collision-free
             val keyOf = concat(sOf, lit(" "), tOf)
             val frontiers = suspect.keys.map(k =>
-              (k._1 + " " + k._2) -> catalog(k).version).toMap
+              (k._1 + " " + k._2) -> live(k).get.version).toMap
             val below = batch.filter(col("op") =!= "DDL" &&
               col("commit_ts") <= coalesce(
                 element_at(typedLit(frontiers), keyOf), lit(Long.MinValue)))
@@ -710,13 +711,20 @@ object CdcStream {
           }
 
           val applied = scala.collection.mutable.ArrayBuffer.empty[AppliedDdl]
-          // seeded from the subset view, not the registration — see the
-          // gather note above
+          // log one record and apply it to the view at once: every later
+          // statement of the batch sees exactly what the commit will see
+          def log(ts: Long, s: String, t: String, action: String,
+              column: String, arg: String): Unit = {
+            applied += ((ts, s, t, action, column, arg))
+            applyLogged(view, s, t, action, column, arg, ts)
+          }
+          // seeded from the subset, not the registration — see the gather
+          // note above
           val slicesOf = scala.collection.mutable.LinkedHashMap(
-            catalog.keys.toSeq.sorted.map(k =>
+            seeded.map(k =>
               k -> scala.collection.mutable.ArrayBuffer.empty[DataFrame]): _*)
           val lowerOf = scala.collection.mutable.Map(
-            catalog.keys.toSeq.map(_ -> Long.MinValue): _*)
+            seeded.map(_ -> Long.MinValue): _*)
           // every column def a table's slices decoded with THIS batch, in
           // first-seen order with the latest type winning — `emit` casts
           // by these, so pre-barrier values of a column dropped or renamed
@@ -725,13 +733,13 @@ object CdcStream {
           val defsOf = scala.collection.mutable.Map.empty[(String, String),
             scala.collection.mutable.LinkedHashMap[String, String]]
           // one decoded slice of table `k`: its frames in (lower, upper],
-          // decoded DISTRIBUTED with the from_json schema the local view
-          // holds — captured at plan-construction time. A table whose LAST
+          // decoded DISTRIBUTED with the from_json schema the view holds —
+          // captured at plan-construction time. A table whose LAST
           // column was dropped decodes to the bare (commit_ts, pk,
           // schema_version) envelope (fromDDL("") would throw). A table
           // with no DML rows this batch has nothing to decode — skip the
           // whole job.
-          def decodeSlice(k: (String, String), info: tracker.TableInfo,
+          def decodeSlice(k: (String, String), info: SchemaTracker.TableInfo,
               upper: Long): Unit = {
             if (!touched.contains(k)) return
             // defs record for EVERY cut, including empty ones below: a
@@ -806,7 +814,8 @@ object CdcStream {
             // types live in Spark's type domain) must fail AT the
             // statement — durably logging a broken def would instead kill
             // the first decode of every restart replay
-            def validateDecodable(info: tracker.TableInfo): Unit =
+            def validateDecodable(k: (String, String)): Unit = {
+              val info = live(k).get
               if (info.columns.nonEmpty)
                 try { StructType.fromDDL(info.columns.mkString(", ")); () }
                 catch {
@@ -817,27 +826,24 @@ object CdcStream {
                         s"(${info.columns.mkString(", ")}) rejected by " +
                         s"Spark's DDL parser (${e.getMessage})")
                 }
-            def shapeDdl(k: (String, String), action: String, column: String,
-                arg: String)(f: tracker.TableInfo => tracker.TableInfo): Unit = {
-              decodeSlice(k, catalog(k), ts)
-              val next = f(catalog(k))
-              validateDecodable(next)
-              catalog += k -> next
-              applied += ((ts, k._1, k._2, action, column, arg))
+            }
+            def newSlices(k: (String, String)): Unit = {
+              slicesOf.getOrElseUpdate(k,
+                scala.collection.mutable.ArrayBuffer.empty[DataFrame])
+              lowerOf(k) = ts
             }
             // one statement may carry several actions (multi-table
             // RENAME/DROP lists); each part dispatches independently
             parsedParts.foreach {
               case ColumnDdl(s, t, action, c, arg, dflt, dict, native)
-                  if catalog.contains((s, t)) =>
-                val prior = catalog((s, t))
-                shapeDdl((s, t), action, c, arg)(i => action match {
-                  case "modify" => tracker.retyped(i, c, s"$c $arg", ts)
-                  case "add"    => tracker.added(i, s"$c $arg", ts)
-                  case "drop"   => tracker.dropped(i, c, ts)
-                  case "rename" => tracker.renamed(i, c, arg, ts)
-                  case "change" => tracker.changed(i, c, arg, ts)
-                })
+                  if isLive((s, t)) =>
+                val prior = live((s, t)).get
+                decodeSlice((s, t), prior, ts)
+                // the tracker's dropColumn is lenient; a wire DROP COLUMN
+                // of a column the table lacks fails here, at the statement
+                if (action == "drop") view.dropped(prior, c, ts)
+                log(ts, s, t, action, c, arg)
+                validateDecodable((s, t))
                 // an ADD's stripped DEFAULT is the column's ORIGIN default
                 // (TiDB fills it for rows predating the column) — logged as
                 // its own record so the T7-fill metadata survives restart.
@@ -846,7 +852,7 @@ object CdcStream {
                 // upstream inserts, which arrive with explicit values) and
                 // is discarded like the admin SET DEFAULT form.
                 if (action == "add")
-                  dflt.foreach(d => applied += ((ts, s, t, "origin_default", c, d)))
+                  dflt.foreach(d => log(ts, s, t, "origin_default", c, d))
                 fillState.onColumnDdl((s, t), ts, action, c, arg, dflt, dict,
                   native)
                 // an ENUM/SET dictionary is metadata of the column's
@@ -857,21 +863,15 @@ object CdcStream {
                 if (action == "add" || action == "modify" || action == "change") {
                   val dictName =
                     if (action == "change") arg.split(" ", 2)(0) else c
-                  // the local view's dicts update WITH the record, so a
-                  // same-batch follow-up statement sees current metadata
-                  def putDict(d: Map[String, Vector[String]]): Unit =
-                    catalog += (s, t) -> catalog((s, t)).copy(dicts = d)
                   dict match {
                     case Some(vs) =>
-                      putDict(catalog((s, t)).dicts + (dictName -> vs))
-                      applied += ((ts, s, t, "dictionary", dictName, encodeDictArg(vs)))
+                      log(ts, s, t, "dictionary", dictName, encodeDictArg(vs))
                     case None if prior.dicts.contains(c) =>
-                      putDict(catalog((s, t)).dicts - dictName)
-                      applied += ((ts, s, t, "dictionary", dictName, ""))
+                      log(ts, s, t, "dictionary", dictName, "")
                     case None => ()
                   }
                 }
-              case TruncateDdl(s, t) if catalog.contains((s, t)) =>
+              case TruncateDdl(s, t) if isLive((s, t)) =>
                 // streamed F6: in-flight frames of the truncated table at
                 // or below the truncate commit ts DROP — they addressed
                 // the old incarnation the truncate erased (ref:
@@ -891,29 +891,23 @@ object CdcStream {
                 defsOf.remove((s, t))
                 lowerOf((s, t)) = ts
                 fillState.onTruncate((s, t)) // pre-truncate rows left the output
-                catalog += (s, t) -> catalog((s, t)).copy(version = ts)
-                applied += ((ts, s, t, "truncate", "", ""))
+                log(ts, s, t, "truncate", "", "")
               case CreateDdl(s, t, cols, _, dflts, dicts)
-                  if trackedSchemas(s) && !catalog.contains((s, t)) =>
+                  if trackedSchemas(s) && !isLive((s, t)) =>
                 // wire-registered table: decodes from its create ts forward
                 // (a frame of t below the create has no schema to decode
                 // against and drops, like any unrouted frame)
-                val created = tracker.TableInfo(s, t, cols.toVector, ts,
-                  dicts = dicts)
-                validateDecodable(created)
-                slicesOf.getOrElseUpdate((s, t),
-                  scala.collection.mutable.ArrayBuffer.empty[DataFrame])
-                lowerOf((s, t)) = ts
-                catalog += (s, t) -> created
+                log(ts, s, t, "create_table", "", cols.mkString(", "))
+                validateDecodable((s, t))
+                newSlices((s, t))
                 fillState.onTableCreate((s, t))
-                applied += ((ts, s, t, "create_table", "", cols.mkString(", ")))
                 dflts.toSeq.sortBy(_._1).foreach { case (c, d) =>
-                  applied += ((ts, s, t, "origin_default", c, d))
+                  log(ts, s, t, "origin_default", c, d)
                 }
                 dicts.toSeq.sortBy(_._1).foreach { case (c, vs) =>
-                  applied += ((ts, s, t, "dictionary", c, encodeDictArg(vs)))
+                  log(ts, s, t, "dictionary", c, encodeDictArg(vs))
                 }
-              case CreateDdl(s, t, _, ifNotExists, _, _) if catalog.contains((s, t)) =>
+              case CreateDdl(s, t, _, ifNotExists, _, _) if isLive((s, t)) =>
                 // the already-tracked dispatch is EXPLICIT, not the default
                 // skip: CREATE IF NOT EXISTS of a tracked name is a legal
                 // upstream no-op (counted skip); the plain form is illegal
@@ -924,68 +918,56 @@ object CdcStream {
                   s"cannot apply wire CREATE TABLE of already-tracked $s.$t: " +
                     "illegal upstream and unappliable here — drop the " +
                     "statement upstream (F5 ddl-skip filter)")
-              case DropTableDdl(s, t) if catalog.contains((s, t)) =>
+              case DropTableDdl(s, t) if isLive((s, t)) =>
                 // in-flight frames at/below the drop still decode (they
                 // committed against the live table); later frames of the
                 // dropped table are unaddressable and drop
-                decodeSlice((s, t), catalog((s, t)), ts)
-                localGrave += (s, t) -> catalog((s, t)).columns
-                catalog -= ((s, t))
+                decodeSlice((s, t), live((s, t)).get, ts)
                 // fill state stays: the dropped table's already-cut slices
                 // still fold at batch end, and their pre-add rows still
                 // read the fill — but the recorded boundary keeps a LATER
                 // same-name add's default off this incarnation's rows
                 fillState.onTableDrop((s, t))
-                applied += ((ts, s, t, "drop_table", "", ""))
-              case DropSchemaDdl(s) if catalog.keys.exists(_._1 == s) =>
+                log(ts, s, t, "drop_table", "", "")
+              case DropSchemaDdl(s) if subsetKeys.exists(k => k._1 == s && isLive(k)) =>
                 // every tracked table of the schema ends its decode at the
                 // drop; the log records one drop_table per table, so a
                 // restart replays the same end state (ref:
                 // drainer/schema.go ActionDropSchema drops the schema's
-                // tables from the catalog)
-                catalog.keys.filter(_._1 == s).toSeq.sorted.foreach { k =>
-                  decodeSlice(k, catalog(k), ts)
-                  localGrave += k -> catalog(k).columns
-                  catalog -= k
+                // tables from the catalog). The subset holds every table
+                // of the schema: keysOf adds the registration's, and each
+                // statement that registers one adds its own key.
+                subsetKeys.filter(k => k._1 == s && isLive(k)).foreach { k =>
+                  decodeSlice(k, live(k).get, ts)
                   // fill state stays — same batch-end fold and boundary
                   // rationale as the DROP TABLE above
                   fillState.onTableDrop(k)
-                  applied += ((ts, k._1, k._2, "drop_table", "", ""))
+                  log(ts, k._1, k._2, "drop_table", "", "")
                 }
               case FlashbackDdl(s, t, toOpt)
-                  if trackedSchemas(s) && !catalog.contains((s, toOpt.getOrElse(t))) =>
+                  if trackedSchemas(s) && !isLive((s, toOpt.getOrElse(t))) =>
                 // TiDB FLASHBACK TABLE (ref: drainer/schema.go:435,
                 // ActionRecoverTable handled like a create with the
                 // dropped shape): the table re-registers — optionally
-                // under a new name — with its drop-time columns, decoding
-                // from the flashback forward. No recoverable shape (never
-                // tracked, or already recovered this batch) fails LOUDLY:
-                // the recovered table lives in a tracked schema, so
-                // skipping would silently detach its replication.
+                // under a new name — with its drop-time shape, dictionaries
+                // and origin defaults, decoding from the flashback forward.
+                // The view's graveyard holds this batch's drops and forgets
+                // a table once it is recovered. No recoverable shape (never
+                // tracked, or already recovered) fails LOUDLY: the
+                // recovered table lives in a tracked schema, so skipping
+                // would silently detach its replication.
                 val target = toOpt.getOrElse(t)
-                val shape = localGrave.get((s, t)).orElse(
-                  if (consumedGrave((s, t))) None else tracker.droppedShape(s, t))
-                  .getOrElse(throw new IllegalArgumentException(
+                if (view.droppedShape(s, t).isEmpty)
+                  throw new IllegalArgumentException(
                     s"cannot apply wire FLASHBACK TABLE $s.$t: no recoverable " +
                       "drop-time shape (the table was never tracked, or was " +
                       "already recovered) — register it explicitly or drop " +
-                      "the statement upstream (F5 ddl-skip filter)"))
-                // mark BOTH stores consumed: a flashback served from the
-                // batch-local graveyard must also block the tracker's
-                // (possibly stale, older-incarnation) entry from serving a
-                // duplicated FLASHBACK of the same name — a legitimate
-                // re-drop refills localGrave, which is checked first
-                localGrave -= ((s, t))
-                consumedGrave += ((s, t))
-                slicesOf.getOrElseUpdate((s, target),
-                  scala.collection.mutable.ArrayBuffer.empty[DataFrame])
-                lowerOf((s, target)) = ts
-                catalog += (s, target) -> tracker.TableInfo(s, target, shape, ts)
+                      "the statement upstream (F5 ddl-skip filter)")
+                newSlices((s, target))
                 fillState.onTableCreate((s, target))
-                applied += ((ts, s, t, "recover_table", "",
-                  if (target == t) "" else target))
+                log(ts, s, t, "recover_table", "", if (target == t) "" else target)
               case FlashbackDdl(s, t, toOpt)
-                  if trackedSchemas(s) && catalog.contains((s, toOpt.getOrElse(t))) =>
+                  if trackedSchemas(s) && isLive((s, toOpt.getOrElse(t))) =>
                 // occupied recovery target: illegal upstream (TiDB rejects
                 // a FLASHBACK whose name exists) and unappliable here —
                 // explicit loud dispatch, same contract as the plain
@@ -995,7 +977,7 @@ object CdcStream {
                   s"cannot apply wire FLASHBACK TABLE $s.$t: recovery target " +
                     s"$s.${toOpt.getOrElse(t)} is already tracked — illegal " +
                     "upstream; drop the statement upstream (F5 ddl-skip filter)")
-              case CreateLikeDdl(s, t, _, _, ifNotExists) if catalog.contains((s, t)) =>
+              case CreateLikeDdl(s, t, _, _, ifNotExists) if isLive((s, t)) =>
                 // same explicit dispatch as plain CREATE of a tracked name
                 if (ifNotExists) skip()
                 else throw new IllegalArgumentException(
@@ -1003,36 +985,31 @@ object CdcStream {
                     "already tracked — illegal upstream and unappliable " +
                     "here; drop the statement upstream (F5 ddl-skip filter)")
               case CreateLikeDdl(s, t, s2, u, _)
-                  if trackedSchemas(s) && !catalog.contains((s, t)) =>
+                  if trackedSchemas(s) && !isLive((s, t)) =>
                 // CREATE TABLE … LIKE: registers with the SOURCE's current
                 // shape; logged as a plain create_table carrying the
                 // resolved defs, so replay needs no LIKE resolution. An
                 // unresolvable source fails LOUDLY for the same reason as
                 // an unrecoverable FLASHBACK: the new table lives in a
                 // tracked schema and upstream replicates it from here on.
-                val src = catalog.getOrElse((s2, u),
+                val src = live((s2, u)).getOrElse(
                   throw new IllegalArgumentException(
                     s"cannot apply wire CREATE TABLE $s.$t LIKE $s2.$u: " +
                       "the source is not tracked, so the new table's shape " +
                       "is unknown and it would silently detach — register " +
                       "the source or drop the statement upstream (F5 " +
                       "ddl-skip filter)"))
-                val cols = src.columns
-                slicesOf.getOrElseUpdate((s, t),
-                  scala.collection.mutable.ArrayBuffer.empty[DataFrame])
-                lowerOf((s, t)) = ts
+                newSlices((s, t))
+                fillState.onTableCreate((s, t))
+                log(ts, s, t, "create_table", "", src.columns.mkString(", "))
                 // LIKE copies type metadata too: an ENUM column's def maps
                 // to STRING, so its value dictionary must ride along
-                catalog += (s, t) -> tracker.TableInfo(s, t, cols, ts,
-                  dicts = src.dicts)
-                fillState.onTableCreate((s, t))
-                applied += ((ts, s, t, "create_table", "", cols.mkString(", ")))
                 src.dicts.toSeq.sortBy(_._1).foreach { case (c, vs) =>
-                  applied += ((ts, s, t, "dictionary", c, encodeDictArg(vs)))
+                  log(ts, s, t, "dictionary", c, encodeDictArg(vs))
                 }
-              case RenameDdl(s, t, toSchemaOpt, to) if catalog.contains((s, t)) =>
+              case RenameDdl(s, t, toSchemaOpt, to) if isLive((s, t)) =>
                 val s2 = toSchemaOpt.getOrElse(s)
-                if (!trackedSchemas(s2) || catalog.contains((s2, to))) {
+                if (!trackedSchemas(s2) || isLive((s2, to))) {
                   // a rename of a TRACKED table the decode cannot take must
                   // fail loudly — silently skipping it would detach the
                   // table's replication (later frames arrive under a name
@@ -1052,19 +1029,13 @@ object CdcStream {
                 // wherever it lands): in-flight frames still addressed to
                 // the OLD name decode now, later frames arrive under the
                 // NEW (schema, name) and continue the same schema history
-                decodeSlice((s, t), catalog((s, t)), ts)
-                slicesOf.getOrElseUpdate((s2, to),
-                  scala.collection.mutable.ArrayBuffer.empty[DataFrame])
-                lowerOf((s2, to)) = ts
-                catalog += (s2, to) -> catalog((s, t))
-                  .copy(schema = s2, table = to, version = ts)
-                catalog -= ((s, t))
+                decodeSlice((s, t), live((s, t)).get, ts)
+                newSlices((s2, to))
                 // COPY, don't move (see [[DecodeFill.onTableRename]]): the
                 // old key's already-cut slices still need their fill at
                 // batch end; the new key carries the entries forward
                 fillState.onTableRename((s, t), (s2, to))
-                applied += ((ts, s, t, "rename_table", "",
-                  if (s2 == s) to else s"$s2.$to"))
+                log(ts, s, t, "rename_table", "", if (s2 == s) to else s"$s2.$to")
               case RenameDdl(s, t, toSchemaOpt, to)
                   if trackedSchemas(toSchemaOpt.getOrElse(s)) =>
                 // RENAME of an UNTRACKED source INTO a tracked schema: the
@@ -1086,7 +1057,7 @@ object CdcStream {
                 // scan EVERY qualified name (a multi-table RENAME/DROP
                 // list may bury a tracked table behind untracked ones)
                 qualsAddressed(text).map(q => (normId(q._1), normId(q._2)))
-                  .find(catalog.contains) match {
+                  .find(isLive) match {
                   case Some((s, t)) =>
                     throw new IllegalArgumentException(
                       s"unappliable wire DDL addresses tracked table $s.$t: " +
@@ -1103,7 +1074,7 @@ object CdcStream {
                     // name that collides with a tracked one — loud beats
                     // silent for a statement family that rewrites history).
                     // The first QUALIFIED operand in a tracked schema counts
-                    // too: the live-catalog scan above misses a DROPPED
+                    // too: the live-view scan above misses a DROPPED
                     // table's qual (a qualified TO target the grammar
                     // rejects recreates tracked state all the same).
                     val hit = qualsAddressed(text)
@@ -1111,10 +1082,12 @@ object CdcStream {
                       .map { case (s2, t2) => s"$s2.$t2" }
                       .orElse(flashbackBareIds(text).find { id0 =>
                         val id = normId(id0)
-                        trackedSchemas(id) || catalog.keys.exists(_._2 == id) ||
-                          localGrave.keys.exists(_._2 == id) ||
+                        trackedSchemas(id) ||
+                          // a live or dropped table this batch addresses
+                          subsetKeys.exists(k => k._2 == id && (isLive(k) ||
+                            view.droppedShape(k._1, k._2).isDefined)) ||
                           trackedSchemas.exists(s2 =>
-                            // the LIVE registration, not the subset view —
+                            // the live registration, not the subset —
                             // the bare name may be a tracked table this
                             // batch neither touched nor addressed
                             tracker.tablesOf(s2).contains(id) ||
@@ -1153,9 +1126,8 @@ object CdcStream {
             }
           }
           // tail slice per still-live table, then one write per table
-          catalog.toSeq.sortBy(_._1).foreach { case (k, info) =>
-            decodeSlice(k, info, Long.MaxValue)
-          }
+          slicesOf.keys.toSeq.sorted.foreach(k =>
+            live(k).foreach(decodeSlice(k, _, Long.MaxValue)))
           val unions = slicesOf.toSeq.collect {
             case (k, slices) if slices.nonEmpty =>
               val merged0 = slices.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -1257,14 +1229,6 @@ object CdcStream {
         .flatMap(n => scala.util.Try(n.toLong).toOption)
         .foldLeft(-1L)(math.max)
     if (committed < 0) return
-    // mergeSchema: batch dirs written before the action-tagged log (or a
-    // mixed directory across an upgrade) carry (column_name, new_type)
-    // without an action column — read tolerant and default to the only
-    // action that log shape could mean (modify)
-    val log = spark.read.option("mergeSchema", "true").parquet(s"$outDir/ddl")
-    val hasAction = log.columns.contains("action")
-    val hasArg = log.columns.contains("arg")
-    val hasLegacyType = log.columns.contains("new_type")
     // the replay threshold is the version the tracker held BEFORE this
     // replay — checked against a snapshot, not the advancing version: one
     // wire statement can expand to SEVERAL log records at ONE version (a
@@ -1272,28 +1236,16 @@ object CdcStream {
     // against the advancing version would apply the first group member
     // and silently skip the rest. Ties within a version replay in the
     // live walk's statement order via `seq` (a chained rename is
-    // order-DEPENDENT); logs from before the seq column carry only
-    // order-independent ties (per-table drops), where the (schema, table)
-    // fallback is cosmetic but pinned.
+    // order-DEPENDENT).
     val start = tracker.version
-    val seqCol = if (log.columns.contains("seq")) col("seq")
-      else lit(null).cast("long")
-    log.filter(col("batch") <= committed)
-      .orderBy(col("version"), seqCol.asc_nulls_first,
-        col("schema_name"), col("table_name")).collect().foreach { r =>
+    spark.read.parquet(s"$outDir/ddl")
+      .filter(col("batch") <= committed)
+      .orderBy(col("version"), col("batch"), col("seq")).collect().foreach { r =>
         val v = r.getAs[Long]("version")
-        val action = if (hasAction) Option(r.getAs[String]("action"))
-          .getOrElse("modify") else "modify"
-        val arg = {
-          val a = if (hasArg) r.getAs[String]("arg") else null
-          if (a != null) a
-          else if (hasLegacyType) r.getAs[String]("new_type")
-          else ""
-        }
         if (v > start)
           applyLogged(tracker, r.getAs[String]("schema_name"),
-            r.getAs[String]("table_name"), action,
-            r.getAs[String]("column_name"), arg, v)
+            r.getAs[String]("table_name"), r.getAs[String]("action"),
+            r.getAs[String]("column_name"), r.getAs[String]("arg"), v)
       }
   }
 

@@ -23,33 +23,13 @@ package graft.streaming
   * exactly as declared. Default (false) keeps the case-sensitive
   * MySQL-on-Linux policy the grammar documents. */
 class SchemaTracker(historyDepth: Int = 2, val foldCase: Boolean = false) {
+  import SchemaTracker.TableInfo
 
   // Locale.ROOT: the fold must agree byte-for-byte with Spark's locale-
   // independent lower() on the routing columns (a Turkish-locale JVM's
   // toLowerCase would split the two foldings and silently drop frames)
   private def n(id: String): String =
     if (foldCase) id.toLowerCase(java.util.Locale.ROOT) else id
-
-  /** `defaults` carries each column's ORIGIN default — the expression TiDB
-    * fills for rows that PREDATE the column (ref:
-    * drainer/translator/translator.go:169-227 consumes origin defaults) —
-    * captured when the column is born (wire ADD COLUMN / CREATE TABLE
-    * `DEFAULT` clauses, stripped from the def text by the grammar's tail
-    * normalizer) and exposed for T7-parity fill. It rides the TableInfo so
-    * rename/drop/graveyard/recover propagate it for free. A later SET
-    * DEFAULT does NOT change it (it only affects future upstream inserts,
-    * which arrive with explicit values — the admin skip set). */
-  /** `dicts` carries each ENUM/SET column's value dictionary (declaration
-    * order = 1-based ordinal order; SET bit positions follow the same
-    * order) — the wire grammar maps those types to STRING value text, and
-    * the dictionary is what lets a sink choose the reference's NUMERIC
-    * representation instead (ref: drainer/translator/mysql.go:266-269 maps
-    * enum/set to the number; M9 type-domain parity). Unlike an origin
-    * default it is metadata of the column's CURRENT type, so
-    * MODIFY/CHANGE update or clear it. */
-  case class TableInfo(schema: String, table: String, columns: Vector[String],
-    version: Long, defaults: Map[String, String] = Map.empty,
-    dicts: Map[String, Vector[String]] = Map.empty)
 
   private var byName = Map.empty[(String, String), Vector[TableInfo]]
   // dropped tables keep their last shape so RecoverTable can restore it
@@ -59,6 +39,19 @@ class SchemaTracker(historyDepth: Int = 2, val foldCase: Boolean = false) {
   private var currentVersion = 0L
 
   def version: Long = currentVersion
+
+  /** A tracker that starts at this one's exact state and then evolves on
+    * its own. O(1): both catalogs are immutable maps, so the fork shares
+    * them until either side writes. The decode walk interprets a batch's
+    * DDL on a fork and the live tracker replays the same records only once
+    * the batch is durable. */
+  def fork(): SchemaTracker = {
+    val f = new SchemaTracker(historyDepth, foldCase)
+    f.byName = byName
+    f.graveyard = graveyard
+    f.currentVersion = currentVersion
+    f
+  }
 
   private def push(key0: (String, String), info0: TableInfo): Unit = {
     val key = (n(key0._1), n(key0._2))
@@ -89,24 +82,23 @@ class SchemaTracker(historyDepth: Int = 2, val foldCase: Boolean = false) {
 
   /** Pure single-column shape transforms (TiDB ActionModifyColumn /
     * AddColumn / DropColumn / RenameColumn — the drainer replays each like
-    * any schema-changing job, drainer/schema.go:293-331) — the ONE column
-    * matcher both the
-    * tracker's mutators and any local (not-yet-committed) catalog view use,
-    * so the in-batch decode schema and the tracker's post-commit state can
-    * never match columns differently
-    * ([[graft.streaming.CdcStream.ddlDrivenDecodeTables]] relies on exactly
-    * that: it transforms its local view with these, writes the batch, and
-    * only then commits the same transform to the tracker). */
-  def retyped(info: TableInfo, column: String, newDef: String,
+    * any schema-changing job, drainer/schema.go:293-331) behind the
+    * mutators below. A not-yet-committed catalog view is a [[fork]] driven
+    * through the same mutators, so it can never match columns differently
+    * from the tracker it later commits to. */
+  private def retyped(info: TableInfo, column: String, newDef: String,
       version: Long): TableInfo = {
     val idx = colIdx(info, column)
     require(idx >= 0, s"no column $column in ${info.schema}.${info.table}")
     info.copy(columns = info.columns.updated(idx, newDef), version = version)
   }
 
-  def added(info: TableInfo, columnDef: String, version: Long): TableInfo =
+  private def added(info: TableInfo, columnDef: String, version: Long): TableInfo =
     info.copy(columns = info.columns :+ columnDef, version = version)
 
+  /** Strict, unlike the lenient [[dropColumn]]: an absent column throws.
+    * The decode walk calls it to reject a wire DROP COLUMN the table
+    * cannot take. */
   def dropped(info: TableInfo, column: String, version: Long): TableInfo = {
     val idx = colIdx(info, column)
     require(idx >= 0, s"no column $column in ${info.schema}.${info.table}")
@@ -118,7 +110,7 @@ class SchemaTracker(historyDepth: Int = 2, val foldCase: Boolean = false) {
   /** Rename keeps the column's position and type text (the `" TYPE"` tail
     * of a def entry survives under the new name) and re-keys its origin
     * default and value dictionary. */
-  def renamed(info: TableInfo, from: String, to: String, version: Long): TableInfo = {
+  private def renamed(info: TableInfo, from: String, to: String, version: Long): TableInfo = {
     val idx = colIdx(info, from)
     require(idx >= 0, s"no column $from in ${info.schema}.${info.table}")
     val def0 = info.columns(idx)
@@ -137,7 +129,7 @@ class SchemaTracker(historyDepth: Int = 2, val foldCase: Boolean = false) {
 
   /** MySQL CHANGE COLUMN: rename + retype in place, one version step.
     * `newDef` is the full `"newName TYPE"` text. */
-  def changed(info: TableInfo, from: String, newDef: String,
+  private def changed(info: TableInfo, from: String, newDef: String,
       version: Long): TableInfo = {
     val newName = newDef.split(" ", 2)(0)
     retyped(renamed(info, from, newName, version), newName, newDef, version)
@@ -253,7 +245,7 @@ class SchemaTracker(historyDepth: Int = 2, val foldCase: Boolean = false) {
   }
 
   /** Drop-time shape of a dropped table still in the graveyard — the
-    * versioned decode consults this for a cross-batch FLASHBACK. */
+    * versioned decode's guard for a wire FLASHBACK, read on its fork. */
   def droppedShape(schema: String, table: String): Option[Vector[String]] =
     graveyard.get((n(schema), n(table))).map(_.columns)
 
@@ -344,4 +336,29 @@ class SchemaTracker(historyDepth: Int = 2, val foldCase: Boolean = false) {
     * is ≤ the requested one (ref: schema.go:221-234). */
   def atVersion(schema: String, table: String, version: Long): Option[TableInfo] =
     byName.get((n(schema), n(table))).flatMap(_.reverse.find(_.version <= version))
+}
+
+object SchemaTracker {
+
+  /** `defaults` carries each column's ORIGIN default — the expression TiDB
+    * fills for rows that PREDATE the column (ref:
+    * drainer/translator/translator.go:169-227 consumes origin defaults) —
+    * captured when the column is born (wire ADD COLUMN / CREATE TABLE
+    * `DEFAULT` clauses, stripped from the def text by the grammar's tail
+    * normalizer) and exposed for T7-parity fill. It rides the TableInfo so
+    * rename/drop/graveyard/recover propagate it for free. A later SET
+    * DEFAULT does NOT change it (it only affects future upstream inserts,
+    * which arrive with explicit values — the admin skip set).
+    *
+    * `dicts` carries each ENUM/SET column's value dictionary (declaration
+    * order = 1-based ordinal order; SET bit positions follow the same
+    * order) — the wire grammar maps those types to STRING value text, and
+    * the dictionary is what lets a sink choose the reference's NUMERIC
+    * representation instead (ref: drainer/translator/mysql.go:266-269 maps
+    * enum/set to the number; M9 type-domain parity). Unlike an origin
+    * default it is metadata of the column's CURRENT type, so
+    * MODIFY/CHANGE update or clear it. */
+  case class TableInfo(schema: String, table: String, columns: Vector[String],
+    version: Long, defaults: Map[String, String] = Map.empty,
+    dicts: Map[String, Vector[String]] = Map.empty)
 }

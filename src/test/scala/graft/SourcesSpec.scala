@@ -92,7 +92,7 @@ class SourcesSpec extends SparkSpec {
     val (lo, hi) = (fileTs(1), fileTs(2) - 1) // covers file 1 only, by name
     val expect = key(changes.filter(col("commit_ts") >= lo && col("commit_ts") <= hi))
     assert(key(PbBinlogFile.read(spark, dir, lo, hi)) == expect)
-    val picked = graft.sources.PbBinlogFile.selectFiles(files.toIndexedSeq, lo, hi)
+    val picked = graft.sources.PbBinlogFile.selectFilesBounded(files.toIndexedSeq, lo, hi)
     assert(picked.length <= 2 && picked.contains(files(1)),
       s"range [$lo,$hi] must prune to the overlapping files, got $picked")
 
@@ -366,7 +366,7 @@ class SourcesSpec extends SparkSpec {
     assert(PbBinlogFile.read(spark, dir).count() == changes.count())
     // and ts-range pruning still selects a strict subset of segments
     val (lo, hi) = (firstTs(files.length / 2), firstTs(files.length / 2) + 50)
-    val picked = PbBinlogFile.selectFiles(files.toIndexedSeq, lo, hi)
+    val picked = PbBinlogFile.selectFilesBounded(files.toIndexedSeq, lo, hi)
     assert(picked.length < files.length)
     assert(PbBinlogFile.read(spark, dir, lo, hi).count() ==
       changes.filter(col("commit_ts") >= lo && col("commit_ts") <= hi).count())

@@ -3071,7 +3071,7 @@ class StreamingSpec extends SparkSpec {
     PbBinlogFile.write(one(1L), dir, nFiles = 1)
     // same (pid, seg, ts-interval) name, same byte LENGTH, different pk:
     // the length-only heuristic used to silently drop this batch
-    intercept[Exception] { PbBinlogFile.append(one(2L), dir, nFiles = 1) }
+    intercept[Exception] { PbBinlogFile.write(one(2L), dir, nFiles = 1) }
     assert(PbBinlogFile.read(spark, dir).select("pk")
       .collect().map(_.getLong(0)).toSeq == Seq(1L),
       "the first batch's content must survive the refused promote")
@@ -3205,7 +3205,7 @@ class StreamingSpec extends SparkSpec {
       dml(Seq(1L, 3L, 5L))
         .unionByName(ddl(6L, "CREATE INDEX i_k ON app.t (k)")),
       wireDir, nFiles = 1)
-    PbBinlogFile.append(
+    PbBinlogFile.write(
       ddl(8L, "OPTIMIZE TABLE app.t")
         .unionByName(ddl(10L, "ALTER TABLE app.t ADD COLUMN c BIGINT"))
         .unionByName(dml(Seq(11L))),
@@ -3334,7 +3334,7 @@ class StreamingSpec extends SparkSpec {
       try q1.processAllAvailable() finally q1.stop()
       assert(CdcStream.decodeCounts(q1.id)("skipped_ddl_total") == 1L)
 
-      PbBinlogFile.append(
+      PbBinlogFile.write(
         wireDdl(6L, "OPTIMIZE TABLE app.t")
           .unionByName(wireDdl(8L, "ANALYZE TABLE app.t"))
           .unionByName(dml(Seq(9L))),
@@ -3817,6 +3817,47 @@ class StreamingSpec extends SparkSpec {
     assert(causes(ed).exists(c => String.valueOf(c.getMessage)
       .contains("no recoverable drop-time shape")),
       s"stale graveyard incarnation served a duplicated FLASHBACK: $ed")
+  }
+
+  test("FLASHBACK restores a dropped table's ENUM dictionary, so a MODIFY off the enum clears it") {
+    // regression: the walk once recovered a dropped table with its columns
+    // only, so a later MODIFY of the ENUM column logged no dictionary
+    // clear — while the commit's recoverTable restored the dictionary and
+    // kept it forever, live and on every restart from the log. Checked
+    // within one batch and across two (DROP, then FLASHBACK + MODIFY).
+    import graft.sources.PbBinlogFile
+    def ddl(ts: Long, sql: String) = wireDdl(ts, sql)
+    def seeded(): SchemaTracker = {
+      val t = new SchemaTracker()
+      t.createTable("app", "t", Seq("k DOUBLE", "e STRING"), version = 0)
+      t.setDictionary("app", "t", "e", Vector("a", "b"), version = 0)
+      t
+    }
+    def check(tag: String, batches: Seq[org.apache.spark.sql.DataFrame]): Unit = {
+      val wireDir = graft.util.Scratch.dir(s"graft_fbdict_wire_$tag")
+      val outDir = graft.util.Scratch.dir(s"graft_fbdict_out_$tag")
+      val ckpt = graft.util.Scratch.dir(s"graft_fbdict_ckpt_$tag")
+      val tracker = seeded()
+      batches.foreach { b =>
+        PbBinlogFile.write(b, wireDir, nFiles = 1)
+        val q = CdcStream.ddlDrivenDecodeTables(
+          PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
+          "app", col("event_type"))
+        try q.processAllAvailable() finally q.stop()
+      }
+      val restarted = seeded()
+      CdcStream.recoverDecodeTracker(spark, outDir, ckpt, restarted)
+      Seq("live" -> tracker, "restarted" -> restarted).foreach { case (who, t) =>
+        assert(t.current("app", "t").isDefined, s"$tag/$who: not recovered")
+        assert(t.dictionary("app", "t", "e").isEmpty,
+          s"$tag/$who: stale dictionary ${t.dictionary("app", "t", "e")}")
+      }
+    }
+    val drop = ddl(2L, "DROP TABLE app.t")
+    val flashbackModify = ddl(4L, "FLASHBACK TABLE app.t")
+      .unionByName(ddl(6L, "ALTER TABLE app.t MODIFY COLUMN e VARCHAR(10)"))
+    check("one_batch", Seq(drop.unionByName(flashbackModify)))
+    check("two_batches", Seq(drop, flashbackModify))
   }
 
   test("TRUNCATE clears batch-local defs: a column dropped earlier in the batch cannot poison emit") {
