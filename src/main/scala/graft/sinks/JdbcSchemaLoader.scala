@@ -6,6 +6,14 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** Every sink's checkpoint record (ref: drainer/checkpoint/mysql.go:34-51
+  * — the saved point carries commitTS + ts-map + schema-version +
+  * consistent flag, not just a batch counter). `batchId` doubles as the
+  * downstream half of the ts-map pair: (commitTs upstream ↔ batchId
+  * downstream) is what PITR needs to align the two histories. */
+case class Checkpoint(batchId: Long, commitTs: Long, schemaVersion: Long,
+    consistent: Boolean)
+
 /** Shared JDBC bootstrap + savepoint machinery for the two loader classes
   * (ref: drainer/checkpoint/mysql.go:34-51,75-84,130-163 — the checkpoint
   * package owns its own schema and replace-style save; the loaders share
@@ -14,11 +22,6 @@ private[sinks] object JdbcMeta {
 
   val CkptTable = "GRAFT_CHECKPOINT"
   val DdlTable = "GRAFT_DDL_LOG"
-
-  /** Savepoint shape: batchId doubles as the downstream half of the ts-map
-    * pair. */
-  case class Checkpoint(batchId: Long, commitTs: Long, schemaVersion: Long,
-      consistent: Boolean)
 
   /** CREATE TABLE IF NOT EXISTS is not Derby syntax; swallow the
     * table-exists SQLState (X0Y32) instead, as every Derby bootstrap does. */
@@ -391,8 +394,6 @@ object JdbcSchemaLoader {
 
 class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
     applyPartitions: Int = 16) extends Serializable {
-
-  import JdbcMeta.Checkpoint
 
   // rows (or statements) per JDBC batch on every write path
   private val batchSize = 128

@@ -28,14 +28,7 @@ import org.apache.spark.sql.functions._
   *  - the single-table read-back surface ([[currentState]]), which is
   *    FAIL-LOUD: it connects through [[JdbcMeta.readUrl]]'s stripped URL,
   *    so a wrong or never-booted database throws instead of silently
-  *    booting empty and reading back "no state" as a plausible answer;
-  *  - `singleExec = true` selects the loader's sequence-preserving per-DML
-  *    path with safe mode OFF — the reference's non-batched, non-safe
-  *    statement path (executor.go:407-443 with safe mode off), where a
-  *    replayed insert hits the engine's real duplicate-key error. That is
-  *    exactly the failure the reference's post-restart safe-mode window
-  *    exists to absorb; the mode exists here to prove that behavior
-  *    against a real engine, not as a default anyone should run.
+  *    booting empty and reading back "no state" as a plausible answer.
   *
   * Scale shape: the per-batch work is one shuffle of the micro-batch (the
   * key-hash repartition) plus JDBC round-trips proportional to the batch,
@@ -76,14 +69,14 @@ object JdbcUpsertSink {
        |SELECT pk, commit_ts, value FROM r WHERE rn = 1 AND op <> 'D'""".stripMargin
 }
 
-class JdbcUpsertSink(url: String, singleExec: Boolean = false,
-    clusterId: Long = 1L,
+class JdbcUpsertSink(url: String, clusterId: Long = 1L,
     // ref: executor.go:39 defaultWorkerCount = 16 parallel connections
     applyPartitions: Int = 16) extends Serializable {
 
-  import JdbcMeta.Checkpoint
-
   private val stateTable = "GRAFT_STATE"
+
+  // the read side's parallelism, matching the loader's 16 write workers
+  private val readPartitions = 16
 
   private val loader =
     new JdbcSchemaLoader(url, clusterId, applyPartitions = applyPartitions)
@@ -116,7 +109,7 @@ class JdbcUpsertSink(url: String, singleExec: Boolean = false,
     * connection goes through [[JdbcMeta.readUrl]] (no `;create=true`), so
     * a wrong URL or a never-booted database throws (Derby XJ004) instead
     * of silently booting an empty database and answering "no state". */
-  def currentState(spark: SparkSession, readPartitions: Int = 16): DataFrame =
+  def currentState(spark: SparkSession): DataFrame =
     JdbcMeta.partitionedRead(spark, url, stateTable, Some("pk"), readPartitions)
       .select(col("PK").as("pk"), col("COMMIT_TS").as("commit_ts"),
         col("VAL").as("value"))
@@ -135,8 +128,7 @@ class JdbcUpsertSink(url: String, singleExec: Boolean = false,
     // `value` binds to the state table's VAL column by the loader's
     // catalog↔frame name bridge.
     val batch = batch0.withColumnRenamed("value", "val").persist()
-    try loader.applyBatch(Map(stateTable -> batch), batchId, schemaVersion,
-      merge = !singleExec, safeMode = false)
+    try loader.applyBatch(Map(stateTable -> batch), batchId, schemaVersion)
     finally { batch.unpersist(); () }
   }
 }

@@ -58,9 +58,15 @@ private[graft] object MergeOrder {
   *  - the committed batchId is persisted with the state and replayed
   *    batches are skipped — exactly-once effect on top of an at-least-once
   *    stream (the reference gets this from checkpoint commitTs + safe mode);
-  *  - DDL rows act as barriers: the batch is split at each DDL, sub-batches
-  *    apply in order with the DDL recorded between them (mirrors the
-  *    loader's flush-then-execute-alone rule).
+  *  - DDL rows are markers, not cuts: the lake state `(pk, commit_ts,
+  *    value)` has no shape a DDL can change, so the batch's non-DDL rows
+  *    merge ONCE, and each DDL commit ts leaves a `_ddl_log` marker after
+  *    the merge and before the checkpoint. One merge ends in the state a
+  *    merge per barrier slice would: every row after a barrier has a
+  *    higher commit ts than every row before it, so each key's winner over
+  *    the whole batch is the winner the sequential merges end with, and a
+  *    delete that won an earlier slice loses to any later row either way.
+  *    Lake envelopes carry only I/U/D ([[graft.ops.Cdc.opCaseSql]]).
   *
   * The parquet-directory "table" stands in for the JDBC target; on a real
   * cluster the same logic runs against MERGE INTO / rewriteBatchedStatements.
@@ -74,15 +80,15 @@ private[graft] object MergeOrder {
   * `pmod(hash(pk), nBuckets)` — the parquet analog of the target table's
   * key-hash distribution — and each bucket directory holds ONE parquet
   * file. A micro-batch costs one metadata job over the pinned batch (the
-  * DDL barrier set and the max commit ts in one aggregate), then per
-  * barrier slice one bucket-set job (≤ nBuckets values; an empty set ends
-  * an empty slice there) and one shuffle that writes the merge:
-  * it reads back ONLY the touched buckets (partition pruning skips the rest
-  * at the file listing), merges them with the slice's rows after a single
-  * exchange on `bucket` — which, since the bucket is a function of the key,
-  * also serves the per-key window — and writes each touched bucket from one
-  * task as one file, then swaps ONLY those bucket directories. Per-batch
-  * work is therefore O(batch + touched-state), not O(total-state): with
+  * DDL marker set and the max commit ts in one aggregate), one bucket-set
+  * job (≤ nBuckets values; an empty set ends an empty batch there) and one
+  * shuffle that writes the merge: it reads back ONLY the touched buckets
+  * (partition pruning skips the rest at the file listing), merges them
+  * with the batch's rows after a single exchange on `bucket` — which,
+  * since the bucket is a function of the key, also serves the per-key
+  * window — and writes each touched bucket from one task as one file,
+  * then swaps ONLY those bucket directories. Per-batch work is therefore
+  * O(batch + touched-state), not O(total-state): with
   * 2^12 buckets at 100 TB a skewless batch touching 1% of keys reads/writes
   * ~1% of the table. This is exactly the work profile of `MERGE INTO` on a
   * clustered target or of dynamic-partition-overwrite on a lakehouse table
@@ -106,14 +112,6 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
   // (batchId, ddl commit ts), the content repeats it for auditability
   private val ddlLogDir = s"$root/_ddl_log"
 
-  /** Checkpoint record (ref: drainer/checkpoint/mysql.go:34-51 — the saved
-    * point carries commitTS + ts-map + schema-version + consistent flag,
-    * not just a batch counter). `batchId` doubles as the downstream half of
-    * the ts-map pair: (commitTs upstream ↔ batchId downstream) is what PITR
-    * needs to align the two histories. */
-  case class Checkpoint(batchId: Long, commitTs: Long, schemaVersion: Long,
-      consistent: Boolean)
-
   def lastCheckpoint: Checkpoint =
     if (MetaFs.exists(metaPath)) {
       // MetaFs.writeString makes a torn marker unreachable by construction;
@@ -121,12 +119,11 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
       // instead of wedging every restart on a bare NumberFormatException
       try MetaFs.readString(metaPath).trim.split(' ') match {
         case Array(b, ts, v, c) => Checkpoint(b.toLong, ts.toLong, v.toLong, c.toBoolean)
-        case Array(b)           => Checkpoint(b.toLong, -1L, -1L, consistent = true)
         // a wrong token count is external corruption like a garbage field
         // — resetting to batchId=-1 here would silently disable the
         // replay-skip guard and move the resume position to the origin
         case parts => throw new IllegalArgumentException(
-          s"${parts.length} fields where 1 or 4 expected")
+          s"${parts.length} fields where 4 expected")
       } catch {
         // IllegalArgumentException covers both the numeric fields (NFE is
         // its subclass) and a corrupt boolean field (`toBoolean` throws
@@ -234,35 +231,21 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
     checkLayout()
     healHalfSwaps() // a crash mid-swap must be rolled back BEFORE state reads
     val spark = batch0.sparkSession
-    // pinned: the metadata aggregate and every slice's bucket-set and merge
+    // pinned: the metadata aggregate and the merge's bucket-set and write
     // jobs read it, so the source scan runs once
     val batch = batch0.persist()
     try {
-      // one job for the batch's metadata: the DDL barriers and the max ts.
-      // DDL barrier: order sub-batches around DDL rows by commit_ts. A SET:
-      // several DDLs sharing one commit ts (one upstream txn's jobs) are
-      // ONE barrier — duplicate ts values would write the same marker name
-      // twice and slice nothing in between
+      // one job for the batch's metadata: the DDL markers and the max ts.
+      // A SET: several DDLs sharing one commit ts (one upstream txn's jobs)
+      // are ONE marker
       val meta = batch.agg(
         collect_set(when(col("op") === "DDL", col("commit_ts"))),
         max("commit_ts")).head()
-      val barriers = meta.getSeq[Long](0).sorted :+ Long.MaxValue
-      var lower = Long.MinValue
-      barriers.foreach { upper =>
-        val slice = batch.filter(col("op") =!= "DDL" &&
-          col("commit_ts") > lower && col("commit_ts") <= upper)
-        mergeSlice(spark, slice)
-        if (upper != Long.MaxValue) {
-          // the log was a single append-file before it became a marker
-          // directory: a pre-existing file under the name must step aside,
-          // not wedge mkdirs on its first post-upgrade DDL batch
-          if (MetaFs.exists(ddlLogDir) && !MetaFs.isDirectory(ddlLogDir))
-            MetaFs.rename(ddlLogDir, s"$ddlLogDir.v1")
-          MetaFs.mkdirs(ddlLogDir)
-          MetaFs.writeString(f"$ddlLogDir/$batchId%020d-$upper%020d", s"$batchId:$upper\n")
-        }
-        lower = upper
-      }
+      merge(spark, batch.filter(col("op") =!= "DDL"))
+      val ddlTs = meta.getSeq[Long](0).sorted
+      if (ddlTs.nonEmpty) MetaFs.mkdirs(ddlLogDir)
+      ddlTs.foreach(ts =>
+        MetaFs.writeString(f"$ddlLogDir/$batchId%020d-$ts%020d", s"$batchId:$ts\n"))
       val maxTs = if (meta.isNullAt(1)) prev.commitTs else meta.getLong(1)
       val version = if (schemaVersion >= 0) schemaVersion else prev.schemaVersion
       MetaFs.writeString(metaPath,
@@ -271,20 +254,20 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
     } finally { batch.unpersist(); () }
   }
 
-  private def mergeSlice(spark: SparkSession, slice: DataFrame): Unit = {
+  private def merge(spark: SparkSession, rows: DataFrame): Unit = {
     // a frame carrying the T9 intra-txn sequence resolves same-ts chains
     // by STATEMENT ORDER (ref: drainer/translator/sequence_iterator.go:
     // 32-70 + pkg/loader/merge.go:79-133) — the highest seq at a ts is
     // the txn's net effect, so a same-ts delete-then-reinsert lands the
     // reinsert; without seq the D>U>I tie-break below stands
-    val hasSeq = slice.columns.contains("seq")
+    val hasSeq = rows.columns.contains("seq")
     val cols = Seq("pk", "commit_ts", "op", "value") ++
       (if (hasSeq) Seq("seq") else Nil)
     // read twice (bucket set + merge), both times off the pinned batch
-    val incoming = slice.select(cols.map(col): _*)
+    val incoming = rows.select(cols.map(col): _*)
       .withColumn("bucket", bucketOf(col("pk")))
     // the touched-bucket set: ≤ nBuckets values, a metadata-sized collect
-    // that doubles as the slice's emptiness probe
+    // that doubles as the batch's emptiness probe
     val touched = incoming.select("bucket").distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
     if (touched.isEmpty) return

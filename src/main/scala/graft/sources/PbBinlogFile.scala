@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.BufferedOutputStream
+import java.io.{BufferedOutputStream, DataInputStream, InputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.CRC32C
 
@@ -273,44 +273,70 @@ object PbBinlogFile {
     b.array()
   }
 
-  /** Strict whole-buffer frame parse; magic and crc mismatches fail loudly
-    * (ref: ErrMagicMismatch / ErrCRCMismatch, binlogger.go:37-41), and so
-    * does a torn tail — a trailing fragment shorter than one frame header
-    * means a writer died mid-write (ref: binlogger.go:308-321 returns the
-    * decode error; `decodeFramesRecovering` is the opt-in salvage).
-    * The LIVE read path streams frames through
-    * [[PbBinlogPartitionReader]] instead (constant memory per segment);
-    * this in-memory twin is the codec's executable spec — PbCodecSpec
-    * property-tests encode→decode through it, and the two walks must stay
-    * byte-for-byte aligned. */
-  private[sources] def decodeFrames(content: Array[Byte]): Iterator[PbChange] = {
-    val b = ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN)
+  /** The codec's one strict frame parser: streams the frames of a
+    * `streamLen`-byte segment off `in` in constant memory (one payload at
+    * a time), so a rotation-sized segment never materializes whole.
+    * [[PbBinlogPartitionReader]] reads every strict segment through it, and
+    * PbCodecSpec property-tests it over in-memory bytes. Every malformed input fails with an
+    * `IllegalStateException` naming what failed (ref: ErrMagicMismatch /
+    * ErrCRCMismatch, binlogger.go:37-41, and the decode error a torn tail
+    * surfaces, 308-321): a magic mismatch; a length field that is negative
+    * or exceeds the bytes left after the header — checked as the 8-byte
+    * `Long` it is on the wire, before it narrows to an array size; a CRC
+    * mismatch; a trailing fragment shorter than one frame header (a writer
+    * died mid-write — our own writer never promotes one).
+    * [[decodeFramesRecovering]] is the opt-in salvage. `source` names the
+    * segment in the messages. The caller owns and closes `in`. */
+  private[sources] def readFrames(in: InputStream, streamLen: Long,
+      source: String): Iterator[PbChange] = {
+    val data = new DataInputStream(in)
     new Iterator[PbChange] {
+      private var consumed = 0L
       def hasNext: Boolean = {
-        val rem = b.remaining()
+        val rem = streamLen - consumed
         if (rem > 0 && rem < 16) throw new IllegalStateException(
-          s"torn binlog tail: $rem trailing bytes (recover mode salvages)")
+          s"torn binlog tail: $rem trailing bytes in $source " +
+            "(recover mode salvages)")
         rem >= 16
       }
       def next(): PbChange = {
-        val magic = b.getInt
+        // the wire is little-endian; DataInputStream reads big-endian
+        val magic = Integer.reverseBytes(data.readInt())
         if (magic != Magic)
           throw new IllegalStateException(f"binlog magic mismatch: 0x$magic%08x")
-        // same bounds check as the live reader — the two walks must
-        // stay aligned on malformed input too
-        val len64 = b.getLong
-        if (len64 < 0 || len64 > b.remaining())
+        val len = java.lang.Long.reverseBytes(data.readLong())
+        // payload plus the 4 CRC bytes must fit in what follows the header
+        val left = streamLen - consumed - 12
+        if (len < 0 || len > left - 4 || len > Int.MaxValue)
           throw new IllegalStateException(
-            s"binlog frame length $len64 exceeds remaining ${b.remaining()}")
-        val len = len64.toInt
-        val payload = new Array[Byte](len); b.get(payload)
-        val stored = b.getInt
+            s"binlog frame length $len exceeds remaining $left bytes in $source")
+        val payload = new Array[Byte](len.toInt)
+        data.readFully(payload)
+        val stored = Integer.reverseBytes(data.readInt())
         val crc = new CRC32C(); crc.update(payload)
         if (crc.getValue.toInt != stored)
           throw new IllegalStateException("binlog crc mismatch")
+        consumed += 16L + len
         decodePayload(payload)
       }
     }
+  }
+
+  /** The intact frame at offset `p` of an in-memory segment and the offset
+    * after it, or None: magic, length (checked as a `Long`), CRC and
+    * payload decode must all hold. The salvage walk's per-offset check, and
+    * how the recover-scan oracle's corruption injector finds frames. */
+  private def frameAt(content: Array[Byte], p: Int): Option[(PbChange, Int)] = {
+    if (content.length - p < 16) return None
+    val b = ByteBuffer.wrap(content, p, content.length - p).order(ByteOrder.LITTLE_ENDIAN)
+    if (b.getInt != Magic) return None
+    val len = b.getLong
+    if (len < 0 || len > content.length - p - 16) return None
+    val payload = new Array[Byte](len.toInt); b.get(payload)
+    val crc = new CRC32C(); crc.update(payload)
+    if (crc.getValue.toInt != b.getInt) return None
+    try Some((decodePayload(payload), p + 16 + len.toInt))
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Recovering frame parse — the reference's disaster-read mode
@@ -322,27 +348,16 @@ object PbBinlogFile {
     * frame's own crc validates; every intact frame after it still decodes.
     * Validating the whole candidate frame (not just its magic, which can
     * occur by chance inside payload bytes) makes the resync one-pass and
-    * deterministic where the reference would re-fail and seek again. */
-  private[sources] def decodeFramesRecovering(content: Array[Byte]): Iterator[PbChange] = {
-    def frameAt(p: Int): Option[(PbChange, Int)] = {
-      if (content.length - p < 16) return None
-      val b = ByteBuffer.wrap(content, p, content.length - p).order(ByteOrder.LITTLE_ENDIAN)
-      if (b.getInt != Magic) return None
-      val len = b.getLong
-      if (len < 0 || len > content.length - p - 16) return None
-      val payload = new Array[Byte](len.toInt); b.get(payload)
-      val crc = new CRC32C(); crc.update(payload)
-      if (crc.getValue.toInt != b.getInt) return None
-      try Some((decodePayload(payload), p + 16 + len.toInt))
-      catch { case scala.util.control.NonFatal(_) => None }
-    }
+    * deterministic where the reference would re-fail and seek again. The
+    * byte-by-byte resync needs the segment in memory, by design. */
+  private[sources] def decodeFramesRecovering(content: Array[Byte]): Iterator[PbChange] =
     new Iterator[PbChange] {
       private var pos = 0
       private var staged: PbChange = _
       private def advance(): Unit = {
         staged = null
         while (staged == null && content.length - pos >= 16)
-          frameAt(pos) match {
+          frameAt(content, pos) match {
             case Some((c, next)) => staged = c; pos = next
             case None => pos += 1 // skip one byte, like the reference's seek
           }
@@ -351,7 +366,6 @@ object PbBinlogFile {
       def hasNext: Boolean = staged != null
       def next(): PbChange = { val c = staged; advance(); c }
     }
-  }
 
   // ---- the sink (K4 real shape) ----
 
@@ -522,6 +536,10 @@ object PbBinlogFile {
     }
   }
 
+  /** Age past which gc reaps an `.inprogress` temp: 24 h, far beyond any
+    * live task's write. */
+  private val InprogressTtlMs: Long = 24L * 3600 * 1000
+
   /** K4 retention: reclaim every segment whose ENTIRE commit-ts range lies
     * at or below `safeTs` (ref: pkg/binlogfile/binlogger.go:354-380 GCByPos
     * removes all files before the position and ALWAYS keeps the latest;
@@ -542,17 +560,16 @@ object PbBinlogFile {
     * gc is also the reaper for `.inprogress` temps a crashed or abandoned
     * speculative writer left behind: they are invisible to every reader (so
     * age-based cleanup is safe) but would otherwise accumulate in the
-    * directory forever. A temp older than `inprogressTtlMs` (default 24 h —
-    * far beyond any live task's write) is deleted; a younger one may still
-    * have a live writer behind it and is left alone. */
-  def gc(spark: SparkSession, dir: String, safeTs: Long,
-      inprogressTtlMs: Long = 24L * 3600 * 1000): Seq[String] = {
+    * directory forever. A temp older than [[InprogressTtlMs]] is deleted;
+    * a younger one may still have a live writer behind it and is left
+    * alone. */
+  def gc(spark: SparkSession, dir: String, safeTs: Long): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsFor(dir, conf)
     val p = new HPath(dir)
     if (!fs.exists(p)) return Seq.empty
     val all = fs.listStatus(p)
-    val cutoff = System.currentTimeMillis() - inprogressTtlMs
+    val cutoff = System.currentTimeMillis() - InprogressTtlMs
     all.filter(s => s.getPath.getName.endsWith(".inprogress") &&
         s.getModificationTime < cutoff)
       .foreach(s => fs.delete(s.getPath, false))
@@ -708,12 +725,12 @@ object PbBinlogFile {
     s"""WITH c AS (${graft.ops.Cdc.changesCte})
        |SELECT commit_ts, pk, op, event_type, ts, value, props FROM c""".stripMargin
 
-  /** Deterministic corruption injector for the recover-mode oracle: walk a
-    * file's frames in place and XOR one payload byte of every frame whose
-    * commit_ts satisfies `hit` — the CRC then fails on exactly those frames
-    * and salvage must skip them. Test/staging machinery (it trusts the
-    * layout it just wrote); the parse mirrors the strict reader's frame
-    * walk ([[PbBinlogPartitionReader]]). */
+  /** Deterministic corruption injector for the recover-mode oracle: find a
+    * file's frames with the salvage walk's [[frameAt]] and XOR one payload
+    * byte of every frame whose commit_ts satisfies `hit` — the CRC then
+    * fails on exactly those frames and salvage must skip them.
+    * Test/staging machinery: the file was just written, so a byte that
+    * starts no intact frame fails the staging loudly. */
   private def corruptFile(fs: FileSystem, path: HPath, hit: Long => Boolean): Unit = {
     val len0 = fs.getFileStatus(path).getLen.toInt
     val bytes = new Array[Byte](len0)
@@ -721,17 +738,15 @@ object PbBinlogFile {
     try in.readFully(0L, bytes) finally in.close()
     var pos = 0
     var changed = false
-    while (bytes.length - pos >= 16) {
-      val b = ByteBuffer.wrap(bytes, pos, bytes.length - pos)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      b.getInt // magic (ours by construction)
-      val len = b.getLong.toInt
-      val payload = new Array[Byte](len); b.get(payload)
-      if (hit(decodePayload(payload).commit_ts)) {
-        bytes(pos + 12) = (bytes(pos + 12) ^ 0x5a).toByte
-        changed = true
-      }
-      pos += 16 + len
+    while (pos < bytes.length) frameAt(bytes, pos) match {
+      case Some((c, next)) =>
+        if (hit(c.commit_ts)) {
+          bytes(pos + 12) = (bytes(pos + 12) ^ 0x5a).toByte
+          changed = true
+        }
+        pos = next
+      case None => throw new IllegalStateException(
+        s"no intact binlog frame at offset $pos of freshly written $path")
     }
     if (changed) {
       val out = fs.create(path, true)

@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, DataInputStream}
-import java.nio.{ByteBuffer, ByteOrder}
-import java.util.zip.CRC32C
+import java.io.BufferedInputStream
 
 import scala.collection.mutable
 
@@ -316,10 +314,11 @@ case class PbBinlogReaderFactory(conf: SerializableHadoopConf,
       conf.value, recover, tsLo, tsHi, columns)
 }
 
-/** Decodes one segment file. Strict mode streams the frames off the open
-  * `FSDataInputStream` in constant memory, failing loudly on a magic or
-  * CRC mismatch (ref: ErrMagicMismatch/ErrCRCMismatch, binlogger.go:37-41);
-  * recover mode loads the segment (bounded by the rotation cap) and
+/** Decodes one segment file. Strict mode streams the open
+  * `FSDataInputStream` through the codec's one strict frame parser,
+  * [[PbBinlogFile.readFrames]] — constant memory per segment, every
+  * malformed frame a loud failure (ref: binlogger.go:37-41, 308-321).
+  * Recover mode loads the segment (bounded by the rotation cap) and
   * salvages via [[PbBinlogFile.decodeFramesRecovering]]'s magic resync. */
 class PbBinlogPartitionReader(path: String, conf: Configuration,
     recover: Boolean, tsLo: Long, tsHi: Long, columns: Array[String])
@@ -328,7 +327,7 @@ class PbBinlogPartitionReader(path: String, conf: Configuration,
   private val hPath = new HPath(path)
   private val fs = hPath.getFileSystem(conf)
   private val fileLen = fs.getFileStatus(hPath).getLen
-  private var strictIn: DataInputStream = _
+  private var strictIn: BufferedInputStream = _
 
   private val frames: Iterator[PbBinlogFile.PbChange] =
     if (recover) {
@@ -343,43 +342,8 @@ class PbBinlogPartitionReader(path: String, conf: Configuration,
       try in.readFully(0L, bytes) finally in.close()
       PbBinlogFile.decodeFramesRecovering(bytes)
     } else {
-      strictIn = new DataInputStream(new BufferedInputStream(fs.open(hPath)))
-      new Iterator[PbBinlogFile.PbChange] {
-        private var consumed = 0L
-        def hasNext: Boolean = {
-          val rem = fileLen - consumed
-          // a trailing fragment shorter than one frame header is a torn
-          // tail (foreign or truncated file — our own writer never
-          // promotes one): strict mode fails loudly like the reference's
-          // decode-error surfacing (binlogger.go:308-321) instead of
-          // silently ending the scan; recover mode salvages
-          if (rem > 0 && rem < 16) throw new IllegalStateException(
-            s"torn binlog tail: $rem trailing bytes in $path " +
-              "(recover mode salvages)")
-          rem >= 16
-        }
-        def next(): PbBinlogFile.PbChange = {
-          val header = new Array[Byte](12)
-          strictIn.readFully(header)
-          val hb = ByteBuffer.wrap(header).order(ByteOrder.LITTLE_ENDIAN)
-          val magic = hb.getInt
-          if (magic != PbBinlogFile.Magic)
-            throw new IllegalStateException(f"binlog magic mismatch: 0x$magic%08x")
-          val len = hb.getLong.toInt
-          if (len < 0 || len > fileLen - consumed - 16)
-            throw new IllegalStateException(s"binlog frame length $len exceeds file")
-          val payload = new Array[Byte](len)
-          strictIn.readFully(payload)
-          val tail = new Array[Byte](4)
-          strictIn.readFully(tail)
-          val stored = ByteBuffer.wrap(tail).order(ByteOrder.LITTLE_ENDIAN).getInt
-          val crc = new CRC32C(); crc.update(payload)
-          if (crc.getValue.toInt != stored)
-            throw new IllegalStateException("binlog crc mismatch")
-          consumed += 16L + len
-          PbBinlogFile.decodePayload(payload)
-        }
-      }
+      strictIn = new BufferedInputStream(fs.open(hPath))
+      PbBinlogFile.readFrames(strictIn, fileLen, path)
     }
 
   // positions of the requested columns in the full envelope

@@ -355,7 +355,7 @@ object CdcStream {
       emit: Option[DecodedBatch => Unit] = None,
       fillOriginDefaults: Boolean = false): StreamingQuery =
     decodeQuery(wire, tracker, outDir, checkpoint, Seq(schemaName),
-      schemaOf = lit(schemaName), tableOf = tableOf,
+      schemaOf = None, tableOf = tableOf,
       layout = (id, _, t) => s"$outDir/data/batch=$id/table=$t",
       emit.map(f => (b: DecodedBatchMulti) =>
         f((b._1, b._2.map { case ((_, t), v) => t -> v }, b._3))),
@@ -379,8 +379,8 @@ object CdcStream {
       schemaOf: Column, tableOf: Column,
       emit: Option[DecodedBatchMulti => Unit] = None,
       fillOriginDefaults: Boolean = false): StreamingQuery =
-    decodeQuery(wire, tracker, outDir, checkpoint, schemas, schemaOf, tableOf,
-      layout = (id, s, t) => s"$outDir/data/batch=$id/schema=$s/table=$t",
+    decodeQuery(wire, tracker, outDir, checkpoint, schemas, Some(schemaOf),
+      tableOf, layout = (id, s, t) => s"$outDir/data/batch=$id/schema=$s/table=$t",
       emit, fillOriginDefaults)
 
   /** Test hook: per-output-dir count of the tables the last batch seeded
@@ -550,7 +550,7 @@ object CdcStream {
     * both equivalence points are supported. */
   private def decodeQuery(wire: DataFrame, tracker: SchemaTracker,
       outDir: String, checkpoint: String, schemas: Seq[String],
-      schemaOf: Column, tableOf: Column,
+      schemaOf: Option[Column], tableOf: Column,
       layout: (Long, String, String) => String,
       emit: Option[DecodedBatchMulti => Unit],
       fillOriginDefaults: Boolean = false): StreamingQuery = {
@@ -564,8 +564,18 @@ object CdcStream {
     def normId(id: String): String =
       if (fold) id.toLowerCase(java.util.Locale.ROOT) else id
     val trackedSchemas = schemas.map(normId).toSet
-    val sOf = if (fold) lower(schemaOf) else schemaOf
+    // no routing expression: every frame is the one schema's
+    val sOf = schemaOf.fold(lit(normId(schemas.head)))(
+      s => if (fold) lower(s) else s)
     val tOf = if (fold) lower(tableOf) else tableOf
+    // a decode leg's frames: the single-schema decode matches the table
+    // alone (its schema is a literal, and comparing it with itself is a
+    // constant-true predicate Spark warns about per leg); the multi-schema
+    // decode keeps the schema match even over a one-schema set, because a
+    // routed schema can carry a foreign schema's table of the same name
+    def legOf(k: (String, String)): Column =
+      if (schemaOf.isEmpty) tOf === lit(k._2)
+      else sOf === lit(k._1) && tOf === lit(k._2)
     // A4-parity event counts in the query's own progress stream
     // (`StreamingQueryProgress.observedMetrics`) — [[DecodeMetricsListener]]
     // merges these with the query's [[decodeCounts]], so an operator reads
@@ -765,8 +775,7 @@ object CdcStream {
             val wireSchema = if (info.columns.isEmpty) new StructType()
               else StructType.fromDDL(info.columns.mkString(", "))
             val leg = batch
-              .filter(col("op") =!= "DDL" && sOf === lit(k._1) &&
-                tOf === lit(k._2) &&
+              .filter(col("op") =!= "DDL" && legOf(k) &&
                 col("commit_ts") > lowerOf(k) && col("commit_ts") <= upper)
             // the parse is bound to ONE column in its own projection, so
             // the per-field reads below are GetStructField over an

@@ -28,11 +28,6 @@ object MetaFs {
 
   def exists(path: String): Boolean = fs(path).exists(new Path(path))
 
-  def isDirectory(path: String): Boolean = {
-    val f = fs(path); val p = new Path(path)
-    f.exists(p) && f.getFileStatus(p).isDirectory
-  }
-
   def readString(path: String): String = {
     val f = fs(path); val p = new Path(path)
     val len = f.getFileStatus(p).getLen

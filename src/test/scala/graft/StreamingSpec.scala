@@ -440,11 +440,12 @@ class StreamingSpec extends SparkSpec {
     assert(state(1L) == 42.0 && state.size == 64)
   }
 
-  test("upsert sink: a no-DDL batch costs a bounded job count and writes one file per touched bucket") {
-    // the micro-batch engine runs a foreachBatch sink with adaptive
-    // execution off, so the frame keeps every shuffle's partition count;
-    // the spec applies under both settings and counts jobs under the
-    // streaming one
+  /** What one lake-sink apply costs: the jobs `run` submits and the
+    * shuffle count of each staging write (`state_tmp`), in arrival order.
+    * Both listeners sit on the one listener bus, which delivers in order:
+    * once a marker job submitted after `run` is seen, every job and write
+    * of `run` has been counted. */
+  private def sinkCost(run: => Unit): (Int, Seq[Int]) = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.QueryExecution
@@ -452,7 +453,6 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.util.QueryExecutionListener
     val tag = "graft.spec.sink"
-    // the shuffle count of each staging write, in arrival order
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val writeListener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -471,10 +471,9 @@ class StreamingSpec extends SparkSpec {
         Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
           .foreach(jobs.add)
     }
-    // the listener bus delivers in order: once a marker job is seen,
-    // every job submitted before it has been counted
-    def jobsOf(run: => Unit): Int = {
-      jobs.clear()
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(writeListener)
+    try {
       spark.sparkContext.setLocalProperty(tag, "apply")
       try run finally spark.sparkContext.setLocalProperty(tag, null)
       spark.sparkContext.setLocalProperty(tag, "marker")
@@ -482,16 +481,37 @@ class StreamingSpec extends SparkSpec {
       val deadline = System.nanoTime() + 30000000000L
       while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
       assert(jobs.contains("marker"), "the listener bus never delivered the marker job")
-      jobs.asScala.count(_ == "apply")
+      (jobs.asScala.count(_ == "apply"), writes.asScala.toSeq)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(writeListener)
     }
-    def filesPerBucket(root: String): Map[String, Int] =
-      Files.list(Paths.get(s"$root/state")).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("bucket="))
-        .map(d => d.getFileName.toString -> Files.list(d).iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet")))
-        .toMap
-    spark.sparkContext.addSparkListener(listener)
-    spark.listenerManager.register(writeListener)
+  }
+
+  /** Parquet files per bucket directory of a lake sink's state. */
+  private def filesPerBucket(root: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    Files.list(Paths.get(s"$root/state")).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("bucket="))
+      .map(d => d.getFileName.toString -> Files.list(d).iterator().asScala
+        .count(_.getFileName.toString.endsWith(".parquet")))
+      .toMap
+  }
+
+  /** The per-key model of a change stream: each key's last row by commit
+    * ts, a final D removing the key. */
+  private def lastImages(rows: Seq[(Long, Long, String, Double)]): Map[Long, Double] =
+    rows.sortBy(_._1).foldLeft(Map.empty[Long, Double]) {
+      case (m, (_, _, "DDL", _)) => m
+      case (m, (_, pk, "D", _)) => m - pk
+      case (m, (_, pk, _, v)) => m + (pk -> v)
+    }
+
+  test("upsert sink: a no-DDL batch costs a bounded job count and writes one file per touched bucket") {
+    // the micro-batch engine runs a foreachBatch sink with adaptive
+    // execution off, so the frame keeps every shuffle's partition count;
+    // the spec applies under both settings and counts jobs under the
+    // streaming one
     val aqeKey = "spark.sql.adaptive.enabled"
     val aqe0 = spark.conf.get(aqeKey)
     try Seq(false, true).foreach { aqe =>
@@ -501,7 +521,7 @@ class StreamingSpec extends SparkSpec {
       // 4 input partitions, keys over every bucket
       val b0 = (1L to 400L).map(pk => (pk, pk, "I", pk.toDouble))
         .toDF("commit_ts", "pk", "op", "value").repartition(4)
-      assert(sink.applyBatch(b0, 0L))
+      val (_, writes0) = sinkCost(assert(sink.applyBatch(b0, 0L)))
       val first = filesPerBucket(root)
       assert(first.size == 8 && first.values.forall(_ == 1),
         s"aqe=$aqe: expected one parquet file in each of 8 buckets, got $first")
@@ -510,16 +530,15 @@ class StreamingSpec extends SparkSpec {
           (1000L + pk, pk, if (pk % 2 == 0) "D" else if (pk <= 400) "U" else "I",
             -pk.toDouble))
         .toDF("commit_ts", "pk", "op", "value").repartition(4)
-      val n = jobsOf(assert(sink.applyBatch(b1, 1L)))
+      val (n, writes) = sinkCost(assert(sink.applyBatch(b1, 1L)))
       val second = filesPerBucket(root)
       assert(second.size == 8 && second.values.forall(_ == 1),
         s"aqe=$aqe: expected one parquet file in each of 8 buckets, got $second")
       if (!aqe) {
         assert(n <= 3, s"a no-DDL batch ran $n jobs")
         // one exchange serves the merge window and the bucket writer
-        val deadline = System.nanoTime() + 30000000000L
-        while (writes.size < 2 && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(writes.asScala.toSeq == Seq(1, 1), s"shuffles per staging write: $writes")
+        assert(writes0 ++ writes == Seq(1, 1),
+          s"shuffles per staging write: ${writes0 ++ writes}")
       }
       val state = sink.currentState(spark).collect()
         .map(r => r.getLong(0) -> r.getDouble(2)).toMap
@@ -528,11 +547,45 @@ class StreamingSpec extends SparkSpec {
         (1L to 600L by 3L).filter(_ % 2 == 0)
       assert(state == expect)
       info(s"aqe=$aqe: $n jobs for the merge batch")
-    } finally {
-      spark.conf.set(aqeKey, aqe0)
-      spark.sparkContext.removeSparkListener(listener)
-      spark.listenerManager.unregister(writeListener)
-    }
+    } finally spark.conf.set(aqeKey, aqe0)
+  }
+
+  test("upsert sink: a batch with DDL rows merges once, writes one file per touched bucket and a marker per DDL") {
+    // the lake state has no shape a DDL changes: a DDL row leaves a marker,
+    // it does not cut the batch into merges of their own
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqe0 = spark.conf.get(aqeKey)
+    spark.conf.set(aqeKey, "false")
+    try {
+      val root = graft.util.Scratch.dir("graft_ddl_one_merge_sink")
+      val sink = new UpsertSink(root, nBuckets = 8)
+      val r0 = (1L to 400L).map(pk => (pk, pk, "I", pk.toDouble))
+      assert(sink.applyBatch(r0.toDF("commit_ts", "pk", "op", "value"), 0L))
+      // keys straddle both barriers: updated, deleted, deleted then
+      // re-inserted, inserted then deleted
+      val before = (1L to 600L by 3L).map(pk =>
+        (1000L + pk, pk, if (pk % 2 == 0) "D" else if (pk <= 400) "U" else "I",
+          -pk.toDouble))
+      val ddl = Seq((1700L, 0L, "DDL", 0.0), (1800L, 0L, "DDL", 0.0))
+      val after = (1L to 600L by 5L).map(pk =>
+        (2000L + pk, pk, if (pk % 4 == 0) "D" else "U", pk * 10.0))
+      val r1 = before ++ ddl ++ after
+      val (n, writes) = sinkCost(assert(sink.applyBatch(
+        r1.toDF("commit_ts", "pk", "op", "value").repartition(4), 1L)))
+      assert(n <= 3, s"a batch with two DDL rows ran $n jobs")
+      assert(writes == Seq(1), s"shuffles per staging write: $writes")
+      val files = filesPerBucket(root)
+      assert(files.size == 8 && files.values.forall(_ == 1),
+        s"expected one parquet file in each of 8 buckets, got $files")
+      Seq(1700L, 1800L).foreach { ts =>
+        val marker = f"$root/_ddl_log/${1L}%020d-$ts%020d"
+        assert(graft.util.MetaFs.exists(marker), s"missing DDL marker $marker")
+      }
+      val state = sink.currentState(spark).collect()
+        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      assert(state == lastImages(r0 ++ r1))
+      info(s"$n jobs for a batch with two DDL rows")
+    } finally spark.conf.set(aqeKey, aqe0)
   }
 
   test("lake sinks resolve scheme-qualified URIs through the Hadoop FileSystem") {
@@ -1000,12 +1053,16 @@ class StreamingSpec extends SparkSpec {
     assert(recovered.applyBatch(b1, 1L))
     assert(state() == Map(1L -> 11.0, 3L -> 30.0, 4L -> 44.0))
 
-    // singleExec mode (the reference's non-batched, non-safe statement
-    // path): replaying an insert batch hits the real engine's duplicate-key
-    // error — the exact failure the reference's post-restart safe-mode
-    // window exists to absorb, and the batched REPLACE path never produces
-    val unsafe = new JdbcUpsertSink(url, singleExec = true, clusterId = 100L)
-    intercept[Exception] { unsafe.applyBatch(b0, 0L) }
+    // the loader's per-DML path with safe mode off (the reference's
+    // non-batched, non-safe statement path): replaying an insert batch hits
+    // the real engine's duplicate-key error — the exact failure the
+    // reference's post-restart safe-mode window exists to absorb, and the
+    // batched REPLACE path never produces
+    intercept[Exception] {
+      new graft.sinks.JdbcSchemaLoader(url, clusterId = 100L).applyBatch(
+        Map("GRAFT_STATE" -> b0.withColumnRenamed("value", "val")), 0L,
+        merge = false, safeMode = false)
+    }
   }
 
   test("JDBC sink binds NULL values as SQL NULL, not a crash") {
@@ -3710,6 +3767,31 @@ class StreamingSpec extends SparkSpec {
       if (t == null) Nil else t +: causes(t.getCause)
     assert(causes(ex).exists(c => String.valueOf(c.getMessage)
       .contains("outside the decode's schema set")), s"got $ex")
+  }
+
+  test("multi-schema decode over one schema keeps the schema match: a foreign schema's same-name table stays out") {
+    // the single-schema decode matches legs on the table alone; the
+    // multi-schema decode must not, even when its set holds one schema —
+    // its routed schema can name a foreign database's table of that name
+    import graft.sources.PbBinlogFile
+    val wireDir = graft.util.Scratch.dir("graft_one_schema_wire")
+    val outDir = graft.util.Scratch.dir("graft_one_schema_out")
+    val ckpt = graft.util.Scratch.dir("graft_one_schema_ckpt")
+    PbBinlogFile.write(
+      wireDml("sa:t", (1L to 9L by 2), n => s"""{"k": ${n}.25}""")
+        .unionByName(wireDml("sb:t", (2L to 10L by 2), n => s"""{"k": ${n}.5}""")),
+      wireDir, nFiles = 1)
+    val tracker = new SchemaTracker()
+    tracker.createTable("sa", "t", Seq("k DOUBLE"), version = 0)
+    val q = CdcStream.ddlDrivenDecodeSchemas(
+      PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
+      Seq("sa"), substring_index(col("event_type"), ":", 1),
+      substring_index(col("event_type"), ":", -1))
+    try q.processAllAvailable() finally q.stop()
+    val rows = spark.read.parquet(s"$outDir/data/batch=0/schema=sa/table=t")
+      .select("commit_ts", "k_str").as[(Long, String)].collect().sorted.toSeq
+    assert(rows == (1L to 9L by 2).map(n => n -> s"$n.25"))
+    assert(!new java.io.File(s"$outDir/data/batch=0/schema=sb").exists())
   }
 
   test("streamed FLASHBACK TABLE and CREATE TABLE LIKE: recovery and shape-copy on the wire") {

@@ -1,0 +1,192 @@
+#!/usr/bin/env python3
+"""Paired benchmark runs of two checkouts: a parent and a change.
+
+Usage:
+    python3 tools/bench_pairs.py <parentDir> <changeDir> --workload <name> \\
+        --seeds <first>-<last> [--save <runs.jsonl>]
+    python3 tools/bench_pairs.py --selftest
+
+Each checkout runs the `command` of its own BENCHMARK.json with that file's
+`run_seconds`, untraced, one run at a time: for each seed both sides run
+back to back, the parent first on odd seeds and the change first on even
+seeds. Every run is printed as it ends. Then, for each end-to-end metric of
+the change's BENCHMARK.json:
+
+  - each side's median (q1-q3), quartiles interpolated linearly;
+  - how many pairs the change wins, by the metric's `better`;
+  - whether a gain holds: the change wins at least 9 of every 10 pairs and
+    its median beats the parent's by more than the parent's q3 - q1;
+  - whether the change's median stays within the metric's `bound`, a
+    fraction of the parent's median.
+
+A run that is not `correct`, has `failed` > 0 or does not finish is
+flagged. The exit status is 1 when a run is flagged or a median is out of
+its bound, else 0. The script reads BENCHMARK.json and writes nothing in
+either checkout besides what the benchmark command itself writes.
+"""
+import argparse
+import json
+import math
+import os
+import statistics
+import subprocess
+import sys
+
+
+def quartiles(xs):
+    """(q1, median, q3) with linear interpolation between order statistics."""
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def wins(parent, change, better):
+    """Pairs in which the change's value is strictly better."""
+    if better == "higher":
+        return sum(c > p for p, c in zip(parent, change))
+    return sum(c < p for p, c in zip(parent, change))
+
+
+def summarize(parent, change, better, bound):
+    """The paired figures of one metric over runs that pair up by index."""
+    p1, pm, p3 = quartiles(parent)
+    c1, cm, c3 = quartiles(change)
+    won = wins(parent, change, better)
+    gap = cm - pm if better == "higher" else pm - cm
+    gain = won >= math.ceil(0.9 * len(parent)) and gap > p3 - p1
+    if better == "higher":
+        within = cm >= pm * (1 - bound)
+    else:
+        within = cm <= pm * (1 + bound)
+    return {"parent": (p1, pm, p3), "change": (c1, cm, c3), "wins": won,
+            "pairs": len(parent), "gain": gain, "within_bound": within}
+
+
+def run_once(checkout, bench, workload, seed):
+    """One benchmark run in `checkout`; its result JSON, or None."""
+    cmd = bench["command"] + ["--workload", workload, "--seed", str(seed),
+                              "--seconds", str(bench["run_seconds"])]
+    p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
+                       stderr=subprocess.DEVNULL, text=True)
+    lines = [l for l in p.stdout.splitlines() if l.strip()]
+    if p.returncode != 0 or not lines:
+        return None
+    try:
+        return json.loads(lines[-1])
+    except ValueError:
+        return None
+
+
+def flagged(result):
+    return (result is None or not result.get("correct")
+            or result.get("failed", 0) > 0)
+
+
+def value(result, metric):
+    m = (result or {}).get("metrics", {}).get(metric)
+    return None if m is None else m["value"]
+
+
+def seed_range(text):
+    first, _, last = text.partition("-")
+    return list(range(int(first), int(last or first) + 1))
+
+
+def report(bench, runs):
+    """Print the per-metric table over the pairs where both sides ran;
+    return True when every run is clean and every median within bound."""
+    ok = not any(flagged(r[side]) for r in runs for side in ("parent", "change"))
+    for m in bench["end_to_end"]:
+        name = m["name"]
+        pairs = [(value(r["parent"], name), value(r["change"], name))
+                 for r in runs]
+        pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
+        if not pairs:
+            print(f"{name}: no complete pair")
+            ok = False
+            continue
+        s = summarize([p for p, _ in pairs], [c for _, c in pairs],
+                      m["better"], m["bound"])
+        (p1, pm, p3), (c1, cm, c3) = s["parent"], s["change"]
+        change = (cm - pm) / pm * 100 if pm else float("nan")
+        print(f"{name} ({m['unit']}, {m['better']} is better, bound {m['bound']}): "
+              f"parent {pm:.1f} ({p1:.1f}-{p3:.1f}) -> change {cm:.1f} "
+              f"({c1:.1f}-{c3:.1f}), {change:+.1f}%; change wins "
+              f"{s['wins']}/{s['pairs']}; gain rule "
+              f"{'holds' if s['gain'] else 'does not hold'}; "
+              f"{'within' if s['within_bound'] else 'OUT OF'} bound")
+        ok = ok and s["within_bound"]
+    return ok
+
+
+def selftest():
+    parent = [10.0, 11.0, 12.0, 13.0, 14.0, 15.0, 16.0, 17.0, 18.0, 19.0]
+    assert quartiles(parent) == (12.25, 14.5, 16.75)
+    faster = [p + 5 for p in parent]
+    s = summarize(parent, faster, "higher", 0.25)
+    assert s["wins"] == 10 and s["gain"] and s["within_bound"], s
+    # a gap of 4 is below the parent's q3 - q1 = 4.5: no gain
+    s = summarize(parent, [p + 4 for p in parent], "higher", 0.25)
+    assert s["wins"] == 10 and not s["gain"], s
+    # 8 of 10 wins is too few, however large the gap
+    mixed = [p + 20 for p in parent[:8]] + [p - 1 for p in parent[8:]]
+    s = summarize(parent, mixed, "higher", 0.25)
+    assert s["wins"] == 8 and not s["gain"], s
+    # lower is better: +30% is out of a 0.25 bound, +20% within
+    s = summarize(parent, [p * 1.3 for p in parent], "lower", 0.25)
+    assert s["wins"] == 0 and not s["within_bound"], s
+    s = summarize(parent, [p * 1.2 for p in parent], "lower", 0.25)
+    assert s["within_bound"] and not s["gain"], s
+    # higher is better: -30% is out of the bound, ties win nothing
+    s = summarize(parent, [p * 0.7 for p in parent], "higher", 0.25)
+    assert not s["within_bound"], s
+    assert summarize(parent, parent, "higher", 0.25)["wins"] == 0
+    assert flagged(None) and flagged({"correct": False, "failed": 0})
+    assert flagged({"correct": True, "failed": 1})
+    assert not flagged({"correct": True, "failed": 0})
+    assert seed_range("611-620") == list(range(611, 621))
+    assert seed_range("7") == [7]
+    print("selftest ok")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("parent", nargs="?")
+    ap.add_argument("change", nargs="?")
+    ap.add_argument("--workload")
+    ap.add_argument("--seeds", help="first-last, inclusive")
+    ap.add_argument("--save", help="append each pair as a JSON line here")
+    ap.add_argument("--selftest", action="store_true")
+    args = ap.parse_args()
+    if args.selftest:
+        selftest()
+        return
+    if not (args.parent and args.change and args.workload and args.seeds):
+        ap.error("parent, change, --workload and --seeds are required")
+    with open(os.path.join(args.change, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    dirs = {"parent": args.parent, "change": args.change}
+    runs = []
+    for seed in seed_range(args.seeds):
+        order = ("parent", "change") if seed % 2 else ("change", "parent")
+        pair = {"seed": seed}
+        for side in order:
+            r = run_once(dirs[side], bench, args.workload, seed)
+            pair[side] = r
+            metrics = {k: round(v["value"], 1)
+                       for k, v in (r or {}).get("metrics", {}).items()}
+            print(f"seed {seed} {side}: "
+                  f"{'FLAGGED ' if flagged(r) else ''}"
+                  f"correct={(r or {}).get('correct')} "
+                  f"failed={(r or {}).get('failed')} {metrics}", flush=True)
+        runs.append(pair)
+        if args.save:
+            with open(args.save, "a") as f:
+                f.write(json.dumps(pair) + "\n")
+    ok = report(bench, runs)
+    sys.exit(0 if ok else 1)
+
+
+if __name__ == "__main__":
+    main()
