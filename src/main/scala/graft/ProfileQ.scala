@@ -7,8 +7,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * settings and prints each pass's total (`===== q passN total`, the figure
   * a paired timing compares), then, for the warm pass, every Spark job's
   * wall time and call site from a listener, so a harness-heavy query's cost
-  * decomposes into its staging / streaming / read-back jobs. Gaps between
-  * jobs = driver-side work (planning, JDBC, tracker walks). */
+  * decomposes into its staging / streaming / read-back jobs. Each stage
+  * line sums its tasks' executor run time (`run=`), task wall time
+  * (`wall=`) and executor deserialize time (`deser=`, the per-task cost of
+  * shipping the task's closure and lineage). Gaps between jobs =
+  * driver-side work (planning, JDBC, tracker walks). */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -18,8 +21,10 @@ object ProfileQ {
       stages: Seq[Int])
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     val order = new java.util.concurrent.CopyOnWriteArrayList[Int]()
-    // per-stage: (name, numTasks, sum executor run ms, sum task wall ms)
-    case class St(name: String, var tasks: Int, var runMs: Long, var wallMs: Long)
+    // per-stage: (name, numTasks, sum executor run ms, sum task wall ms,
+    // sum executor deserialize ms)
+    case class St(name: String, var tasks: Int, var runMs: Long,
+      var wallMs: Long, var deserMs: Long)
     val stages = new java.util.concurrent.ConcurrentHashMap[Int, St]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -34,15 +39,19 @@ object ProfileQ {
         if (j != null) j.t1 = System.nanoTime()
       }
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val s = stages.computeIfAbsent(e.stageId, _ => St(e.taskType, 0, 0L, 0L))
+        val s = stages.computeIfAbsent(e.stageId,
+          _ => St(e.taskType, 0, 0L, 0L, 0L))
         s.tasks += 1
-        if (e.taskMetrics != null) s.runMs += e.taskMetrics.executorRunTime
+        if (e.taskMetrics != null) {
+          s.runMs += e.taskMetrics.executorRunTime
+          s.deserMs += e.taskMetrics.executorDeserializeTime
+        }
         if (e.taskInfo != null) s.wallMs += e.taskInfo.duration
       }
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val s = stages.computeIfAbsent(e.stageInfo.stageId,
-          _ => St("", 0, 0L, 0L))
+          _ => St("", 0, 0L, 0L, 0L))
         stages.put(e.stageInfo.stageId, s.copy(name = e.stageInfo.name.take(60)))
         ()
       }
@@ -72,7 +81,8 @@ object ProfileQ {
                 val s = stages.get(sid)
                 if (s != null && s.tasks > 0)
                   println(f"      stage $sid%4d tasks=${s.tasks}%3d " +
-                    f"run=${s.runMs / 1e3}%6.2f wall=${s.wallMs / 1e3}%6.2f  ${s.name}")
+                    f"run=${s.runMs / 1e3}%6.2f wall=${s.wallMs / 1e3}%6.2f " +
+                    f"deser=${s.deserMs / 1e3}%6.2f  ${s.name}")
               }
               prevEnd = math.max(prevEnd, j.t1)
             }

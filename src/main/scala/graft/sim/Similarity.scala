@@ -690,8 +690,10 @@ object Similarity {
         l2i(col("qsv"), col("qc")).as("dt"))
     val wRank = Window.partitionBy("query_id")
       .orderBy(col("approx_l2"), col("vec_id"))
-    codes.join(dtab,
-        codes("sub") === dtab("sub") && codes("code") === dtab("cent_id"))
+    // both sides carry sv's `sub` attribute: the aliases make the join
+    // compare the two sides' columns, not one column with itself
+    codes.as("c").join(dtab.as("t"),
+        col("c.sub") === col("t.sub") && col("c.code") === col("t.cent_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("dt")).as("approx_l2"))
       .filter(col("vec_id") =!= col("query_id"))

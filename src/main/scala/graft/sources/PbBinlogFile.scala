@@ -6,11 +6,11 @@ import java.util.zip.CRC32C
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.util.SerializableHadoopConf
+import org.apache.spark.util.SerializableConfiguration
 
 /** S6/K4 against the real wire shape: the reference's length-prefixed
   * binlog-file format, read and written as binary, not a parquet analog.
@@ -80,6 +80,20 @@ object PbBinlogFile {
     fs.setWriteChecksum(false)
     fs
   }
+
+  /** The driver's Hadoop configuration as one broadcast, for executor code
+    * that does its own filesystem IO (segment readers, the writer, the
+    * corruption injector): a task carries a small handle and each
+    * executor fetches the value once, where a configuration captured by
+    * value (over a thousand keys, ~100 KB) is deserialized again by every
+    * task. What Spark's own `SerializableConfiguration.broadcast` does;
+    * that helper is not public API. The caller owns the broadcast: it
+    * destroys it when its jobs are done, or, where the handle outlives the
+    * call (a batch scan's reader factory), leaves it to Spark's context
+    * cleaner. */
+  private[sources] def broadcastConf(
+      sc: SparkContext): Broadcast[SerializableConfiguration] =
+    sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
 
   /** Visible binlog segments under `dir` as (name, length) — dot-prefixed
     * `.inprogress` temps excluded by the name filter. Listing is driver
@@ -396,12 +410,8 @@ object PbBinlogFile {
     * idempotently, different bytes throw — never silent loss. */
   def write(changes: DataFrame, dir: String, nFiles: Int = 4,
       maxBytesPerFile: Long = 512L * 1024 * 1024): Unit = {
-    // ship the DRIVER's Hadoop conf to the writing tasks: executors must
-    // resolve the same filesystem (fs.defaultFS, store credentials) the
-    // driver planned the layout for
-    val hconf = new SerializableHadoopConf(
-      changes.sparkSession.sparkContext.hadoopConfiguration)
-    fsFor(dir, hconf.value).mkdirs(new HPath(dir))
+    val sc = changes.sparkSession.sparkContext
+    fsFor(dir, sc.hadoopConfiguration).mkdirs(new HPath(dir))
     import changes.sparkSession.implicits._
     val normalized = optionalCols.foldLeft(changes) { case (df, (n, t)) =>
       if (df.columns.contains(n)) df else df.withColumn(n, lit(null).cast(t))
@@ -425,8 +435,12 @@ object PbBinlogFile {
         col("event_type"), col("ts_us"), col("value"), col("props"),
         col("dec38"), col("udec"), col("bits"), col("enum_ord"),
         col("ddl_sql"))
-    ds.foreachPartition { rows: Iterator[PbChange] =>
-      val fs = writerFsFor(dir, hconf.value)
+    // ship the DRIVER's Hadoop conf to the writing tasks: executors must
+    // resolve the same filesystem (fs.defaultFS, store credentials) the
+    // driver planned the layout for — one broadcast, not a copy per task
+    val hconf = broadcastConf(sc)
+    try ds.foreachPartition { rows: Iterator[PbChange] =>
+      val fs = writerFsFor(dir, hconf.value.value)
       val pid = TaskContext.getPartitionId()
       var out: BufferedOutputStream = null
       var finalPath: HPath = null
@@ -533,7 +547,7 @@ object PbBinlogFile {
         closeSegment()
       } catch { case t: Throwable => abortSegment(); throw t }
       finally fs.close() // private newInstance, never the shared cache
-    }
+    } finally hconf.destroy()
   }
 
   /** Age past which gc reaps an `.inprogress` temp: 24 h, far beyond any
@@ -769,12 +783,13 @@ object PbBinlogFile {
     // name prefix, not contains: a crashed/speculative writer's
     // `.binlog-*.inprogress` temp (which read() skips) must not be parsed
     // as complete frames by the corruption injector
-    val hconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val files = listSegments(out, hconf.value)
+    val files = listSegments(out, spark.sparkContext.hadoopConfiguration)
+    val hconf = broadcastConf(spark.sparkContext)
     // numSlices must be positive even for the degenerate empty feed
-    spark.sparkContext.parallelize(files, math.max(files.size, 1))
-      .foreach(n => corruptFile(fsFor(out, hconf.value), new HPath(out, n),
-        ts => ts % 7 == 0))
+    try spark.sparkContext.parallelize(files, math.max(files.size, 1))
+      .foreach(n => corruptFile(fsFor(out, hconf.value.value),
+        new HPath(out, n), ts => ts % 7 == 0))
+    finally hconf.destroy()
     read(spark, out, recover = true)
       .select("commit_ts", "pk", "op", "event_type", "ts", "value", "props")
   }

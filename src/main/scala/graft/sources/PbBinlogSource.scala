@@ -6,6 +6,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -17,8 +18,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, Greate
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-
-import graft.util.SerializableHadoopConf
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 `Table` over a pb binlog directory — the Catalyst-visible
   * form of [[PbBinlogFile.read]] (SURVEY §4 "optionally a v2 Table source").
@@ -196,10 +196,11 @@ class PbBinlogScan(val dir: String, val recover: Boolean, val tsLo: Long,
     sel.map(n => PbBinlogInputPartition(s"$dir/$n"): InputPartition).toArray
   }
 
+  /** One broadcast of the driver's Hadoop configuration per scan; Spark's
+    * context cleaner reclaims it once the factory is unreachable. */
   override def createReaderFactory(): PartitionReaderFactory =
     PbBinlogReaderFactory(
-      new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration),
+      PbBinlogFile.broadcastConf(SparkSession.active.sparkContext),
       recover, tsLo, tsHi, required.fieldNames)
 }
 
@@ -239,14 +240,21 @@ object PbBinlogOffset {
   * newly promoted segments, pruned by any pushed commit-ts bounds exactly
   * like the batch scan, decoded by the SAME reader factory. Listing is
   * driver metadata work per trigger; decode fans out one partition per new
-  * segment. */
+  * segment.
+  *
+  * The driver's Hadoop configuration is broadcast ONCE, when the stream is
+  * built: every trigger's reader factory carries the same broadcast handle
+  * instead of a serialized copy of the configuration (over a thousand
+  * keys, ~100 KB) inside every task, and the driver-side
+  * listing reads the same value. The broadcast lives as long as the stream
+  * and is destroyed in [[stop]], when the query ends. */
 class PbBinlogMicroBatchStream(dir: String, recover: Boolean, tsLo: Long,
     tsHi: Long, required: StructType,
     maxFilesPerTrigger: Int = 0) extends MicroBatchStream
     with SupportsAdmissionControl {
 
-  private val conf = new SerializableHadoopConf(
-    SparkSession.active.sparkContext.hadoopConfiguration)
+  private val conf: Broadcast[SerializableConfiguration] =
+    PbBinlogFile.broadcastConf(SparkSession.active.sparkContext)
 
   override def initialOffset(): Offset = PbBinlogOffset(Seq.empty)
 
@@ -265,7 +273,7 @@ class PbBinlogMicroBatchStream(dir: String, recover: Boolean, tsLo: Long,
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val seen = start.asInstanceOf[PbBinlogOffset].files.toSet
-    val listed = PbBinlogFile.listSegments(dir, conf.value)
+    val listed = PbBinlogFile.listSegments(dir, conf.value.value)
     val fresh = listed.filterNot(seen)
       .sortBy(n => (PbBinlogFile.segFirstTs(n), n))
     // admission slots go to READABLE segments only: a segment wholly
@@ -302,16 +310,23 @@ class PbBinlogMicroBatchStream(dir: String, recover: Boolean, tsLo: Long,
 
   override def deserializeOffset(json: String): Offset = PbBinlogOffset.fromJson(json)
   override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+  override def stop(): Unit = conf.destroy()
 }
 
-case class PbBinlogReaderFactory(conf: SerializableHadoopConf,
+/** Builds one segment reader per input partition. It holds a broadcast
+  * handle to the driver's Hadoop configuration, not the configuration
+  * itself: executors resolve the same filesystem the driver listed
+  * (fs.defaultFS, store credentials, registered schemes) and fetch the
+  * value once per executor instead of deserializing it in every task. The
+  * creator owns the broadcast's lifetime — the stream destroys its own in
+  * `stop()`, a batch scan's is reclaimed by Spark's context cleaner. */
+case class PbBinlogReaderFactory(conf: Broadcast[SerializableConfiguration],
     recover: Boolean, tsLo: Long, tsHi: Long,
     columns: Array[String]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PbBinlogPartitionReader(
       partition.asInstanceOf[PbBinlogInputPartition].path,
-      conf.value, recover, tsLo, tsHi, columns)
+      conf.value.value, recover, tsLo, tsHi, columns)
 }
 
 /** Decodes one segment file. Strict mode streams the open

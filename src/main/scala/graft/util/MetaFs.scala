@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side metadata and state-swap IO for the lake sinks
@@ -49,11 +49,19 @@ object MetaFs {
     * document. */
   def writeString(path: String, s: String): Unit = {
     val f = fs(path)
+    // the marker's bytes go through the checksummed filesystem's raw one:
+    // no `.crc` sidecar per marker, and the shared cached instance keeps its
+    // checksum flag. The rename is raw too, so a sidecar a crashed writer
+    // left beside the temp never moves onto the marker
+    val raw = f match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
     val tmp = new Path(path + ".tmp")
-    val out = f.create(tmp, true)
+    val out = raw.create(tmp, true)
     try out.write(s.getBytes("UTF-8")) finally out.close()
     f.delete(new Path(path), false)
-    if (!f.rename(tmp, new Path(path)))
+    if (!raw.rename(tmp, new Path(path)))
       throw new java.io.IOException(s"rename $tmp -> $path failed")
   }
 

@@ -257,6 +257,56 @@ class SourcesSpec extends SparkSpec {
     assert(PbBinlogFile.gc(spark, s"file:$dir", Long.MaxValue / 2).nonEmpty)
   }
 
+  test("pb binlog reader factories ship a broadcast handle, not the Hadoop configuration") {
+    // a task carries its reader factory in its lineage, one per pump source
+    // of a merged wire stream: a Configuration serialized there (~1000 keys,
+    // ~100 KB) would be deserialized again by every task
+    import graft.sources.PbBinlogScanBuilder
+    val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+    val dir = graft.util.Scratch.dir("graft_pbfactory")
+    Seq(1, 4).foreach { pumps =>
+      val scans = (1 to pumps).map(p =>
+        new PbBinlogScanBuilder(s"$dir/pump$p", recover = false).build())
+      val streams = scans.map(_.toMicroBatchStream(s"$dir/ckpt"))
+      try {
+        Seq("stream" -> streams.map(_.createReaderFactory()),
+            "scan" -> scans.map(_.toBatch.createReaderFactory())).foreach {
+          case (kind, factories) =>
+            val bytes = ser.serialize(factories).limit()
+            assert(bytes < 4096,
+              s"$pumps $kind reader factories serialize to $bytes bytes")
+            info(s"$pumps pump(s), $kind factories: $bytes bytes")
+        }
+      } finally streams.foreach(_.stop())
+    }
+  }
+
+  test("pb binlog readers resolve filesystems through the driver's Hadoop configuration") {
+    // a scheme registered ONLY in the driver's hadoopConfiguration, with
+    // the filesystem cache off: a reader holding any other configuration
+    // fails with "No FileSystem for scheme"
+    import graft.sources.PbBinlogFile
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val scheme = CountingLocalFs.Scheme
+    val keys = Seq(s"fs.$scheme.impl" -> classOf[CountingLocalFs].getName,
+      s"fs.$scheme.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => hconf.set(k, v) }
+    try {
+      val dir = s"$scheme://" + graft.util.Scratch.dir("graft_pbdriverconf")
+      val changes = graft.ops.Cdc.changes(spark, sf).filter(col("commit_ts") < 1500)
+      val n = changes.count()
+      PbBinlogFile.write(changes, dir, nFiles = 2)
+      val opens0 = CountingLocalFs.opens.get()
+      assert(PbBinlogFile.read(spark, dir).count() == n)
+      val q = PbBinlogFile.readStream(spark, dir)
+        .writeStream.format("memory").queryName("pb_driver_conf").start()
+      try q.processAllAvailable() finally q.stop()
+      assert(spark.table("pb_driver_conf").count() == n)
+      assert(CountingLocalFs.opens.get() - opens0 >= 4,
+        "the batch and stream readers must open each segment through the scheme")
+    } finally keys.foreach { case (k, _) => hconf.unset(k) }
+  }
+
   test("pb binlog strict read fails on a sub-header torn tail; recover salvages") {
     // the >16-byte torn-frame case is covered above (the length check
     // trips); this pins the sub-16-byte fragment, which a length-gated
@@ -371,4 +421,20 @@ class SourcesSpec extends SparkSpec {
     assert(PbBinlogFile.read(spark, dir, lo, hi).count() ==
       changes.filter(col("commit_ts") >= lo && col("commit_ts") <= hi).count())
   }
+}
+
+/** The local disk under a scheme of its own, counting opened files: a
+  * reader resolves it only through a configuration that registers it. */
+class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${CountingLocalFs.Scheme}:///")
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    CountingLocalFs.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingLocalFs {
+  val Scheme = "graftcount"
+  val opens = new java.util.concurrent.atomic.AtomicLong()
 }

@@ -581,6 +581,10 @@ class StreamingSpec extends SparkSpec {
         val marker = f"$root/_ddl_log/${1L}%020d-$ts%020d"
         assert(graft.util.MetaFs.exists(marker), s"missing DDL marker $marker")
       }
+      // markers are written without checksum sidecars
+      def crcs(d: String) = new java.io.File(d).list().filter(_.endsWith(".crc")).toSeq
+      assert(crcs(s"$root/_ddl_log").isEmpty && crcs(root).isEmpty,
+        s"marker checksum sidecars: ${crcs(s"$root/_ddl_log") ++ crcs(root)}")
       val state = sink.currentState(spark).collect()
         .map(r => r.getLong(0) -> r.getDouble(2)).toMap
       assert(state == lastImages(r0 ++ r1))
