@@ -80,17 +80,7 @@ class HistorySink(root: String) {
     math.max(readMarker(metaPath), readMarker(openMarker))
   }
 
-  /** Roll back (or finish) an open-table swap a crash interrupted: `open`
-    * missing with `open_old` present means the crash hit between the two
-    * renames and `open_old` holds the only copy — promote it back; both
-    * present means only the final delete was lost — drop the stale copy. */
-  private def healHalfSwap(): Unit = {
-    val old = s"$root/open_old"
-    if (MetaFs.exists(old)) {
-      if (!MetaFs.exists(openPath)) MetaFs.rename(old, openPath)
-      else MetaFs.delete(old)
-    }
-  }
+  private val openOld = s"$root/open_old"
 
   private def emptyFrame(spark: SparkSession, withTo: Boolean): DataFrame = {
     import org.apache.spark.sql.types._
@@ -102,7 +92,8 @@ class HistorySink(root: String) {
   }
 
   private def openRows(spark: SparkSession): DataFrame = {
-    healHalfSwap() // a read after a mid-swap crash must see the live rows
+    // a read after a mid-swap crash must see the live rows
+    MetaFs.healSwap(openPath, openOld)
     if (MetaFs.exists(openPath))
       spark.read.parquet(openPath).select("pk", "valid_from", "value")
     else emptyFrame(spark, withTo = false)
@@ -182,15 +173,9 @@ class HistorySink(root: String) {
       // write replayed the batch against the ALREADY-advanced open table
       // and appended inverted intervals
       MetaFs.writeString(s"$tmp/_committed_batch", batchId.toString)
-      val old = s"$root/open_old"
-      // self-healing vacate-then-promote (Hadoop rename moves INTO an
-      // existing dir, so the live table steps aside first): openRows above
-      // already healed any leftover half-swap, and the old copy is deleted
-      // only AFTER the promote — a crash at any point is rolled back or
-      // finished by healHalfSwap on the next read/apply
-      if (MetaFs.exists(openPath)) MetaFs.rename(openPath, old)
-      MetaFs.rename(tmp, openPath)
-      MetaFs.delete(old)
+      // a crash at any point of the swap is rolled back or finished on
+      // the next read/apply
+      MetaFs.swapDir(tmp, openPath, openOld)
     }
     MetaFs.writeString(metaPath, batchId.toString)
     true

@@ -409,7 +409,10 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
   /** Execute one statement against the target under the same logged
     * replay guard the batch barriers use (P3): a replayed batch skips an
     * already-executed statement instead of wedging on it. For DDL arriving
-    * in a micro-batch that carries no DML to order against. */
+    * in a micro-batch that carries no DML to order against. The checkpoint
+    * then advances to (batchId, the later of its commit ts and `commitTs`)
+    * — the reference saves a checkpoint on DDL (drainer/syncer.go:253-259)
+    * — and never moves backwards. */
   def executeLoggedDdl(batchId: Long, commitTs: Long, sql: String): Unit =
     withConn { c =>
       JdbcMeta.ensureMeta(c)
@@ -418,6 +421,10 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
         try st.execute(sql) finally st.close()
         JdbcMeta.logDdl(c, batchId, commitTs, sql)
       }
+      val prev = JdbcMeta.load(c, clusterId)
+      if (batchId >= prev.batchId)
+        JdbcMeta.save(c, clusterId, prev.copy(batchId = batchId,
+          commitTs = math.max(prev.commitTs, commitTs), consistent = true))
     }
 
   def createTable(ddl: String): Unit =
@@ -425,6 +432,12 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
 
   def lastCheckpoint: Checkpoint = withConn(JdbcMeta.load(_, clusterId))
   def lastCommitted: Long = lastCheckpoint.batchId
+
+  @transient private lazy val zeroRows = new java.util.concurrent.atomic.AtomicLong
+  /** Non-safe sequence-path UPDATEs ([[applyTableSequence]]) that matched
+    * no row, over this loader's lifetime, counted once per committed
+    * chunk. */
+  def zeroRowUpdates: Long = zeroRows.get
 
   private case class ColMeta(name: String, sqlType: Int, nullable: Boolean)
   private type TableMeta = (Seq[ColMeta], Seq[Seq[String]])
@@ -1023,9 +1036,8 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
     // replay (the migrated-from key is already vacated — the reference
     // absorbs the same window with its restart safe mode) but also what a
     // malformed partial-NULL before-image degrades to; either way it must
-    // be countable, not silent (visible in the Spark UI accumulators)
-    val zeroRowUpdates = slice.sparkSession.sparkContext.longAccumulator(
-      s"graft.loader.$table.zero_row_updates")
+    // be countable, not silent ([[zeroRowUpdates]] after the job)
+    val zeroAcc = slice.sparkSession.sparkContext.longAccumulator
     val presentUks = uks.filter(_.forall(k => frameCols.contains(k.toUpperCase)))
     // per-unique-key old-image binding positions, where the frame carries
     // them — safe mode must also kill the OLD row of a changed-key update
@@ -1166,7 +1178,7 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
             zeroPending = 0 // a retried chunk re-counts from scratch
             try {
               pending.foreach(execRow); c.commit()
-              zeroRowUpdates.add(zeroPending); done = true
+              zeroAcc.add(zeroPending); done = true
             }
             catch {
               case e: SQLException if e.getSQLState == "40001" && attempt < 5 =>
@@ -1185,6 +1197,7 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
         c.close()
       }
     }
+    zeroRows.addAndGet(zeroAcc.value)
     sliceMaxTs
   }
 

@@ -175,28 +175,16 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       stateSchema)
 
-  /** Roll back (or finish) a bucket swap a crash interrupted. The swap
-    * sequence is vacate(dst→old) then promote(src→dst) then delete(old); a
-    * crash between the renames leaves the ONLY copy of the bucket at `old`
-    * with `dst` missing — restore it, or the replayed batch would merge
-    * into an empty bucket and silently lose every pre-existing key. A
-    * leftover `old` WITH `dst` present means the promote succeeded and only
-    * the final delete was lost — drop the stale copy. */
-  private def healBucket(b: String): Unit = {
-    val old = s"$root/bucket_old=$b"
-    if (MetaFs.exists(old)) {
-      val dst = s"$statePath/bucket=$b"
-      if (!MetaFs.exists(dst)) MetaFs.rename(old, dst)
-      else MetaFs.delete(old)
-    }
-  }
-
-  /** At most one bucket can be half-swapped (the swap loop is sequential),
-    * but the old names are deterministic per bucket, so healing is one
-    * directory listing — run before any state read. */
+  /** Roll back (or finish) a bucket swap a crash interrupted
+    * ([[MetaFs.healSwap]]) — unhealed, the replayed batch would merge into
+    * an empty bucket and silently lose every pre-existing key. At most one
+    * bucket can be half-swapped (the swap loop is sequential), but the
+    * aside names are deterministic per bucket, so healing is one directory
+    * listing — run before any state read. */
   private def healHalfSwaps(): Unit =
-    MetaFs.listNames(root).filter(_.startsWith("bucket_old="))
-      .foreach(n => healBucket(n.stripPrefix("bucket_old=")))
+    MetaFs.listNames(root).filter(_.startsWith("bucket_old=")).foreach(n =>
+      MetaFs.healSwap(s"$statePath/bucket=${n.stripPrefix("bucket_old=")}",
+        s"$root/$n"))
 
   def currentState(spark: SparkSession): DataFrame = {
     healHalfSwaps()
@@ -302,22 +290,10 @@ class UpsertSink(root: String, nBuckets: Int = 16) {
     MetaFs.delete(tmp)
     next.write.partitionBy("bucket").mode("overwrite").parquet(tmp)
     MetaFs.mkdirs(statePath)
-    touched.foreach { b =>
-      val src = s"$tmp/bucket=$b"
-      val dst = s"$statePath/bucket=$b"
-      val old = s"$root/bucket_old=$b"
-      // self-healing vacate-then-promote: Hadoop rename moves a source INTO
-      // an existing destination directory instead of replacing it, so the
-      // old bucket must step aside first; the aside name is deterministic
-      // per bucket and the old copy is deleted only AFTER the promote, so a
-      // crash at ANY point leaves a state healBucket can roll back or
-      // finish on replay. A bucket whose keys all deleted writes no staging
-      // dir and simply ends vacated.
-      healBucket(b.toString) // never vacate INTO a leftover old
-      if (MetaFs.exists(dst)) MetaFs.rename(dst, old)
-      if (MetaFs.exists(src)) MetaFs.rename(src, dst)
-      MetaFs.delete(old)
-    }
+    // a bucket whose keys all deleted writes no staging dir and simply
+    // ends vacated
+    touched.foreach(b => MetaFs.swapDir(s"$tmp/bucket=$b",
+      s"$statePath/bucket=$b", s"$root/bucket_old=$b"))
     MetaFs.delete(tmp)
   }
 }

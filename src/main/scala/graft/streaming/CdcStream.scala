@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import scala.collection.mutable
 
 import graft.sinks.UpsertSink
 import graft.streaming.DdlGrammar._
@@ -270,14 +271,21 @@ object CdcStream {
       case other => throw new IllegalArgumentException(s"unknown logged DDL action: $other")
     }
 
+  /** The `from_json` schema of a tracked shape: a table whose LAST column
+    * was dropped decodes to the bare (commit_ts, pk, op, schema_version)
+    * envelope (`fromDDL("")` would throw). */
+  private def wireSchemaOf(info: SchemaTracker.TableInfo): StructType =
+    if (info.columns.isEmpty) new StructType()
+    else StructType.fromDDL(info.columns.mkString(", "))
+
   /** Per-batch decoded output handed to a composing sink (see
     * [[ddlDrivenDecodeTables]]'s `emit`): the batch id, each table's
-    * (column defs, string-decoded union frame), and the batch's applied
-    * wire DDLs as (version, schema, table, action, column, arg). The
-    * frame is a parquet scan of the table's written
-    * `batch=<id>/table=<t>` dir, read with the union's schema — the sink
-    * consumes the finished decode, never its lineage over the wire. The defs
-    * are EVERY def the table's slices decoded with this batch —
+    * (column defs, string-decoded frame), and the batch's applied wire
+    * DDLs as (version, schema, table, action, column, arg). The frame is
+    * a parquet scan of the table's written `batch=<id>/table=<t>` dir,
+    * read with the decoded schema — the sink consumes the finished
+    * decode, never its lineage over the wire. The defs are EVERY def
+    * the table's intervals decoded with this batch —
     * first-seen order, latest type winning — NOT the end-of-batch shape:
     * a column dropped or renamed away mid-batch stays listed so its
     * pre-barrier values remain addressable (a sink deriving the table's
@@ -308,26 +316,33 @@ object CdcStream {
     * expression over the envelope — typically a routing column); the
     * decode set is every table registered in the tracker under
     * `schemaName`, plus tables a wire CREATE TABLE registers (or a RENAME
-    * TABLE re-homes) mid-stream. Inside `foreachBatch` the batch is split
-    * at its DDL barriers IN COMMIT-TS ORDER (DDL is rare and totally
-    * ordered — driver-side tracker state, metadata-sized collect); each
-    * table's frames are sliced at ITS OWN DDL barriers only — a foreign
-    * table's DDL neither cuts nor reshapes another table's decode — and
-    * each slice between barriers decodes DISTRIBUTED with the `from_json`
-    * schema the tracker holds at that version, built from the tracked
-    * column defs (`StructType.fromDDL`). A frame AT the DDL's commit ts
-    * still decodes with the old schema — the DDL takes effect after its
-    * own commit, matching the loader's barrier convention.
+    * TABLE re-homes) mid-stream.
     *
-    * Each table's decoded union lands under
-    * `outDir/data/batch=<id>/table=<t>`, each row stamped with the schema
-    * version that decoded it (the per-table slice shape the multi-table
-    * JDBC loader consumes). Only tables the batch carries DML for write a
+    * Inside `foreachBatch` a driver-side walk (no Spark plan) applies the
+    * batch's DDL IN COMMIT-TS ORDER (DDL is rare and totally ordered —
+    * metadata-sized collect) one logged record at a time. The cut rule:
+    * each record cuts exactly the tables whose catalog entry it changed —
+    * their current shape's interval closes at the record's commit ts and
+    * the new shape's opens there — so a foreign table's DDL neither cuts
+    * nor reshapes another table's decode, and no statement kind needs a
+    * cut of its own. A frame AT the DDL's commit ts still decodes with
+    * the old shape — the DDL takes effect after its own commit, matching
+    * the loader's barrier convention. After the walk, each touched table
+    * with a non-empty interval decodes DISTRIBUTED as ONE frame: its rows
+    * of those intervals, each read with the `from_json` schema of its
+    * interval's shape, built from the tracked column defs
+    * (`StructType.fromDDL`), with NULL where its shape lacks a column.
+    *
+    * Each table's decoded frame lands under
+    * `outDir/data/batch=<id>/table=<t>`, at most one file per batch
+    * partition, each row stamped with the schema version that decoded it
+    * (the per-table shape the multi-table JDBC loader consumes). Only
+    * tables the batch carries DML for write a
     * dir — per-batch work scales with the touched set, so a sparse-traffic
     * table is simply absent from batches that never mention it (consumers
     * must enumerate existing dirs, not tracker.tablesOf × batch ids).
     * `emit` receives, per written table, a scan of that dir under the
-    * union's schema (see [[DecodedBatch]]), so a composing sink's jobs
+    * decoded schema (see [[DecodedBatch]]), so a composing sink's jobs
     * read the decoded rows instead of re-running the decode.
     * Frames addressing no tracked table drop, like the reference's
     * filter-then-load contract — routing upstream decides what reaches the
@@ -383,8 +398,8 @@ object CdcStream {
       tableOf, layout = (id, s, t) => s"$outDir/data/batch=$id/schema=$s/table=$t",
       emit, fillOriginDefaults)
 
-  /** Test hook: per-output-dir count of the tables the last batch seeded
-    * its driver-side slice state with — the O(touched ∪ addressed)
+  /** Test hook: per-output-dir count of the live tables in the last
+    * batch's driver-side key subset — the O(touched ∪ addressed)
     * discipline is asserted by spec against a wide registration (never
     * consulted by product code). */
   private[graft] val lastDriverCatalogSizes =
@@ -529,14 +544,17 @@ object CdcStream {
     }
   }
 
-  /** `fillOriginDefaults = true` opts into the reference's DECODE-TIME
+  /** The body of [[ddlDrivenDecodeTables]] and [[ddlDrivenDecodeSchemas]]:
+    * the driver-side cut walk, then one decoded frame per touched table.
+    *
+    * `fillOriginDefaults = true` opts into the reference's DECODE-TIME
     * T7 fill (ref: drainer/translator/translator.go:169-227
     * getDefaultOrZeroValue fills columns missing from the row data): a
     * row that PREDATES a column added with a CONSTANT default reads that
     * default — cast through the column's wire type, the reference's
     * normalization — and one predating a NOT NULL add WITHOUT a default
     * reads the type's zero value, from the decode's own output instead
-    * of NULL. The fill gates on the row's own slice LACKING the column,
+    * of NULL. The fill gates on the row's own interval LACKING the column,
     * so an EXPLICIT payload null from any version where the column
     * existed survives (including between a drop and a re-add); a
     * CURRENT_TIMESTAMP-family default evaluates at the DDL frame's own
@@ -568,9 +586,9 @@ object CdcStream {
     val sOf = schemaOf.fold(lit(normId(schemas.head)))(
       s => if (fold) lower(s) else s)
     val tOf = if (fold) lower(tableOf) else tableOf
-    // a decode leg's frames: the single-schema decode matches the table
-    // alone (its schema is a literal, and comparing it with itself is a
-    // constant-true predicate Spark warns about per leg); the multi-schema
+    // a table's frames: the single-schema decode matches the table alone
+    // (its schema is a literal, and comparing it with itself is a
+    // constant-true predicate Spark warns about per table); the multi-schema
     // decode keeps the schema match even over a one-schema set, because a
     // routed schema can carry a foreign schema's table of the same name
     def legOf(k: (String, String)): Column =
@@ -600,23 +618,23 @@ object CdcStream {
         // ride over a CREATE INDEX; only a statement that addresses a
         // TRACKED table's shape and cannot apply throws
         def skip(): Unit = addCount(queryId, "skipped_ddl_total", 1L)
-        // the gather plus one filter per (table, slice) re-scan this batch;
+        // the gather plus one filter per touched table re-scan this batch;
         // pin it once instead of re-running the source scan each time.
         // NOT spread (r21, measured both ways): widening the narrow-wire
-        // batch to cores looked right on paper — each slice leg inherits
-        // the wire's segment count — but the per-leg fixed costs it
-        // multiplies (32 tasks, 32 output files and their read-back
-        // listing, per-leg scheduling) exceeded the decode CPU it spread
-        // on every multi-table wire (t6_multi_decode 1.41×, paired TimeQ);
-        // even the widest single-table wire (t6_mysql_types, a 4.3 s
-        // decode leg) only broke even. At production wire volumes the
-        // batch already carries ≥ cores segments.
+        // batch to cores looked right on paper — each table's frame
+        // inherits the wire's segment count — but the per-frame fixed
+        // costs it multiplies (32 tasks, 32 output files and their
+        // read-back listing) exceeded the decode CPU it spread on every
+        // multi-table wire (t6_multi_decode 1.41×, paired TimeQ); even
+        // the widest single-table wire (t6_mysql_types, a 4.3 s decode)
+        // only broke even. At production wire volumes the batch already
+        // carries ≥ cores segments.
         val batch = batch0.persist()
         try {
           // ONE gather job per batch, grouped by (is_ddl, schema, table):
           // result rows = the TOUCHED table set plus the DDL frames'
           // routing groups — metadata-sized. Every piece of per-trigger
-          // driver state below (slice seeds, frontier check, tail cuts)
+          // driver state below (interval bounds, frontier check, cuts)
           // builds from (touched ∪ DDL-addressed), NEVER from the full
           // registration: at 100k tracked tables and sparse traffic that
           // is a handful of map entries per trigger, not 100k (the catalog
@@ -653,7 +671,7 @@ object CdcStream {
               (ts, stmt, if (fold) parts.map(foldWireDdl) else parts)
             }
           // every (schema, table) a parsed statement may consult or
-          // mutate — the walk's per-batch state (slices, frontier) covers
+          // mutate — the walk's per-batch state (intervals, frontier) covers
           // exactly these keys, never the whole registration
           def keysOf(d: WireDdl): Seq[(String, String)] = d match {
             case c: ColumnDdl                  => Seq((c.schema, c.table))
@@ -684,8 +702,8 @@ object CdcStream {
           lastDriverCatalogSizes.put(outDir, Integer.valueOf(seeded.size))
           // decode-time T7 fill state (only when opted in): columns ADDED
           // IN THIS BATCH — only those can leave missing-column NULLs in
-          // this batch's union (a column added in an earlier batch exists
-          // in every slice decoded now). Transition semantics, entry
+          // this batch's frames (a column added in an earlier batch exists
+          // in every interval decoded now). Transition semantics, entry
           // shape, and the documented NULL divergences live in
           // [[DecodeFill]].
           val fillState = new DecodeFill(fillOriginDefaults)
@@ -713,97 +731,46 @@ object CdcStream {
             val keyOf = concat(sOf, lit(" "), tOf)
             val frontiers = suspect.keys.map(k =>
               (k._1 + " " + k._2) -> live(k).get.version).toMap
+            // a key outside the map reads NULL, which admits no frame
             val below = batch.filter(col("op") =!= "DDL" &&
-              col("commit_ts") <= coalesce(
-                element_at(typedLit(frontiers), keyOf), lit(Long.MinValue)))
+              col("commit_ts") <= element_at(typedLit(frontiers), keyOf))
               .count()
             if (below > 0) addCount(queryId, "below_frontier_frames_total", below)
           }
 
-          val applied = scala.collection.mutable.ArrayBuffer.empty[AppliedDdl]
-          // log one record and apply it to the view at once: every later
-          // statement of the batch sees exactly what the commit will see
-          def log(ts: Long, s: String, t: String, action: String,
-              column: String, arg: String): Unit = {
-            applied += ((ts, s, t, action, column, arg))
-            applyLogged(view, s, t, action, column, arg, ts)
-          }
-          // seeded from the subset, not the registration — see the gather
-          // note above
-          val slicesOf = scala.collection.mutable.LinkedHashMap(
-            seeded.map(k =>
-              k -> scala.collection.mutable.ArrayBuffer.empty[DataFrame]): _*)
-          val lowerOf = scala.collection.mutable.Map(
-            seeded.map(_ -> Long.MinValue): _*)
-          // every column def a table's slices decoded with THIS batch, in
-          // first-seen order with the latest type winning — `emit` casts
-          // by these, so pre-barrier values of a column dropped or renamed
-          // away mid-batch still reach a composing sink (whose target
-          // loses the column only AT its own translated barrier)
-          val defsOf = scala.collection.mutable.Map.empty[(String, String),
-            scala.collection.mutable.LinkedHashMap[String, String]]
-          // one decoded slice of table `k`: its frames in (lower, upper],
-          // decoded DISTRIBUTED with the from_json schema the view holds —
-          // captured at plan-construction time. A table whose LAST
-          // column was dropped decodes to the bare (commit_ts, pk,
-          // schema_version) envelope (fromDDL("") would throw). A table
-          // with no DML rows this batch has nothing to decode — skip the
-          // whole job.
-          def decodeSlice(k: (String, String), info: SchemaTracker.TableInfo,
-              upper: Long): Unit = {
-            if (!touched.contains(k)) return
-            // defs record for EVERY cut, including empty ones below: a
-            // column whose only slice was empty (added and dropped between
-            // two DDLs sharing one commit ts) must stay addressable — the
-            // batch-end union widens it back as a typed NULL column
-            val acc = defsOf.getOrElseUpdate(k,
-              scala.collection.mutable.LinkedHashMap.empty[String, String])
+          val applied = mutable.ArrayBuffer.empty[AppliedDdl]
+          // the walk only RECORDS, per touched table: where its live shape's
+          // interval opened (−∞ when live since the batch began), its
+          // closed non-empty intervals (lo, hi, shape), and every column
+          // def they decoded with, first-seen order, latest type winning —
+          // `emit` casts by these, so pre-barrier values of a column
+          // dropped or renamed away mid-batch still reach a composing sink
+          val openAt = mutable.Map.empty[(String, String), Long]
+          val cutsOf = mutable.Map.empty[(String, String),
+            mutable.ArrayBuffer[(Long, Long, SchemaTracker.TableInfo)]]
+          val defsOf = mutable.Map.empty[(String, String),
+            mutable.LinkedHashMap[String, String]]
+          // close `k`'s interval at `hi`. Defs record even for an EMPTY
+          // interval (lo == hi: the later of several DDLs sharing one
+          // commit ts, TiDB's one-ALTER-many-jobs shape), so a column added
+          // and dropped at one ts stays addressable as a typed NULL column;
+          // only a non-empty interval can hold rows, so only it cuts and
+          // records a fill slice (see [[DecodeFill.recordSlice]])
+          def close(k: (String, String), info: SchemaTracker.TableInfo,
+              hi: Long): Unit = if (touched(k)) {
+            val acc = defsOf.getOrElseUpdate(k, mutable.LinkedHashMap.empty)
             info.columns.foreach(d => acc += d.split(" ", 2)(0) -> d)
-            // an EMPTY interval — lower == upper, the second and later of
-            // several DDLs sharing one commit ts (TiDB's one-ALTER-many-jobs
-            // shape) — can hold no frames: `(x, x]` admits no commit ts.
-            // Appending its leg anyway would scan the whole batch through
-            // yet another from_json schema and open yet another parquet
-            // writer per partition just to emit zero rows (a 9-ADD wire paid
-            // ~5× the decode's task count this way). The leg's ONLY effect
-            // was widening the union schema with all-NULL columns — the
-            // batch-end widening reproduces exactly that from defsOf.
-            // recordSlice was already gated on a non-empty interval
-            // (intermediate shapes share the final slice's version — see
-            // [[DecodeFill.recordSlice]]); lowerOf is already at upper.
-            if (lowerOf(k) >= upper) return
-            val wireSchema = if (info.columns.isEmpty) new StructType()
-              else StructType.fromDDL(info.columns.mkString(", "))
-            val leg = batch
-              .filter(col("op") =!= "DDL" && legOf(k) &&
-                col("commit_ts") > lowerOf(k) && col("commit_ts") <= upper)
-            // the parse is bound to ONE column in its own projection, so
-            // the per-field reads below are GetStructField over an
-            // attribute — inlining `from_json(…).getField(f)` per field left
-            // one JsonToStructs per output column (from_json is
-            // CodegenFallback; measured on the widest t6 wire: the decode
-            // stages' executor time halved, 8.1 s → 3.8 s, when the parse
-            // became single-bind). CollapseProject keeps the split: it
-            // refuses to inline a non-cheap expression into many
-            // references. A leg with no wire columns (the table's last
-            // column dropped) reads no field, so it binds no parse.
-            val parsed = if (wireSchema.isEmpty) leg
-              else leg.withColumn("__payload", from_json(col("props"), wireSchema))
-            slicesOf(k) += parsed
-              // op rides through: a decoded binlog item keeps its mutation
-              // type (I/U/D) — any downstream apply needs it
-              .select(Seq(col("commit_ts"), col("pk"), col("op")) ++
-                wireSchema.fieldNames.toSeq.map(f =>
-                  col("__payload").getField(f).cast("string").as(s"${f}_str")) :+
-                lit(info.version).as("schema_version"): _*)
-            fillState.recordSlice(k, info.version, wireSchema.fieldNames.toSet)
-            lowerOf(k) = upper
+            val lo = openAt.getOrElse(k, Long.MinValue)
+            if (lo < hi) {
+              cutsOf.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += ((lo, hi, info))
+              fillState.recordSlice(k, info.version, wireSchemaOf(info).fieldNames.toSet)
+            }
           }
           // walk the batch's DDLs in commit-ts order (driver-side: DDL is
           // rare and totally ordered). Only a DDL addressing a TRACKED
-          // (schema, table) cuts that table's slices and enters the log;
-          // everything else on the shared wire SKIPS with a count — a
-          // foreign table's (or schema's) DDL, an administrative
+          // (schema, table) enters the log and so cuts that table's
+          // intervals; everything else on the shared wire SKIPS with a
+          // count — a foreign table's (or schema's) DDL, an administrative
           // statement, an unparseable statement of an untracked table must
           // neither crash the query nor (if column names collide) reshape
           // another table's decode (ref: drainer/schema.go applies each
@@ -811,35 +778,34 @@ object CdcStream {
           // administrative job set). The loud throw remains for exactly
           // one class: a statement that addresses a tracked table's SHAPE
           // and cannot apply — skipping it would decode later frames
-          // against a stale shape. A frame AT a barrier's commit ts still
-          // decodes with the old shape — the DDL takes effect after its
-          // own commit, the loader's barrier rule. ADD/DROP change the
-          // decode SHAPE: the per-batch union aligns slices by name with
-          // nulls where a column did not exist yet (added: NULL before,
-          // value after) or no longer exists (dropped: value before, NULL
-          // after).
+          // against a stale shape.
           parsedDdls.foreach { case (ts, stmt, parsedParts) =>
-            // a DDL whose resulting defs Spark's DDL parser rejects (wire
-            // types live in Spark's type domain) must fail AT the
-            // statement — durably logging a broken def would instead kill
-            // the first decode of every restart replay
-            def validateDecodable(k: (String, String)): Unit = {
-              val info = live(k).get
-              if (info.columns.nonEmpty)
-                try { StructType.fromDDL(info.columns.mkString(", ")); () }
-                catch {
-                  case e: Exception =>
-                    throw new IllegalArgumentException(
-                      s"wire DDL leaves ${info.schema}.${info.table} " +
-                        s"undecodable: $stmt — defs " +
-                        s"(${info.columns.mkString(", ")}) rejected by " +
-                        s"Spark's DDL parser (${e.getMessage})")
+            // log one record and apply it to the view at once (every later
+            // statement sees what the commit will see), and cut: each key
+            // whose entry the record changed closes its old shape at `ts`
+            // and opens its new one there. A new shape Spark's DDL parser
+            // rejects fails AT the statement — durably logging it would
+            // instead kill the first decode of every restart replay.
+            def log(s: String, t: String, action: String, column: String,
+                arg: String): Unit = {
+              val before = subsetKeys.map(live)
+              applied += ((ts, s, t, action, column, arg))
+              applyLogged(view, s, t, action, column, arg, ts)
+              subsetKeys.zip(before).foreach { case (k, was) =>
+                val now = live(k)
+                if (now != was) {
+                  was.foreach(close(k, _, ts))
+                  now.foreach { info =>
+                    try wireSchemaOf(info) catch {
+                      case e: Exception => throw new IllegalArgumentException(
+                        s"wire DDL leaves ${info.schema}.${info.table} " +
+                          s"undecodable: $stmt — defs (${info.columns.mkString(", ")}) " +
+                          s"rejected by Spark's DDL parser (${e.getMessage})")
+                    }
+                    openAt(k) = ts
+                  }
                 }
-            }
-            def newSlices(k: (String, String)): Unit = {
-              slicesOf.getOrElseUpdate(k,
-                scala.collection.mutable.ArrayBuffer.empty[DataFrame])
-              lowerOf(k) = ts
+              }
             }
             // one statement may carry several actions (multi-table
             // RENAME/DROP lists); each part dispatches independently
@@ -847,12 +813,10 @@ object CdcStream {
               case ColumnDdl(s, t, action, c, arg, dflt, dict, native)
                   if isLive((s, t)) =>
                 val prior = live((s, t)).get
-                decodeSlice((s, t), prior, ts)
                 // the tracker's dropColumn is lenient; a wire DROP COLUMN
                 // of a column the table lacks fails here, at the statement
                 if (action == "drop") view.dropped(prior, c, ts)
-                log(ts, s, t, action, c, arg)
-                validateDecodable((s, t))
+                log(s, t, action, c, arg)
                 // an ADD's stripped DEFAULT is the column's ORIGIN default
                 // (TiDB fills it for rows predating the column) — logged as
                 // its own record so the T7-fill metadata survives restart.
@@ -861,7 +825,7 @@ object CdcStream {
                 // upstream inserts, which arrive with explicit values) and
                 // is discarded like the admin SET DEFAULT form.
                 if (action == "add")
-                  dflt.foreach(d => log(ts, s, t, "origin_default", c, d))
+                  dflt.foreach(d => log(s, t, "origin_default", c, d))
                 fillState.onColumnDdl((s, t), ts, action, c, arg, dflt, dict,
                   native)
                 // an ENUM/SET dictionary is metadata of the column's
@@ -874,9 +838,9 @@ object CdcStream {
                     if (action == "change") arg.split(" ", 2)(0) else c
                   dict match {
                     case Some(vs) =>
-                      log(ts, s, t, "dictionary", dictName, encodeDictArg(vs))
+                      log(s, t, "dictionary", dictName, encodeDictArg(vs))
                     case None if prior.dicts.contains(c) =>
-                      log(ts, s, t, "dictionary", dictName, "")
+                      log(s, t, "dictionary", dictName, "")
                     case None => ()
                   }
                 }
@@ -887,34 +851,32 @@ object CdcStream {
                 // drainer/syncer.go:744-762 drops in-flight mutations of
                 // the old table id); later frames decode against the fresh
                 // table (same shape, new version). The recorded defs clear
-                // WITH the slices: a def only a pre-truncate slice decoded
-                // (e.g. a column dropped earlier in this batch) would
-                // otherwise make a composing sink select a `<col>_str` the
-                // post-truncate union no longer carries. KNOWN EDGE: the
-                // clear is keyed by name, so a same-batch DROP TABLE →
-                // CREATE → TRUNCATE chain also discards the DROPPED
-                // incarnation's final rows — incarnation-tagged slices
-                // would be needed to keep them; the chain is degenerate
-                // (the drop already ended that table's replication).
-                slicesOf((s, t)).clear()
+                // WITH the intervals: a def only a pre-truncate interval
+                // decoded (e.g. a column dropped earlier in this batch)
+                // would otherwise make a composing sink select a
+                // `<col>_str` the post-truncate frame no longer carries.
+                // KNOWN EDGE: the clear is keyed by name, so a same-batch
+                // DROP TABLE → CREATE → TRUNCATE chain also discards the
+                // DROPPED incarnation's final rows — incarnation-tagged
+                // intervals would be needed to keep them; the chain is
+                // degenerate (the drop already ended that table's
+                // replication).
+                log(s, t, "truncate", "", "")
+                cutsOf.remove((s, t))
                 defsOf.remove((s, t))
-                lowerOf((s, t)) = ts
                 fillState.onTruncate((s, t)) // pre-truncate rows left the output
-                log(ts, s, t, "truncate", "", "")
               case CreateDdl(s, t, cols, _, dflts, dicts)
                   if trackedSchemas(s) && !isLive((s, t)) =>
                 // wire-registered table: decodes from its create ts forward
                 // (a frame of t below the create has no schema to decode
                 // against and drops, like any unrouted frame)
-                log(ts, s, t, "create_table", "", cols.mkString(", "))
-                validateDecodable((s, t))
-                newSlices((s, t))
+                log(s, t, "create_table", "", cols.mkString(", "))
                 fillState.onTableCreate((s, t))
                 dflts.toSeq.sortBy(_._1).foreach { case (c, d) =>
-                  log(ts, s, t, "origin_default", c, d)
+                  log(s, t, "origin_default", c, d)
                 }
                 dicts.toSeq.sortBy(_._1).foreach { case (c, vs) =>
-                  log(ts, s, t, "dictionary", c, encodeDictArg(vs))
+                  log(s, t, "dictionary", c, encodeDictArg(vs))
                 }
               case CreateDdl(s, t, _, ifNotExists, _, _) if isLive((s, t)) =>
                 // the already-tracked dispatch is EXPLICIT, not the default
@@ -931,13 +893,12 @@ object CdcStream {
                 // in-flight frames at/below the drop still decode (they
                 // committed against the live table); later frames of the
                 // dropped table are unaddressable and drop
-                decodeSlice((s, t), live((s, t)).get, ts)
+                log(s, t, "drop_table", "", "")
                 // fill state stays: the dropped table's already-cut slices
                 // still fold at batch end, and their pre-add rows still
                 // read the fill — but the recorded boundary keeps a LATER
                 // same-name add's default off this incarnation's rows
                 fillState.onTableDrop((s, t))
-                log(ts, s, t, "drop_table", "", "")
               case DropSchemaDdl(s) if subsetKeys.exists(k => k._1 == s && isLive(k)) =>
                 // every tracked table of the schema ends its decode at the
                 // drop; the log records one drop_table per table, so a
@@ -947,11 +908,10 @@ object CdcStream {
                 // of the schema: keysOf adds the registration's, and each
                 // statement that registers one adds its own key.
                 subsetKeys.filter(k => k._1 == s && isLive(k)).foreach { k =>
-                  decodeSlice(k, live(k).get, ts)
+                  log(k._1, k._2, "drop_table", "", "")
                   // fill state stays — same batch-end fold and boundary
                   // rationale as the DROP TABLE above
                   fillState.onTableDrop(k)
-                  log(ts, k._1, k._2, "drop_table", "", "")
                 }
               case FlashbackDdl(s, t, toOpt)
                   if trackedSchemas(s) && !isLive((s, toOpt.getOrElse(t))) =>
@@ -972,9 +932,8 @@ object CdcStream {
                       "drop-time shape (the table was never tracked, or was " +
                       "already recovered) — register it explicitly or drop " +
                       "the statement upstream (F5 ddl-skip filter)")
-                newSlices((s, target))
+                log(s, t, "recover_table", "", if (target == t) "" else target)
                 fillState.onTableCreate((s, target))
-                log(ts, s, t, "recover_table", "", if (target == t) "" else target)
               case FlashbackDdl(s, t, toOpt)
                   if trackedSchemas(s) && isLive((s, toOpt.getOrElse(t))) =>
                 // occupied recovery target: illegal upstream (TiDB rejects
@@ -1008,13 +967,12 @@ object CdcStream {
                       "is unknown and it would silently detach — register " +
                       "the source or drop the statement upstream (F5 " +
                       "ddl-skip filter)"))
-                newSlices((s, t))
+                log(s, t, "create_table", "", src.columns.mkString(", "))
                 fillState.onTableCreate((s, t))
-                log(ts, s, t, "create_table", "", src.columns.mkString(", "))
                 // LIKE copies type metadata too: an ENUM column's def maps
                 // to STRING, so its value dictionary must ride along
                 src.dicts.toSeq.sortBy(_._1).foreach { case (c, vs) =>
-                  log(ts, s, t, "dictionary", c, encodeDictArg(vs))
+                  log(s, t, "dictionary", c, encodeDictArg(vs))
                 }
               case RenameDdl(s, t, toSchemaOpt, to) if isLive((s, t)) =>
                 val s2 = toSchemaOpt.getOrElse(s)
@@ -1038,13 +996,11 @@ object CdcStream {
                 // wherever it lands): in-flight frames still addressed to
                 // the OLD name decode now, later frames arrive under the
                 // NEW (schema, name) and continue the same schema history
-                decodeSlice((s, t), live((s, t)).get, ts)
-                newSlices((s2, to))
+                log(s, t, "rename_table", "", if (s2 == s) to else s"$s2.$to")
                 // COPY, don't move (see [[DecodeFill.onTableRename]]): the
                 // old key's already-cut slices still need their fill at
                 // batch end; the new key carries the entries forward
                 fillState.onTableRename((s, t), (s2, to))
-                log(ts, s, t, "rename_table", "", if (s2 == s) to else s"$s2.$to")
               case RenameDdl(s, t, toSchemaOpt, to)
                   if trackedSchemas(toSchemaOpt.getOrElse(s)) =>
                 // RENAME of an UNTRACKED source INTO a tracked schema: the
@@ -1134,39 +1090,77 @@ object CdcStream {
               case _ => skip()
             }
           }
-          // tail slice per still-live table, then one write per table
-          slicesOf.keys.toSeq.sorted.foreach(k =>
-            live(k).foreach(decodeSlice(k, _, Long.MaxValue)))
-          val unions = slicesOf.toSeq.collect {
-            case (k, slices) if slices.nonEmpty =>
-              val merged0 = slices.reduce(_.unionByName(_, allowMissingColumns = true))
-              // a def column missing from every appended leg (its only
-              // slice was an empty interval decodeSlice skipped) widens
-              // back as the typed NULL column that leg would have carried —
-              // same union schema, zero extra scan
-              val widened = defsOf(k).keys.foldLeft(merged0) { (df, c) =>
-                if (df.columns.contains(s"${c}_str")) df
-                else df.withColumn(s"${c}_str", lit(null).cast("string"))
-              }
-              // decode-time T7 fill (opt-in; see the decodeQuery note and
-              // [[DecodeFill.fold]]): gated on the row's slice LACKING the
-              // column, so an explicit payload null from any version where
-              // it existed survives; each constant casts through ITS add's
-              // wire type (ref: translator.go:169-227 evaluates the default
-              // through the column type), so `DEFAULT 1.50` on a
-              // DECIMAL(10,1) fills the decode's own spelling `1.5`.
-              k -> ((defsOf(k).values.toSeq, fillState.fold(k, widened)))
+          // the batch end closes every still-live touched table; then each
+          // table with an interval decodes as ONE frame: its rows of those
+          // intervals tagged with their index `_i`, one `from_json` per
+          // interval with wire columns (guarded by `_i`), and per column a
+          // CASE over the intervals' string casts, NULL where an interval
+          // lacks it. One interval folds to filter → parse → project. Each
+          // parse is bound to ONE column in its own projection, so the
+          // per-field reads are GetStructField over an attribute — a
+          // `from_json(…).getField(f)` per field was one JsonToStructs per
+          // output column (from_json is CodegenFallback; on the widest t6
+          // wire the decode stages' executor time halved, 8.1 s → 3.8 s,
+          // when the parse became single-bind). CollapseProject keeps the
+          // split: it refuses to inline a non-cheap expression into many
+          // references.
+          touched.foreach(k => live(k).foreach(close(k, _, Long.MaxValue)))
+          val frames = cutsOf.toSeq.sortBy(_._1).map { case (k, cuts0) =>
+            val cuts = cuts0.toIndexedSeq
+            val wires = cuts.map(c => wireSchemaOf(c._3))
+            // the first branch whose guard holds; the last needs none, as
+            // every row lies in some interval
+            def caseOf(bs: IndexedSeq[(Column, Column)]): Column =
+              if (bs.size == 1) bs.head._2
+              else bs.init.tail.foldLeft(when(bs.head._1, bs.head._2)) {
+                case (c, (p, v)) => c.when(p, v)
+              }.otherwise(bs.last._2)
+            def byCut(vs: IndexedSeq[Column]): Column =
+              caseOf(vs.zipWithIndex.map { case (v, i) => (col("_i") === i, v) })
+            val ts = col("commit_ts")
+            val parsed = batch
+              .filter(col("op") =!= "DDL" && legOf(k) &&
+                cuts.map { case (lo, hi, _) => ts > lo && ts <= hi }.reduce(_ || _))
+              .withColumn("_i", caseOf(cuts.zipWithIndex.map {
+                case ((_, hi, _), i) => (ts <= hi, lit(i))
+              }))
+              .select(col("*") +: wires.zipWithIndex.collect {
+                case (w, i) if w.nonEmpty =>
+                  val p = from_json(col("props"), w)
+                  (if (cuts.size == 1) p else when(col("_i") === i, p)).as(s"__p$i")
+              }: _*)
+            def strCol(f: String): Column = byCut(wires.indices.map(i =>
+              if (wires(i).fieldNames.contains(f)) col(s"__p$i").getField(f).cast("string")
+              else lit(null).cast("string"))).as(s"${f}_str")
+            // columns in the order the shapes first show them: the first
+            // interval's, the version stamp, then later and empty
+            // intervals' additions. op rides through: a decoded binlog
+            // item keeps its mutation type (I/U/D) for any downstream apply
+            val first = wires.head.fieldNames.toSeq
+            val later = (wires.tail.flatMap(_.fieldNames) ++ defsOf(k).keys)
+              .distinct.filterNot(first.contains)
+            val decoded = parsed.select(Seq(col("commit_ts"), col("pk"), col("op")) ++
+              first.map(strCol) ++
+              Seq(byCut(cuts.map(c => lit(c._3.version))).as("schema_version")) ++
+              later.map(strCol): _*)
+            // decode-time T7 fill (opt-in; see the decodeQuery note and
+            // [[DecodeFill.fold]]): gated on the row's interval LACKING the
+            // column, so an explicit payload null from any version where
+            // it existed survives; each constant casts through ITS add's
+            // wire type (ref: translator.go:169-227 evaluates the default
+            // through the column type), so `DEFAULT 1.50` on a
+            // DECIMAL(10,1) fills the decode's own spelling `1.5`.
+            k -> ((defsOf(k).values.toSeq, fillState.fold(k, decoded)))
           }
           // per-table writes are independent jobs — fan them out on the
           // bounded pool (ref: pkg/loader/load.go:508-527's 16 workers): a
           // trigger touching hundreds of tables must not serialize
-          // hundreds of small driver-submitted jobs. Each table writes at
-          // most one file per batch partition: its union of barrier legs
-          // has legs × partitions partitions, and every sink job over the
-          // written dir (the emitted scan below) pays one task per file
-          val batchParts = batch.rdd.getNumPartitions
-          graft.util.Par.foreachPar(unions) { case ((s, t), (_, df)) =>
-            df.coalesce(batchParts).write.mode("overwrite").parquet(layout(id, s, t))
+          // hundreds of small driver-submitted jobs. A table's one frame
+          // keeps the batch's partitioning, so it writes at most one file
+          // per batch partition, and every sink job over the written dir
+          // (the emitted scan below) pays one task per file
+          graft.util.Par.foreachPar(frames) { case ((s, t), (_, df)) =>
+            df.write.mode("overwrite").parquet(layout(id, s, t))
           }
           import spark.implicits._
           // written only when non-empty (an empty parquet dir is
@@ -1192,10 +1186,10 @@ object CdcStream {
           // advances — a crash inside the sink replays the batch
           // identically, and an idempotent sink (batch-id guard) skips.
           // Each frame is a scan of the table's WRITTEN dir under the
-          // union's own schema (no inference job): every sink job reads
+          // frame's own schema (no inference job): every sink job reads
           // the decoded rows back instead of re-running the parse over the
           // wire batch
-          emit.foreach(f => f((id, unions.map { case (k @ (s, t), (defs, df)) =>
+          emit.foreach(f => f((id, frames.map { case (k @ (s, t), (defs, df)) =>
             k -> ((defs, spark.read.schema(df.schema).parquet(layout(id, s, t))))
           }.toMap, applied.toSeq)))
           // only now does the live catalog advance — a crash anywhere

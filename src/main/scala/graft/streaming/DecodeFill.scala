@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * keyed on the NATIVE spelling where the mapped wire type erases it
   * (TIME '00:00:00', JSON 'null', ENUM first element, SET empty,
   * fixed-width BINARY(n) n zero bytes — translator.go:221-225 + tidb
-  * table.GetZeroValue) — from the decode output instead of the union's
+  * table.GetZeroValue) — from the decode output instead of the frame's
   * structural NULL. One instance lives per micro-batch, fed by the
   * decode walk; each method documents its transition. A
   * CURRENT_TIMESTAMP-family default evaluates at the DDL frame's OWN
@@ -348,10 +348,10 @@ private[graft] final class DecodeFill(enabled: Boolean) {
     ()
   }
 
-  /** Batch-end fold over one table's unioned slices: each absent slice
+  /** Batch-end fold over one table's decoded frame: each absent slice
     * reads the add that ended ITS gap — the smallest add version above
     * the slice's version declared by the slice's OWN table — gated on
-    * the row's value being the union's structural NULL. A version above
+    * the row's value being the frame's structural NULL. A version above
     * every add (a recreate that never re-added) reads no fill at all. */
   def fold(k: K, df: DataFrame): DataFrame =
     fill.getOrElse(k, Map.empty).foldLeft(df) { case (df0, (c, entries)) =>

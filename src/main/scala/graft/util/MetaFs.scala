@@ -80,8 +80,31 @@ object MetaFs {
   /** Rename with a vacated destination as the caller's precondition: Hadoop
     * moves a source INTO an existing destination directory instead of
     * replacing it, so swap sequences must move the old destination aside
-    * first (the sinks' bucket/open swaps do exactly that). */
+    * first ([[swapDir]] does exactly that). */
   def rename(src: String, dst: String): Unit =
     if (!fs(dst).rename(new Path(src), new Path(dst)))
       throw new java.io.IOException(s"rename $src -> $dst failed")
+
+  /** Replace directory `dst` by `src` — the lake sinks' one swap protocol:
+    * vacate (`dst` → `old`), promote (`src` → `dst`), then delete `old`.
+    * The aside name `old` is deterministic per `dst` and the old copy goes
+    * only AFTER the promote, so a crash at ANY point leaves a state
+    * [[healSwap]] rolls back or finishes; a leftover `old` is healed first
+    * (never vacate INTO it). A missing `src` leaves `dst` vacated. */
+  def swapDir(src: String, dst: String, old: String): Unit = {
+    healSwap(dst, old)
+    if (exists(dst)) rename(dst, old)
+    if (exists(src)) rename(src, dst)
+    delete(old)
+  }
+
+  /** Roll back (or finish) a [[swapDir]] a crash interrupted: `old`
+    * present with `dst` missing means the crash hit between the renames and
+    * `old` holds the only copy — restore it; both present means the promote
+    * landed and only the final delete was lost — drop the stale copy. */
+  def healSwap(dst: String, old: String): Unit =
+    if (exists(old)) {
+      if (!exists(dst)) rename(old, dst)
+      else delete(old)
+    }
 }

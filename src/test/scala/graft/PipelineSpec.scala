@@ -203,6 +203,25 @@ class PipelineSpec extends SparkSpec {
     assert(state == Set((1L, 5L)))
   }
 
+  test("sequence apply counts a non-safe UPDATE that matches no row") {
+    // the post-crash replay window (the addressed row is already gone)
+    // must stay countable: the loader reads it back after the job
+    val url = freshDerbyUrl("zerorow")
+    val loader = new graft.sinks.JdbcSchemaLoader(url, applyPartitions = 2)
+    loader.createTable(
+      "CREATE TABLE ZR_T (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, VAL DOUBLE)")
+    val seed = Seq((1L, 1L, "I", 1.0)).toDF("pk", "commit_ts", "op", "val")
+    assert(loader.applyBatch(Map("ZR_T" -> seed), 0L, merge = false))
+    assert(loader.zeroRowUpdates == 0L)
+    val next = Seq((1L, 2L, "U", 1.5), (7L, 3L, "U", 7.0))
+      .toDF("pk", "commit_ts", "op", "val")
+    assert(loader.applyBatch(Map("ZR_T" -> next), 1L, merge = false))
+    assert(loader.zeroRowUpdates == 1L)
+    val state = loader.readTable(spark, "ZR_T")
+      .select("PK", "VAL").as[(Long, Double)].collect().toMap
+    assert(state == Map(1L -> 1.5))
+  }
+
   test("sequence apply rejects an unknown op loudly instead of replacing it") {
     val url = freshDerbyUrl("badop")
     val loader = new graft.sinks.JdbcSchemaLoader(url, applyPartitions = 2)

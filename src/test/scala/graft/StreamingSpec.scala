@@ -4143,6 +4143,7 @@ class StreamingSpec extends SparkSpec {
     // mapping is ddlToTarget's job, M8 in miniature
     PbBinlogFile.write(ddlAt(90L, "ALTER TABLE app.tb ADD COLUMN note STRING"),
       s"$root/p1", nFiles = 1)
+    val ckBefore = loader.lastCheckpoint
     val q2 = DrainerPipeline.streamingReplicated(spark, Seq(s"$root/p0", s"$root/p1"),
       tracker2, loader, outDir, ckpt, "app", col("event_type"),
       tableMap = t => t.toUpperCase + "_STATE",
@@ -4154,6 +4155,12 @@ class StreamingSpec extends SparkSpec {
       })
     try {
       q2.processAllAvailable()
+      // the DDL-only batch saves the loader checkpoint past its DDL, as an
+      // applied batch does (ref: drainer/syncer.go:253-259 saves a
+      // checkpoint on DDL)
+      val ckDdl = loader.lastCheckpoint
+      assert(ckDdl.batchId > ckBefore.batchId && ckDdl.commitTs == 90L,
+        (ckBefore, ckDdl))
       PbBinlogFile.write(dml("tb", Seq(92L),
         n => s"""{"k": ${n}.25, "note": "n$n"}"""), s"$root/p1", nFiles = 1)
       q2.processAllAvailable()

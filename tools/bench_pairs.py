@@ -17,11 +17,15 @@ the change's BENCHMARK.json:
   - whether a gain holds: the change wins at least 9 of every 10 pairs and
     its median beats the parent's by more than the parent's q3 - q1;
   - whether the change's median stays within the metric's `bound`, a
-    fraction of the parent's median.
+    fraction of the parent's median;
+  - whether the metric is unresolved: the parent's own q3 - q1 exceeds
+    bound x its median, so the runs spread too widely to tell a move
+    within the bound from noise — unless every change run beats every
+    parent run.
 
 A run that is not `correct`, has `failed` > 0 or does not finish is
 flagged. The exit status is 1 when a run is flagged or a median is out of
-its bound, else 0. The script reads BENCHMARK.json and writes nothing in
+its bound or unresolved, else 0. The script reads BENCHMARK.json and writes nothing in
 either checkout besides what the benchmark command itself writes.
 """
 import argparse
@@ -57,10 +61,14 @@ def summarize(parent, change, better, bound):
     gain = won >= math.ceil(0.9 * len(parent)) and gap > p3 - p1
     if better == "higher":
         within = cm >= pm * (1 - bound)
+        dominates = min(change) > max(parent)
     else:
         within = cm <= pm * (1 + bound)
+        dominates = max(change) < min(parent)
+    unresolved = p3 - p1 > bound * pm and not dominates
     return {"parent": (p1, pm, p3), "change": (c1, cm, c3), "wins": won,
-            "pairs": len(parent), "gain": gain, "within_bound": within}
+            "pairs": len(parent), "gain": gain, "within_bound": within,
+            "unresolved": unresolved}
 
 
 def run_once(checkout, bench, workload, seed):
@@ -115,8 +123,10 @@ def report(bench, runs):
               f"({c1:.1f}-{c3:.1f}), {change:+.1f}%; change wins "
               f"{s['wins']}/{s['pairs']}; gain rule "
               f"{'holds' if s['gain'] else 'does not hold'}; "
-              f"{'within' if s['within_bound'] else 'OUT OF'} bound")
-        ok = ok and s["within_bound"]
+              f"{'within' if s['within_bound'] else 'OUT OF'} bound"
+              + (f"; UNRESOLVED (parent q3-q1 {p3 - p1:.1f} > bound x "
+                 f"median {m['bound'] * pm:.1f})" if s["unresolved"] else ""))
+        ok = ok and s["within_bound"] and not s["unresolved"]
     return ok
 
 
@@ -142,6 +152,13 @@ def selftest():
     s = summarize(parent, [p * 0.7 for p in parent], "higher", 0.25)
     assert not s["within_bound"], s
     assert summarize(parent, parent, "higher", 0.25)["wins"] == 0
+    # the parent's q3 - q1 = 4.5 exceeds 0.25 x 14.5: unresolved, unless
+    # every change run beats every parent run; a 0.5 bound resolves it
+    assert summarize(parent, [p + 4 for p in parent], "higher", 0.25)["unresolved"]
+    assert not summarize(parent, [p + 10 for p in parent], "higher", 0.25)["unresolved"]
+    assert summarize(parent, [p - 4 for p in parent], "lower", 0.25)["unresolved"]
+    assert not summarize(parent, [p - 10 for p in parent], "lower", 0.25)["unresolved"]
+    assert not summarize(parent, parent, "higher", 0.5)["unresolved"]
     assert flagged(None) and flagged({"correct": False, "failed": 0})
     assert flagged({"correct": True, "failed": 1})
     assert not flagged({"correct": True, "failed": 0})
