@@ -634,9 +634,10 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
     }
     val live = barriers.indices.filterNot(done)
 
-    // merged path: each DML row carries its segment — the number of
-    // barriers strictly below its commit_ts, so a row AT a barrier's ts
-    // applies before that barrier. Each table merges once per batch (not
+    // each DML row carries its segment — the number of barriers strictly
+    // below its commit_ts, so a row AT a barrier's ts applies before that
+    // barrier; both paths select a segment's rows by it. On the merged
+    // path each table merges once per batch (not
     // once per segment) under the catalog's first key (primary, else the
     // first unique index, else every column) at the first live segment
     // where the table exists; a barrier that changes that key re-merges
@@ -646,11 +647,10 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
       if (barrierTs.isEmpty) lit(0)
       else size(filter(typedLit(barrierTs), _ < col("commit_ts")))
     val orderedSlices = slices.toSeq.sortBy(_._1).map { case (t, df) =>
-      (t, df, df.filter(col("op") =!= "DDL").withColumn("_seg", segOf))
+      (t, df.filter(col("op") =!= "DDL").withColumn("_seg", segOf))
     }
     val mergedOf = scala.collection.mutable.Map[String, Merged]()
 
-    var lower = Long.MinValue
     var maxTs = prev.commitTs
     barriers.zipWithIndex.foreach { case ((upper, stmt, key), seg) =>
       if (!done(seg)) {
@@ -661,7 +661,7 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
         // (driver-side metadata reads and executor-side batches alike), so
         // nothing here shares JDBC state across threads.
         val applied = graft.util.Par.mapPar(orderedSlices) {
-          case (table, df, dml) =>
+          case (table, dml) =>
             if (merge) mergedOf.get(table) match {
               // no rows here: no catalog read (a barrier may have dropped
               // or renamed the table by now)
@@ -680,14 +680,12 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
                   if (m.segs(seg).isEmpty) (Long.MinValue, Some(m))
                   else (applySegment(m, seg, table, tm), Some(m))
               }
-            } else {
-              val slice = df.filter(col("op") =!= "DDL" &&
-                col("commit_ts") > lower && col("commit_ts") <= upper)
-              (applyTableSequence(slice, table, safeMode), None)
-            }
+            } else
+              (applyTableSequence(dml.filter(col("_seg") === seg).drop("_seg"),
+                table, safeMode), None)
         }
         orderedSlices.zip(applied).foreach {
-          case ((table, _, _), (_, Some(m))) => mergedOf(table) = m
+          case ((table, _), (_, Some(m))) => mergedOf(table) = m
           case _ => ()
         }
         maxTs = (maxTs +: applied.map(_._1)).max
@@ -700,7 +698,6 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
         }
       }
       if (upper != Long.MaxValue) maxTs = math.max(maxTs, upper)
-      lower = upper
     }
     withConn(JdbcMeta.save(_, clusterId,
       Checkpoint(batchId, maxTs, math.max(schemaVersion, prev.schemaVersion),

@@ -110,14 +110,16 @@ object CdcStream {
       .reduce(_ unionByName _)
   }
 
-  /** T2 over the WIRE envelope: the multi-pump binlog merge the versioned
-    * decode consumes — one watermark PER pump before the union (the same
-    * min-frontier mechanism as [[mergedPumpStream]]) over
-    * [[graft.sources.PbBinlogFile.readStream]] sources, so a lagging pump
-    * holds the decode frontier and no frame can arrive below an applied
-    * DDL's commit ts — the delivery contract the decode's
-    * `below_frontier_frames_total` count audits ([[decodeCounts]]; ref:
-    * drainer/merge.go:236-335 feeding drainer/syncer.go).
+  /** T2 over the WIRE envelope: the multi-pump binlog union the versioned
+    * decode consumes, over [[graft.sources.PbBinlogFile.readStream]]
+    * sources, with one watermark PER pump before the union (the
+    * min-frontier mechanism of [[mergedPumpStream]]). A watermark acts
+    * only through a stateful operator, and the decode has none, so these
+    * watermarks hold nothing back: that no frame arrives below an applied
+    * DDL's commit ts is the pumps' ordered-delivery contract (ref:
+    * drainer/merge.go:236-335 feeding drainer/syncer.go), which the
+    * decode audits with its `below_frontier_frames_total` count
+    * ([[decodeCounts]]) rather than enforces.
     * `maxFilesPerTrigger` is the per-pump P4 admission knob, applied to
     * EACH source. */
   def mergedWireStream(spark: SparkSession, pumpDirs: Seq[String],
@@ -228,7 +230,7 @@ object CdcStream {
   private def encodeDictArg(vs: Vector[String]): String =
     vs.map(v => "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'")
       .mkString(",")
-  private def decodeDictArg(arg: String): Vector[String] =
+  private[streaming] def decodeDictArg(arg: String): Vector[String] =
     if (arg.isEmpty) Vector.empty
     else splitTopLevel(arg, _ == ',', angles = false)
       .map(v => unquoteLiteral(v.trim))
@@ -256,12 +258,8 @@ object CdcStream {
         tracker.recoverTable(schema, table,
           if (arg.isEmpty) table else arg, version)
       case "rename_table" =>
-        // arg = "to" (same schema) or "toSchema.to" (cross-schema re-home;
-        // identifiers cannot carry '.', so the encoding is unambiguous)
-        arg.split("\\.", 2) match {
-          case Array(to)          => tracker.renameTable(schema, table, to, version)
-          case Array(toS, to)     => tracker.renameTable(schema, table, toS, to, version)
-        }
+        val (toS, to) = renameTarget(schema, arg)
+        tracker.renameTable(schema, table, toS, to, version)
       // arg = the ORIGIN default expression stripped from the column def
       case "origin_default" =>
         tracker.setOriginDefault(schema, table, column, arg, version)
@@ -269,6 +267,15 @@ object CdcStream {
       case "dictionary" =>
         tracker.setDictionary(schema, table, column, decodeDictArg(arg), version)
       case other => throw new IllegalArgumentException(s"unknown logged DDL action: $other")
+    }
+
+  /** Where a `rename_table` record of a table in `schema` moves it: arg =
+    * "to" (same schema) or "toSchema.to" (cross-schema re-home;
+    * identifiers cannot carry '.', so the encoding is unambiguous). */
+  private[streaming] def renameTarget(schema: String, arg: String): (String, String) =
+    arg.split("\\.", 2) match {
+      case Array(to)      => (schema, to)
+      case Array(toS, to) => (toS, to)
     }
 
   /** The `from_json` schema of a tracked shape: a table whose LAST column
@@ -780,14 +787,15 @@ object CdcStream {
           // and cannot apply — skipping it would decode later frames
           // against a stale shape.
           parsedDdls.foreach { case (ts, stmt, parsedParts) =>
-            // log one record and apply it to the view at once (every later
-            // statement sees what the commit will see), and cut: each key
-            // whose entry the record changed closes its old shape at `ts`
-            // and opens its new one there. A new shape Spark's DDL parser
-            // rejects fails AT the statement — durably logging it would
-            // instead kill the first decode of every restart replay.
+            // log one record and take all its effects, in order: apply it
+            // to the view (every later statement sees what the commit will
+            // see); cut — each key whose entry the record changed closes
+            // its old shape at `ts` and opens its new one there; then feed
+            // the fill, which alone reads `native`. A new shape Spark's DDL
+            // parser rejects fails AT the statement — durably logging it
+            // would instead kill the first decode of every restart replay.
             def log(s: String, t: String, action: String, column: String,
-                arg: String): Unit = {
+                arg: String, native: String = ""): Unit = {
               val before = subsetKeys.map(live)
               applied += ((ts, s, t, action, column, arg))
               applyLogged(view, s, t, action, column, arg, ts)
@@ -806,6 +814,18 @@ object CdcStream {
                   }
                 }
               }
+              // streamed F6: a truncate DROPS its table's frames at or
+              // below its ts, which addressed the erased incarnation (ref:
+              // drainer/syncer.go:744-762), and its defs with them, or a
+              // composing sink would select a `<col>_str` only a
+              // pre-truncate interval carried. KNOWN EDGE: keyed by name, a
+              // same-batch DROP → CREATE → TRUNCATE also discards the
+              // dropped incarnation's final rows (a degenerate chain)
+              if (action == "truncate") {
+                cutsOf.remove((s, t))
+                defsOf.remove((s, t))
+              }
+              fillState.onRecord(s, t, action, column, arg, ts, native)
             }
             // one statement may carry several actions (multi-table
             // RENAME/DROP lists); each part dispatches independently
@@ -816,7 +836,7 @@ object CdcStream {
                 // the tracker's dropColumn is lenient; a wire DROP COLUMN
                 // of a column the table lacks fails here, at the statement
                 if (action == "drop") view.dropped(prior, c, ts)
-                log(s, t, action, c, arg)
+                log(s, t, action, c, arg, native)
                 // an ADD's stripped DEFAULT is the column's ORIGIN default
                 // (TiDB fills it for rows predating the column) — logged as
                 // its own record so the T7-fill metadata survives restart.
@@ -826,8 +846,6 @@ object CdcStream {
                 // is discarded like the admin SET DEFAULT form.
                 if (action == "add")
                   dflt.foreach(d => log(s, t, "origin_default", c, d))
-                fillState.onColumnDdl((s, t), ts, action, c, arg, dflt, dict,
-                  native)
                 // an ENUM/SET dictionary is metadata of the column's
                 // CURRENT type — unlike an origin default it FOLLOWS
                 // modify/change: record the new value list (keyed by the
@@ -845,33 +863,13 @@ object CdcStream {
                   }
                 }
               case TruncateDdl(s, t) if isLive((s, t)) =>
-                // streamed F6: in-flight frames of the truncated table at
-                // or below the truncate commit ts DROP — they addressed
-                // the old incarnation the truncate erased (ref:
-                // drainer/syncer.go:744-762 drops in-flight mutations of
-                // the old table id); later frames decode against the fresh
-                // table (same shape, new version). The recorded defs clear
-                // WITH the intervals: a def only a pre-truncate interval
-                // decoded (e.g. a column dropped earlier in this batch)
-                // would otherwise make a composing sink select a
-                // `<col>_str` the post-truncate frame no longer carries.
-                // KNOWN EDGE: the clear is keyed by name, so a same-batch
-                // DROP TABLE → CREATE → TRUNCATE chain also discards the
-                // DROPPED incarnation's final rows — incarnation-tagged
-                // intervals would be needed to keep them; the chain is
-                // degenerate (the drop already ended that table's
-                // replication).
                 log(s, t, "truncate", "", "")
-                cutsOf.remove((s, t))
-                defsOf.remove((s, t))
-                fillState.onTruncate((s, t)) // pre-truncate rows left the output
               case CreateDdl(s, t, cols, _, dflts, dicts)
                   if trackedSchemas(s) && !isLive((s, t)) =>
                 // wire-registered table: decodes from its create ts forward
                 // (a frame of t below the create has no schema to decode
                 // against and drops, like any unrouted frame)
                 log(s, t, "create_table", "", cols.mkString(", "))
-                fillState.onTableCreate((s, t))
                 dflts.toSeq.sortBy(_._1).foreach { case (c, d) =>
                   log(s, t, "origin_default", c, d)
                 }
@@ -894,11 +892,6 @@ object CdcStream {
                 // committed against the live table); later frames of the
                 // dropped table are unaddressable and drop
                 log(s, t, "drop_table", "", "")
-                // fill state stays: the dropped table's already-cut slices
-                // still fold at batch end, and their pre-add rows still
-                // read the fill — but the recorded boundary keeps a LATER
-                // same-name add's default off this incarnation's rows
-                fillState.onTableDrop((s, t))
               case DropSchemaDdl(s) if subsetKeys.exists(k => k._1 == s && isLive(k)) =>
                 // every tracked table of the schema ends its decode at the
                 // drop; the log records one drop_table per table, so a
@@ -909,9 +902,6 @@ object CdcStream {
                 // statement that registers one adds its own key.
                 subsetKeys.filter(k => k._1 == s && isLive(k)).foreach { k =>
                   log(k._1, k._2, "drop_table", "", "")
-                  // fill state stays — same batch-end fold and boundary
-                  // rationale as the DROP TABLE above
-                  fillState.onTableDrop(k)
                 }
               case FlashbackDdl(s, t, toOpt)
                   if trackedSchemas(s) && !isLive((s, toOpt.getOrElse(t))) =>
@@ -933,7 +923,6 @@ object CdcStream {
                       "already recovered) — register it explicitly or drop " +
                       "the statement upstream (F5 ddl-skip filter)")
                 log(s, t, "recover_table", "", if (target == t) "" else target)
-                fillState.onTableCreate((s, target))
               case FlashbackDdl(s, t, toOpt)
                   if trackedSchemas(s) && isLive((s, toOpt.getOrElse(t))) =>
                 // occupied recovery target: illegal upstream (TiDB rejects
@@ -968,7 +957,6 @@ object CdcStream {
                       "the source or drop the statement upstream (F5 " +
                       "ddl-skip filter)"))
                 log(s, t, "create_table", "", src.columns.mkString(", "))
-                fillState.onTableCreate((s, t))
                 // LIKE copies type metadata too: an ENUM column's def maps
                 // to STRING, so its value dictionary must ride along
                 src.dicts.toSeq.sortBy(_._1).foreach { case (c, vs) =>
@@ -997,10 +985,6 @@ object CdcStream {
                 // the OLD name decode now, later frames arrive under the
                 // NEW (schema, name) and continue the same schema history
                 log(s, t, "rename_table", "", if (s2 == s) to else s"$s2.$to")
-                // COPY, don't move (see [[DecodeFill.onTableRename]]): the
-                // old key's already-cut slices still need their fill at
-                // batch end; the new key carries the entries forward
-                fillState.onTableRename((s, t), (s2, to))
               case RenameDdl(s, t, toSchemaOpt, to)
                   if trackedSchemas(toSchemaOpt.getOrElse(s)) =>
                 // RENAME of an UNTRACKED source INTO a tracked schema: the

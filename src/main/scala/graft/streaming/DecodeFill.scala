@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * (TIME '00:00:00', JSON 'null', ENUM first element, SET empty,
   * fixed-width BINARY(n) n zero bytes — translator.go:221-225 + tidb
   * table.GetZeroValue) — from the decode output instead of the frame's
-  * structural NULL. One instance lives per micro-batch, fed by the
-  * decode walk; each method documents its transition. A
+  * structural NULL. One instance lives per micro-batch, fed the decode
+  * walk's logged DDL records one by one ([[DecodeFill.onRecord]]). A
   * CURRENT_TIMESTAMP-family default evaluates at the DDL frame's OWN
   * commit-ts — TiDB pins OriginDefaultValue at the DDL's execution
   * time (tidb ddl/column.go), which IS the frame's commit instant, so
@@ -172,9 +172,11 @@ private[graft] object DecodeFill {
   }
 }
 
-/** Per-micro-batch fill state; `enabled = false` makes every call a
-  * no-op and [[fold]] the identity. Driver-side and tiny: one entry
-  * vector per in-batch ADD, one (version, column set) per cut slice.
+/** Per-micro-batch fill state, fed by the decode walk's `log`: each cut
+  * slice ([[recordSlice]]), then the logged record ([[onRecord]]).
+  * `enabled = false` makes every record a no-op and [[fold]] the
+  * identity. Driver-side and tiny: one entry vector per in-batch ADD,
+  * one (version, column set) per cut slice.
   *
   * IDENTITY: a table NAME can host several incarnations within one
   * batch — DROP then recreate, a rename-in after the old holder left —
@@ -205,28 +207,83 @@ private[graft] final class DecodeFill(enabled: Boolean) {
     * range): a same-ts DDL chain cuts empty slices whose intermediate
     * shapes share the final slice's version — recording them would put
     * that version in a later column's absent set and clobber real rows'
-    * explicit nulls. */
-  def recordSlice(k: K, version: Long, cols: Set[String]): Unit =
-    if (enabled) {
-      present.getOrElseUpdate(k,
-        scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Set[String])]) +=
-        ((version, inc(k), cols))
-      ()
-    }
+    * explicit nulls. The slice takes the identity live when it is cut. */
+  def recordSlice(k: K, version: Long, cols: Set[String]): Unit = {
+    present.getOrElseUpdate(k,
+      scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Set[String])]) +=
+      ((version, inc(k), cols))
+    ()
+  }
 
-  /** Apply one column-shape action. For "add"/"modify" (and the tail of
-    * "change"), `arg` is the normalized column tail (type first,
-    * canonical NOT NULL after), `dict` the ENUM/SET value list when the
-    * native spelling carried one, and `native` the original MySQL type
-    * spelling the zero-value branch keys on. */
-  def onColumnDdl(k: K, version: Long, action: String, c: String,
-      arg: String, dflt: Option[String],
-      dict: Option[Vector[String]], native: String = ""): Unit = if (enabled) {
+  /** Apply one logged DDL record of `schema`.`table` at commit ts
+    * `version`, in the log's action vocabulary (the one
+    * `CdcStream.applyLogged` reads). `native`, the MySQL type spelling of
+    * an add/modify/change, is the one input no record carries.
+    *  - `add` opens an entry (`arg` = the normalized tail, type first,
+    *    canonical NOT NULL after); a following same-ts `origin_default`
+    *    sets its default and a following `dictionary` its ENUM/SET list.
+    *    A CREATE's records of those kinds find no entry and change nothing.
+    *  - `modify`/`change` retype the live entry — the reference evaluates a
+    *    fill through the column's CURRENT ColumnInfo (translator.go:169-177)
+    *    while the origin default stays add-time — and clear its dictionary
+    *    until a following `dictionary` record sets the new type's; `change`
+    *    re-keys first (`arg` = "newName tail").
+    *  - `drop` removes the live entries; `rename` re-keys them to `arg`.
+    *  - `create_table`/`recover_table` start an identity under the
+    *    registered name: whatever held it before (a rename-away ends no
+    *    identity) is a different table. A FLASHBACK after an in-batch drop
+    *    resumes the same table, but its recovered columns leave no absence
+    *    gap, so the fresh identity is inert. `drop_table` ends the
+    *    identity (entries and slices stay to fold); `rename_table` moves
+    *    it ([[moveInc]]).
+    *  - `truncate` clears the key: pre-truncate rows left the output.
+    * Column records touch only the LIVE table's entries and slices: a
+    * dropped incarnation's state stays frozen, its rows' fills decided. */
+  def onRecord(schema: String, table: String, action: String, column: String,
+      arg: String, version: Long, native: String = ""): Unit = if (enabled) {
+    val k = (schema, table)
+    action match {
+      case "create_table" | "recover_table" =>
+        nextInc += 1
+        liveInc(if (action == "recover_table" && arg.nonEmpty) (schema, arg) else k) =
+          nextInc
+      case "drop_table"   => liveInc.remove(k); ()
+      case "rename_table" => moveInc(k, CdcStream.renameTarget(schema, arg))
+      case "truncate"     => fill -= k; present.remove(k); ()
+      case _              => onColumn(k, action, column, arg, version, native)
+    }
+  }
+
+  /** Table rename: the IDENTITY follows the table to the new key, and
+    * its live entries COPY along (the old key's already-cut slices still
+    * fold at batch end, on the frozen SNAPSHOT the old key keeps) — the
+    * target name may hold a dropped incarnation's kept entries, and the
+    * identity match at fold time keeps every incarnation's slices on
+    * their own defaults. A table renamed away and BACK re-occupies its
+    * old key live: the key's same-identity entries are REPLACED by the
+    * table's current state (mutations made while away — retypes, column
+    * drops — land, and no duplicate can shadow a later retype). */
+  private def moveInc(from: K, to: K): Unit = {
+    val me = inc(from)
+    val stripped = fill.getOrElse(to, Map.empty)
+      .map { case (c, vec) => c -> vec.filterNot(_.inc == me) }
+      .filter(_._2.nonEmpty)
+    val merged = fill.get(from).fold(stripped) { m =>
+      m.foldLeft(stripped) { case (acc, (c, vec)) =>
+        val mine = vec.filter(_.inc == me)
+        if (mine.isEmpty) acc
+        else acc + (c -> (acc.getOrElse(c, Vector.empty) ++ mine))
+      }
+    }
+    if (merged.nonEmpty) fill += to -> merged else fill -= to
+    liveInc(to) = me
+    liveInc.remove(from)
+    ()
+  }
+
+  private def onColumn(k: K, action: String, c: String, arg: String,
+      version: Long, native: String): Unit = {
     val cur = fill.getOrElse(k, Map.empty)
-    // every transition below touches only the LIVE table's entries and
-    // slices — a dropped incarnation's kept state stays frozen (its
-    // rows' fills are already decided), whatever the recreated table
-    // does to a column that happens to share the name
     val me = inc(k)
     // a renamed column EXISTED (under its old name) in the live table's
     // slices already cut — mark the NEW name present there too, whether
@@ -261,25 +318,25 @@ private[graft] final class DecodeFill(enabled: Boolean) {
         toks.map(_.toUpperCase(java.util.Locale.ROOT))
           .containsSlice(Seq("NOT", "NULL")))
     }
-    // MODIFY/CHANGE re-shape the LIVE incarnation's entry (the last one):
-    // the reference evaluates a fill through the column's CURRENT
-    // ColumnInfo (translator.go:169-177), so a same-batch retype after
-    // the add changes the fill's spelling — and a nullability flip flips
-    // the zero-value branch — while the add-time origin default stays
-    def retyped(m: Map[String, Vector[Entry]], name: String, tail: String) =
+    // the live incarnation's entry of `name` is its last one
+    def live(m: Map[String, Vector[Entry]], name: String)(f: Entry => Entry) =
       m.get(name).fold(m) { vec =>
-        if (vec.last.inc != me) m
-        else {
-          val (ty, nn) = shapeOf(tail)
-          m + (name -> (vec.init :+ vec.last.copy(ty = ty, notNull = nn,
-            native = native, dict = dict.getOrElse(Vector.empty))))
-        }
+        if (vec.last.inc != me) m else m + (name -> (vec.init :+ f(vec.last)))
       }
+    def retyped(m: Map[String, Vector[Entry]], name: String, tail: String) = {
+      val (ty, nn) = shapeOf(tail)
+      live(m, name)(_.copy(ty = ty, notNull = nn, native = native,
+        dict = Vector.empty))
+    }
     val next = action match {
       case "add" =>
         val (ty, nn) = shapeOf(arg)
         cur + (c -> (cur.getOrElse(c, Vector.empty) :+
-          Entry(version, dflt, nn, ty, native, dict.getOrElse(Vector.empty), me)))
+          Entry(version, None, nn, ty, native, Vector.empty, me)))
+      case "origin_default" =>
+        live(cur, c)(e => if (e.version == version) e.copy(dflt = Some(arg)) else e)
+      case "dictionary" =>
+        live(cur, c)(_.copy(dict = CdcStream.decodeDictArg(arg)))
       case "drop"   =>
         cur.get(c).fold(cur)(vec => put(cur, c, vec.filterNot(_.inc == me)))
       case "rename" => rekey(arg)
@@ -290,62 +347,6 @@ private[graft] final class DecodeFill(enabled: Boolean) {
       case _ => cur
     }
     if (next.nonEmpty) fill += k -> next else fill -= k
-  }
-
-  /** Pre-truncate rows leave the output with their slices — clear. The
-    * table itself continues (same identity): everything the identity
-    * could separate was just cleared. */
-  def onTruncate(k: K): Unit = {
-    fill -= k
-    present.remove(k)
-    ()
-  }
-
-  /** DROP TABLE: entries and slices stay (they fold at batch end), but
-    * the key's live identity ends — whatever occupies the name next is
-    * a different table. */
-  def onTableDrop(k: K): Unit = if (enabled) {
-    liveInc.remove(k)
-    ()
-  }
-
-  /** Any registration of a tracked name — CREATE, CREATE LIKE, or a
-    * FLASHBACK recovery — is a NEW table: the name may have been freed
-    * by a rename-away (which ends no identity of its own), so whatever
-    * held the name before must not exchange fills with the newcomer.
-    * (A FLASHBACK after an in-batch drop technically resumes the SAME
-    * table, but the recovered shape carries its pre-drop columns, so no
-    * absence gap spans the recovery and the fresh identity is inert.) */
-  def onTableCreate(k: K): Unit = if (enabled) {
-    nextInc += 1
-    liveInc(k) = nextInc
-  }
-
-  /** Table rename: the IDENTITY follows the table to the new key, and
-    * its live entries COPY along (the old key's already-cut slices still
-    * fold at batch end, on the frozen SNAPSHOT the old key keeps) — the
-    * target name may hold a dropped incarnation's kept entries, and the
-    * identity match at fold time keeps every incarnation's slices on
-    * their own defaults. A table renamed away and BACK re-occupies its
-    * old key live: the key's same-identity entries are REPLACED by the
-    * table's current state (mutations made while away — retypes, column
-    * drops — land, and no duplicate can shadow a later retype). */
-  def onTableRename(from: K, to: K): Unit = if (enabled) {
-    val me = inc(from)
-    val stripped = fill.getOrElse(to, Map.empty)
-      .map { case (c, vec) => c -> vec.filterNot(_.inc == me) }
-      .filter(_._2.nonEmpty)
-    val merged = fill.get(from).fold(stripped) { m =>
-      m.foldLeft(stripped) { case (acc, (c, vec)) =>
-        val mine = vec.filter(_.inc == me)
-        if (mine.isEmpty) acc
-        else acc + (c -> (acc.getOrElse(c, Vector.empty) ++ mine))
-      }
-    }
-    if (merged.nonEmpty) fill += to -> merged else fill -= to
-    liveInc(to) = me
-    liveInc.remove(from)
-    ()
   }
 
   /** Batch-end fold over one table's decoded frame: each absent slice

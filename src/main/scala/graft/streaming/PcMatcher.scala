@@ -14,32 +14,30 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `unresolved` marker — the hook where a real deployment would consult the
   * upstream resolver. State is per-key and partitioned by Spark's shuffle,
   * so matching scales horizontally with no global ordering requirement.
+  * One matcher serves one query.
   */
-object PcMatcher {
+final class PcMatcher(timeoutMs: Long = 600000L) extends Serializable {
+  import PcMatcher._
 
-  /** kind: P (prewrite), C (commit), R (rollback). */
-  case class PcEvent(startTs: Long, kind: String, payloadTs: Long)
+  private val vacated = new org.apache.spark.util.LongAccumulator
 
-  case class Pending(prewriteTs: Long)
+  /** Timed-out keys whose state was already gone (see [[matchFn]]), read
+    * during or after the query. */
+  def vacatedTimeouts: Long = vacated.value
 
-  /** status: matched | rolled_back | orphan_commit | unresolved(timeout). */
-  case class Matched(startTs: Long, prewriteTs: Long, commitTs: Long, status: String)
-
-  def matchFn(timeoutMs: Long,
-      vacatedTimeouts: Option[org.apache.spark.util.LongAccumulator] = None)(
-      startTs: Long, events: Iterator[PcEvent],
+  def matchFn(startTs: Long, events: Iterator[PcEvent],
       state: GroupState[Pending]): Iterator[Matched] = {
     if (state.hasTimedOut) {
       // getOption, not get: a failed task attempt may have removed the
       // state before the retry re-processes the timed-out key (observed
       // under the RocksDB provider) — an already-vacated key is simply done.
-      // The accumulator makes that path OBSERVABLE: a retry-vacated key is
+      // The count makes that path OBSERVABLE: a retry-vacated key is
       // benign, but a key vacated because a removal committed while its
       // `unresolved` output was discarded is an at-most-once drop; a
       // nonzero count tells the operator to audit, instead of losing the
       // record silently.
       val p = state.getOption
-      if (p.isEmpty) vacatedTimeouts.foreach(_.add(1L))
+      if (p.isEmpty) vacated.add(1L)
       state.remove()
       p.iterator.map(pp => Matched(startTs, pp.prewriteTs, -1L, "unresolved"))
     } else {
@@ -77,12 +75,21 @@ object PcMatcher {
 
   /** Wire the matcher over a stream (or batch Dataset in tests via
     * `groupByKey.flatMapGroupsWithState`). */
-  def matched(events: Dataset[PcEvent], timeoutMs: Long = 600000L): Dataset[Matched] = {
+  def matched(events: Dataset[PcEvent]): Dataset[Matched] = {
     import events.sparkSession.implicits._
-    val vacated = events.sparkSession.sparkContext
-      .longAccumulator("pc_matcher_vacated_timeouts")
+    if (!vacated.isRegistered) events.sparkSession.sparkContext.register(vacated)
     events.groupByKey(_.startTs)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout)(
-        matchFn(timeoutMs, Some(vacated)))
+        matchFn _)
   }
+}
+
+object PcMatcher {
+  /** kind: P (prewrite), C (commit), R (rollback). */
+  case class PcEvent(startTs: Long, kind: String, payloadTs: Long)
+
+  case class Pending(prewriteTs: Long)
+
+  /** status: matched | rolled_back | orphan_commit | unresolved(timeout). */
+  case class Matched(startTs: Long, prewriteTs: Long, commitTs: Long, status: String)
 }

@@ -25,6 +25,7 @@ import graft.streaming.DecodeFill
   * two is a finding. */
 class DecodeFillPropSpec extends SparkSpec {
   import spark.implicits._
+  import DecodeFillSpec._
 
   private val NamePool = Vector("c", "d", "x")
   private val Keys = Vector(("app", "t"), ("app", "u"))
@@ -113,7 +114,7 @@ class DecodeFillPropSpec extends SparkSpec {
       }
       val v = nextV()
       ops += s"add $k v=$v $n $native${if (notNull) " NOT NULL" else ""} dflt=$dflt"
-      st.onColumnDdl(k, v, "add", n, ty + (if (notNull) " NOT NULL" else ""),
+      colDdl(st, k, v, "add", n, ty + (if (notNull) " NOT NULL" else ""),
         dflt, None, native)
       putView(k, n, view(k).getOrElse(n, Vector.empty) :+
         new VEntry(liveInc(k), v, dflt.getOrElse(""), notNull, ty, native))
@@ -123,7 +124,7 @@ class DecodeFillPropSpec extends SparkSpec {
       if (liveCols(k).isEmpty) return
       val n = liveCols(k)(rnd.nextInt(liveCols(k).size))
       ops += s"dropCol $k $n"
-      st.onColumnDdl(k, nextV(), "drop", n, "", None, None)
+      colDdl(st, k, nextV(), "drop", n, "", None, None)
       putView(k, n, view(k).getOrElse(n, Vector.empty)
         .filterNot(_.inc eq liveInc(k)))
       liveCols(k) = liveCols(k).filterNot(_ == n)
@@ -138,9 +139,9 @@ class DecodeFillPropSpec extends SparkSpec {
         else Some((TypePool(rnd.nextInt(TypePool.size)), rnd.nextBoolean()))
       ops += s"renameCol $k v=$v $n->$to ty=$newTy"
       newTy match {
-        case None => st.onColumnDdl(k, v, "rename", n, to, None, None)
+        case None => colDdl(st, k, v, "rename", n, to, None, None)
         case Some(((native, ty), nn)) =>
-          st.onColumnDdl(k, v, "change", n,
+          colDdl(st, k, v, "change", n,
             s"$to $ty${if (nn) " NOT NULL" else ""}", None, None, native)
       }
       // the value-rides-the-old-name rule: the slice set of THIS key and
@@ -167,7 +168,7 @@ class DecodeFillPropSpec extends SparkSpec {
       val (native, ty) = TypePool(rnd.nextInt(TypePool.size))
       val nn = rnd.nextBoolean()
       ops += s"modify $k $n -> $native${if (nn) " NOT NULL" else ""}"
-      st.onColumnDdl(k, nextV(), "modify", n,
+      colDdl(st, k, nextV(), "modify", n,
         ty + (if (nn) " NOT NULL" else ""), None, None, native)
       view(k).getOrElse(n, Vector.empty).filter(_.inc eq liveInc(k))
         .foreach { e => e.ty = ty; e.native = native; e.notNull = nn }
@@ -177,7 +178,7 @@ class DecodeFillPropSpec extends SparkSpec {
       // entries under the name clear, the dropped-incarnation ones too
       // (the documented DROP->CREATE->TRUNCATE limit)
       ops += s"truncate $k"
-      st.onTruncate(k)
+      st.onRecord(k._1, k._2, "truncate", "", "", version)
       views -= k
       slices.filterInPlace(_.key != k)
       ()
@@ -186,7 +187,7 @@ class DecodeFillPropSpec extends SparkSpec {
       cut(k) // the walk cuts the in-flight slice at the drop barrier
       val v = nextV()
       ops += s"dropTable $k v=$v"
-      st.onTableDrop(k)
+      st.onRecord(k._1, k._2, "drop_table", "", "", v)
       graveyard += liveCols(k) // recoverable shape for a later FLASHBACK
       liveInc -= k
       liveCols -= k
@@ -194,25 +195,25 @@ class DecodeFillPropSpec extends SparkSpec {
     }
     def flashback(): Unit = {
       // FLASHBACK TABLE recovers a dropped table's shape under a free
-      // name — the walk registers it like a CREATE (onTableCreate): a
+      // name — its recover_table record registers it like a CREATE: a
       // FRESH INERT identity whose recovered columns are born with the
       // registration, never fill candidates, and whose later adds must
       // not leak onto any prior holder of the name (DecodeFill.scala's
-      // onTableCreate note — exactly the claim this op pins)
+      // onRecord note — exactly the claim this op pins)
       val frees = Keys.filterNot(liveInc.contains)
       if (graveyard.isEmpty || frees.isEmpty) return
       val k = frees(rnd.nextInt(frees.size))
       val cols = graveyard.remove(rnd.nextInt(graveyard.size))
       val v = nextV()
       ops += s"flashback $k v=$v cols=$cols"
-      st.onTableCreate(k)
+      st.onRecord(k._1, "dropped", "recover_table", "", k._2, v)
       liveInc(k) = new MInc
       liveCols(k) = cols
     }
     def createTable(k: K): Unit = {
       val v = nextV()
       ops += s"create $k v=$v"
-      st.onTableCreate(k)
+      st.onRecord(k._1, k._2, "create_table", "", "", v)
       liveInc(k) = new MInc
       // base columns are born with the CREATE — never fill candidates
       liveCols(k) = rnd.shuffle(NamePool).take(1 + rnd.nextInt(2)).toVector
@@ -224,7 +225,7 @@ class DecodeFillPropSpec extends SparkSpec {
       cut(k) // the walk cuts the old key's slice at the rename barrier
       val v = nextV()
       ops += s"renameTable $k->$to v=$v"
-      st.onTableRename(k, to)
+      st.onRecord(k._1, k._2, "rename_table", "", to._2, v)
       // live entries COPY to the new key as FRESH objects (the old key's
       // view freezes as a snapshot; mutations at the new key must not
       // reach back), and a same-table return REPLACES the target's own

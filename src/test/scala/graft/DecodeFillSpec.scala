@@ -6,10 +6,11 @@ import graft.streaming.DecodeFill
 
 /** Drives the decode-time T7 fill state machine directly — transition
   * tables for add/drop/re-add/rename chains, the literal grammar, and the
-  * zero-value branch — independent of the streaming walk that feeds it in
-  * production (ref: drainer/translator/translator.go:169-227). */
+  * zero-value branch — with the logged DDL records the streaming walk
+  * feeds it in production (ref: drainer/translator/translator.go:169-227). */
 class DecodeFillSpec extends SparkSpec {
   import spark.implicits._
+  import DecodeFillSpec._
 
   private val K = ("app", "t")
 
@@ -25,7 +26,7 @@ class DecodeFillSpec extends SparkSpec {
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))            // pre-add slice: c absent
     st.recordSlice(K, 10L, Set("k", "c"))      // post-add slice: c present
-    st.onColumnDdl(K, 10L, "add", "c", "DECIMAL(10,1)", Some("1.50"), None)
+    colDdl(st, K, 10L, "add", "c", "DECIMAL(10,1)", Some("1.50"), None)
     // the absent version fills the decode's own spelling 1.5; the present
     // version's explicit payload null (and its real values) survive
     val rows = st.fold(K, frame(0L -> None, 10L -> None, 10L -> Some("2.5")))
@@ -38,7 +39,7 @@ class DecodeFillSpec extends SparkSpec {
   test("disabled state is inert and fold is the identity") {
     val st = new DecodeFill(false)
     st.recordSlice(K, 0L, Set("k"))
-    st.onColumnDdl(K, 10L, "add", "c", "INT", Some("5"), None)
+    colDdl(st, K, 10L, "add", "c", "INT", Some("5"), None)
     assert(st.fold(K, frame(0L -> None)).collect()(0).isNullAt(1))
   }
 
@@ -47,7 +48,7 @@ class DecodeFillSpec extends SparkSpec {
         native: String = ""): Option[String] = {
       val st = new DecodeFill(true)
       st.recordSlice(K, 0L, Set("k"))
-      st.onColumnDdl(K, 10L, "add", "c", tail, None, dict, native)
+      colDdl(st, K, 10L, "add", "c", tail, None, dict, native)
       Option(st.fold(K, frame(0L -> None)).collect()(0).getString(1))
     }
     assert(zeroOf("INT NOT NULL").contains("0"))
@@ -95,13 +96,13 @@ class DecodeFillSpec extends SparkSpec {
     // stop zero-filling, and the inverse must start
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))
-    st.onColumnDdl(K, 10L, "add", "c", "INT NOT NULL", None, None)
-    st.onColumnDdl(K, 20L, "modify", "c", "BIGINT", None, None)
+    colDdl(st, K, 10L, "add", "c", "INT NOT NULL", None, None)
+    colDdl(st, K, 20L, "modify", "c", "BIGINT", None, None)
     assert(folded(st, frame(0L -> None))(0L).isEmpty)
     val st2 = new DecodeFill(true)
     st2.recordSlice(K, 0L, Set("k"))
-    st2.onColumnDdl(K, 10L, "add", "c", "INT", None, None)
-    st2.onColumnDdl(K, 20L, "modify", "c", "INT NOT NULL", None, None)
+    colDdl(st2, K, 10L, "add", "c", "INT", None, None)
+    colDdl(st2, K, 20L, "modify", "c", "INT NOT NULL", None, None)
     assert(folded(st2, frame(0L -> None))(0L).contains("0"))
   }
 
@@ -112,13 +113,13 @@ class DecodeFillSpec extends SparkSpec {
     // read 'x', and a version above every add reads no fill
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))
-    st.onColumnDdl(K, 10L, "add", "c", "INT", Some("5"), None)
+    colDdl(st, K, 10L, "add", "c", "INT", Some("5"), None)
     st.recordSlice(K, 10L, Set("k", "c"))
-    st.onTableDrop(K)
+    dropTable(st, K)
     st.recordSlice(K, 20L, Set("k"))           // recreated table, c not yet re-added
-    st.onColumnDdl(K, 30L, "add", "c", "STRING", Some("'x'"), None)
+    colDdl(st, K, 30L, "add", "c", "STRING", Some("'x'"), None)
     st.recordSlice(K, 30L, Set("k", "c"))
-    st.onTableDrop(K)
+    dropTable(st, K)
     st.recordSlice(K, 40L, Set("k"))           // second recreate, never re-added
     val out = folded(st, frame(0L -> None, 10L -> None, 20L -> None,
       30L -> None, 40L -> None))
@@ -135,11 +136,11 @@ class DecodeFillSpec extends SparkSpec {
     // the re-add's default from a different incarnation
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))
-    st.onColumnDdl(K, 10L, "add", "c", "INT", None, None)
+    colDdl(st, K, 10L, "add", "c", "INT", None, None)
     st.recordSlice(K, 10L, Set("k", "c"))
-    st.onTableDrop(K)
+    dropTable(st, K)
     st.recordSlice(K, 20L, Set("k"))
-    st.onColumnDdl(K, 30L, "add", "c", "INT", Some("7"), None)
+    colDdl(st, K, 30L, "add", "c", "INT", Some("7"), None)
     val out = folded(st, frame(0L -> None, 20L -> None))
     assert(out(0L).isEmpty)
     assert(out(20L).contains("7"))
@@ -153,11 +154,11 @@ class DecodeFillSpec extends SparkSpec {
     val st = new DecodeFill(true)
     val K2 = ("app", "t2")
     st.recordSlice(K2, 0L, Set("k"))
-    st.onTableDrop(K2)
+    dropTable(st, K2)
     st.recordSlice(K2, 15L, Set("k"))          // recreated incarnation
-    st.onColumnDdl(K2, 25L, "add", "d", "INT", Some("9"), None)
-    st.onColumnDdl(K, 20L, "add", "c", "INT", Some("5"), None)
-    st.onTableRename(K, K2)               // swap cutover: t -> t2
+    colDdl(st, K2, 25L, "add", "d", "INT", Some("9"), None)
+    colDdl(st, K, 20L, "add", "c", "INT", Some("5"), None)
+    renameTable(st, K, K2)               // swap cutover: t -> t2
     val df = Seq((0L, None: Option[String], None: Option[String]),
       (15L, None: Option[String], None: Option[String]))
       .toDF("schema_version", "c_str", "d_str")
@@ -177,9 +178,9 @@ class DecodeFillSpec extends SparkSpec {
     // key's) rows — the fresh CREATE under t is a new incarnation
     val st2 = new DecodeFill(true)
     st2.recordSlice(K, 0L, Set("k"))           // original t's rows
-    st2.onTableRename(K, ("app", "old"))  // t renamed away
-    st2.onTableCreate(K)                  // fresh t
-    st2.onColumnDdl(K, 20L, "add", "c", "INT", Some("5"), None)
+    renameTable(st2, K, ("app", "old"))  // t renamed away
+    createTable(st2, K)                  // fresh t
+    colDdl(st2, K, 20L, "add", "c", "INT", Some("5"), None)
     assert(st2.fold(K, frame(0L -> None)).collect()(0).isNullAt(1),
       "the fresh table's default leaked onto the renamed-away rows")
   }
@@ -189,20 +190,20 @@ class DecodeFillSpec extends SparkSpec {
     // entry; modify must not retype it
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))
-    st.onColumnDdl(K, 10L, "add", "c", "INT", Some("5"), None)
-    st.onTableDrop(K)
-    st.onTableCreate(K)                   // recreate carries c in defs
+    colDdl(st, K, 10L, "add", "c", "INT", Some("5"), None)
+    dropTable(st, K)
+    createTable(st, K)                   // recreate carries c in defs
     st.recordSlice(K, 18L, Set("k", "c"))
-    st.onColumnDdl(K, 25L, "drop", "c", "", None, None)
+    colDdl(st, K, 25L, "drop", "c", "", None, None)
     st.recordSlice(K, 25L, Set("k"))
     assert(st.fold(K, frame(0L -> None)).collect()(0).getString(1) == "5",
       "the recreate's DROP COLUMN erased the old incarnation's fill")
     val st2 = new DecodeFill(true)
     st2.recordSlice(K, 0L, Set("k"))
-    st2.onColumnDdl(K, 10L, "add", "c", "DECIMAL(10,1)", Some("1.5"), None)
-    st2.onTableDrop(K)
-    st2.onTableCreate(K)
-    st2.onColumnDdl(K, 25L, "modify", "c", "DECIMAL(10,3)", None, None)
+    colDdl(st2, K, 10L, "add", "c", "DECIMAL(10,1)", Some("1.5"), None)
+    dropTable(st2, K)
+    createTable(st2, K)
+    colDdl(st2, K, 25L, "modify", "c", "DECIMAL(10,3)", None, None)
     assert(st2.fold(K, frame(0L -> None)).collect()(0).getString(1) == "1.5",
       "the recreate's MODIFY retyped the old incarnation's fill")
   }
@@ -212,13 +213,13 @@ class DecodeFillSpec extends SparkSpec {
     // CURRENT type — a retype after the add changes the fill's spelling
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))
-    st.onColumnDdl(K, 10L, "add", "c", "DECIMAL(10,2)", Some("1.5"), None)
-    st.onColumnDdl(K, 20L, "modify", "c", "DECIMAL(10,1)", None, None)
+    colDdl(st, K, 10L, "add", "c", "DECIMAL(10,2)", Some("1.5"), None)
+    colDdl(st, K, 20L, "modify", "c", "DECIMAL(10,1)", None, None)
     assert(st.fold(K, frame(0L -> None)).collect()(0).getString(1) == "1.5")
     val st2 = new DecodeFill(true)
     st2.recordSlice(K, 0L, Set("k"))
-    st2.onColumnDdl(K, 10L, "add", "c", "DECIMAL(10,1)", Some("1.5"), None)
-    st2.onColumnDdl(K, 20L, "change", "c", "y DECIMAL(10,3)", None, None)
+    colDdl(st2, K, 10L, "add", "c", "DECIMAL(10,1)", Some("1.5"), None)
+    colDdl(st2, K, 20L, "change", "c", "y DECIMAL(10,3)", None, None)
     val df = Seq((0L, None: Option[String])).toDF("schema_version", "y_str")
     assert(st2.fold(K, df).collect()(0).getString(1) == "1.500")
   }
@@ -234,11 +235,11 @@ class DecodeFillSpec extends SparkSpec {
   test("column drop clears entries; a later re-add owns every earlier gap") {
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))
-    st.onColumnDdl(K, 10L, "add", "c", "INT", Some("5"), None)
+    colDdl(st, K, 10L, "add", "c", "INT", Some("5"), None)
     st.recordSlice(K, 10L, Set("k", "c"))
-    st.onColumnDdl(K, 20L, "drop", "c", "", None, None)
+    colDdl(st, K, 20L, "drop", "c", "", None, None)
     st.recordSlice(K, 20L, Set("k"))
-    st.onColumnDdl(K, 30L, "add", "c", "INT", Some("9"), None)
+    colDdl(st, K, 30L, "add", "c", "INT", Some("9"), None)
     val out = folded(st, frame(0L -> None, 10L -> None, 20L -> None))
     // the live column's origin default is 9 — pre-add gaps read it; the
     // version where c existed keeps its explicit null
@@ -250,9 +251,9 @@ class DecodeFillSpec extends SparkSpec {
   test("column rename re-keys entries and marks the new name present") {
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))
-    st.onColumnDdl(K, 10L, "add", "c", "INT", Some("5"), None)
+    colDdl(st, K, 10L, "add", "c", "INT", Some("5"), None)
     st.recordSlice(K, 10L, Set("k", "c"))
-    st.onColumnDdl(K, 20L, "rename", "c", "x", None, None)
+    colDdl(st, K, 20L, "rename", "c", "x", None, None)
     st.recordSlice(K, 20L, Set("k", "x"))
     // x inherits c's entry: pre-add rows fill under the NEW name; the v10
     // slice (where the value rides column c) is aliased present for x, so
@@ -269,8 +270,8 @@ class DecodeFillSpec extends SparkSpec {
     // change re-keys the same way, new name first token of the def
     val st2 = new DecodeFill(true)
     st2.recordSlice(K, 0L, Set("k"))
-    st2.onColumnDdl(K, 10L, "add", "c", "INT", Some("5"), None)
-    st2.onColumnDdl(K, 20L, "change", "c", "y BIGINT", None, None)
+    colDdl(st2, K, 10L, "add", "c", "INT", Some("5"), None)
+    colDdl(st2, K, 20L, "change", "c", "y BIGINT", None, None)
     val df2 = Seq((0L, None: Option[String])).toDF("schema_version", "y_str")
     assert(st2.fold(K, df2).collect()(0).getString(1) == "5")
   }
@@ -278,23 +279,23 @@ class DecodeFillSpec extends SparkSpec {
   test("truncate clears; table rename copies and merges per column") {
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))
-    st.onColumnDdl(K, 10L, "add", "c", "INT", Some("5"), None)
-    st.onTruncate(K)
+    colDdl(st, K, 10L, "add", "c", "INT", Some("5"), None)
+    truncate(st, K)
     assert(st.fold(K, frame(0L -> None)).collect()(0).isNullAt(1))
 
     val K2 = ("app", "t2")
     val st2 = new DecodeFill(true)
     st2.recordSlice(K2, 3L, Set("k"))          // a prior t2 incarnation's slice
-    st2.onTableDrop(K2)
+    dropTable(st2, K2)
     st2.recordSlice(K, 0L, Set("k"))
-    st2.onColumnDdl(K, 10L, "add", "c", "INT", Some("5"), None)
-    st2.onTableRename(K, K2)
+    colDdl(st2, K, 10L, "add", "c", "INT", Some("5"), None)
+    renameTable(st2, K, K2)
     // the OLD key's slices still fill at batch end (copy, not move) …
     assert(st2.fold(K, frame(0L -> None)).collect()(0).getString(1) == "5")
     // … and the new key carries the entries forward: a later column
     // rename under the NEW name re-keys the copied entry — but the prior
     // t2 incarnation's slice (other generation, lacks c2) never reads it
-    st2.onColumnDdl(K2, 25L, "rename", "c", "c2", None, None)
+    colDdl(st2, K2, 25L, "rename", "c", "c2", None, None)
     val df2 = Seq((3L, None: Option[String])).toDF("schema_version", "c2_str")
     assert(st2.fold(K2, df2).collect()(0).isNullAt(1),
       "copied entry filled a foreign incarnation's slice through the re-key")
@@ -308,11 +309,11 @@ class DecodeFillSpec extends SparkSpec {
     // their value under c, so the re-add's default must not stamp x_str
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k", "c"))
-    st.onColumnDdl(K, 10L, "rename", "c", "x", None, None)
+    colDdl(st, K, 10L, "rename", "c", "x", None, None)
     st.recordSlice(K, 10L, Set("k", "x"))
-    st.onColumnDdl(K, 20L, "drop", "x", "", None, None)
+    colDdl(st, K, 20L, "drop", "x", "", None, None)
     st.recordSlice(K, 20L, Set("k"))
-    st.onColumnDdl(K, 30L, "add", "x", "INT", Some("9"), None)
+    colDdl(st, K, 30L, "add", "x", "INT", Some("9"), None)
     val df = Seq((0L, Some("7"), None: Option[String]),
       (20L, None: Option[String], None: Option[String]))
       .toDF("schema_version", "c_str", "x_str")
@@ -324,11 +325,11 @@ class DecodeFillSpec extends SparkSpec {
     // containing the same old name keeps ITS own pending fill
     val st2 = new DecodeFill(true)
     st2.recordSlice(K, 0L, Set("k", "c"))      // gen-0 slice: has c, lacks x
-    st2.onColumnDdl(K, 5L, "add", "x", "INT", Some("7"), None)
-    st2.onTableDrop(K)
-    st2.onTableCreate(K)
+    colDdl(st2, K, 5L, "add", "x", "INT", Some("7"), None)
+    dropTable(st2, K)
+    createTable(st2, K)
     st2.recordSlice(K, 9L, Set("k", "c"))
-    st2.onColumnDdl(K, 10L, "rename", "c", "x", None, None)
+    colDdl(st2, K, 10L, "rename", "c", "x", None, None)
     val df2 = Seq((0L, None: Option[String])).toDF("schema_version", "x_str")
     assert(st2.fold(K, df2).collect()(0).getString(1) == "7",
       "the recreate's rename aliased a frozen generation's slice")
@@ -340,28 +341,28 @@ class DecodeFillSpec extends SparkSpec {
     // from the rename cycle may shadow it) …
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))
-    st.onColumnDdl(K, 10L, "add", "c", "INT", Some("5"), None)
-    st.onTableRename(K, K2)
-    st.onTableRename(K2, K)
-    st.onColumnDdl(K, 30L, "modify", "c", "DECIMAL(10,3)", None, None)
+    colDdl(st, K, 10L, "add", "c", "INT", Some("5"), None)
+    renameTable(st, K, K2)
+    renameTable(st, K2, K)
+    colDdl(st, K, 30L, "modify", "c", "DECIMAL(10,3)", None, None)
     assert(st.fold(K, frame(0L -> None)).collect()(0).getString(1) == "5.000",
       "a rename-cycle duplicate shadowed the MODIFY")
     // … a column dropped while away is gone on return …
     val st2 = new DecodeFill(true)
     st2.recordSlice(K, 0L, Set("k"))
-    st2.onColumnDdl(K, 10L, "add", "c", "INT", Some("5"), None)
-    st2.onTableRename(K, K2)
-    st2.onColumnDdl(K2, 20L, "drop", "c", "", None, None)
-    st2.onTableRename(K2, K)
+    colDdl(st2, K, 10L, "add", "c", "INT", Some("5"), None)
+    renameTable(st2, K, K2)
+    colDdl(st2, K2, 20L, "drop", "c", "", None, None)
+    renameTable(st2, K2, K)
     assert(st2.fold(K, frame(0L -> None)).collect()(0).isNullAt(1),
       "a column dropped while away still filled after the return")
     // … but a retype made while away does NOT reach back into the
     // departed key's frozen snapshot
     val st3 = new DecodeFill(true)
     st3.recordSlice(K, 0L, Set("k"))
-    st3.onColumnDdl(K, 10L, "add", "c", "STRING", Some("'a'"), None)
-    st3.onTableRename(K, K2)
-    st3.onColumnDdl(K2, 20L, "modify", "c", "INT", None, None)
+    colDdl(st3, K, 10L, "add", "c", "STRING", Some("'a'"), None)
+    renameTable(st3, K, K2)
+    colDdl(st3, K2, 20L, "modify", "c", "INT", None, None)
     assert(st3.fold(K, frame(0L -> None)).collect()(0).getString(1) == "a",
       "a retype at the new key reached back into the old key's snapshot")
   }
@@ -369,12 +370,12 @@ class DecodeFillSpec extends SparkSpec {
   test("FLASHBACK onto a rename-freed name starts its own generation") {
     // RENAME t TO old frees the name; FLASHBACK x TO t registers a
     // DIFFERENT table under it — its adds must not fill the renamed-away
-    // rows (registration = onTableCreate; same rule as CREATE)
+    // rows (a recover_table record; same rule as CREATE)
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))
-    st.onTableRename(K, ("app", "old"))
-    st.onTableCreate(K)                   // the flashback registration
-    st.onColumnDdl(K, 20L, "add", "c", "INT", Some("5"), None)
+    renameTable(st, K, ("app", "old"))
+    st.onRecord("app", "x", "recover_table", "", "t", 15L) // FLASHBACK x TO t
+    colDdl(st, K, 20L, "add", "c", "INT", Some("5"), None)
     assert(st.fold(K, frame(0L -> None)).collect()(0).isNullAt(1))
   }
 
@@ -395,7 +396,7 @@ class DecodeFillSpec extends SparkSpec {
   private def fillOf(tail: String, raw: String): Option[String] = {
     val st = new DecodeFill(true)
     st.recordSlice(K, 0L, Set("k"))
-    st.onColumnDdl(K, 10L, "add", "c", tail, Some(raw), None)
+    colDdl(st, K, 10L, "add", "c", tail, Some(raw), None)
     Option(st.fold(K, frame(0L -> None)).collect()(0).getString(1))
   }
 
@@ -433,4 +434,32 @@ class DecodeFillSpec extends SparkSpec {
     assert(fillOf("INT", "FALSE").contains("0"))
     assert(fillOf("STRING", "'TRUE'").contains("TRUE")) // quoted: text
   }
+}
+
+/** The logged DDL records the decode walk hands [[DecodeFill.onRecord]]
+  * for one statement, in the walk's order. */
+object DecodeFillSpec {
+  private type K = (String, String)
+
+  /** A column statement: its action record, an add's `origin_default`,
+    * then the new type's `dictionary` (keyed by the post-statement name). */
+  def colDdl(st: DecodeFill, k: K, version: Long, action: String, c: String,
+      arg: String, dflt: Option[String], dict: Option[Vector[String]],
+      native: String = ""): Unit = {
+    st.onRecord(k._1, k._2, action, c, arg, version, native)
+    if (action == "add")
+      dflt.foreach(d => st.onRecord(k._1, k._2, "origin_default", c, d, version))
+    val name = if (action == "change") arg.split(" ", 2)(0) else c
+    dict.foreach(vs => st.onRecord(k._1, k._2, "dictionary", name,
+      vs.map(v => s"'$v'").mkString(","), version))
+  }
+  def createTable(st: DecodeFill, k: K): Unit =
+    st.onRecord(k._1, k._2, "create_table", "", "", 0L)
+  def dropTable(st: DecodeFill, k: K): Unit =
+    st.onRecord(k._1, k._2, "drop_table", "", "", 0L)
+  def truncate(st: DecodeFill, k: K): Unit =
+    st.onRecord(k._1, k._2, "truncate", "", "", 0L)
+  def renameTable(st: DecodeFill, from: K, to: K): Unit =
+    st.onRecord(from._1, from._2, "rename_table", "",
+      if (to._1 == from._1) to._2 else s"${to._1}.${to._2}", 0L)
 }

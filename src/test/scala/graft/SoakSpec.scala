@@ -171,7 +171,7 @@ class SoakSpec extends SparkSpec {
       .parquet(s"$in/p=*")
       .as[PcEvent]
     var matchedCount = 0L
-    val q = PcMatcher.matched(events, timeoutMs = 3600_000L).toDF()
+    val q = new PcMatcher(3600_000L).matched(events).toDF()
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         matchedCount += b.filter(col("status") === "matched").count(); ()

@@ -19,7 +19,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.TestGroupState
     def run(startTs: Long, evs: Seq[PcEvent],
         st: TestGroupState[PcMatcher.Pending]): Seq[PcMatcher.Matched] =
-      PcMatcher.matchFn(1000L)(startTs, evs.iterator, st).toSeq
+      new PcMatcher(1000L).matchFn(startTs, evs.iterator, st).toSeq
 
     // P then C in one group invocation -> matched
     val s1 = TestGroupState.create[PcMatcher.Pending](
@@ -51,6 +51,24 @@ class StreamingSpec extends SparkSpec {
     assert(m5 == Seq(PcMatcher.Matched(4L, 9L, -1L, "unresolved")) && !s5.exists)
   }
 
+  test("pc matcher counts a timed-out key whose state is already gone") {
+    // a failed task attempt may remove the state before the retry
+    // re-processes the timed-out key: nothing to emit, but the matcher's
+    // count reads the vacated key, and a live timeout counts nothing
+    import org.apache.spark.sql.streaming.TestGroupState
+    val m = new PcMatcher(1000L)
+    val gone = TestGroupState.create[PcMatcher.Pending](
+      Optional.empty(), GroupStateTimeout.ProcessingTimeTimeout, 0L, Optional.of(0L), true)
+    assert(m.matchFn(7L, Iterator.empty, gone).isEmpty)
+    assert(m.vacatedTimeouts == 1L)
+    val pending = TestGroupState.create[PcMatcher.Pending](
+      Optional.of(PcMatcher.Pending(9L)), GroupStateTimeout.ProcessingTimeTimeout,
+      0L, Optional.of(0L), true)
+    assert(m.matchFn(8L, Iterator.empty, pending).toSeq ==
+      Seq(PcMatcher.Matched(8L, 9L, -1L, "unresolved")))
+    assert(m.vacatedTimeouts == 1L)
+  }
+
   test("pc matcher re-arms the timeout when a batch carries only unknown kinds (T1)") {
     // GroupState clears the stored timeout on EVERY function invocation;
     // a batch delivering only an unrecognized kind for a key with a
@@ -61,7 +79,7 @@ class StreamingSpec extends SparkSpec {
     val st = TestGroupState.create[PcMatcher.Pending](
       Optional.of(PcMatcher.Pending(100L)),
       GroupStateTimeout.ProcessingTimeTimeout, 2000L, Optional.of(0L), false)
-    val out = PcMatcher.matchFn(600000L)(5L,
+    val out = new PcMatcher(600000L).matchFn(5L,
       Iterator(PcEvent(5L, "X", 101L)), st).toSeq
     assert(out.isEmpty && st.exists, "unknown kinds neither emit nor clear")
     assert(st.getTimeoutTimestampMs.isPresent,
@@ -3424,6 +3442,68 @@ class StreamingSpec extends SparkSpec {
     } finally spark.streams.removeListener(listener)
   }
 
+  test("decode metrics listener: forget drops a query's state; its next progress starts a fresh history") {
+    // forget is the long-lived listener's cleanup after a query's final
+    // read: snapshot and deltas empty at once, and the query's next
+    // progress event (here a restart from the same checkpoint, so the same
+    // id) publishes against no stale last-seen value — its first delta is
+    // the whole cumulative total, and the fresh history sums to it
+    import graft.sources.PbBinlogFile
+    val wireDir = graft.util.Scratch.dir("graft_fgt_wire")
+    val outDir = graft.util.Scratch.dir("graft_fgt_out")
+    val ckpt = graft.util.Scratch.dir("graft_fgt_ckpt")
+    def dml(ids: Seq[Long]) = wireDml("t", ids, lit("""{"k": 1}"""))
+    PbBinlogFile.write(
+      dml(Seq(1L, 3L)).unionByName(wireDdl(4L, "CREATE INDEX i_k ON app.t (k)")),
+      wireDir, nFiles = 1)
+    def start(tracker: SchemaTracker) = CdcStream.ddlDrivenDecodeTables(
+      PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
+      "app", col("event_type"))
+    def fresh() = {
+      val t = new SchemaTracker()
+      t.createTable("app", "t", Seq("k DOUBLE"), version = 0)
+      t
+    }
+    val listener = new CdcStream.DecodeMetricsListener()
+    def await(q: java.util.UUID, total: Long): Map[String, Long] = {
+      val deadline = System.currentTimeMillis + 30000
+      var snap = listener.snapshot(q)
+      while (snap.get("skipped_ddl_total") != Some(total) &&
+          System.currentTimeMillis < deadline) {
+        Thread.sleep(100); snap = listener.snapshot(q)
+      }
+      snap
+    }
+    spark.streams.addListener(listener)
+    try {
+      val q1 = start(fresh())
+      try q1.processAllAvailable() finally q1.stop()
+      assert(await(q1.id, 1L).get("skipped_ddl_total") == Some(1L))
+      assert(listener.deltas(q1.id).nonEmpty)
+      listener.forget(q1.id)
+      assert(listener.snapshot(q1.id).isEmpty)
+      assert(listener.deltas(q1.id).isEmpty)
+
+      PbBinlogFile.write(
+        wireDdl(6L, "OPTIMIZE TABLE app.t")
+          .unionByName(wireDdl(8L, "ANALYZE TABLE app.t"))
+          .unionByName(dml(Seq(9L))),
+        wireDir, nFiles = 1)
+      val tracker2 = fresh()
+      CdcStream.recoverDecodeTracker(spark, outDir, ckpt, tracker2)
+      val q2 = start(tracker2)
+      try q2.processAllAvailable() finally q2.stop()
+      assert(q2.id == q1.id, "the restart must resume the checkpoint's query id")
+      val snap = await(q2.id, 3L)
+      assert(snap.get("skipped_ddl_total") == Some(3L), s"snapshot=$snap")
+      val ds = listener.deltas(q2.id)
+      assert(ds.nonEmpty && ds.head("skipped_ddl_delta") == 3L,
+        s"the first delta after forget reads the whole total: $ds")
+      assert(ds.map(_("skipped_ddl_delta")).sum == 3L, s"deltas=$ds")
+      assert(snap.get("deltas_dropped_total") == Some(0L), s"snapshot=$snap")
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("no LongAccumulator in the decode or replication pipeline sources") {
     // the decode keeps its counts in one per-query record (decodeCounts);
     // a counter parameter on these signatures would split that home again
@@ -4469,7 +4549,7 @@ class StreamingSpec extends SparkSpec {
       // operator keeps the query scheduling batches to re-check timeouts,
       // so processAllAvailable (and even an available-now drain) never
       // report "done" while a timeout is registered
-      val q = PcMatcher.matched(events, timeoutMs = 600000L)
+      val q = new PcMatcher(600000L).matched(events)
         .toDF().writeStream.format("memory").queryName("pc_rocks")
         .outputMode("append")
         .start()

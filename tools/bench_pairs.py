@@ -2,9 +2,12 @@
 """Paired benchmark runs of two checkouts: a parent and a change.
 
 Usage:
-    python3 tools/bench_pairs.py <parentDir> <changeDir> --workload <name> \\
+    python3 tools/bench_pairs.py <parentDir> <changeDir> [--workload <name>] \\
         --seeds <first>-<last> [--save <runs.jsonl>]
     python3 tools/bench_pairs.py --selftest
+
+Without --workload, every workload of the change's BENCHMARK.json runs in
+turn, each over the same seeds, and each gets its own report.
 
 Each checkout runs the `command` of its own BENCHMARK.json with that file's
 `run_seconds`, untraced, one run at a time: for each seed both sides run
@@ -24,11 +27,13 @@ the change's BENCHMARK.json:
     parent run.
 
 A run that is not `correct`, has `failed` > 0 or does not finish is
-flagged. The exit status is 1 when a run is flagged or a median is out of
-its bound or unresolved, else 0. The script reads BENCHMARK.json and writes nothing in
+flagged. The exit status is 1 when, in any workload, a run is flagged or a
+median is out of its bound or unresolved, else 0. The script reads BENCHMARK.json and writes nothing in
 either checkout besides what the benchmark command itself writes.
 """
 import argparse
+import contextlib
+import io
 import json
 import math
 import os
@@ -130,6 +135,38 @@ def report(bench, runs):
     return ok
 
 
+def run_pairs(dirs, bench, workload, seeds, save=None, runner=run_once):
+    """The pairs of one workload, each run printed as it ends."""
+    runs = []
+    for seed in seeds:
+        order = ("parent", "change") if seed % 2 else ("change", "parent")
+        pair = {"workload": workload, "seed": seed}
+        for side in order:
+            r = runner(dirs[side], bench, workload, seed)
+            pair[side] = r
+            metrics = {k: round(v["value"], 1)
+                       for k, v in (r or {}).get("metrics", {}).items()}
+            print(f"{workload} seed {seed} {side}: "
+                  f"{'FLAGGED ' if flagged(r) else ''}"
+                  f"correct={(r or {}).get('correct')} "
+                  f"failed={(r or {}).get('failed')} {metrics}", flush=True)
+        runs.append(pair)
+        if save:
+            with open(save, "a") as f:
+                f.write(json.dumps(pair) + "\n")
+    return runs
+
+
+def run_all(dirs, bench, workloads, seeds, save=None, runner=run_once):
+    """Each workload's pairs, then its report; True when every report is."""
+    ok = True
+    for workload in workloads:
+        runs = run_pairs(dirs, bench, workload, seeds, save, runner)
+        print(f"== {workload}")
+        ok = report(bench, runs) and ok
+    return ok
+
+
 def selftest():
     parent = [10.0, 11.0, 12.0, 13.0, 14.0, 15.0, 16.0, 17.0, 18.0, 19.0]
     assert quartiles(parent) == (12.25, 14.5, 16.75)
@@ -164,6 +201,24 @@ def selftest():
     assert not flagged({"correct": True, "failed": 0})
     assert seed_range("611-620") == list(range(611, 621))
     assert seed_range("7") == [7]
+    # every workload runs and reports; one flagged run fails the whole
+    bench = {"end_to_end": [{"name": "m", "unit": "1/s", "better": "higher",
+                             "bound": 0.25}]}
+    ran = []
+
+    def fake(checkout, bench, workload, seed, bad=None):
+        ran.append((workload, checkout, seed))
+        return {"correct": workload != bad, "failed": 0,
+                "metrics": {"m": {"value": 100.0 + seed % 3}}}
+    dirs = {"parent": "p", "change": "c"}
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        assert run_all(dirs, bench, ["a", "b"], [1, 2, 3], runner=fake)
+        assert not run_all(dirs, bench, ["a", "b"], [1, 2, 3],
+                           runner=lambda *a: fake(*a, bad="b"))
+    assert [w for w, _, _ in ran] == ["a"] * 6 + ["b"] * 6 + ["a"] * 6 + ["b"] * 6
+    assert [c for _, c, _ in ran[:4]] == ["p", "c", "c", "p"]
+    assert out.getvalue().count("== a") == 2 and out.getvalue().count("== b") == 2
     print("selftest ok")
 
 
@@ -179,29 +234,14 @@ def main():
     if args.selftest:
         selftest()
         return
-    if not (args.parent and args.change and args.workload and args.seeds):
-        ap.error("parent, change, --workload and --seeds are required")
+    if not (args.parent and args.change and args.seeds):
+        ap.error("parent, change and --seeds are required")
     with open(os.path.join(args.change, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    dirs = {"parent": args.parent, "change": args.change}
-    runs = []
-    for seed in seed_range(args.seeds):
-        order = ("parent", "change") if seed % 2 else ("change", "parent")
-        pair = {"seed": seed}
-        for side in order:
-            r = run_once(dirs[side], bench, args.workload, seed)
-            pair[side] = r
-            metrics = {k: round(v["value"], 1)
-                       for k, v in (r or {}).get("metrics", {}).items()}
-            print(f"seed {seed} {side}: "
-                  f"{'FLAGGED ' if flagged(r) else ''}"
-                  f"correct={(r or {}).get('correct')} "
-                  f"failed={(r or {}).get('failed')} {metrics}", flush=True)
-        runs.append(pair)
-        if args.save:
-            with open(args.save, "a") as f:
-                f.write(json.dumps(pair) + "\n")
-    ok = report(bench, runs)
+    workloads = ([args.workload] if args.workload
+                 else [w["name"] for w in bench["workloads"]])
+    ok = run_all({"parent": args.parent, "change": args.change}, bench,
+                 workloads, seed_range(args.seeds), args.save)
     sys.exit(0 if ok else 1)
 
 
