@@ -180,10 +180,15 @@ object DrainerPipeline {
     * → multi-table schema-versioned decode (each table's frames against
     * its own history, wire DDL re-typing later frames, durable DDL log) →
     * the schema-driven JDBC loader, one multi-table
-    * [[JdbcSchemaLoader.applyBatch]] per micro-batch. Exactly-once falls
-    * out of the two replay guards composing: the decode replays a crashed
-    * batch byte-identically (its tracker advances last), and the loader
-    * skips a batch id it has already committed.
+    * [[JdbcSchemaLoader.applyBatch]] per micro-batch. The loader is the
+    * decode's sink: each table's frame is decoded inside the loader's
+    * merge stages over the pinned wire batch, and the only thing the loop
+    * writes under `outDir` is the DDL log (`ddl/batch=<id>`), never a
+    * per-table `data/` copy. Exactly-once falls out of the two replay
+    * guards composing: a batch that fails in the loader is recomputed
+    * from the wire against an unchanged tracker (it advances last), and
+    * the loader skips a batch id it has already committed and, within a
+    * replayed batch, every sub-batch below a barrier it already logged.
     *
     * `tableMap` routes a wire table to its target table (the F9 router
     * analog; wire tables mapping to one target — e.g. across a RENAME —

@@ -722,9 +722,9 @@ class JdbcSchemaLoader(url: String, clusterId: Long = 1L,
     * the JDBC passes; the eager checkpoint is the only job, and it carries
     * an observation of each segment's delete count, non-delete count and
     * max commit_ts, so the apply needs no emptiness probe and no watermark
-    * job (a streaming decode's slice is a scan of its written batch dir,
-    * see [[graft.streaming.CdcStream.DecodedBatch]], and is not read
-    * again). */
+    * job. A streaming decode's slice is the decode itself over the pinned
+    * wire batch (see [[graft.streaming.CdcStream.DecodedBatch]]): it runs
+    * inside this job's map stage, once, and is not read again. */
   private def mergeTable(dml: DataFrame, table: String, keyCols: Seq[String],
       segs: Seq[Int]): Merged = {
     val slice = dml.filter(col("_seg").isin(segs: _*))

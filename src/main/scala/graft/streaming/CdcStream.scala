@@ -1,9 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 
 import graft.sinks.UpsertSink
@@ -285,14 +287,41 @@ object CdcStream {
     if (info.columns.isEmpty) new StructType()
     else StructType.fromDDL(info.columns.mkString(", "))
 
+  /** One partition's share of the decode's gather, over rows (is_ddl,
+    * commit_ts, ddl_sql, schema, table): its DDL frames as (commit ts,
+    * statement, null when missing) and, per (schema, table) it carries DML
+    * for, the least commit ts. A row with a NULL op or commit ts matches no
+    * interval, and a DML row with a NULL routing value no table: both fold
+    * to nothing (a NULL key would also NPE the driver's key sort). */
+  private def gatherPartition(rows: Iterator[InternalRow])
+      : Iterator[(Seq[(Long, String)], Map[(String, String), Long])] = {
+    val ddls = mutable.ArrayBuffer.empty[(Long, String)]
+    val mins = mutable.HashMap.empty[(UTF8String, UTF8String), Long]
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val ts = r.getLong(1)
+        if (r.getBoolean(0))
+          ddls += ((ts, if (r.isNullAt(2)) null else r.getUTF8String(2).toString))
+        else if (!r.isNullAt(3) && !r.isNullAt(4)) {
+          // the row is reused: a key the map keeps is a copy
+          val k = (r.getUTF8String(3), r.getUTF8String(4))
+          if (mins.get(k).forall(ts < _)) mins.put((k._1.clone(), k._2.clone()), ts)
+        }
+      }
+    }
+    Iterator((ddls.toSeq, mins.map { case ((s, t), ts) =>
+      (s.toString, t.toString) -> ts }.toMap))
+  }
+
   /** Per-batch decoded output handed to a composing sink (see
     * [[ddlDrivenDecodeTables]]'s `emit`): the batch id, each table's
     * (column defs, string-decoded frame), and the batch's applied wire
     * DDLs as (version, schema, table, action, column, arg). The frame is
-    * a parquet scan of the table's written `batch=<id>/table=<t>` dir,
-    * read with the decoded schema — the sink consumes the finished
-    * decode, never its lineage over the wire. The defs are EVERY def
-    * the table's intervals decoded with this batch —
+    * the table's decode over the pinned wire batch, not a durable copy:
+    * each job the sink runs over it decodes inside its own stages, and it
+    * is valid only until the sink returns (the batch is released then). A
+    * batch the sink fails is recomputed from the wire on restart. The
+    * defs are EVERY def the table's intervals decoded with this batch —
     * first-seen order, latest type winning — NOT the end-of-batch shape:
     * a column dropped or renamed away mid-batch stays listed so its
     * pre-barrier values remain addressable (a sink deriving the table's
@@ -340,29 +369,31 @@ object CdcStream {
     * interval's shape, built from the tracked column defs
     * (`StructType.fromDDL`), with NULL where its shape lacks a column.
     *
-    * Each table's decoded frame lands under
+    * The decode has one output, its sink. With `emit`, the sink receives
+    * each table's decoded frame, built over the pinned wire batch (see
+    * [[DecodedBatch]]): no table is written, and a composing sink such as
+    * the JDBC loader runs the decode inside its own stages. Without
+    * `emit`, each table's frame lands under
     * `outDir/data/batch=<id>/table=<t>`, at most one file per batch
-    * partition, each row stamped with the schema version that decoded it
-    * (the per-table shape the multi-table JDBC loader consumes). Only
-    * tables the batch carries DML for write a
-    * dir — per-batch work scales with the touched set, so a sparse-traffic
-    * table is simply absent from batches that never mention it (consumers
-    * must enumerate existing dirs, not tracker.tablesOf × batch ids).
-    * `emit` receives, per written table, a scan of that dir under the
-    * decoded schema (see [[DecodedBatch]]), so a composing sink's jobs
-    * read the decoded rows instead of re-running the decode.
+    * partition. Either way each row is stamped with the schema version
+    * that decoded it (the per-table shape the multi-table JDBC loader
+    * consumes), and only tables the batch carries DML for get a frame —
+    * per-batch work scales with the touched set, so a sparse-traffic table
+    * is simply absent from batches that never mention it (consumers must
+    * enumerate existing dirs, not tracker.tablesOf × batch ids).
     * Frames addressing no tracked table drop, like the reference's
     * filter-then-load contract — routing upstream decides what reaches the
     * decode.
     *
     * Replay safety: the batch decodes against a fork of the tracker
     * ([[SchemaTracker.fork]]), to which the walk applies each DDL record
-    * through the same interpreter as the commit and the restart. The live
-    * tracker advances only AFTER the batch's output and its DDL log have
-    * been written, so a batch that fails mid-write replays from an
-    * unchanged tracker and reproduces the same bytes. Output overwrites
-    * its batch dirs (idempotent per batch id, the DrainerPipeline
-    * outbinlog pattern); the applied DDLs of every table overwrite
+    * through the same interpreter as the commit and the restart. The DDL
+    * log is written before the sink runs, and the live tracker advances
+    * only AFTER the sink returns, so a batch that fails in its sink
+    * replays from an unchanged tracker and recomputes the same frames
+    * from the wire. Written output overwrites its batch dirs (idempotent
+    * per batch id, the DrainerPipeline outbinlog pattern); the applied
+    * DDLs of every table overwrite
     * `outDir/ddl/batch=<id>` — one shared action-tagged log ordered by
     * commit ts, the durable source of truth a RESTARTED process replays
     * into a fresh tracker via [[recoverDecodeTracker]] (the tracker itself
@@ -392,8 +423,9 @@ object CdcStream {
     * registered under any of `schemas`, plus tables a wire CREATE TABLE
     * registers (or a RENAME TABLE re-homes — including ACROSS schemas)
     * mid-stream. Each schema's DDL reshapes only its own tables; two
-    * schemas may carry the same table NAME without interference. Output
-    * lands under `outDir/data/batch=<id>/schema=<s>/table=<t>`; the one
+    * schemas may carry the same table NAME without interference. Without
+    * `emit`, output lands under
+    * `outDir/data/batch=<id>/schema=<s>/table=<t>`; the one
     * shared action-tagged DDL log (already schema-qualified) replays N
     * schemas' histories through the unchanged [[recoverDecodeTracker]]. */
   def ddlDrivenDecodeSchemas(wire: DataFrame, tracker: SchemaTracker,
@@ -601,6 +633,17 @@ object CdcStream {
     def legOf(k: (String, String)): Column =
       if (schemaOf.isEmpty) tOf === lit(k._2)
       else sOf === lit(k._1) && tOf === lit(k._2)
+    // the decode's one output: the composing sink, else the per-table
+    // writer. The writes are independent jobs, fanned out on the bounded
+    // pool (ref: pkg/loader/load.go:508-527's 16 workers): a trigger
+    // touching hundreds of tables must not serialize hundreds of small
+    // driver-submitted jobs. A table's one frame keeps the batch's
+    // partitioning, so it writes at most one file per batch partition
+    val sink: DecodedBatchMulti => Unit = emit.getOrElse { case (id, frames, _) =>
+      graft.util.Par.foreachPar(frames.toSeq.sortBy(_._1)) { case ((s, t), (_, df)) =>
+        df.write.mode("overwrite").parquet(layout(id, s, t))
+      }
+    }
     // A4-parity event counts in the query's own progress stream
     // (`StreamingQueryProgress.observedMetrics`) — [[DecodeMetricsListener]]
     // merges these with the query's [[decodeCounts]], so an operator reads
@@ -625,8 +668,10 @@ object CdcStream {
         // ride over a CREATE INDEX; only a statement that addresses a
         // TRACKED table's shape and cannot apply throws
         def skip(): Unit = addCount(queryId, "skipped_ddl_total", 1L)
-        // the gather plus one filter per touched table re-scan this batch;
-        // pin it once instead of re-running the source scan each time.
+        // the gather and every touched table's frame (read inside the
+        // sink) scan this batch; pin it once — the gather's job fills the
+        // cache — instead of re-running the source scan each time, and
+        // keep it pinned until the sink returns.
         // NOT spread (r21, measured both ways): widening the narrow-wire
         // batch to cores looked right on paper — each table's frame
         // inherits the wire's segment count — but the per-frame fixed
@@ -638,37 +683,28 @@ object CdcStream {
         // carries ≥ cores segments.
         val batch = batch0.persist()
         try {
-          // ONE gather job per batch, grouped by (is_ddl, schema, table):
-          // result rows = the TOUCHED table set plus the DDL frames'
-          // routing groups — metadata-sized. Every piece of per-trigger
-          // driver state below (interval bounds, frontier check, cuts)
-          // builds from (touched ∪ DDL-addressed), NEVER from the full
-          // registration: at 100k tracked tables and sparse traffic that
-          // is a handful of map entries per trigger, not 100k (the catalog
-          // view itself is an O(1) fork).
-          val gathered = batch.groupBy(
-              (col("op") === "DDL").as("is_ddl"),
-              sOf.as("s"), tOf.as("t"))
-            .agg(
-              sort_array(collect_list(when(col("op") === "DDL",
-                struct(col("commit_ts"), col("ddl_sql"))))).as("ddls"),
-              min(when(col("op") =!= "DDL", col("commit_ts"))).as("min_ts"))
-            .collect()
-          // DDL frames in commit-ts order (ties by statement text, the
-          // pre-grouping sort_array convention; a missing statement text
-          // sorts first and parses to a counted unknown)
-          val ddls = gathered.filter(_.getBoolean(0)).toSeq
-            .flatMap(_.getSeq[org.apache.spark.sql.Row](3))
-            .map(r => (r.getLong(0), r.getString(1)))
-            .sortBy { case (ts, sql) => (ts, if (sql == null) "" else sql) }
+          // ONE gather job per batch, which also fills the batch's cache:
+          // each partition folds its DDL frames and, per (schema, table) it
+          // carries DML for, the least commit ts ([[gatherPartition]]); the
+          // driver merges the folds — metadata-sized. Every piece of
+          // per-trigger driver state below (interval bounds, frontier
+          // check, cuts) builds from (touched ∪ DDL-addressed), NEVER from
+          // the full registration: at 100k tracked tables and sparse
+          // traffic that is a handful of map entries per trigger, not 100k
+          // (the catalog view itself is an O(1) fork).
+          val folds = batch.select((col("op") === "DDL").as("is_ddl"),
+              col("commit_ts"), col("ddl_sql"), sOf.as("s"), tOf.as("t"))
+            .queryExecution.toRdd.mapPartitions(gatherPartition).collect()
+          // DDL frames in commit-ts order (ties by statement text; a
+          // missing statement text sorts first and parses to a counted
+          // unknown)
+          val ddls = folds.toSeq.flatMap(_._1)
+            .sortBy { case (ts, sql) => (ts, Option(sql)) }
           // the tables this batch actually carries DML for, each with its
           // min commit ts (the frontier-violation precheck input) —
-          // per-batch decode/write/emit work scales with THIS set
-          // a NULL routing value can never match a table — drop it here
-          // (it would NPE the key sort and poison the catalog build)
-          val touchedMin: Map[(String, String), Long] = gathered
-            .filter(r => !r.getBoolean(0) && !r.isNullAt(1) && !r.isNullAt(2))
-            .map(r => (r.getString(1), r.getString(2)) -> r.getLong(4)).toMap
+          // per-batch decode/emit work scales with THIS set
+          val touchedMin: Map[(String, String), Long] =
+            folds.toSeq.flatMap(_._2).groupMapReduce(_._1)(_._2)(math.min)
           val touched = touchedMin.keySet
           // parse once; the walk below dispatches the same parse (folded
           // under the tracker's identifier policy)
@@ -1102,8 +1138,13 @@ object CdcStream {
             def byCut(vs: IndexedSeq[Column]): Column =
               caseOf(vs.zipWithIndex.map { case (v, i) => (col("_i") === i, v) })
             val ts = col("commit_ts")
+            // a DML row: op non-null and not DDL, spelled null-safe so that
+            // a sink's filter for DDL rows over the frame (the loader's
+            // barrier gather) folds to an empty relation in the optimizer
+            // — `op = 'DDL'` substitutes into `op <=> 'DDL'`, not into
+            // `op = 'DDL'` itself — instead of scanning the batch
             val parsed = batch
-              .filter(col("op") =!= "DDL" && legOf(k) &&
+              .filter(col("op").isNotNull && !(col("op") <=> "DDL") && legOf(k) &&
                 cuts.map { case (lo, hi, _) => ts > lo && ts <= hi }.reduce(_ || _))
               .withColumn("_i", caseOf(cuts.zipWithIndex.map {
                 case ((_, hi, _), i) => (ts <= hi, lit(i))
@@ -1136,21 +1177,12 @@ object CdcStream {
             // DECIMAL(10,1) fills the decode's own spelling `1.5`.
             k -> ((defsOf(k).values.toSeq, fillState.fold(k, decoded)))
           }
-          // per-table writes are independent jobs — fan them out on the
-          // bounded pool (ref: pkg/loader/load.go:508-527's 16 workers): a
-          // trigger touching hundreds of tables must not serialize
-          // hundreds of small driver-submitted jobs. A table's one frame
-          // keeps the batch's partitioning, so it writes at most one file
-          // per batch partition, and every sink job over the written dir
-          // (the emitted scan below) pays one task per file
-          graft.util.Par.foreachPar(frames) { case ((s, t), (_, df)) =>
-            df.write.mode("overwrite").parquet(layout(id, s, t))
-          }
           import spark.implicits._
           // written only when non-empty (an empty parquet dir is
           // schema-less and would break the recovery read); a replayed
           // batch regenerates the same DDL set, so the skip is
-          // deterministic
+          // deterministic. One task, one file: the rows are driver-local
+          // and few.
           // `seq` pins the WALK order: several records can share a version
           // (a multi-table RENAME's chained parts, a DROP DATABASE
           // expansion) and a chained rename only replays correctly in
@@ -1160,22 +1192,15 @@ object CdcStream {
               .map { case ((v, s, t, a, c, g), i) => (v, s, t, a, c, g, i.toLong) }
               .toDF("version", "schema_name", "table_name", "action",
                 "column_name", "arg", "seq")
+              .coalesce(1)
               .write.mode("overwrite").parquet(s"$outDir/ddl/batch=$id")
-          // nothing below reads the wire batch: release its cache before
-          // the composing sink runs (the finally still covers the error
-          // path; a second unpersist is a no-op)
-          batch.unpersist()
-          // composing sink (e.g. a JDBC loader) consumes the decoded batch
-          // AFTER the parquet log is durable and BEFORE the live catalog
-          // advances — a crash inside the sink replays the batch
-          // identically, and an idempotent sink (batch-id guard) skips.
-          // Each frame is a scan of the table's WRITTEN dir under the
-          // frame's own schema (no inference job): every sink job reads
-          // the decoded rows back instead of re-running the parse over the
-          // wire batch
-          emit.foreach(f => f((id, frames.map { case (k @ (s, t), (defs, df)) =>
-            k -> ((defs, spark.read.schema(df.schema).parquet(layout(id, s, t))))
-          }.toMap, applied.toSeq)))
+          // the sink consumes the decoded batch AFTER the DDL log is
+          // durable and BEFORE the live catalog advances — a crash inside
+          // the sink replays the batch identically from the wire, and an
+          // idempotent sink (batch-id guard) skips what it already did.
+          // The frames read the pinned batch, so the finally releases it
+          // only after the sink returns
+          sink((id, frames.toMap, applied.toSeq))
           // only now does the live catalog advance — a crash anywhere
           // above replays this batch against the unchanged tracker
           applied.foreach { case (v, s, t, action, c, arg) =>

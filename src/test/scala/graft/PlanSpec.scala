@@ -313,12 +313,12 @@ class PlanSpec extends SparkSpec {
     // payload once per column (the r22 single-bind fix), and a leg whose
     // table lost its last column reads no field at all. Table t: (a, b)
     // until 20, (b) until 40, () after — two legs with wire columns, one
-    // without. Table u: (x, y) throughout — one leg with two fields. The
-    // parses are counted in the decode's own per-table write plans; the
-    // emitted frames are scans of what was written, so they parse nothing
-    // and no longer reach back to the wire source. Each table decodes in
-    // ONE frame over the wire batch, whatever its leg count: its write
-    // plan reads the wire once, not once per leg.
+    // without. Table u: (x, y) throughout — one leg with two fields. With
+    // `emit` the sink is the decode's one output: nothing is written under
+    // `data/`, and each emitted frame IS the decode, one frame per table
+    // over the wire batch whatever its leg count, so it reads the wire
+    // once and carries the table's parses itself; a filter for DDL rows
+    // over it, the loader's barrier gather, plans no scan at all.
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.functions._
@@ -339,23 +339,25 @@ class PlanSpec extends SparkSpec {
     val tracker = new SchemaTracker()
     tracker.createTable("app", "t", Seq("a BIGINT", "b BIGINT"), version = 0)
     tracker.createTable("app", "u", Seq("x BIGINT", "y BIGINT"), version = 0)
-    // (parses, wire leaves) per table, from the write of its data dir
-    val TableDir = ".*/data/batch=\\d+/table=(\\w+)".r
-    val writes = new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
+    // every file write under outDir, by output path
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         qe.analyzed match {
-          case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString match {
-            case p @ TableDir(t) if p.contains(outDir) =>
-              writes.put(t, (jsonParses(c), wireLeaves(c))); ()
-            case _ => ()
-          }
+          case c: InsertIntoHadoopFsRelationCommand
+              if c.outputPath.toString.contains(outDir) =>
+            writes.add(c.outputPath.toString); ()
           case _ => ()
         }
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     var emitted = Map.empty[String, (Int, Int)]
+    // per frame, the leaves a filter for DDL rows reads that are not an
+    // empty local relation
+    var ddlScans = Map.empty[String, Int]
     spark.listenerManager.register(listener)
+    val marker = s"$outDir/marker"
+    import scala.jdk.CollectionConverters._
     try {
       val q = CdcStream.ddlDrivenDecodeTables(
         PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
@@ -364,20 +366,34 @@ class PlanSpec extends SparkSpec {
           emitted ++= frames.map { case (t, (_, df)) =>
             t -> ((jsonParses(df), wireLeaves(df.queryExecution.analyzed)))
           }
+          ddlScans ++= frames.map { case (t, (_, df)) =>
+            t -> df.filter(col("op") === "DDL").queryExecution.optimizedPlan
+              .collectLeaves().count {
+                case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+                  l.data.nonEmpty
+                case _ => true
+              }
+          }
         })
       try q.processAllAvailable() finally q.stop()
-      // listener callbacks arrive on the listener bus, after the writes
+      // listener callbacks arrive in order on the listener bus, after the
+      // writes: once the marker written last is seen, so is every write
+      // of the query
+      spark.range(1).write.mode("overwrite").parquet(marker)
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (writes.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+      while (!writes.asScala.exists(_.endsWith(marker)) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
     } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    val written = writes.asScala.toMap
+    val written = writes.asScala.toSeq
     assert(tracker.current("app", "t").get.columns.isEmpty)
-    assert(written.view.mapValues(_._1).toMap == Map("t" -> 2, "u" -> 1))
-    // the detector sees the wire source in the write plans it must not
-    // find in the emitted frames
-    assert(written.view.mapValues(_._2).toMap == Map("t" -> 1, "u" -> 1))
-    assert(emitted == Map("t" -> ((0, 0)), "u" -> ((0, 0))))
+    assert(written.exists(_.endsWith(marker)), s"writes seen: $written")
+    assert(!written.exists(_.contains(s"$outDir/data")),
+      s"the decode wrote table data beside its sink: $written")
+    assert(written.count(_.contains(s"$outDir/ddl/batch=0")) == 1, s"writes: $written")
+    assert(emitted == Map("t" -> ((2, 1)), "u" -> ((1, 1))))
+    // the loader's barrier gather over an emitted frame reads nothing: the
+    // frame's DML filter and the gather's DDL filter fold to empty
+    assert(ddlScans == Map("t" -> 0, "u" -> 0), s"DDL gather scans: $ddlScans")
   }
 
   test("typedDecode binds its JSON parse once") {

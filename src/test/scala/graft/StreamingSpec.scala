@@ -4282,9 +4282,9 @@ class StreamingSpec extends SparkSpec {
     assert(tb(96L) == ((96.25, None)), s"post-drop row: ${tb(96L)}")
   }
 
-  test("streamingReplicated: a union that decodes to zero rows is still written, emitted and applied") {
+  test("streamingReplicated: a union that decodes to zero rows is still emitted and applied") {
     // t's only DML sits at or below a same-batch TRUNCATE, so its union is
-    // empty; the emitted frame is a scan of the written dir and must still
+    // empty; the emitted frame decodes to zero rows and must still
     // carry the union's columns, or the typed projection of the composing
     // sink fails to resolve. The truncate translates to a target DELETE
     // that rides t's empty frame as the batch's one barrier.
@@ -4408,11 +4408,11 @@ class StreamingSpec extends SparkSpec {
     assert(ddlLog(loader) == Seq("ALTER TABLE TA_STATE ADD COLUMN EXTRA BIGINT DEFAULT 5"),
       s"DDL log: ${ddlLog(loader)}")
     assert(loader.lastCheckpoint.batchId == 0L)
-    // ta's union has two legs (before and after the barrier) over a
-    // one-partition batch: it is written as one file, not one per leg
-    val taFiles = new java.io.File(s"$out/data/batch=0/table=ta").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(taFiles == 1, s"ta wrote $taFiles files")
+    // the loader is the decode's sink: the replicated loop writes its DDL
+    // log and no per-table data
+    assert(new java.io.File(s"$out/ddl/batch=0").isDirectory)
+    assert(!new java.io.File(s"$out/data").exists(),
+      "the replicated decode wrote a per-table data copy")
 
     // form 2: a router replicated the SAME DDL row into both slices, each
     // slice a scan of written parquet like the decode's emitted frames
@@ -4446,6 +4446,111 @@ class StreamingSpec extends SparkSpec {
     assert(ddlLog(loader2) == Seq(alter), s"DDL log: ${ddlLog(loader2)}")
     assert(!loader2.applyBatch(Map("A2" -> a2, "B2" -> b2), 0L))
     assert(ddlLog(loader2) == Seq(alter))
+  }
+
+  test("streamingReplicated: a loader failing past its first barrier replays the batch from the wire, exactly once") {
+    // the loader is the decode's sink and nothing durable holds the
+    // decoded rows: a batch the loader fails must be recomputed from the
+    // wire on restart. The first attempt executes and logs the ADD COLUMN
+    // … DEFAULT barrier, then fails; the restarted query (same checkpoint,
+    // tracker recovered from the DDL log) decodes the batch again, the
+    // loader skips the sub-batch below its logged barrier and the ALTER,
+    // and the target ends equal to a plain fold of the wire
+    import graft.pipeline.DrainerPipeline
+    import graft.sinks.JdbcSchemaLoader
+    import graft.sources.PbBinlogFile
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val root = graft.util.Scratch.dir("graft_replay_pump")
+    val outDir = graft.util.Scratch.dir("graft_replay_out")
+    val ckpt = graft.util.Scratch.dir("graft_replay_ckpt")
+    // (commit ts, pk, op, table, k, extra); the ADD COLUMN sits at ts 10
+    val dmls = Seq(
+      (2L, 1L, "U", "ta", 2.25, None), (3L, 11L, "U", "tb", 3.25, None),
+      (4L, 2L, "U", "ta", 4.25, None), (6L, 3L, "U", "ta", 6.25, None),
+      (8L, 1L, "U", "ta", 8.25, None), (9L, 12L, "U", "tb", 9.25, None),
+      (12L, 2L, "U", "ta", 12.25, Some(120L)), (13L, 11L, "U", "tb", 13.25, None),
+      (14L, 3L, "D", "ta", 6.25, None), (15L, 12L, "D", "tb", 9.25, None),
+      (16L, 4L, "U", "ta", 16.25, Some(160L)))
+    val alter = "ALTER TABLE TA_STATE ADD COLUMN EXTRA BIGINT DEFAULT 5"
+    PbBinlogFile.write(
+      dmls.map { case (ts, pk, op, t, k, extra) =>
+        val props = (s""""k": $k""" +: extra.map(e => s""""extra": $e""").toSeq)
+        (ts, pk, op, t, props.mkString("{", ", ", "}"))
+      }.toDF("commit_ts", "pk", "op", "event_type", "props").select(
+        col("commit_ts"), col("pk"), col("op"), col("event_type"),
+        timestamp_micros(col("commit_ts") * 1000000L).as("ts"),
+        col("commit_ts").cast("double").as("value"), col("props"),
+        lit(null).cast("string").as("ddl_sql"))
+        .unionByName(wireDdl(10L, "ALTER TABLE app.ta ADD COLUMN extra BIGINT DEFAULT 5")),
+      s"$root/p0", nFiles = 1)
+    // the plain model: each key's last image; ta rows that never change
+    // after the barrier read the column's default, later ones their own
+    val model = dmls.groupBy(r => (r._4, r._2)).values.map(_.maxBy(_._1))
+      .filter(_._3 != "D").map { case (ts, pk, _, t, k, extra) =>
+        (t, pk) -> ((ts, k, if (t == "ta" && ts < 10L) Some(5L) else extra))
+      }.toMap
+    def tracker() = {
+      val tr = new SchemaTracker()
+      tr.createTable("app", "ta", Seq("k DOUBLE"), version = 0)
+      tr.createTable("app", "tb", Seq("k DOUBLE"), version = 0)
+      tr
+    }
+    // its first batch also routes one row just past the barrier to a table
+    // the target lacks: the apply fails there, after the barrier executed
+    // and was logged, before the batch's checkpoint
+    val stray = Seq((11L, "I")).toDF("commit_ts", "op")
+    val loader = new JdbcSchemaLoader(freshDerbyUrl("replay"), applyPartitions = 4) {
+      @volatile var armed = true
+      override def applyBatch(slices: Map[String, org.apache.spark.sql.DataFrame],
+          batchId: Long, schemaVersion: Long, merge: Boolean,
+          safeMode: Boolean): Boolean = {
+        val in = if (armed) slices + ("NOWHERE" -> stray) else slices
+        armed = false
+        super.applyBatch(in, batchId, schemaVersion, merge, safeMode)
+      }
+    }
+    loader.createTable("CREATE TABLE TA_STATE (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, K DOUBLE)")
+    loader.createTable("CREATE TABLE TB_STATE (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, K DOUBLE)")
+    def run(tr: SchemaTracker) = DrainerPipeline.streamingReplicated(spark,
+      Seq(s"$root/p0"), tr, loader, outDir, ckpt, "app", col("event_type"),
+      tableMap = t => t.toUpperCase + "_STATE",
+      ddlToTarget = {
+        case (t, "add", c, ty) =>
+          Some(s"ALTER TABLE ${t.toUpperCase}_STATE ADD COLUMN ${c.toUpperCase} $ty")
+        case _ => None
+      })
+    def ddlLog(): Seq[String] = loader.readTable(spark, "GRAFT_DDL_LOG").collect()
+      .map(_.getAs[String]("STMT")).toSeq
+
+    val q = run(tracker())
+    val e = try intercept[StreamingQueryException](q.processAllAvailable())
+      finally q.stop()
+    assert(e.getMessage.contains("NOWHERE not found in catalog"), e.getMessage)
+    assert(ddlLog() == Seq(alter), s"DDL log after the failure: ${ddlLog()}")
+    assert(loader.lastCheckpoint.batchId < 0L, s"checkpoint: ${loader.lastCheckpoint}")
+    assert(new java.io.File(s"$outDir/ddl/batch=0").isDirectory)
+    assert(!new java.io.File(s"$outDir/data").exists())
+
+    // restart on the same checkpoint: the failed batch never committed, so
+    // the recovered tracker holds none of its DDL and the decode replays it
+    val tr2 = tracker()
+    CdcStream.recoverDecodeTracker(spark, outDir, ckpt, tr2)
+    assert(tr2.current("app", "ta").get.columns == Vector("k DOUBLE"))
+    val q2 = run(tr2)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(tr2.current("app", "ta").get.columns.map(_.split(" ")(0)) ==
+      Vector("k", "extra"))
+    assert(loader.lastCheckpoint.batchId == 0L, s"checkpoint: ${loader.lastCheckpoint}")
+    assert(ddlLog() == Seq(alter), s"the ALTER ran more than once: ${ddlLog()}")
+    val target =
+      loader.readTable(spark, "TA_STATE").collect().map(r =>
+        ("ta", r.getAs[Long]("PK")) -> ((r.getAs[Long]("COMMIT_TS"), r.getAs[Double]("K"),
+          Option(r.getAs[java.lang.Long]("EXTRA")).map(_.longValue)))).toMap ++
+      loader.readTable(spark, "TB_STATE").collect().map(r =>
+        ("tb", r.getAs[Long]("PK")) -> ((r.getAs[Long]("COMMIT_TS"), r.getAs[Double]("K"),
+          None: Option[Long]))).toMap
+    assert(target == model, s"target $target\nmodel  $model")
+    assert(!new java.io.File(s"$outDir/data").exists())
   }
 
   test("streamingReplicatedSchemas: two databases on one wire replicate into distinct targets") {
