@@ -290,23 +290,28 @@ object CdcStream {
   /** One partition's share of the decode's gather, over rows (is_ddl,
     * commit_ts, ddl_sql, schema, table): its DDL frames as (commit ts,
     * statement, null when missing) and, per (schema, table) it carries DML
-    * for, the least commit ts. A row with a NULL op or commit ts matches no
-    * interval, and a DML row with a NULL routing value no table: both fold
-    * to nothing (a NULL key would also NPE the driver's key sort). */
+    * for, the least commit ts. A row with a NULL op, or a DML row with a
+    * NULL commit ts or routing value, matches no interval or table and
+    * folds to nothing (a NULL key would also NPE the driver's key sort).
+    * A DDL frame with a NULL commit ts fails the batch: it has no place in
+    * the walk's order, and dropping it would decode the table's later rows
+    * at a stale shape. */
   private def gatherPartition(rows: Iterator[InternalRow])
       : Iterator[(Seq[(Long, String)], Map[(String, String), Long])] = {
     val ddls = mutable.ArrayBuffer.empty[(Long, String)]
     val mins = mutable.HashMap.empty[(UTF8String, UTF8String), Long]
     rows.foreach { r =>
-      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+      if (r.isNullAt(0)) ()
+      else if (r.getBoolean(0)) {
+        val stmt = if (r.isNullAt(2)) null else r.getUTF8String(2).toString
+        if (r.isNullAt(1)) throw new IllegalStateException(
+          s"wire DDL frame without a commit ts cannot be ordered: $stmt")
+        ddls += ((r.getLong(1), stmt))
+      } else if (!r.isNullAt(1) && !r.isNullAt(3) && !r.isNullAt(4)) {
         val ts = r.getLong(1)
-        if (r.getBoolean(0))
-          ddls += ((ts, if (r.isNullAt(2)) null else r.getUTF8String(2).toString))
-        else if (!r.isNullAt(3) && !r.isNullAt(4)) {
-          // the row is reused: a key the map keeps is a copy
-          val k = (r.getUTF8String(3), r.getUTF8String(4))
-          if (mins.get(k).forall(ts < _)) mins.put((k._1.clone(), k._2.clone()), ts)
-        }
+        // the row is reused: a key the map keeps is a copy
+        val k = (r.getUTF8String(3), r.getUTF8String(4))
+        if (mins.get(k).forall(ts < _)) mins.put((k._1.clone(), k._2.clone()), ts)
       }
     }
     Iterator((ddls.toSeq, mins.map { case ((s, t), ts) =>

@@ -2267,6 +2267,12 @@ class StreamingSpec extends SparkSpec {
       val expect = if (n <= 40L) (None, 0L) else (Some((n * 10).toString), 40L)
       assert(taRows(n) == expect, s"ta row $n: ${taRows(n)}")
     }
+    // ta decodes in two legs (before and after its barrier) over a
+    // one-partition batch: the writer sink writes it as one file, not one
+    // per leg
+    val taFiles = new java.io.File(s"$outDir/data/batch=0/table=ta").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(taFiles == 1, s"ta wrote $taFiles files")
 
     // restart: both tables' histories replay from the ONE shared DDL log
     val tracker2 = new SchemaTracker()
@@ -3208,6 +3214,27 @@ class StreamingSpec extends SparkSpec {
       "touched + DDL-addressed must both be in the view")
     assert(tracker.current("app", "t123").get.columns ==
       Vector("k DOUBLE", "extra BIGINT"))
+    // a NULL-ts DML frame drops like a NULL-routed one, but a DDL frame
+    // with a NULL commit ts has no place in the walk's order: the batch
+    // fails loudly instead of decoding later rows at a stale shape
+    val tracker3 = new SchemaTracker()
+    tracker3.createTable("app", "t007", Seq("k DOUBLE"), version = 0)
+    tracker3.createTable("app", "t123", Seq("k DOUBLE"), version = 0)
+    val q3 = CdcStream.ddlDrivenDecodeTables(
+      PbBinlogFile.readStream(spark, wire2)
+        .withColumn("commit_ts", when(col("op") === "DDL", lit(null).cast("long"))
+          .otherwise(col("commit_ts"))),
+      tracker3, graft.util.Scratch.dir("graft_tchd_out3"),
+      graft.util.Scratch.dir("graft_tchd_ckpt3"), "app",
+      when(col("event_type") =!= "unrouted", col("event_type")))
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    val e = intercept[Exception] { try q3.processAllAvailable() finally q3.stop() }
+    assert(causes(e).exists(c => String.valueOf(c.getMessage)
+        .contains("wire DDL frame without a commit ts")),
+      s"a NULL-ts DDL frame must fail the batch, got $e")
+    assert(tracker3.current("app", "t123").get.columns == Vector("k DOUBLE"),
+      "a failed batch must not advance the tracker")
   }
 
   test("opt-in case folding: mixed-case schema/table identifiers land on one table") {

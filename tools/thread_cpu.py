@@ -2,16 +2,16 @@
 """Per-thread CPU of the replbench JVM, summed over a traced run's triggers.
 
 Usage:
-    python3 tools/thread_cpu.py sample --out <samples.jsonl> \\
-        [--interval 0.2] [--wait 300]
-    python3 tools/thread_cpu.py report <samples.jsonl> <run.spans.jsonl> [--json]
+    python3 tools/thread_cpu.py sample --out <samples.jsonl>
+    python3 tools/thread_cpu.py report <samples.jsonl> <run.spans.jsonl>
     python3 tools/thread_cpu.py --selftest
 
-`sample` waits for the benchmark JVM (`pgrep -f 'java.*replbench[.]Main'`;
-a plain `replbench.Main` pattern also matches the `sh -c` running pgrep),
-then every `--interval` seconds reads utime + stime (fields 14 and 15 of
-`/proc/<pid>/task/<tid>/stat`, in clock ticks) and the thread name of each
-of its threads, one JSON line per sample, until the JVM exits. Start it
+`sample` waits up to 300 s for the benchmark JVM (`pgrep -f
+'java.*replbench[.]Main'`; a plain `replbench.Main` pattern also matches
+the `sh -c` running pgrep), then every 0.2 s reads utime + stime (fields
+14 and 15 of `/proc/<pid>/task/<tid>/stat`, in clock ticks) and the
+thread name of each of its threads, one JSON line per sample, until the
+JVM exits. Start it
 before `replbench/run.py --trace 1`, in a separate process. It reads /proc
 only and needs no profiler.
 
@@ -42,6 +42,8 @@ import time
 
 GROUPS = ["task", "C2", "C1", "GC", "stream", "par", "other"]
 JVM_PATTERN = "java.*replbench[.]Main"
+INTERVAL_S = 0.2
+WAIT_S = 300.0
 
 
 def group_of(comm):
@@ -82,8 +84,8 @@ def read_threads(pid):
     return out
 
 
-def find_jvm(wait_s):
-    deadline = time.time() + wait_s
+def find_jvm():
+    deadline = time.time() + WAIT_S
     while time.time() < deadline:
         r = subprocess.run(["pgrep", "-f", JVM_PATTERN],
                            capture_output=True, text=True)
@@ -94,10 +96,10 @@ def find_jvm(wait_s):
     return None
 
 
-def sample(out, interval, wait_s):
-    pid = find_jvm(wait_s)
+def sample(out):
+    pid = find_jvm()
     if pid is None:
-        sys.exit(f"thread_cpu: no process matched {JVM_PATTERN!r} in {wait_s}s")
+        sys.exit(f"thread_cpu: no process matched {JVM_PATTERN!r} in {WAIT_S:.0f}s")
     tck = os.sysconf("SC_CLK_TCK")
     n = 0
     with open(out, "w") as f:
@@ -110,7 +112,7 @@ def sample(out, interval, wait_s):
             f.write(json.dumps({"t": t, "tck": tck, "threads": threads}) + "\n")
             f.flush()
             n += 1
-            time.sleep(interval)
+            time.sleep(INTERVAL_S)
     print(f"thread_cpu: {n} samples of pid {pid} in {out}")
 
 
@@ -225,24 +227,16 @@ def main():
     sub = ap.add_subparsers(dest="cmd")
     sp = sub.add_parser("sample", help="sample the benchmark JVM's threads")
     sp.add_argument("--out", required=True)
-    sp.add_argument("--interval", type=float, default=0.2)
-    sp.add_argument("--wait", type=float, default=300.0,
-                    help="seconds to wait for the JVM to start")
     rp = sub.add_parser("report", help="CPU per group over each trigger span")
     rp.add_argument("samples")
     rp.add_argument("spans")
-    rp.add_argument("--json", action="store_true")
     args = ap.parse_args()
     if args.selftest:
         selftest()
     elif args.cmd == "sample":
-        sample(args.out, args.interval, args.wait)
+        sample(args.out)
     elif args.cmd == "report":
-        rows = report_rows(read_jsonl(args.samples), read_jsonl(args.spans))
-        if args.json:
-            print(json.dumps(rows))
-        else:
-            print_report(rows)
+        print_report(report_rows(read_jsonl(args.samples), read_jsonl(args.spans)))
     else:
         ap.print_help()
         sys.exit(2)
