@@ -1,11 +1,19 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Per-job profile of named bench queries (not part of the driver
   * contract): runs each query twice (cold, warm) under Bench's session
   * settings and prints each pass's total (`===== q passN total`, the figure
-  * a paired timing compares), then, for the warm pass, every Spark job's
+  * a paired timing compares) with two warm-up counters for the pass: the
+  * Janino compilations of generated code (`janino=`, the count of Spark's
+  * `CodegenMetrics` compilation-time histogram; driver and executors share
+  * the local JVM) and the JIT compilers' time (`jit=`, the delta of
+  * `CompilationMXBean.getTotalCompilationTime`, summed over the compiler
+  * threads, so it can exceed the pass's wall time), then, for the warm pass, every Spark job's
   * wall time and call site from a listener, so a harness-heavy query's cost
   * decomposes into its staging / streaming / read-back jobs. Each stage
   * line sums its tasks' executor run time (`run=`), task wall time
@@ -16,6 +24,7 @@ object ProfileQ {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
+    val jit = ManagementFactory.getCompilationMXBean
 
     case class Job(id: Int, t0: Long, var t1: Long, site: String,
       stages: Seq[Int])
@@ -64,10 +73,14 @@ object ProfileQ {
     args.foreach { n =>
       (1 to 2).foreach { pass =>
         jobs.clear(); order.clear()
+        val janino0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val jit0 = jit.getTotalCompilationTime
         val t0 = System.nanoTime()
         SparkEntry.queries(n)(spark, dir).count()
         val total = (System.nanoTime() - t0) / 1e9
-        println(f"===== $n pass$pass total ${total}%.2f s =====")
+        val janino = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - janino0
+        println(f"===== $n pass$pass total ${total}%.2f s =====" +
+          s" janino=$janino jit=${jit.getTotalCompilationTime - jit0} ms")
         if (pass == 2) {
           import scala.jdk.CollectionConverters._
           var prevEnd = t0

@@ -36,39 +36,6 @@ import org.apache.spark.sql.functions._
   * Swapping the URL for a real MySQL/TiDB endpoint changes nothing above
   * the driver.
   */
-object JdbcUpsertSink {
-
-  /** Oracle-checked K1 query: apply the first 20% (by commit ts) of the
-    * change stream through the REAL loader path — merge-by-pk, delete-first
-    * ordering, 128-row batched REPLACE statements — into a fresh
-    * embedded Derby database, then read the table back over JDBC. The
-    * result must hash-match DuckDB computing the same compacted state from
-    * parquet, which pins the loader's semantics (and the SQL engine round
-    * trip of BIGINT/DOUBLE values) under the driver's correctness gate.
-    * The database is rebuilt every run; the applied slice is ts-bounded so
-    * the query's cost scales with the prefix, not the corpus. */
-  def stateQuery(spark: SparkSession, dir: String): DataFrame = {
-    val changes = graft.ops.Cdc.changes(spark, dir)
-    val maxTs = graft.ops.Cdc.maxCommitTs(changes)
-    val slice = changes.filter(col("commit_ts") <= maxTs * 2 / 10)
-      .select("pk", "commit_ts", "op", "value")
-    // per-invocation in-memory database, reclaimed prefix-scoped (the
-    // previous invocation's database is dropped here — see Scratch)
-    val sink = new JdbcUpsertSink(graft.util.Scratch.derbyMemUrl("graft_k1_state"))
-    sink.applyBatch(slice, batchId = 0L)
-    sink.currentState(spark)
-  }
-
-  def stateSql: String =
-    s"""WITH c AS (${graft.ops.Cdc.changesCte}),
-       |f AS (SELECT * FROM c
-       |      WHERE commit_ts <= (SELECT max(commit_ts) * 2 // 10 FROM c)),
-       |r AS (SELECT pk, commit_ts, value, op,
-       |        row_number() OVER (PARTITION BY pk ORDER BY commit_ts DESC) AS rn
-       |      FROM f)
-       |SELECT pk, commit_ts, value FROM r WHERE rn = 1 AND op <> 'D'""".stripMargin
-}
-
 class JdbcUpsertSink(url: String, clusterId: Long = 1L,
     // ref: executor.go:39 defaultWorkerCount = 16 parallel connections
     applyPartitions: Int = 16) extends Serializable {

@@ -3,14 +3,16 @@ package graft.util
 import java.util.concurrent.{Callable, ExecutionException, Executors, ThreadFactory}
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Bounded concurrent fan-out for the independent per-table jobs inside one
-  * micro-batch (ref: pkg/loader/load.go:508-527 — the loader applies tables
-  * across 16 parallel workers; tables are independent between DDL barriers,
-  * so only the barrier itself is a sequential point).
+/** Bounded concurrent fan-out for the JDBC loader's per-table applies
+  * inside one barrier segment of a micro-batch
+  * ([[graft.sinks.JdbcSchemaLoader.applyBatch]]; ref:
+  * pkg/loader/load.go:508-527 — the loader applies tables across 16
+  * parallel workers; tables are independent between DDL barriers, so only
+  * the barrier itself is a sequential point).
   *
   * Spark supports concurrent job submission from multiple driver threads —
-  * each per-table write/apply is its own job, and without this pool a
-  * trigger touching hundreds of tables serializes hundreds of small jobs
+  * each table's merge and apply are its own jobs, and without this pool a
+  * segment touching hundreds of tables serializes hundreds of small jobs
   * from the driver (the trigger-latency ceiling at wide table counts). The
   * pool is shared, fixed-size and daemon: an idle engine holds no
   * non-daemon threads, and burst concurrency is capped at [[Workers]]

@@ -5,6 +5,7 @@ import scala.util.Random
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.harness.DecodeQueries.writeDecoded
 import graft.sources.PbBinlogFile
 import graft.streaming.{CdcStream, SchemaTracker}
 
@@ -435,12 +436,13 @@ class DecodeWalkPropSpec extends SparkSpec {
           PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
           SchemaPool,
           substring_index(col("event_type"), ":", 1),
-          substring_index(col("event_type"), ":", -1),
+          substring_index(col("event_type"), ":", -1), writeDecoded(outDir),
           fillOriginDefaults = true)
       else
         CdcStream.ddlDrivenDecodeTables(
           PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-          baseKey._1, col("event_type"), fillOriginDefaults = true)
+          baseKey._1, col("event_type"),
+          writeDecoded(outDir), fillOriginDefaults = true)
     var q = startQuery()
     try {
       groups.zipWithIndex.foreach { case (g, i) =>

@@ -362,11 +362,11 @@ class PlanSpec extends SparkSpec {
       val q = CdcStream.ddlDrivenDecodeTables(
         PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
         "app", col("event_type"),
-        emit = Some { case (_, frames, _) =>
-          emitted ++= frames.map { case (t, (_, df)) =>
+        emit = { case (_, frames, _) =>
+          emitted ++= frames.map { case ((_, t), (_, df)) =>
             t -> ((jsonParses(df), wireLeaves(df.queryExecution.analyzed)))
           }
-          ddlScans ++= frames.map { case (t, (_, df)) =>
+          ddlScans ++= frames.map { case ((_, t), (_, df)) =>
             t -> df.filter(col("op") === "DDL").queryExecution.optimizedPlan
               .collectLeaves().count {
                 case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>

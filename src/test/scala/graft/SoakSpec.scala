@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.harness.DecodeQueries.writeDecoded
 import graft.streaming.{CdcStream, PcMatcher}
 import graft.streaming.PcMatcher.PcEvent
 
@@ -119,7 +120,7 @@ class SoakSpec extends SparkSpec {
     PbBinlogFile.write(frames(1L to 50L), wireDir, nFiles = 1)
     val q = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(s, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     try {
       q.processAllAvailable()
       // steady-state trigger cost, measured over follow-up batches (the

@@ -7,6 +7,7 @@ import org.apache.spark.api.java.Optional
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
+import graft.harness.DecodeQueries.writeDecoded
 import graft.ops.Filters
 import graft.sinks.UpsertSink
 import graft.streaming.{CdcStream, PcMatcher, SchemaTracker}
@@ -2080,7 +2081,7 @@ class StreamingSpec extends SparkSpec {
     tracker.createTable("app", "events", Seq("k DOUBLE"), version = 0)
     val q1 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", lit("events"))
+      "app", lit("events"), writeDecoded(outDir))
     try q1.processAllAvailable() finally q1.stop()
 
     // phase 2 is a REAL restart: a fresh process loses the driver-memory
@@ -2094,7 +2095,7 @@ class StreamingSpec extends SparkSpec {
     PbBinlogFile.write(dml(71L to 100L), wireDir, nFiles = 1)
     val q2 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt,
-      "app", lit("events"))
+      "app", lit("events"), writeDecoded(outDir))
     try q2.processAllAvailable() finally q2.stop()
 
     val out = spark.read.parquet(s"$outDir/data")
@@ -2143,7 +2144,7 @@ class StreamingSpec extends SparkSpec {
     tracker.createTable("app", "events", Seq("k DOUBLE"), version = 0)
     val q1 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", lit("events"))
+      "app", lit("events"), writeDecoded(outDir))
     try q1.processAllAvailable() finally q1.stop()
     assert(tracker.current("app", "events").get.columns ==
       Vector("k DOUBLE", "extra BIGINT"))
@@ -2166,7 +2167,7 @@ class StreamingSpec extends SparkSpec {
       wireDir, nFiles = 1)
     val q2 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt,
-      "app", lit("events"))
+      "app", lit("events"), writeDecoded(outDir))
     try q2.processAllAvailable() finally q2.stop()
     assert(tracker2.current("app", "events").get.columns == Vector("extra2 BIGINT"))
 
@@ -2200,7 +2201,7 @@ class StreamingSpec extends SparkSpec {
     PbBinlogFile.write(dml(Seq(55L), n => s"""{"extra2": 1}"""), wireDir, nFiles = 1)
     val q3 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt,
-      "app", lit("events"))
+      "app", lit("events"), writeDecoded(outDir))
     try q3.processAllAvailable() finally q3.stop()
     // q1..q3 share one checkpoint, hence one query id and one running
     // total: only q3's redelivered frame sits below a frontier
@@ -2241,14 +2242,14 @@ class StreamingSpec extends SparkSpec {
     tracker.createTable("app", "tb", Seq("k DOUBLE"), version = 0)
     val q1 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     try q1.processAllAvailable() finally q1.stop()
     assert(tracker.current("app", "ta").get.columns ==
       Vector("k DOUBLE", "extra BIGINT"))
     assert(tracker.current("app", "tb").get.columns == Vector("k DECIMAL(10,1)"))
 
     // per-table output purity: tb's file carries NO trace of ta's ADD
-    val tb0 = spark.read.parquet(s"$outDir/data/batch=0/table=tb")
+    val tb0 = spark.read.parquet(s"$outDir/data/batch=0/schema=app/table=tb")
     assert(tb0.columns.toSeq.sorted == Seq("commit_ts", "k_str", "op", "pk", "schema_version"),
       s"ta's DDL leaked into tb's decode: ${tb0.columns.toSeq}")
     val tbRows = tb0.collect()
@@ -2259,7 +2260,7 @@ class StreamingSpec extends SparkSpec {
       val expect = if (n <= 50L) (s"$n.25", 0L) else (s"$n.3", 50L)
       assert(tbRows(n) == expect, s"tb row $n: ${tbRows(n)}")
     }
-    val taRows = spark.read.parquet(s"$outDir/data/batch=0/table=ta").collect()
+    val taRows = spark.read.parquet(s"$outDir/data/batch=0/schema=app/table=ta").collect()
       .map(r => r.getAs[Long]("commit_ts") ->
         ((Option(r.getAs[String]("extra_str")), r.getAs[Long]("schema_version")))).toMap
     assert(taRows.size == 40)
@@ -2270,7 +2271,7 @@ class StreamingSpec extends SparkSpec {
     // ta decodes in two legs (before and after its barrier) over a
     // one-partition batch: the writer sink writes it as one file, not one
     // per leg
-    val taFiles = new java.io.File(s"$outDir/data/batch=0/table=ta").listFiles()
+    val taFiles = new java.io.File(s"$outDir/data/batch=0/schema=app/table=ta").listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(taFiles == 1, s"ta wrote $taFiles files")
 
@@ -2298,23 +2299,23 @@ class StreamingSpec extends SparkSpec {
       wireDir, nFiles = 1)
     val q2 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     try q2.processAllAvailable() finally q2.stop()
 
     assert(tracker2.tablesOf("app") == Seq("tb", "tc"))
     assert(tracker2.current("app", "tb").get.version == 100L)
     assert(tracker2.current("app", "tc").get.columns == Vector("v BIGINT"))
-    val tb1 = spark.read.parquet(s"$outDir/data/batch=1/table=tb").collect()
+    val tb1 = spark.read.parquet(s"$outDir/data/batch=1/schema=app/table=tb").collect()
       .map(r => r.getAs[Long]("commit_ts") ->
         ((r.getAs[String]("k_str"), r.getAs[Long]("schema_version")))).toMap
     assert(tb1 == Map(112L -> (("112.3", 100L)), 120L -> (("120.3", 100L))),
       s"truncate must drop in-flight frames <= 100, got $tb1")
-    val tc1 = spark.read.parquet(s"$outDir/data/batch=1/table=tc").collect()
+    val tc1 = spark.read.parquet(s"$outDir/data/batch=1/schema=app/table=tc").collect()
       .map(r => r.getAs[Long]("commit_ts") ->
         ((r.getAs[String]("v_str"), r.getAs[Long]("schema_version")))).toMap
     assert(tc1 == Map(106L -> (("106", 104L)), 114L -> (("114", 104L))),
       s"created table must decode from its create forward, got $tc1")
-    val ta1 = spark.read.parquet(s"$outDir/data/batch=1/table=ta")
+    val ta1 = spark.read.parquet(s"$outDir/data/batch=1/schema=app/table=ta")
       .select("commit_ts").as[Long].collect().toSet
     assert(ta1 == Set(101L, 107L),
       s"drop must keep in-flight frames and drop later ones, got $ta1")
@@ -2340,17 +2341,17 @@ class StreamingSpec extends SparkSpec {
       wireDir, nFiles = 1)
     val q3 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker3, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     try q3.processAllAvailable() finally q3.stop()
     assert(tracker3.tablesOf("app") == Seq("tc", "td"))
     assert(tracker3.current("app", "td").get.columns == Vector("k DECIMAL(10,1)") &&
       tracker3.current("app", "td").get.version == 130L)
-    val tb2 = spark.read.parquet(s"$outDir/data/batch=2/table=tb").collect()
+    val tb2 = spark.read.parquet(s"$outDir/data/batch=2/schema=app/table=tb").collect()
       .map(r => r.getAs[Long]("commit_ts") ->
         ((r.getAs[String]("k_str"), r.getAs[Long]("schema_version")))).toMap
     assert(tb2 == Map(122L -> (("122.3", 100L)), 126L -> (("126.3", 100L))),
       s"in-flight frames under the old name must decode, got $tb2")
-    val td2 = spark.read.parquet(s"$outDir/data/batch=2/table=td").collect()
+    val td2 = spark.read.parquet(s"$outDir/data/batch=2/schema=app/table=td").collect()
       .map(r => r.getAs[Long]("commit_ts") ->
         ((r.getAs[String]("k_str"), r.getAs[Long]("schema_version")))).toMap
     assert(td2 == Map(134L -> (("134.3", 130L)), 140L -> (("140.3", 130L))),
@@ -2358,7 +2359,7 @@ class StreamingSpec extends SparkSpec {
     // the sparse-batch layout contract: tc is tracked but carries no DML
     // in batch 2 — per-batch work scales with the TOUCHED set, so it must
     // not write a (or even an empty) batch dir
-    assert(!Files.exists(java.nio.file.Paths.get(s"$outDir/data/batch=2/table=tc")),
+    assert(!Files.exists(java.nio.file.Paths.get(s"$outDir/data/batch=2/schema=app/table=tc")),
       "untouched tracked table wrote a batch dir")
 
     // third restart: the rename replays from the durable log
@@ -2715,7 +2716,7 @@ class StreamingSpec extends SparkSpec {
     tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
     val q = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     try q.processAllAvailable() finally q.stop()
 
     val skipped = CdcStream.decodeCounts(q.id)("skipped_ddl_total")
@@ -2724,7 +2725,7 @@ class StreamingSpec extends SparkSpec {
       Vector("k2 DECIMAL(10,1)", "extra BIGINT", "extra2 BIGINT"))
     assert(tracker.current("app", "tnew").get.columns == Vector("v BIGINT"),
       "paren-bearing CREATE TABLE options corrupted the def list")
-    val rows = spark.read.parquet(s"$outDir/data/batch=0/table=t").collect()
+    val rows = spark.read.parquet(s"$outDir/data/batch=0/schema=app/table=t").collect()
       .map(r => r.getAs[Long]("commit_ts") ->
         ((Option(r.getAs[String]("k_str")), Option(r.getAs[String]("extra_str")),
           Option(r.getAs[String]("k2_str")), Option(r.getAs[String]("extra2_str")),
@@ -2738,7 +2739,7 @@ class StreamingSpec extends SparkSpec {
     assert(rows(19L) == ((None, None, Some("19.3"), None, 18L)))
     // COLUMN-less ADD applied; the three later skips left version at 20
     assert(rows(21L) == ((None, None, Some("21.3"), Some("7"), 20L)))
-    val tnew = spark.read.parquet(s"$outDir/data/batch=0/table=tnew").collect()
+    val tnew = spark.read.parquet(s"$outDir/data/batch=0/schema=app/table=tnew").collect()
       .map(r => (r.getAs[Long]("commit_ts"), r.getAs[String]("v_str"),
         r.getAs[Long]("schema_version")))
     assert(tnew.toSeq == Seq((29L, "29", 28L)))
@@ -2767,12 +2768,12 @@ class StreamingSpec extends SparkSpec {
     tracker3.createTable("app", "t", Seq("k DOUBLE"), version = 0)
     val q2 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wire2), tracker3, out2, ckpt2,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(out2))
     try q2.processAllAvailable() finally q2.stop()
     val skipped2 = CdcStream.decodeCounts(q2.id)("skipped_ddl_total")
     assert(skipped2 == 1L && tracker3.tablesOf("app") == Seq("t2"),
       s"multi-rename list must apply per part: ${tracker3.tablesOf("app")}")
-    assert(spark.read.parquet(s"$out2/data/batch=0/table=t2")
+    assert(spark.read.parquet(s"$out2/data/batch=0/schema=app/table=t2")
       .select("commit_ts").as[Long].collect().toSet == Set(33L))
 
     def causes(t: Throwable): Seq[Throwable] =
@@ -2788,7 +2789,8 @@ class StreamingSpec extends SparkSpec {
         PbBinlogFile.readStream(spark, w), tr,
         graft.util.Scratch.dir(s"graft_gram_o$tag"),
         graft.util.Scratch.dir(s"graft_gram_c$tag"),
-        "app", col("event_type"))
+        "app", col("event_type"),
+        writeDecoded(graft.util.Scratch.dir(s"graft_gram_o$tag")))
       val e = intercept[Exception] { try qq.processAllAvailable() finally qq.stop() }
       assert(causes(e).exists(c => String.valueOf(c.getMessage).contains(needle)),
         s"[$tag] expected '$needle' in the failure chain, got $e")
@@ -2871,7 +2873,7 @@ class StreamingSpec extends SparkSpec {
     tracker5.createTable("app", "t", Seq("k DOUBLE"), version = 0)
     val q3 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wire3), tracker5, out3, ckpt3,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(out3))
     try q3.processAllAvailable() finally q3.stop()
     val skipped3 = CdcStream.decodeCounts(q3.id)("skipped_ddl_total")
     assert(skipped3 == 10L, s"expected 10 counted skips, got $skipped3")
@@ -2908,7 +2910,7 @@ class StreamingSpec extends SparkSpec {
     val tracker = new SchemaTracker()
     tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
     val q = CdcStream.ddlDrivenDecodeTables(PbBinlogFile.readStream(spark, wireDir),
-      tracker, outDir, ckpt, "app", col("event_type"),
+      tracker, outDir, ckpt, "app", col("event_type"), writeDecoded(outDir),
       fillOriginDefaults = true)
     try q.processAllAvailable() finally q.stop()
     val got = spark.read.parquet(s"$outDir/data")
@@ -3005,7 +3007,7 @@ class StreamingSpec extends SparkSpec {
     val tracker = new SchemaTracker()
     tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
     val q = CdcStream.ddlDrivenDecodeTables(PbBinlogFile.readStream(spark, wireDir),
-      tracker, outDir, ckpt, "app", col("event_type"),
+      tracker, outDir, ckpt, "app", col("event_type"), writeDecoded(outDir),
       fillOriginDefaults = true)
     try q.processAllAvailable() finally q.stop()
     val rows = spark.read.parquet(s"$outDir/data")
@@ -3071,7 +3073,7 @@ class StreamingSpec extends SparkSpec {
     val tracker = new SchemaTracker()
     tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
     val q = CdcStream.ddlDrivenDecodeTables(PbBinlogFile.readStream(spark, wireDir),
-      tracker, outDir, ckpt, "app", col("event_type"),
+      tracker, outDir, ckpt, "app", col("event_type"), writeDecoded(outDir),
       fillOriginDefaults = true)
     try q.processAllAvailable() finally q.stop()
     val rows = spark.read.parquet(s"$outDir/data")
@@ -3130,10 +3132,10 @@ class StreamingSpec extends SparkSpec {
     tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
     tracker.createTable("app", "g", Seq("k DOUBLE"), version = 0)
     val q = CdcStream.ddlDrivenDecodeTables(PbBinlogFile.readStream(spark, wireDir),
-      tracker, outDir, ckpt, "app", col("event_type"),
+      tracker, outDir, ckpt, "app", col("event_type"), writeDecoded(outDir),
       fillOriginDefaults = true)
     try q.processAllAvailable() finally q.stop()
-    def m(tbl: String) = spark.read.parquet(s"$outDir/data/batch=0/table=$tbl")
+    def m(tbl: String) = spark.read.parquet(s"$outDir/data/batch=0/schema=app/table=$tbl")
       .select(col("commit_ts"), col("c_str")).collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getString(1)))
       .toMap
@@ -3186,12 +3188,12 @@ class StreamingSpec extends SparkSpec {
       tracker.createTable("app", f"t$i%03d", Seq("k DOUBLE"), version = 0))
     val q = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     try q.processAllAvailable() finally q.stop()
     val viewSize = CdcStream.lastDriverCatalogSizes.get(outDir)
     assert(viewSize != null && viewSize.intValue == 1,
       s"driver catalog view must hold only the touched table, got $viewSize of 200")
-    assert(spark.read.parquet(s"$outDir/data/batch=0/table=t007")
+    assert(spark.read.parquet(s"$outDir/data/batch=0/schema=app/table=t007")
       .select("commit_ts").as[Long].collect().toSet == Set(1L, 3L))
     // a DDL addressing a REGISTERED-but-untouched table still enters the
     // view (the dispatch needs its shape) and applies
@@ -3208,7 +3210,7 @@ class StreamingSpec extends SparkSpec {
     val q2 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wire2), tracker, outDir,
       graft.util.Scratch.dir("graft_tchd_ckpt2"), "app",
-      when(col("event_type") =!= "unrouted", col("event_type")))
+      when(col("event_type") =!= "unrouted", col("event_type")), writeDecoded(outDir))
     try q2.processAllAvailable() finally q2.stop()
     assert(CdcStream.lastDriverCatalogSizes.get(outDir).intValue == 2,
       "touched + DDL-addressed must both be in the view")
@@ -3226,7 +3228,8 @@ class StreamingSpec extends SparkSpec {
           .otherwise(col("commit_ts"))),
       tracker3, graft.util.Scratch.dir("graft_tchd_out3"),
       graft.util.Scratch.dir("graft_tchd_ckpt3"), "app",
-      when(col("event_type") =!= "unrouted", col("event_type")))
+      when(col("event_type") =!= "unrouted", col("event_type")),
+      writeDecoded(graft.util.Scratch.dir("graft_tchd_out3")))
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: causes(t.getCause)
     val e = intercept[Exception] { try q3.processAllAvailable() finally q3.stop() }
@@ -3268,7 +3271,7 @@ class StreamingSpec extends SparkSpec {
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
       Seq("APP"),
       substring_index(col("event_type"), ":", 1),
-      substring_index(col("event_type"), ":", -1))
+      substring_index(col("event_type"), ":", -1), writeDecoded(outDir))
     try q.processAllAvailable() finally q.stop()
     // one folded table: all three spellings decoded, the mixed-case DDL
     // applied, the layout dir carries the folded name
@@ -3329,7 +3332,7 @@ class StreamingSpec extends SparkSpec {
       val q = CdcStream.ddlDrivenDecodeTables(
         PbBinlogFile.readStream(spark, wireDir, maxFilesPerTrigger = 1),
         tracker, outDir, ckpt,
-        "app", col("event_type"))
+        "app", col("event_type"), writeDecoded(outDir))
       try q.processAllAvailable() finally q.stop()
       // progress events are asynchronous — poll until the last batch's
       // metrics land (its observed dml count is 1: the ts-11 frame)
@@ -3399,7 +3402,8 @@ class StreamingSpec extends SparkSpec {
         tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
         CdcStream.ddlDrivenDecodeTables(PbBinlogFile.readStream(spark, w),
           tracker, graft.util.Scratch.dir("graft_cnt_out"),
-          graft.util.Scratch.dir("graft_cnt_ckpt"), "app", col("event_type"))
+          graft.util.Scratch.dir("graft_cnt_ckpt"), "app", col("event_type"),
+          writeDecoded(graft.util.Scratch.dir("graft_cnt_out")))
       }
       try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
       val totals = qs.map(q => CdcStream.decodeCounts(q.id)("skipped_ddl_total"))
@@ -3427,7 +3431,7 @@ class StreamingSpec extends SparkSpec {
       wireDir, nFiles = 1)
     def start(tracker: SchemaTracker) = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     def fresh() = {
       val t = new SchemaTracker()
       t.createTable("app", "t", Seq("k DOUBLE"), version = 0)
@@ -3485,7 +3489,7 @@ class StreamingSpec extends SparkSpec {
       wireDir, nFiles = 1)
     def start(tracker: SchemaTracker) = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     def fresh() = {
       val t = new SchemaTracker()
       t.createTable("app", "t", Seq("k DOUBLE"), version = 0)
@@ -3617,13 +3621,13 @@ class StreamingSpec extends SparkSpec {
     tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
     val q = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     try q.processAllAvailable() finally q.stop()
     assert(tracker.current("app", "t").get.columns ==
       Vector("k DOUBLE", "c BIGINT"))
     assert(tracker.originDefault("app", "t", "c") == Some("5"),
       "the ADD-time DEFAULT is the origin default; MODIFY must not change it")
-    val rows = spark.read.parquet(s"$outDir/data/batch=0/table=t").collect()
+    val rows = spark.read.parquet(s"$outDir/data/batch=0/schema=app/table=t").collect()
       .map(r => r.getAs[Long]("commit_ts") ->
         ((Option(r.getAs[String]("c_str")), r.getAs[Long]("schema_version"))))
       .toMap
@@ -3655,13 +3659,13 @@ class StreamingSpec extends SparkSpec {
     tracker3.createTable("app", "t", Seq("k DOUBLE"), version = 0)
     val q2 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wire2), tracker3, out2, ckpt2,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(out2))
     try q2.processAllAvailable() finally q2.stop()
     assert(tracker3.current("app", "tn").get.columns ==
       Vector("id BIGINT NOT NULL", "v INT"),
       "NOT NULL survives in the def; constraints and DEFAULT drop out")
     assert(tracker3.originDefault("app", "tn", "v") == Some("7"))
-    val tn = spark.read.parquet(s"$out2/data/batch=0/table=tn").collect()
+    val tn = spark.read.parquet(s"$out2/data/batch=0/schema=app/table=tn").collect()
       .map(r => (r.getAs[Long]("commit_ts"), r.getAs[String]("id_str"),
         r.getAs[String]("v_str")))
     assert(tn.toSeq == Seq((21L, "21", "21")),
@@ -3697,7 +3701,7 @@ class StreamingSpec extends SparkSpec {
     tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
     val q = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     try q.processAllAvailable() finally q.stop()
     assert(tracker.tablesOf("app") == Seq("_t_old", "t"))
     assert(tracker.current("app", "t").get.columns ==
@@ -3705,7 +3709,7 @@ class StreamingSpec extends SparkSpec {
       tracker.current("app", "t").get.version == 14L,
       "post-cutover t must carry the ghost table's widened shape")
     assert(tracker.current("app", "_t_old").get.columns == Vector("k DOUBLE"))
-    val tRows = spark.read.parquet(s"$outDir/data/batch=0/table=t").collect()
+    val tRows = spark.read.parquet(s"$outDir/data/batch=0/schema=app/table=t").collect()
       .map(r => r.getAs[Long]("commit_ts") ->
         ((Option(r.getAs[String]("extra_str")), r.getAs[Long]("schema_version"))))
       .toMap
@@ -3764,7 +3768,7 @@ class StreamingSpec extends SparkSpec {
     val tracker = freshTracker()
     val q1 = CdcStream.ddlDrivenDecodeSchemas(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      Seq("sa", "sb"), schemaOf, tableOf)
+      Seq("sa", "sb"), schemaOf, tableOf, writeDecoded(outDir))
     try q1.processAllAvailable() finally q1.stop()
     assert(tracker.current("sa", "t").get.columns ==
       Vector("k DOUBLE", "extra BIGINT"))
@@ -3808,7 +3812,7 @@ class StreamingSpec extends SparkSpec {
       wireDir, nFiles = 1)
     val q2 = CdcStream.ddlDrivenDecodeSchemas(
       PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt,
-      Seq("sa", "sb"), schemaOf, tableOf)
+      Seq("sa", "sb"), schemaOf, tableOf, writeDecoded(outDir))
     try q2.processAllAvailable() finally q2.stop()
     assert(tracker2.tablesOf("sa") == Seq() &&
       tracker2.tablesOf("sb") == Seq("t", "t2"))
@@ -3843,7 +3847,7 @@ class StreamingSpec extends SparkSpec {
       wireDir, nFiles = 1)
     val q3 = CdcStream.ddlDrivenDecodeSchemas(
       PbBinlogFile.readStream(spark, wireDir), tracker3, outDir, ckpt,
-      Seq("sa", "sb"), schemaOf, tableOf)
+      Seq("sa", "sb"), schemaOf, tableOf, writeDecoded(outDir))
     try q3.processAllAvailable() finally q3.stop()
     assert(tracker3.tablesOf("sb") == Seq())
     val sbT = spark.read.parquet(s"$outDir/data/batch=2/schema=sb/table=t")
@@ -3872,7 +3876,8 @@ class StreamingSpec extends SparkSpec {
       PbBinlogFile.readStream(spark, wireX), trackerX,
       graft.util.Scratch.dir("graft_msch_outx"),
       graft.util.Scratch.dir("graft_msch_ckptx"),
-      Seq("sa"), schemaOf, tableOf)
+      Seq("sa"), schemaOf, tableOf,
+      writeDecoded(graft.util.Scratch.dir("graft_msch_outx")))
     val ex = intercept[Exception] { try qx.processAllAvailable() finally qx.stop() }
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: causes(t.getCause)
@@ -3897,7 +3902,7 @@ class StreamingSpec extends SparkSpec {
     val q = CdcStream.ddlDrivenDecodeSchemas(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
       Seq("sa"), substring_index(col("event_type"), ":", 1),
-      substring_index(col("event_type"), ":", -1))
+      substring_index(col("event_type"), ":", -1), writeDecoded(outDir))
     try q.processAllAvailable() finally q.stop()
     val rows = spark.read.parquet(s"$outDir/data/batch=0/schema=sa/table=t")
       .select("commit_ts", "k_str").as[(Long, String)].collect().sorted.toSeq
@@ -3933,18 +3938,18 @@ class StreamingSpec extends SparkSpec {
     tracker.createTable("app", "t", Seq("k DOUBLE"), version = 0)
     val q1 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     try q1.processAllAvailable() finally q1.stop()
     assert(tracker.tablesOf("app") == Seq("t", "t2"))
     assert(tracker.current("app", "t").get.version == 10L &&
       tracker.current("app", "t2").get.columns == Vector("k DOUBLE"))
-    val t0 = spark.read.parquet(s"$outDir/data/batch=0/table=t").collect()
+    val t0 = spark.read.parquet(s"$outDir/data/batch=0/schema=app/table=t").collect()
       .map(r => r.getAs[Long]("commit_ts") -> r.getAs[Long]("schema_version"))
       .toMap
     // 8 fell between drop and flashback: unaddressable, dropped
     assert(t0 == Map(2L -> 0L, 4L -> 0L, 12L -> 10L),
       s"flashback decode window wrong: $t0")
-    assert(spark.read.parquet(s"$outDir/data/batch=0/table=t2").collect()
+    assert(spark.read.parquet(s"$outDir/data/batch=0/schema=app/table=t2").collect()
       .map(r => (r.getAs[Long]("commit_ts"), r.getAs[Long]("schema_version")))
       .toSeq == Seq((16L, 14L)))
 
@@ -3959,7 +3964,7 @@ class StreamingSpec extends SparkSpec {
     PbBinlogFile.write(ddl(20L, "DROP TABLE app.t2"), wireDir, nFiles = 1)
     val q2 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     try q2.processAllAvailable() finally q2.stop()
     assert(tracker2.tablesOf("app") == Seq("t"))
     PbBinlogFile.write(
@@ -3968,11 +3973,11 @@ class StreamingSpec extends SparkSpec {
       wireDir, nFiles = 1)
     val q3 = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker2, outDir, ckpt,
-      "app", col("event_type"))
+      "app", col("event_type"), writeDecoded(outDir))
     try q3.processAllAvailable() finally q3.stop()
     assert(tracker2.tablesOf("app") == Seq("t", "t3") &&
       tracker2.current("app", "t3").get.columns == Vector("k DOUBLE"))
-    assert(spark.read.parquet(s"$outDir/data/batch=2/table=t3").collect()
+    assert(spark.read.parquet(s"$outDir/data/batch=2/schema=app/table=t3").collect()
       .map(r => (r.getAs[Long]("commit_ts"), r.getAs[Long]("schema_version")))
       .toSeq == Seq((26L, 24L)))
 
@@ -4003,7 +4008,8 @@ class StreamingSpec extends SparkSpec {
       PbBinlogFile.readStream(spark, wireD), trackerD,
       graft.util.Scratch.dir("graft_fb_dup_out"),
       graft.util.Scratch.dir("graft_fb_dup_ckpt"),
-      "app", col("event_type"))
+      "app", col("event_type"),
+      writeDecoded(graft.util.Scratch.dir("graft_fb_dup_out")))
     val ed = intercept[Exception] { try qd.processAllAvailable() finally qd.stop() }
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: causes(t.getCause)
@@ -4035,7 +4041,7 @@ class StreamingSpec extends SparkSpec {
         PbBinlogFile.write(b, wireDir, nFiles = 1)
         val q = CdcStream.ddlDrivenDecodeTables(
           PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-          "app", col("event_type"))
+          "app", col("event_type"), writeDecoded(outDir))
         try q.processAllAvailable() finally q.stop()
       }
       val restarted = seeded()
@@ -4079,8 +4085,8 @@ class StreamingSpec extends SparkSpec {
     val q = CdcStream.ddlDrivenDecodeTables(
       PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
       "app", col("event_type"),
-      emit = Some { case (_, frames, _) =>
-        emitted = frames.map { case (t, (defs, df)) =>
+      emit = { case (_, frames, _) =>
+        emitted = frames.map { case ((_, t), (defs, df)) =>
           // select strictly BY THE DEFS, the composing-sink contract —
           // a stale def of the dropped column would throw right here
           val cols = defs.map(d => col(d.split(" ", 2)(0) + "_str"))
@@ -4098,33 +4104,30 @@ class StreamingSpec extends SparkSpec {
 
   test("per-touched-table batch work fans out on the bounded worker pool") {
     // the reference applies tables across 16 parallel workers
-    // (pkg/loader/load.go:508-527); the decode's per-table writes and the
-    // loader's between-barrier applies ride graft.util.Par the same way —
-    // a trigger touching N tables must overlap their jobs, not serialize
-    // N driver submissions. The peak gauge is the machine-checkable
-    // witness of real overlap.
-    import graft.sources.PbBinlogFile
-    val wireDir = graft.util.Scratch.dir("graft_par_wire")
-    val outDir = graft.util.Scratch.dir("graft_par_out")
-    val ckpt = graft.util.Scratch.dir("graft_par_ckpt")
-    def dml(tbl: String, ids: Seq[Long]) =
-      wireDml(tbl, ids, concat(lit("{\"k\": "), col("commit_ts"), lit(".25}")))
-    val tables = (1 to 6).map(i => s"t$i")
-    PbBinlogFile.write(
-      tables.zipWithIndex.map { case (t, i) =>
-        dml(t, Seq(10L + i, 20L + i))
-      }.reduce(_ unionByName _), wireDir, nFiles = 1)
-    val tracker = new SchemaTracker()
-    tables.foreach(t => tracker.createTable("app", t, Seq("k DOUBLE"), version = 0))
+    // (pkg/loader/load.go:508-527); the loader's between-barrier applies
+    // ride graft.util.Par the same way — a batch touching N tables must
+    // overlap their jobs, not serialize N driver submissions. The peak
+    // gauge is the machine-checkable witness of real overlap.
+    import graft.sinks.JdbcSchemaLoader
+    import spark.implicits._
+    val loader = new JdbcSchemaLoader(freshDerbyUrl("par"), applyPartitions = 2)
+    val tables = (1 to 6).map(i => s"T${i}_STATE")
+    tables.foreach(t => loader.createTable(
+      s"CREATE TABLE $t (PK BIGINT PRIMARY KEY, COMMIT_TS BIGINT, K DOUBLE)"))
+    // per table: two inserts, then an update of pk 1 — one merged image
+    // per key lands
+    val slices = tables.zipWithIndex.map { case (t, i) =>
+      t -> Seq((1L, 10L + i, "I", 1.25), (2L, 20L + i, "I", 2.25),
+        (1L, 30L + i, "U", 3.25)).toDF("pk", "commit_ts", "op", "k")
+    }.toMap
     graft.util.Par.resetPeak()
-    val q = CdcStream.ddlDrivenDecodeTables(
-      PbBinlogFile.readStream(spark, wireDir), tracker, outDir, ckpt,
-      "app", col("event_type"))
-    try q.processAllAvailable() finally q.stop()
+    assert(loader.applyBatch(slices, 0L))
     assert(graft.util.Par.peakObserved >= 2,
-      s"6 tables' writes never overlapped (peak ${graft.util.Par.peakObserved})")
-    tables.foreach { t =>
-      assert(spark.read.parquet(s"$outDir/data/batch=0/table=$t").count() == 2L)
+      s"6 tables' applies never overlapped (peak ${graft.util.Par.peakObserved})")
+    tables.zipWithIndex.foreach { case (t, i) =>
+      val rows = loader.readTable(spark, t, Some("PK"))
+        .select("PK", "COMMIT_TS", "K").as[(Long, Long, Double)].collect().sorted.toSeq
+      assert(rows == Seq((1L, 30L + i, 3.25), (2L, 20L + i, 2.25)), s"$t: $rows")
     }
     // failure contract: every task awaited, FIRST failure (item order)
     // rethrown — deterministic under replay
@@ -4159,7 +4162,7 @@ class StreamingSpec extends SparkSpec {
     // before the union, min frontier), then the versioned decode over it
     val merged = CdcStream.mergedWireStream(spark, pumps, delay = "1 hour")
     val q = CdcStream.ddlDrivenDecodeTables(merged, tracker, outDir, ckpt,
-      "app", lit("events"))
+      "app", lit("events"), writeDecoded(outDir))
     try {
       q.processAllAvailable()
       // stage 2: both pumps deliver PAST the applied frontier (ts 50) —
@@ -4337,8 +4340,8 @@ class StreamingSpec extends SparkSpec {
       PbBinlogFile.readStream(spark, s"$root/p0"), tracker(),
       graft.util.Scratch.dir("graft_zero_dec"),
       graft.util.Scratch.dir("graft_zero_dec_ckpt"), "app", col("event_type"),
-      emit = Some { case (_, frames, _) =>
-        emitted ++= frames.map { case (t, (_, df)) =>
+      emit = { case (_, frames, _) =>
+        emitted ++= frames.map { case ((_, t), (_, df)) =>
           t -> ((df.columns.toSeq, df.count()))
         }
       })
